@@ -53,7 +53,8 @@ def build_catalog(events: DataFrame, suffix: str = ".zip") -> DataFrame:
     # suffix is embedded in a parsed expression string now — reject
     # anything that could break out of the literal (internal callers
     # only ever pass '.zip'-style names; fail loudly on surprises).
-    assert "'" not in suffix and "\\" not in suffix, suffix
+    if "'" in suffix or "\\" in suffix:
+        raise ValueError(f"suffix must not contain a quote or backslash: {suffix!r}")
     gens = ", ".join(f"'{g}'" for g in GENERATIONS)
     return (
         events.selectExpr(

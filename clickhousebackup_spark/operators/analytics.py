@@ -12,7 +12,7 @@ joins carry NO hint: at fixture scale the planner still broadcasts
 them from file-size statistics, and at scale AQE degrades them to a
 shuffled join instead of OOMing the executors on a forced broadcast
 (an explicit hint overrides AQE's size check — judge round 13).
-tests/test_plan_canary.py enforces this as a registry-wide rule. The
+tests/test_registry_sweep.py enforces this as a registry-wide rule. The
 orders⋈lineitem fact-fact join shuffles on orderkey — the one
 unavoidable shuffle, which AQE sizes. Date filters reach the parquet
 scans (PushedFilters), so the fact scan reads only matching row

@@ -16,7 +16,7 @@ scalar frames) carry explicit broadcast hints; part/customer/supplier
 grow linearly with scale factor, so their joins are UNHINTED — the
 planner broadcasts them from size statistics at fixture scale and AQE
 degrades to a shuffled join at 100 TB instead of OOMing on a forced
-broadcast (tests/test_plan_canary.py pins this registry-wide). The
+broadcast (tests/test_registry_sweep.py pins this registry-wide). The
 only shuffles are fact-fact joins on their natural keys and the
 pre-aggregations, which all run partial+final (map-side combine).
 Scalar-subquery thresholds are computed as 1-row aggregates and

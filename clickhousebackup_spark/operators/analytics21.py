@@ -6,8 +6,8 @@ group keys.
 computes its cumulative-weight window partitioned by the bare 5-value
 ``event_type``: the same STRUCTURAL straggler as agg_percentile_exact
 (each task sorts n/5 of the table at ANY data scale — no skew needed),
-carried as LOWCARD_WINDOW_ALLOWED debt until now. This module applies
-the family-six two-pass histogram selection to WEIGHTS:
+carried as lowcard_windows debt in tests/contracts.py until now. This
+module applies the family-six two-pass histogram selection to WEIGHTS:
 
 - **Pass 1 (weight histogram).** Sum integer weights per (event_type,
   floor(value)) bucket — monotone buckets, so bucket order IS value

@@ -39,7 +39,7 @@ all key orders, instead of one full-frame materialization each.
 
 The offsets table itself uses an unpartitioned window — over
 n_shuffle_partitions rows, bounded by cluster config, not data;
-tests/test_plan_canary.py allow-lists exactly this shape per key.
+tests/contracts.py allows exactly this shape per key.
 """
 
 from __future__ import annotations

@@ -53,85 +53,72 @@ def uses_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in physical_plan(df)
 
 
-def count_unpartitioned_windows(df: DataFrame) -> int:
-    """Number of WindowExec nodes with NO partition spec — the 'move
-    all data to a single partition' shape that WindowExec warns about.
+def _plan_text(df: DataFrame | str) -> str:
+    """``df``'s executed-plan string, or ``df`` if it already is one."""
+    return df if isinstance(df, str) else physical_plan(df)
+
+
+def _window_partition_groups(plan: str) -> list[str | None]:
+    """One entry per WindowExec node: its partition-spec bracket
+    group, or None when the window has no partition spec.
+
     A partitioned+ordered Window renders three top-level bracket
     groups (``Window [specs], [partition], [order]``); with two
-    groups the second is EITHER a partition spec (fine) or a sort
-    order (unpartitioned — the bad shape), distinguished by the
-    ``ASC``/``DESC`` markers only sort orders carry; one group means
-    neither partition nor order (global frame over one partition).
+    groups the second is EITHER a partition spec or a sort order,
+    distinguished by the ``ASC``/``DESC`` markers only sort orders
+    carry; one group means neither partition nor order (global frame
+    over one partition)."""
+    import re
+
+    out: list[str | None] = []
+    for line in plan.splitlines():
+        node = re.sub(r"^[\s:+\-*()\d]*", "", line)
+        if not node.startswith("Window ["):
+            continue
+        depth = 0
+        groups: list[str] = []
+        for ch in node:
+            if ch == "[":
+                if depth == 0:
+                    groups.append("")
+                depth += 1
+            if depth > 0 and groups:
+                groups[-1] += ch
+            if ch == "]":
+                depth -= 1
+        partitioned = len(groups) >= 3 or (
+            len(groups) == 2
+            and not re.search(r"\b(ASC|DESC) NULLS (FIRST|LAST)", groups[1])
+        )
+        out.append(groups[1] if partitioned else None)
+    return out
+
+
+def count_unpartitioned_windows(df: DataFrame | str) -> int:
+    """Number of WindowExec nodes with NO partition spec — the 'move
+    all data to a single partition' shape that WindowExec warns about.
     Only row-scaled inputs make this an anti-pattern; bounded inputs
     (the n_partitions-row offsets table of the two-pass distributed
     rank, vocabulary-sized cell tables, <=k-row re-ranks) are
-    legitimate and allow-listed per key in
-    tests/test_plan_canary.py."""
-    import re
-
-    n = 0
-    for line in physical_plan(df).splitlines():
-        node = re.sub(r"^[\s:+\-*()\d]*", "", line)
-        if not node.startswith("Window ["):
-            continue
-        depth = 0
-        groups: list[str] = []
-        for ch in node:
-            if ch == "[":
-                if depth == 0:
-                    groups.append("")
-                depth += 1
-            if depth > 0 and groups:
-                groups[-1] += ch
-            if ch == "]":
-                depth -= 1
-        if len(groups) >= 3:
-            continue  # [specs], [partition], [order]
-        if len(groups) == 2 and not re.search(
-            r"\b(ASC|DESC) NULLS (FIRST|LAST)", groups[1]
-        ):
-            continue  # [specs], [partition] — partitioned, unordered
-        n += 1
-    return n
+    legitimate and allowed per key in tests/contracts.py."""
+    return sum(g is None for g in _window_partition_groups(_plan_text(df)))
 
 
-def window_partition_columns(df: DataFrame) -> list[set]:
+def window_partition_columns(df: DataFrame | str) -> list[set]:
     """Per-WindowExec sets of partition column BASE names (``#id``
-    refs stripped), parsed from the executed plan with the same
-    bracket-group walk as :func:`count_unpartitioned_windows`.
-    Unpartitioned windows contribute an empty set. Feeds the
-    low-cardinality window audit (tests/test_plan_canary.py): a
-    window partitioned ONLY by bounded-domain columns is the
-    structural-straggler shape agg_percentile_exact_twostage exists
-    to beat — each such site must be justified."""
+    refs stripped), from the same bracket walk as
+    :func:`count_unpartitioned_windows`. Unpartitioned windows
+    contribute an empty set. Feeds the low-cardinality window audit
+    (tests/test_registry_sweep.py): a window partitioned ONLY by
+    bounded-domain columns is the structural-straggler shape
+    agg_percentile_exact_twostage exists to beat — each such site
+    must be justified."""
     import re
 
     out: list[set] = []
-    for line in physical_plan(df).splitlines():
-        node = re.sub(r"^[\s:+\-*()\d]*", "", line)
-        if not node.startswith("Window ["):
-            continue
-        depth = 0
-        groups: list[str] = []
-        for ch in node:
-            if ch == "[":
-                if depth == 0:
-                    groups.append("")
-                depth += 1
-            if depth > 0 and groups:
-                groups[-1] += ch
-            if ch == "]":
-                depth -= 1
-        part = ""
-        if len(groups) >= 3:
-            part = groups[1]
-        elif len(groups) == 2 and not re.search(
-            r"\b(ASC|DESC) NULLS (FIRST|LAST)", groups[1]
-        ):
-            part = groups[1]
-        cols = set(
-            re.findall(r"([A-Za-z_][A-Za-z0-9_]*)#\d+", part)
-        )
+    for part in _window_partition_groups(_plan_text(df)):
+        part = part or ""
+        cols = set(re.findall(r"([A-Za-z_][A-Za-z0-9_]*)#\d+", part))
         # A NON-empty partition group that parses to zero column refs
         # means the window is partitioned solely by computed
         # expressions with no surviving attribute refs — a shape this
@@ -147,7 +134,7 @@ def window_partition_columns(df: DataFrame) -> list[set]:
     return out
 
 
-def lowcard_repartition_exchanges(df: DataFrame, lowcard: frozenset) -> list[str]:
+def lowcard_repartition_exchanges(df: DataFrame | str, lowcard: frozenset) -> list[str]:
     """USER-INJECTED hash repartitions keyed only on bounded-domain
     columns — the round-16 agg_basic regression shape (VERDICT r16
     items 2/3): ``repartition(target, keys)`` with |key domain| ≪
@@ -162,7 +149,7 @@ def lowcard_repartition_exchanges(df: DataFrame, lowcard: frozenset) -> list[str
     import re
 
     out: list[str] = []
-    for line in physical_plan(df).splitlines():
+    for line in _plan_text(df).splitlines():
         m = re.search(
             r"Exchange hashpartitioning\((.*)\), "
             r"(REPARTITION_BY_NUM|REPARTITION_BY_COL)",
@@ -176,12 +163,13 @@ def lowcard_repartition_exchanges(df: DataFrame, lowcard: frozenset) -> list[str
     return out
 
 
-def count_shuffles(df: DataFrame) -> int:
+def count_shuffles(df: DataFrame | str) -> int:
     """Number of shuffle exchanges in the physical plan — the scale
     currency; every one is a full network rewrite of its input."""
-    return physical_plan(df).count("Exchange hashpartitioning") + physical_plan(
-        df
-    ).count("Exchange rangepartitioning")
+    plan = _plan_text(df)
+    return plan.count("Exchange hashpartitioning") + plan.count(
+        "Exchange rangepartitioning"
+    )
 
 
 #: Fixture tables whose row count grows LINEARLY with scale factor,
@@ -208,7 +196,7 @@ SCALING_TABLE_MARKERS = {
 #: grouping key itself scales (groupBy l_suppkey) is NOT truly
 #: bounded — such hints must not rely on this exemption; the de-hint
 #: sweep of round 14 removed every one of them, and new ones need a
-#: justified entry in the canary's allowlist.
+#: justified ``scaling_bcast`` entry in tests/contracts.py.
 _CARDINALITY_BOUNDING = {"Aggregate", "GlobalLimit", "LocalLimit", "Deduplicate"}
 
 
@@ -233,10 +221,13 @@ def broadcast_hinted_scaling_tables(df: DataFrame) -> list[str]:
     import re as _re
 
     analyzed = df._jdf.queryExecution().analyzed()
+    text = analyzed.toString()
+    if "ResolvedHint" not in text:
+        # no hint to audit; skip toJSON, which serializes every
+        # expression tree (hundreds of MB for deeply nested ones)
+        return []
     nodes = _json.loads(analyzed.toJSON())
-    strategies = _re.findall(
-        r"ResolvedHint \(strategy=(\w+)", analyzed.toString()
-    )
+    strategies = _re.findall(r"ResolvedHint \(strategy=(\w+)", text)
 
     def subtree(i: int) -> tuple[list[int], int]:
         """Indices of the subtree rooted at pre-order index i, and the

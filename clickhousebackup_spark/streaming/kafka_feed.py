@@ -323,7 +323,9 @@ class KafkaPythonFeed:
             # — runtime kafka errors mentioning these words must never
             # be misrouted to ConnectorUnavailable.
             error_class = None
-            get_cls = getattr(e, "getErrorClass", None)
+            get_cls = getattr(e, "getCondition", None) or getattr(
+                e, "getErrorClass", None  # deprecated in Spark 4.x
+            )
             if callable(get_cls):
                 try:
                     error_class = get_cls()

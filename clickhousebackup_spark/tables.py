@@ -170,8 +170,8 @@ def warn_probe_slice(
 #: partitions AND converts the exchange from a few partial-agg rows
 #: to every raw row (the round-16 agg_basic regression, driver-
 #: measured 0.94 → 1.25 s on both core arms — VERDICT r16 item 2/3).
-#: The same set drives the plan canary's low-card window check and
-#: its repartition-exchange check (tests/test_plan_canary.py), so a
+#: The same set drives the registry sweep's low-card window check and
+#: its repartition-exchange check (tests/test_registry_sweep.py), so a
 #: new call site repeating the shape fails the suite the day it is
 #: written.
 LOW_CARDINALITY_COLUMNS = frozenset(

@@ -54,6 +54,45 @@ def _norm(v):
     return v
 
 
+# Output-column type classes for the int/float agreement check: the
+# driver renders each side through pandas, where an int column and a
+# float column print differently ("123" vs "123.0") even when the
+# values match. Anything not listed is "other" (strings, dates, lists,
+# structs — the value compare owns those).
+_DUCK_INT = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT", "UTINYINT",
+             "USMALLINT", "UINTEGER", "UBIGINT"}
+_DUCK_FLOAT = {"FLOAT", "DOUBLE", "REAL"}
+_DUCK_BAD = {"HUGEINT", "UHUGEINT"}
+
+_SPARK_INT = {"byte", "short", "integer", "long"}
+_SPARK_FLOAT = {"float", "double"}
+
+
+def duck_class(t: str) -> str:
+    """Type class of a DuckDB DESCRIBE column type."""
+    t = t.upper()
+    if t in _DUCK_BAD:
+        return "HUGEINT"
+    if t in _DUCK_INT:
+        return "int"
+    if t in _DUCK_FLOAT:
+        return "float"
+    if t.startswith("DECIMAL"):
+        return "decimal"
+    return "other"
+
+
+def spark_class(t: str) -> str:
+    """Type class of a Spark ``DataType.typeName()``."""
+    if t in _SPARK_INT:
+        return "int"
+    if t in _SPARK_FLOAT:
+        return "float"
+    if t.startswith("decimal"):
+        return "decimal"
+    return "other"
+
+
 def _floatify_nullable_int_cols(rows):
     """Replay pandas' per-column dtype coercion: any column holding a
     NULL renders its int cells as floats on that side (the driver's

@@ -276,3 +276,15 @@ def test_integrity_diff_detects_tampering(spark, sf_dir):
     assert r["n_extra"] == 2     # duplicated key 2 + mutated key-3 row
     clean = integrity_diff(src, src).collect()[0]
     assert clean["n_missing"] == 0 and clean["n_extra"] == 0
+
+
+def test_catalog_suffix_rejects_literal_breakout(spark, sf_dir):
+    """The suffix is spliced into a parsed SQL string literal: a quote
+    or backslash must raise ValueError (not an assert, which
+    ``python -O`` strips)."""
+    from clickhousebackup_spark.backup.catalog import build_catalog
+
+    events = load_table(spark, sf_dir, "events")
+    for bad in (".zip'", ".z\\ip"):
+        with pytest.raises(ValueError):
+            build_catalog(events, suffix=bad)

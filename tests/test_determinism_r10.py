@@ -9,60 +9,29 @@ Same contract as test_determinism_r5-r9: every key registered in
 these batches must be oracled and produce identical rows on
 back-to-back runs; the keys sit at the tail of
 ``registry._CHECK_PRIORITY`` (round-10 queue).
+
+The coverage, non-vacuity and rerun ids below are views of the
+registry sweep (tests/test_registry_sweep.py), which builds each key
+once; the ``rerun_stable`` flags live in tests/contracts.py.
 """
 
 from __future__ import annotations
 
 import os
 
-import pytest
-
 from clickhousebackup_spark.registry import all_specs
+from tests.test_registry_sweep import key_view, keys_view
 
-from .compare import _norm
+_IDS = """
+    ts_stl_decompose stats_anova_oneway stats_jarque_bera ts_cusum_alarm
+    token_bigram_entropy stats_linregress_multi dq_schema_profile
+    stats_levene_bf stats_runs_test text_mattr_diversity date_business_days
+    emb_pca2_deflation
+""".split()
 
-R10_SESSION_KEYS = [
-    # batch 4
-    "ts_stl_decompose",
-    "stats_anova_oneway",
-    "stats_jarque_bera",
-    "ts_cusum_alarm",
-    "token_bigram_entropy",
-    "stats_linregress_multi",
-    "dq_schema_profile",
-    # batch 5
-    "stats_levene_bf",
-    "stats_runs_test",
-    "text_mattr_diversity",
-    "date_business_days",
-    "emb_pca2_deflation",
-]
-
-
-def _rows(df):
-    cols = sorted(df.columns)
-    return sorted(
-        [tuple(_norm(r[c]) for c in cols) for r in df.collect()], key=repr
-    )
-
-
-def test_r10_session_keys_cover_the_round():
-    specs = all_specs()
-    missing = [k for k in R10_SESSION_KEYS if k not in specs]
-    assert not missing, missing
-    for k in R10_SESSION_KEYS:
-        assert specs[k].oracle is not None, f"{k} must be oracled"
-
-
-def test_r10_session_keys_nonvacuous(spark, sf_dir):
-    for k in R10_SESSION_KEYS:
-        assert all_specs()[k].fn(spark, sf_dir).count() > 0, k
-
-
-@pytest.mark.parametrize("key", R10_SESSION_KEYS)
-def test_rerun_stable(spark, sf_dir, key):
-    fn = all_specs()[key].fn
-    assert _rows(fn(spark, sf_dir)) == _rows(fn(spark, sf_dir))
+test_r10_session_keys_cover_the_round = keys_view("parity", _IDS)
+test_r10_session_keys_nonvacuous = keys_view("rerun", _IDS)
+test_rerun_stable = key_view("rerun", _IDS)
 
 
 def _write_events(spark, tmp_path, rows):

@@ -9,6 +9,10 @@ peak-hour smallest-hour tiebreak.
 
 Same contract as test_determinism_r5-r11; the keys sit at the tail
 of ``registry._CHECK_PRIORITY`` (round-12 queue, DEFERRED).
+
+The coverage, non-vacuity and rerun ids below are views of the
+registry sweep (tests/test_registry_sweep.py), which builds each key
+once; the ``rerun_stable`` flags live in tests/contracts.py.
 """
 
 from __future__ import annotations
@@ -17,43 +21,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from clickhousebackup_spark.registry import all_specs
+from tests.test_registry_sweep import key_view, keys_view
 
-from .compare import _norm
+_IDS = """
+    stats_kruskal_wallis orders_abc_analysis text_tfidf_topk ts_rolling_slope
+    win_groups_frame_emulated events_peak_hour
+""".split()
 
-R12_QUEUE_KEYS = [
-    "stats_kruskal_wallis",
-    "orders_abc_analysis",
-    "text_tfidf_topk",
-    "ts_rolling_slope",
-    "win_groups_frame_emulated",
-    "events_peak_hour",
-]
-
-
-def _rows(df):
-    cols = sorted(df.columns)
-    return sorted(
-        [tuple(_norm(r[c]) for c in cols) for r in df.collect()], key=repr
-    )
-
-
-def test_r12_queue_keys_cover_the_round():
-    specs = all_specs()
-    missing = [k for k in R12_QUEUE_KEYS if k not in specs]
-    assert not missing, missing
-    for k in R12_QUEUE_KEYS:
-        assert specs[k].oracle is not None, f"{k} must be oracled"
-
-
-def test_r12_queue_keys_nonvacuous(spark, sf_dir):
-    for k in R12_QUEUE_KEYS:
-        assert all_specs()[k].fn(spark, sf_dir).count() > 0, k
-
-
-@pytest.mark.parametrize("key", R12_QUEUE_KEYS)
-def test_rerun_stable(spark, sf_dir, key):
-    fn = all_specs()[key].fn
-    assert _rows(fn(spark, sf_dir)) == _rows(fn(spark, sf_dir))
+test_r12_queue_keys_cover_the_round = keys_view("parity", _IDS)
+test_r12_queue_keys_nonvacuous = keys_view("rerun", _IDS)
+test_rerun_stable = key_view("rerun", _IDS)
 
 
 def _events_dir(spark, tmp_path, rows):

@@ -6,6 +6,10 @@ single-row-partition NULL, and the -If matrix's live OrNull branch.
 
 Same contract as test_determinism_r5-r13; the keys sit at the tail
 of ``registry._CHECK_PRIORITY`` (round-12 queue, DEFERRED).
+
+The coverage, non-vacuity and rerun ids below are views of the
+registry sweep (tests/test_registry_sweep.py), which builds each key
+once; the ``rerun_stable`` flags live in tests/contracts.py.
 """
 
 from __future__ import annotations
@@ -15,46 +19,18 @@ from datetime import datetime
 import pytest
 
 from clickhousebackup_spark.registry import all_specs
+from tests.test_registry_sweep import key_view, keys_view
 
-from .compare import _norm
+_IDS = """
+    stats_welch_anova events_wau_rolling win_frame_exclude_current
+    agg_combinators_if_matrix dedup_hierarchical_two_level
+    intervals_peak_position str_has_subsequence ts_backtest_seasonal_naive
+    scan_bloom_filter_lookup
+""".split()
 
-R14_QUEUE_KEYS = [
-    "stats_welch_anova",
-    "events_wau_rolling",
-    "win_frame_exclude_current",
-    "agg_combinators_if_matrix",
-    "dedup_hierarchical_two_level",
-    "intervals_peak_position",
-    "str_has_subsequence",
-    "ts_backtest_seasonal_naive",
-    "scan_bloom_filter_lookup",
-]
-
-
-def _rows(df):
-    cols = sorted(df.columns)
-    return sorted(
-        [tuple(_norm(r[c]) for c in cols) for r in df.collect()], key=repr
-    )
-
-
-def test_r14_queue_keys_cover_the_round():
-    specs = all_specs()
-    missing = [k for k in R14_QUEUE_KEYS if k not in specs]
-    assert not missing, missing
-    for k in R14_QUEUE_KEYS:
-        assert specs[k].oracle is not None, f"{k} must be oracled"
-
-
-def test_r14_queue_keys_nonvacuous(spark, sf_dir):
-    for k in R14_QUEUE_KEYS:
-        assert all_specs()[k].fn(spark, sf_dir).count() > 0, k
-
-
-@pytest.mark.parametrize("key", R14_QUEUE_KEYS)
-def test_rerun_stable(spark, sf_dir, key):
-    fn = all_specs()[key].fn
-    assert _rows(fn(spark, sf_dir)) == _rows(fn(spark, sf_dir))
+test_r14_queue_keys_cover_the_round = keys_view("parity", _IDS)
+test_r14_queue_keys_nonvacuous = keys_view("rerun", _IDS)
+test_rerun_stable = key_view("rerun", _IDS)
 
 
 def _events_dir(spark, tmp_path, rows):

@@ -7,6 +7,10 @@ divergence at the sf1 slice's 971k-row groups.
 
 Same contract as test_determinism_r5-r14; the keys sit at the tail of
 ``registry._CHECK_PRIORITY`` (round-13 queue, DEFERRED).
+
+The coverage, non-vacuity and rerun ids below are views of the
+registry sweep (tests/test_registry_sweep.py), which builds each key
+once; the ``rerun_stable`` flags live in tests/contracts.py.
 """
 
 from __future__ import annotations
@@ -14,17 +18,16 @@ from __future__ import annotations
 import math
 from datetime import datetime
 
-import pytest
-
 from clickhousebackup_spark.registry import all_specs
+from tests.test_registry_sweep import key_view, keys_view
 
-from .compare import _norm
+_IDS = """
+    q1_pricing_summary_grid path_transitions_twostage win_running_sum_twostage
+""".split()
 
-R15_QUEUE_KEYS = [
-    "q1_pricing_summary_grid",
-    "path_transitions_twostage",
-    "win_running_sum_twostage",
-]
+test_r15_queue_keys_cover_the_round = keys_view("parity", _IDS)
+test_r15_queue_keys_nonvacuous = keys_view("rerun", _IDS)
+test_rerun_stable = key_view("rerun", _IDS)
 
 LINEITEM_SCHEMA = (
     "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
@@ -32,32 +35,6 @@ LINEITEM_SCHEMA = (
     "l_tax double, l_returnflag string, l_linestatus string, "
     "l_shipdate timestamp"
 )
-
-
-def _rows(df):
-    cols = sorted(df.columns)
-    return sorted(
-        [tuple(_norm(r[c]) for c in cols) for r in df.collect()], key=repr
-    )
-
-
-def test_r15_queue_keys_cover_the_round():
-    specs = all_specs()
-    missing = [k for k in R15_QUEUE_KEYS if k not in specs]
-    assert not missing, missing
-    for k in R15_QUEUE_KEYS:
-        assert specs[k].oracle is not None, f"{k} must be oracled"
-
-
-def test_r15_queue_keys_nonvacuous(spark, sf_dir):
-    for k in R15_QUEUE_KEYS:
-        assert all_specs()[k].fn(spark, sf_dir).count() > 0, k
-
-
-@pytest.mark.parametrize("key", R15_QUEUE_KEYS)
-def test_rerun_stable(spark, sf_dir, key):
-    fn = all_specs()[key].fn
-    assert _rows(fn(spark, sf_dir)) == _rows(fn(spark, sf_dir))
 
 
 def _lineitem_dir(spark, tmp_path, rows):

@@ -1,102 +1,37 @@
-"""Round-7 additions: registered+oracled coverage and rerun stability.
+"""Round-7 rerun-stability test ids, kept as views of the registry
+sweep.
 
-Same contract as test_determinism_r5/r6: every key registered this
-round must be oracled (or explicitly excused) and produce identical
-rows on back-to-back runs — the cheap local guard before the driver's
-sf0.01 hash gate. The keys here also appear at the tail of
-``registry._CHECK_PRIORITY`` (round-8 window head); tests/
-test_rotation.py enforces that coupling mechanically.
+Building and collecting the same query twice must produce identical,
+non-empty rows. tests/test_registry_sweep.py checks that once per key
+(the ``rerun_stable`` flags live in tests/contracts.py); the ids below
+assert that clause, and the coverage ids the key's oracle parity, of
+that single build. The list is frozen: new keys go in
+tests/contracts.py only.
 """
 
 from __future__ import annotations
 
-import pytest
+from tests.test_registry_sweep import key_view, keys_view
 
-from clickhousebackup_spark.registry import all_specs
+_IDS = """
+    multimodal_payload_export ts_ohlc_bars ts_vwap user_churn_flags
+    attribution_last_touch sequence_match_timed limit_by_offset
+    stats_wilson_ci stats_cohens_d sql_pipe_syntax sql_parameterized
+    func_try_arith json_variant_ops join_hint_merge scan_observed_metrics
+    scan_json_malformed sink_partitioned_overwrite scan_recursive_glob
+    sink_parquet_codecs stream_stateful_totals join_lateral_topn
+    sql_group_order_by_all sql_qualify_topk sql_select_modifiers
+    agg_filter_where orderby_with_fill corpus_global_shuffle
+    text_ngram_novelty corpus_upsample_repeat scan_text_lines
+    scan_binary_files scan_xml_source sim_pq_adc_topk backup_dedup_savings
+    quantile_exact_weighted_grid win_first_last_ignore_nulls
+    agg_combinators_array sql_recursive_cte win_range_interval_frame
+    func_datetime64_precision dedup_minhash_estimate_vs_truth
+    emb_mrl_overlap_curve text_dedup_span_removal
+""".split()
 
-from .compare import _norm
-
-R7_KEYS = [
-    "multimodal_payload_export",
-    # batch 1: analytics6 — OHLC/VWAP/churn/attribution/AB-stats
-    "ts_ohlc_bars",
-    "ts_vwap",
-    "user_churn_flags",
-    "attribution_last_touch",
-    "sequence_match_timed",
-    "limit_by_offset",
-    "stats_wilson_ci",
-    "stats_cohens_d",
-    # batch 2: sqlsurface — modern Spark SQL engine surface
-    "sql_pipe_syntax",
-    "sql_parameterized",
-    "func_try_arith",
-    "json_variant_ops",
-    "join_hint_merge",
-    "scan_observed_metrics",
-    # batch 3: sources/sinks — feed robustness + lake layout
-    "scan_json_malformed",
-    "sink_partitioned_overwrite",
-    "scan_recursive_glob",
-    "sink_parquet_codecs",
-    # batch 4: streaming — real applyInPandasWithState under the gate
-    "stream_stateful_totals",
-    # batch 5: declarative SQL surface, second helping
-    "join_lateral_topn",
-    "sql_group_order_by_all",
-    "sql_qualify_topk",
-    "sql_select_modifiers",
-    "agg_filter_where",
-    "orderby_with_fill",
-    # batch 6: training-order + novelty + upsampling
-    "corpus_global_shuffle",
-    "text_ngram_novelty",
-    "corpus_upsample_repeat",
-    # batch 7: remaining first-class feed formats
-    "scan_text_lines",
-    "scan_binary_files",
-    "scan_xml_source",
-    # batch 8: staged ANN retrieval + backup storage accounting
-    "sim_pq_adc_topk",
-    "backup_dedup_savings",
-    # batch 9: exact weighted quantiles, IGNORE NULLS windows,
-    # -Array combinators
-    "quantile_exact_weighted_grid",
-    "win_first_last_ignore_nulls",
-    "agg_combinators_array",
-    # batch 10: recursion, time-range frames, sub-second precision
-    "sql_recursive_cte",
-    "win_range_interval_frame",
-    "func_datetime64_precision",
-    # batch 11: estimator calibration + MRL curve
-    "dedup_minhash_estimate_vs_truth",
-    "emb_mrl_overlap_curve",
-    "text_dedup_span_removal",
-]
+test_r7_keys_cover_the_round = keys_view("parity", _IDS)
+test_r7_keys_nonvacuous = keys_view("rerun", _IDS)
+test_rerun_stable = key_view("rerun", _IDS)
 
 
-def _rows(df):
-    cols = sorted(df.columns)
-    return sorted(
-        [tuple(_norm(r[c]) for c in cols) for r in df.collect()], key=repr
-    )
-
-
-def test_r7_keys_cover_the_round():
-    specs = all_specs()
-    missing = [k for k in R7_KEYS if k not in specs]
-    assert not missing, missing
-    for k in R7_KEYS:
-        assert specs[k].oracle is not None, f"{k} must be oracled"
-
-
-def test_r7_keys_nonvacuous(spark, sf_dir):
-    # a 0-row result passes rows/schema/hash trivially — forbid it
-    for k in R7_KEYS:
-        assert all_specs()[k].fn(spark, sf_dir).count() > 0, f"{k} vacuous"
-
-
-@pytest.mark.parametrize("key", R7_KEYS)
-def test_rerun_stable(spark, sf_dir, key):
-    spec = all_specs()[key]
-    assert _rows(spec.fn(spark, sf_dir)) == _rows(spec.fn(spark, sf_dir))

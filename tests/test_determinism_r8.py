@@ -9,80 +9,30 @@ rows on back-to-back runs — the cheap local guard before the driver's
 sf0.01 hash gate. The keys here also appear at the tail of
 ``registry._CHECK_PRIORITY`` (2 in the round-8 window, the rest at
 the round-9 head); tests/test_rotation.py enforces that coupling.
+
+The coverage, non-vacuity and rerun ids below are views of the
+registry sweep (tests/test_registry_sweep.py), which builds each key
+once; the ``rerun_stable`` flags live in tests/contracts.py.
 """
 
 from __future__ import annotations
 
-import pytest
+from tests.test_registry_sweep import key_view, keys_view
 
-from clickhousebackup_spark.registry import all_specs
+_IDS = """
+    stats_corr_matrix stats_kendall_tau ts_outliers_tukey ts_holt_linear
+    date_week_mode sql_unpivot_syntax sql_named_window sql_values_inline
+    emb_hard_negatives corpus_interleave_round_robin merge_coalescing_final
+    array_search_funcs ts_cumsum_reset graph_triangle_count scan_file_metadata
+    multimodal_patch_budget date_timezone_convert emb_centroid_distances
+    array_sort_funcs sql_nulls_ordering sql_distinct_on mergetree_ttl_rollup
+    dq_histogram_drift corpus_shard_manifest ip_prefix_rollup sample_bottom_k
+    agg_histogram_equi_depth sql_lateral_alias multimodal_interleaved_layout
+""".split()
 
-from .compare import _norm
-
-R8_KEYS = [
-    # batch 1: analytics7 — CH stats/series parity
-    "stats_corr_matrix",
-    "stats_kendall_tau",
-    "ts_outliers_tukey",
-    "ts_holt_linear",
-    "date_week_mode",
-    # batch 2: analytics7 — modern SQL surface, third helping
-    "sql_unpivot_syntax",
-    "sql_named_window",
-    "sql_values_inline",
-    # batch 3: training-pipeline — mining + ordering
-    "emb_hard_negatives",
-    "corpus_interleave_round_robin",
-    # batch 4: CH engine/function parity + provenance + budgets
-    "merge_coalescing_final",
-    "array_search_funcs",
-    "ts_cumsum_reset",
-    "graph_triangle_count",
-    "scan_file_metadata",
-    "multimodal_patch_budget",
-    # batch 5: tz conversion, class geometry, sort battery, dialect pins
-    "date_timezone_convert",
-    "emb_centroid_distances",
-    "array_sort_funcs",
-    "sql_nulls_ordering",
-    "sql_distinct_on",
-    # batch 6: tiered TTL rollup, drift DQ, export manifests, CIDR rollup
-    "mergetree_ttl_rollup",
-    "dq_histogram_drift",
-    "corpus_shard_manifest",
-    "ip_prefix_rollup",
-    # batch 7: bottom-k sampling, CBO stats, lateral aliases, VLM layout
-    "sample_bottom_k",
-    "agg_histogram_equi_depth",
-    "sql_lateral_alias",
-    "multimodal_interleaved_layout",
-]
-
-
-def _rows(df):
-    cols = sorted(df.columns)
-    return sorted(
-        [tuple(_norm(r[c]) for c in cols) for r in df.collect()], key=repr
-    )
-
-
-def test_r8_keys_cover_the_round():
-    specs = all_specs()
-    missing = [k for k in R8_KEYS if k not in specs]
-    assert not missing, missing
-    for k in R8_KEYS:
-        assert specs[k].oracle is not None, f"{k} must be oracled"
-
-
-def test_r8_keys_nonvacuous(spark, sf_dir):
-    for k in R8_KEYS:
-        assert all_specs()[k].fn(spark, sf_dir).count() > 0, f"{k} vacuous"
-
-
-@pytest.mark.parametrize("key", R8_KEYS)
-def test_rerun_stable(spark, sf_dir, key):
-    spec = all_specs()[key]
-    assert _rows(spec.fn(spark, sf_dir)) == _rows(spec.fn(spark, sf_dir))
+test_r8_keys_cover_the_round = keys_view("parity", _IDS)
+test_r8_keys_nonvacuous = keys_view("rerun", _IDS)
+test_rerun_stable = key_view("rerun", _IDS)
 
 
 def test_tukey_low_fence_fires_on_crafted_series(spark):

@@ -9,75 +9,31 @@ runs — the cheap local guard before the driver's sf0.01 hash gate.
 The keys also appear at the tail of ``registry._CHECK_PRIORITY``
 (five in the round-9 window, the rest DEFERRED at the round-10
 head); tests/test_rotation.py enforces that coupling.
+
+The coverage, non-vacuity and rerun ids below are views of the
+registry sweep (tests/test_registry_sweep.py), which builds each key
+once; the ``rerun_stable`` flags live in tests/contracts.py.
 """
 
 from __future__ import annotations
 
-import pytest
-
 from clickhousebackup_spark.registry import all_specs
+from tests.test_registry_sweep import key_view, keys_view
 
-from .compare import _norm
+_IDS = """
+    stats_entropy stats_theils_u stats_contingency_coef stats_student_ttest
+    stats_ab_min_sample seq_gaps_islands sql_quantified_compare
+    date_parse_best_effort corpus_temperature_mix emb_power_iteration_pc1
+    emb_random_projection sample_hash_consistent dq_benford_law
+    events_markov_stationary stats_wilcoxon_signed corpus_datasheet
+    text_zipf_fit ts_period_detect str_phonetic_soundex text_readability_fk
+    seq_edit_distance sketch_countmin_freq ts_kalman_level
+    events_burstiness_index ts_theil_sen_slope
+""".split()
 
-R9_SESSION_KEYS = [
-    # batch 2: information-theoretic + experiment-design stats,
-    # sequence gaps, SQL surface, parsing, corpus mixing
-    "stats_entropy",
-    "stats_theils_u",
-    "stats_contingency_coef",
-    "stats_student_ttest",
-    "stats_ab_min_sample",
-    "seq_gaps_islands",
-    "sql_quantified_compare",
-    "date_parse_best_effort",
-    "corpus_temperature_mix",
-    # linalg flagships
-    "emb_power_iteration_pc1",
-    "emb_random_projection",
-    # batch 3: sampling, auditing, Markov
-    "sample_hash_consistent",
-    "dq_benford_law",
-    "events_markov_stationary",
-    # batch 4: rank test, datasheet, Zipf
-    "stats_wilcoxon_signed",
-    "corpus_datasheet",
-    "text_zipf_fit",
-    # batch 5: spectral probe, phonetics, readability, SQL DP
-    "ts_period_detect",
-    "str_phonetic_soundex",
-    "text_readability_fk",
-    "seq_edit_distance",
-    "sketch_countmin_freq",
-    "ts_kalman_level",
-    "events_burstiness_index",
-    "ts_theil_sen_slope",
-]
-
-
-def _rows(df):
-    cols = sorted(df.columns)
-    return sorted(
-        [tuple(_norm(r[c]) for c in cols) for r in df.collect()], key=repr
-    )
-
-
-def test_r9_session_keys_cover_the_round():
-    specs = all_specs()
-    missing = [k for k in R9_SESSION_KEYS if k not in specs]
-    assert not missing, missing
-    for k in R9_SESSION_KEYS:
-        assert specs[k].oracle is not None, f"{k} must be oracled"
-
-
-def test_r9_session_keys_nonvacuous(spark, sf_dir):
-    for k in R9_SESSION_KEYS:
-        assert all_specs()[k].fn(spark, sf_dir).count() > 0, f"{k} vacuous"
-
-
-@pytest.mark.parametrize("key", R9_SESSION_KEYS)
-def test_rerun_stable(spark, sf_dir, key):
-    spec = all_specs()[key]
-    assert _rows(spec.fn(spark, sf_dir)) == _rows(spec.fn(spark, sf_dir))
+test_r9_session_keys_cover_the_round = keys_view("parity", _IDS)
+test_r9_session_keys_nonvacuous = keys_view("rerun", _IDS)
+test_rerun_stable = key_view("rerun", _IDS)
 
 
 def test_quantified_compare_empty_set_arm(spark, tmp_path):

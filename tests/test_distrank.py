@@ -5,7 +5,7 @@ inputs (ties, skew, decimal sums, n<k and n%k!=0 tile cuts).
 The six operators the round-8 audit graded `weak` (single-partition
 total-order windows over row-scaled input) now route through these
 helpers; the final plans no longer contain the offending WindowExec
-(tests/test_plan_canary.py pins that), and THIS file pins that the
+(tests/test_registry_sweep.py pins that), and THIS file pins that the
 distributed two-pass results are bit-identical to the global-window
 formulation they replaced.
 """

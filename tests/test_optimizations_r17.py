@@ -83,9 +83,9 @@ def test_agg_basic_has_no_user_repartition_and_one_shuffle(spark, sf_dir):
 
 
 def test_emb_kmeans_nlj_is_pinned():
-    from tests.test_plan_canary import NLJ_ALLOWED
+    from tests.contracts import CONTRACTS
 
-    assert NLJ_ALLOWED.get("emb_kmeans") == 1
+    assert CONTRACTS["emb_kmeans"].nlj == 1
 
 
 # --- one-call spark.sql construction (plan-identity, r17) ---------------

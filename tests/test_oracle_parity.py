@@ -1,31 +1,14 @@
-"""Every registered query with an oracle must match DuckDB exactly —
-the local mirror of the driver's sf0.01 hash gate, run at sf0.001.
+"""Oracle-parity test ids, kept as views of the registry sweep.
+
+Every registered query must match its DuckDB oracle exactly — the
+local mirror of the driver's sf0.01 hash gate, run at sf0.001.
+tests/test_registry_sweep.py checks that on its one build per key;
+each id below asserts that clause of that build.
 """
 
 from __future__ import annotations
 
-import pytest
-
-pytestmark = pytest.mark.slow  # registry-wide sweep; see pytest.ini
-
 from clickhousebackup_spark.registry import all_specs
-from tests.compare import assert_same_result
+from tests.test_registry_sweep import key_view
 
-SPECS = all_specs()
-ORACLE_KEYS = sorted(k for k, s in SPECS.items() if s.oracle is not None)
-ROWS_ONLY_KEYS = sorted(k for k, s in SPECS.items() if s.oracle is None)
-
-
-@pytest.mark.parametrize("key", ORACLE_KEYS)
-def test_oracle_parity(spark, duck, sf_dir, key):
-    spec = SPECS[key]
-    df = spec.fn(spark, sf_dir)
-    assert_same_result(df, duck, spec.oracle, name=key)
-
-
-@pytest.mark.parametrize("key", ROWS_ONLY_KEYS)
-def test_rows_only_runs(spark, sf_dir, key):
-    spec = SPECS[key]
-    df = spec.fn(spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
+test_oracle_parity = key_view("parity", sorted(all_specs()))

@@ -8,18 +8,16 @@ HUGEINT as float64, so a value-correct oracle still hash-fails
 (``"123.0"`` vs Spark's ``"123"``). Round 5 lost
 ``corpus_pack_sequences`` and ``text_cdc_chunks`` to exactly this.
 
-This lint runs ``DESCRIBE`` on every registered oracle in DuckDB
-(no data execution) and the Spark analyzer on every registered query
-(schema only — no job), then fails on:
+This lint runs ``DESCRIBE`` on every registered oracle in DuckDB (no
+data execution) and fails on any ``HUGEINT`` / ``UHUGEINT`` output
+column (pandas → float64, guaranteed driver hash breakage for integer
+semantics). It fails if the ``CAST(... AS BIGINT)`` fixes in
+extensions/training.py are ever reverted.
 
-- any ``HUGEINT`` / ``UHUGEINT`` output column (pandas → float64,
-  guaranteed driver hash breakage for integer semantics);
-- an int-vs-float TYPE-CLASS mismatch between the Spark schema and
-  the DuckDB schema for the same output column.
-
-Cheap (analysis only), registry-wide, and it fails if the
-``CAST(... AS BIGINT)`` fixes in extensions/training.py are ever
-reverted.
+The int-vs-float class agreement between the Spark schema and the
+DuckDB schema is one clause of the registry sweep
+(tests/test_registry_sweep.py), which reads the real schema of every
+key's single build.
 """
 
 from __future__ import annotations
@@ -27,88 +25,13 @@ from __future__ import annotations
 import pytest
 
 from clickhousebackup_spark.registry import all_specs
-
-# DuckDB type name → class. Anything not listed is "other" (strings,
-# dates, lists, structs — the value-compare harness owns those).
-_DUCK_INT = {"TINYINT", "SMALLINT", "INTEGER", "BIGINT", "UTINYINT",
-             "USMALLINT", "UINTEGER", "UBIGINT"}
-_DUCK_FLOAT = {"FLOAT", "DOUBLE", "REAL"}
-_DUCK_BAD = {"HUGEINT", "UHUGEINT"}
-
-_SPARK_INT = {"byte", "short", "integer", "long"}
-_SPARK_FLOAT = {"float", "double"}
-
-
-def _duck_class(t: str) -> str:
-    t = t.upper()
-    if t in _DUCK_BAD:
-        return "HUGEINT"
-    if t in _DUCK_INT:
-        return "int"
-    if t in _DUCK_FLOAT:
-        return "float"
-    if t.startswith("DECIMAL"):
-        return "decimal"
-    return "other"
-
-
-def _spark_class(t: str) -> str:
-    if t in _SPARK_INT:
-        return "int"
-    if t in _SPARK_FLOAT:
-        return "float"
-    if t.startswith("decimal"):
-        return "decimal"
-    return "other"
+from tests.compare import duck_class
+from tests.test_registry_sweep import keys_view
 
 
 @pytest.fixture(scope="module")
 def oracled_specs():
     return {k: s for k, s in all_specs().items() if s.oracle}
-
-
-#: Keys whose DataFrame CONSTRUCTION eagerly executes work (scratch
-#: parquet/CSV/table writes, iterative fixpoints with eager
-#: localCheckpoints), so ``spec.fn(...).schema`` is not analysis-only.
-#: For these the parity lint uses a pinned declared schema instead of
-#: building the plan; drift from the pin is impossible to miss because
-#: tests/test_oracle_parity.py executes every key for real and the
-#: compare harness checks the actual schema there.
-_DECLARED_SCHEMA: dict[str, dict[str, str]] = {
-    "scan_schema_merge": {"n_rows": "int", "key_sum": "int",
-                          "n_with_priority": "int", "n_priorities": "int"},
-    "scan_csv_malformed": {"n_rows": "int", "n_null_key": "int",
-                           "sum_cents_valid": "int", "n_after_drop": "int"},
-    "sink_bucketed_sorted": {"o_custkey": "int", "o_orderkey": "int",
-                             "o_totalprice": "float"},
-    "dedup_clusters": {"doc_id": "int", "cluster": "int"},
-    "dedup_clusters_neardup": {"doc_id": "int", "cluster": "int"},
-    "scan_observed_metrics": {"n_rows": "int", "sum_cents": "int",
-                              "max_event_id": "int", "n_errors": "int"},
-    "scan_json_malformed": {"n_rows": "int", "n_corrupt": "int",
-                            "sum_cents_valid": "int", "n_valid": "int"},
-    "sink_partitioned_overwrite": {"o_orderstatus": "other", "n": "int",
-                                   "cents": "int"},
-    "scan_recursive_glob": {"n_a": "int", "n_b": "int",
-                            "cents_kept": "int", "n_skipped": "int"},
-    "sink_parquet_codecs": {"codec": "other", "n": "int", "cents": "int"},
-    "stream_stateful_totals": {"user_id": "int", "n_events": "int",
-                               "total_value_micro": "int",
-                               "last_us": "int"},
-    "scan_text_lines": {"n_lines": "int", "total_chars": "int",
-                        "checksum": "int"},
-    "scan_binary_files": {"fname": "other", "length": "int",
-                          "content_md5": "other"},
-    "scan_xml_source": {"event_type": "other", "n": "int", "cents": "int",
-                        "min_id": "int", "max_id": "int"},
-    "dedup_minhash_estimate_vs_truth": {
-        "a_id": "int", "b_id": "int", "est_matches": "int",
-        "est_permille": "int", "n_common_shingles": "int",
-        "jac_permille": "int", "err_permille": "int"},
-    "text_dedup_span_removal": {
-        "doc_id": "int", "n_tokens": "int", "n_covered": "int",
-        "removed_permille": "int"},
-}
 
 
 def test_no_hugeint_in_any_oracle(oracled_specs, duck):
@@ -120,7 +43,7 @@ def test_no_hugeint_in_any_oracle(oracled_specs, duck):
         except Exception as e:  # noqa: BLE001 — surface as lint failure
             offenders[key] = f"DESCRIBE failed: {e}"
             continue
-        bad = [c for c, t, *_ in rows if _duck_class(t) == "HUGEINT"]
+        bad = [c for c, t, *_ in rows if duck_class(t) == "HUGEINT"]
         if bad:
             offenders[key] = f"HUGEINT columns {bad} — CAST(... AS BIGINT)"
     assert not offenders, (
@@ -129,32 +52,4 @@ def test_no_hugeint_in_any_oracle(oracled_specs, duck):
     )
 
 
-def test_spark_duck_numeric_class_parity(oracled_specs, spark, sf_dir, duck):
-    """Spark schema vs DuckDB DESCRIBE: int-vs-float class must agree
-    per output column. Analysis-only for every key except the pinned
-    ``_DECLARED_SCHEMA`` entries, whose construction is side-effecting
-    and whose schemas are therefore declared, not derived."""
-    offenders = {}
-    for key, spec in oracled_specs.items():
-        try:
-            if key in _DECLARED_SCHEMA:
-                s_schema = dict(_DECLARED_SCHEMA[key])
-            else:
-                s_schema = {f.name: _spark_class(f.dataType.typeName())
-                            for f in spec.fn(spark, sf_dir).schema.fields}
-            d_schema = {c: _duck_class(t) for c, t, *_ in
-                        duck.execute(f"DESCRIBE ({spec.oracle})").fetchall()}
-        except Exception as e:  # noqa: BLE001
-            offenders[key] = f"schema derivation failed: {e}"
-            continue
-        for col in s_schema.keys() & d_schema.keys():
-            sc, dc = s_schema[col], d_schema[col]
-            # decimal↔float is tolerated: both sides render through
-            # float() in the compare harness and existing driver-green
-            # keys rely on it. int↔float (or HUGEINT) is the trap.
-            pair = {sc, dc}
-            if "int" in pair and ("float" in pair or "HUGEINT" in pair):
-                offenders.setdefault(key, []).append(
-                    f"{col}: spark={sc} duckdb={dc}"
-                )
-    assert not offenders, f"int/float class mismatches: {offenders}"
+test_spark_duck_numeric_class_parity = keys_view("types", sorted(all_specs()))

@@ -1,352 +1,18 @@
-"""Registry-WIDE physical-plan canary.
+"""Registry-wide physical-plan canary id, kept as a view of the
+registry sweep.
 
-test_plan_shapes pins per-key budgets for rounds 4-7; this canary
-closes the gap for every other key and every FUTURE key: across the
-whole registry, (a) no plan may contain a CartesianProduct, (b) no
-unpinned key may broadcast-hint a table that scales with SF (the
-forced-OOM-at-100-TB shape — SCALING_BCAST_ALLOWED), and (c)
-BroadcastNestedLoopJoin may appear only for the keys pinned below —
-the constant-width probe class (1-8 row scalar/codebook/query-set
-broadcasts, each justified in its key's doc) plus the one key whose
-NLJ is the point (join_cross). A new key that accidentally drops a
-join predicate fails here the day it is registered, not at 100 TB.
-
-Measured at sf0.001. NOT pure analysis: ~40 keys' builders eagerly
-materialize scratch artifacts while constructing their DataFrame
-(sink roundtrips, snapshot writers, localCheckpoint boundaries in the
-dedup/graph fixpoints) — those jobs run here too, and that cost is
-accepted so the canary still inspects their FINAL plan; only keys
-whose result is declared-schema-only (no inspectable plan) and the
-long-running stateful streaming key are skipped, with their shapes
-pinned where they are built.
+tests/test_registry_sweep.py inspects every key's final executed plan
+once (no CartesianProduct; nested-loop joins, unpartitioned windows,
+low-cardinality windows and scaling broadcasts within the key's
+maxima in tests/contracts.py; no low-cardinality user repartition);
+this id asserts that clause for every key.
 """
 
 from __future__ import annotations
 
-import pytest
-
-pytestmark = pytest.mark.slow  # registry-wide sweep; see pytest.ini
-
-from clickhousebackup_spark.plans import inspect
 from clickhousebackup_spark.registry import all_specs
-from clickhousebackup_spark.tables import LOW_CARDINALITY_COLUMNS
+from tests.test_registry_sweep import keys_view
 
-from .test_oracle_types import _DECLARED_SCHEMA
-
-#: key -> max BroadcastNestedLoopJoin count (measured round 7; every
-#: entry is a constant-width probe documented in the key's doc).
-NLJ_ALLOWED: dict[str, int] = {
-    "emb_pq_codes": 1,           # 1-row codebook
-    "emb_kmeans": 1,             # k-row (k=8) centroid broadcast: the
-    # per-round assignment is e ⋈ broadcast(centroids) with no join
-    # condition (every vector scores every centroid — that IS the
-    # Lloyd assignment step), a constant-width probe bounded by k.
-    # The shape existed in every prior round but was hidden from
-    # final-plan inspection by a per-round assignment localCheckpoint
-    # that round 16 removed as pure overhead (consumed-once analysis,
-    # OPTIMIZATION_r16.md); pinning it here is bookkeeping, not a new
-    # runtime shape.
-    "sim_range_search": 1,       # 3-row query set
-    "merge_graphite_rollup": 1,  # 1-row time anchor
-    "mergetree_ttl_expire": 1,   # 1-row TTL horizon
-    "backup_pit_select": 1,      # 1-row point-in-time cutoff
-    "emb_binary_quantize": 1,    # 1-row query mask
-    "agg_time_decay_halflife": 1,  # 1-row decay anchor
-    "session_type_affinity": 1,  # 1-row session-count total
-    "backup_restore_chain": 2,   # 1-row cutoff + base pointer
-    "user_churn_flags": 1,       # 1-row week horizon
-    "stats_cohens_d": 1,         # 1x1 two-group moment join
-    "sim_pq_adc_topk": 4,        # 1-row codebook/LUT/query probes
-    "emb_mrl_overlap_curve": 1,  # 5-row query set
-    "filter_age": 1,             # 1-row max-date scalar subquery
-    "join_cross": 1,             # the key IS a (bounded) cross join
-    "date_fill_forward": 1,      # 1-row [min,max] bounds
-    "date_fill_interpolate": 1,  # 1-row [min,max] bounds
-    "stats_welch_ttest": 1,      # 1x1 two-group moment join
-    "stats_cramers_v": 1,        # 1-row grand total
-    "q11_important_parts": 1,    # TPC-H Q11 scalar threshold
-    "q22_global_sales": 1,       # TPC-H Q22 scalar avg balance
-    "part_fuzzy_levenshtein": 1,  # bounded probe set
-    "mv_incremental_refresh": 2,  # 1-row refresh watermarks
-    "stream_late_data": 1,       # 1-row watermark anchor
-    "backup_retention_plan": 1,  # 1-row policy row
-    "scan_file_metadata": 1,     # 1-row x 1-row totals compose (r15
-    # layout normalization: per-file rollup totals x global distinct)
-    "sim_topk_cosine": 1,        # 1-row query vector
-    "sim_topk_lsh": 1,           # 1-row query signature
-    "sim_topk_ivf": 3,           # 1-row query + 2 probe lists
-    "emb_dim_slice_search": 1,   # 5-row query set
-    "corpus_mix_plan": 1,        # 1-row corpus totals
-    "sketch_recall_probe": 8,    # 4 paired exact/sketch 1-row probes
-    "emb_hard_negatives": 1,     # 5-row query set (label != is the key)
-    "corpus_interleave_round_robin": 1,  # 1-row size-vector broadcast
-    "emb_centroid_distances": 1,  # |labels|-row centroid pair join
-    "mergetree_ttl_rollup": 2,    # 1-row max-ts anchor, one per arm
-    "dq_histogram_drift": 1,      # 1-row bin-totals broadcast
-    "orders_backlog_aging": 1,    # 1-row reference-date broadcast
-    "stats_cramers_v_corrected": 1,  # 1-row contingency-totals bcast
-    "stats_theils_u": 2,          # two 1-row entropy-sum frames
-    "stats_contingency_coef": 2,  # |dow|-row marginal + 1-row totals
-    "sql_quantified_compare": 1,  # 1-row ALL/ANY extrema frame
-    "corpus_temperature_mix": 1,  # 1-row normalizer frame
-    "dq_benford_law": 1,          # 1-row digit-totals frame
-    "emb_random_projection": 1,   # 1-row k x d Rademacher matrix
-    "corpus_datasheet": 1,        # 1-row corpus-totals frame
-    "text_zipf_fit": 1,           # 1-row top-20 fit frame
-    "seq_edit_distance": 1,       # 1-row modal-reference frame
-    "sketch_countmin_freq": 1,    # 1-row grand-total frame
-    "stats_kruskal_wallis": 1,    # 1-row tie-sum frame
-    "orders_seasonal_index": 1,   # 1-row grand-total frame
-    "dq_orders_lineitem_reconcile": 1,  # 1-row orphan-count frame
-    "stats_permutation_test_hash": 1,   # 1-row observed-stat frame
-    "stats_welch_anova": 1,       # 1-row weight-totals frame
-    "events_wau_rolling": 1,      # 1-row max-day clip frame
-    "events_markov_stationary": 1,  # |types|^2 marginal cross (the
-    # key's documented NLJ) — previously hidden from final-plan
-    # inspection by the per-step checkpoints r17 removed
-}
-
-#: key -> max unpartitioned-WindowExec count (total-order windows,
-#: the 'move all data to a single partition' shape). A key NOT listed
-#: here must have ZERO — a new operator that sorts row-scaled input
-#: through one partition fails the day it is registered. Every entry
-#: below is a BOUNDED input, audited round 9:
-#:   - "offsets": the n_shuffle_partitions-row per-partition summary
-#:     table of the two-pass distributed rank (distrank.py /
-#:     sort_multi) — bounded by cluster config, not data. Counts of
-#:     2 = separate cumulative-offset and global-total window specs
-#:     over that same tiny table.
-#:   - vocabulary / candidate-set / <=k-row cases, noted inline.
-#: Eager localCheckpoint stages are invisible to final-plan
-#: inspection; their semantics are pinned in tests/test_distrank.py.
-UNPART_WINDOW_ALLOWED: dict[str, int] = {
-    "sort_multi": 1,                # offsets
-    "agg_histogram_equi_depth": 2,  # offsets + totals
-    "stats_mannwhitney_u": 1,       # offsets
-    "stats_roc_auc": 1,             # offsets
-    "stats_ks_test": 2,             # offsets + totals
-    "orders_rfm_segments": 2,       # offsets + totals (single melted scan)
-    "orders_pareto_8020": 2,        # offsets + totals
-    "join_null_safe": 1,            # vocabulary-sized dim code assign
-    "dict_encode_lowcard": 1,       # vocabulary-sized dictionary codes
-    "stats_chi2_cells": 1,          # contingency CELL table (|types|x2)
-    "skyline_orders": 1,            # final sweep over local-skyline
-    #                                 survivors (skyline algebra bounds
-    #                                 the candidate set, never the table)
-    "sim_pq_adc_topk": 1,           # rank over the 5-row top-k
-    "seq_gaps_islands": 2,          # two distrank offset tables
-    "stats_wilcoxon_signed": 1,     # distrank offsets (|d| histogram)
-    "ts_period_detect": 1,          # dominant rank over 3 arm rows
-    "orders_abc_analysis": 2,       # offsets + totals (distrank scan)
-    "stats_kruskal_wallis": 1,      # offsets (distrank cumsum over
-    #                                 the distinct-value table)
-    "path_transition_lift": 1,      # grand-total window over the
-    #                                 |types|^2-bounded transition matrix
-}
-
-#: Fixture columns whose domain is BOUNDED (independent of row
-#: count). A window partitioned ONLY by these is the structural-
-#: straggler shape: every row of a group lands in one task at any
-#: scale, zipf or uniform (agg_percentile_exact measured ~10 s
-#: absolute max-task on BOTH probe arms — the shape family six
-#: exists to beat). Derived salt/bucket columns are deliberately NOT
-#: here: bucketing is the fix, so a (type, vbucket) window passes.
-LOW_CARD_COLUMNS = {
-    "event_type", "o_orderstatus", "o_orderpriority", "l_returnflag",
-    "l_linestatus", "l_shipmode", "lang", "source", "label",
-    "r_name", "n_name", "p_brand", "p_type", "measure",
-}
-
-#: key -> max count of windows whose partition spec is a subset of
-#: LOW_CARD_COLUMNS. A key NOT listed must have ZERO — a new
-#: operator repeating the agg_percentile_exact shape fails the day
-#: it is registered. Audited this round; justification classes:
-#:   summary  — the window input is PRE-AGGREGATED (groupBy before
-#:              the window), so partition size is bounded by a grid
-#:              (days, buckets, cells, sources), not by row count.
-#:   rank     — row/user-grain ranking per bounded group; the
-#:              documented scale paths are the family-5 value-bucket
-#:              / salted-top-k and family-6 histogram-selection
-#:              decompositions (agg_percentile_exact carries the
-#:              oracle-identical sibling as the worked example).
-#:   series   — per-type ordered lag/frame semantics; the family-3
-#:              (1-row bucket seam) and family-7 (bounded-frame
-#:              bucket+seam) decompositions are the scale paths.
-LOWCARD_WINDOW_ALLOWED: dict[str, int] = {
-    "agg_mode": 1,                    # summary: |status|x|prio| counts
-    "agg_topk_freq": 1,               # rank: per-(type,user) counts
-    "agg_topk_weighted": 1,           # rank: per-(type,user) sums
-    "win_ntile_firstlast": 1,         # rank (the ntile contract key)
-    #                                   — HAS the two-stage sibling
-    "win_ntile_firstlast_twostage": 2,  # summary: per-status
-    #                                   offset/total windows over
-    #                                   <= ~1.7k bucket-summary rows;
-    #                                   order-scale windows key
-    #                                   (status, vbucket)
-    "win_cume_dist_nth": 2,           # rank — HAS the two-stage
-    #                                   sibling
-    "win_cume_dist_nth_twostage": 3,  # summary: per-type offset/
-    #                                   total windows over bucket-
-    #                                   summary rows (replayed per
-    #                                   consumer); event-scale
-    #                                   windows key (type, vbucket)
-    "win_ratio_to_report": 1,         # summary-ish: type-total share;
-    #                                   groupBy-sum + broadcast is the
-    #                                   trivial scale rewrite
-    "win_percent_rank": 1,            # rank — HAS the two-stage
-    #                                   sibling (family eleven)
-    "win_percent_rank_twostage": 2,   # summary: the per-status
-    #                                   offset/total windows over
-    #                                   <= ~600 kilobucket-summary
-    #                                   rows; the order-scale window
-    #                                   keys (status, kilobucket)
-    "agg_percentile_exact": 2,        # rank — HAS the two-stage
-    #                                   sibling (family six)
-    "agg_percentile_approx": 2,       # rank: count-only window; the
-    #                                   sketch itself is the scale path
-    "quantile_timing_grid": 2,        # summary: per-ms grid counts
-    "quantile_exact_weighted_grid": 2,  # rank (grid-exact outputs)
-    "stats_spearman": 2,              # rank: two value/ts rankings
-    "ts_autocorr_lag1": 1,            # series: per-type lag
-    "agg_weighted_median": 2,         # rank — HAS the two-stage
-    #                                   sibling (family ten)
-    "agg_weighted_median_twostage": 1,  # summary: the per-type
-    #                                   cumulative window over
-    #                                   <= ~500 value-bucket
-    #                                   histogram rows; the
-    #                                   event-scale window keys
-    #                                   (event_type, vbucket)
-    "agg_delta_sum": 1,               # series: per-type lag
-    "ts_lttb_downsample": 1,          # summary: per-bucket triangle
-    "ts_nonneg_derivative": 1,        # series: per-type lag — HAS
-    #                                   the two-stage sibling
-    "ts_nonneg_derivative_twostage": 1,  # summary: the per-type seam
-    #                                   lag over ~30 day-summary rows;
-    #                                   event-scale windows key
-    #                                   (type, bucket)
-    "topk_with_ties": 1,              # rank
-    "win_cumulative_uniques": 1,      # summary: per-day firsts
-    "ts_change_point_flags": 1,       # series
-    "stats_chi2_cells": 1,            # summary: |type|x|dow| cells
-    "dq_volume_anomaly": 1,           # summary: per-day counts
-    "ts_outliers_tukey": 2,           # rank: per-type quartiles
-    "sql_named_window": 2,            # rank (WINDOW-clause contract)
-    "corpus_datasheet": 1,            # summary: per-source stats
-    "events_burstiness_index": 1,     # series: per-type gap lag
-    "ts_stl_decompose": 2,            # summary: daily series
-    "stats_levene_bf": 2,             # rank: per-type median
-    "win_groups_frame_emulated": 1,   # series (GROUPS-frame contract)
-    "win_frame_exclude_current": 1,   # series (frame contract)
-    "sql_qualify_topk": 1,            # rank (QUALIFY contract)
-    "win_range_interval_frame": 1,    # series (range-frame contract)
-    "text_langid_confusion": 1,       # summary: |lang|^2 confusion
-    "curation_percentile_gate": 2,    # rank: per-lang percentile gate
-    #                                   — HAS the two-stage sibling
-    "curation_percentile_gate_twostage": 2,  # summary: the per-lang
-    #                                   offset/total windows run over
-    #                                   <= ~55 bucket-summary rows;
-    #                                   the document-scale windows key
-    #                                   (lang, vbucket)
-    "corpus_interleave_round_robin": 1,  # summary: per-source sizes
-}
-
-#: key -> max count of (broadcast hint, SF-scaling table scan) pairs
-#: where no cardinality-bounding node (Aggregate/Limit/Deduplicate)
-#: sits between hint and scan. A key NOT listed must have ZERO: an
-#: explicit broadcast hint overrides AQE's size check, so a hint on a
-#: table that grows with scale factor is a forced executor OOM at the
-#: 100 TB design point, not a graceful degradation (judge round 13 —
-#: the five TPC-H broadcast(customer) hints were exactly this; round
-#: 14 removed every such hint: customer/supplier/part/orders/lineitem
-#: joins are now UNHINTED, size-based broadcast at fixture scale, AQE
-#: shuffle at scale). Every entry below is a frame whose row count is
-#: BOUNDED by construction but whose bound the analyzed-plan walk
-#: cannot see (an equality filter, not an Aggregate/Limit):
-SCALING_BCAST_ALLOWED: dict[str, int] = {
-    "join_broadcast": 1,        # the broadcast-hint CONTRACT key: the
-    #                             hint IS the operator under test; the
-    #                             demoed shape is for genuinely-small
-    #                             dims (fixture uses customer)
-    "sim_topk_cosine": 1,       # 1-row query: vec_id == QUERY_VEC_ID
-    "sim_topk_lsh": 1,          # 1-row query signature (same filter)
-    "sim_topk_ivf": 2,          # 1-row query + 2-probe list (filtered)
-    "sim_pq_adc_topk": 2,       # 1-row query + its LUT
-    "sim_range_search": 1,      # 3-row query set (vec_id IN (...))
-    "emb_binary_quantize": 1,   # 1-row query mask
-    "emb_dim_slice_search": 1,  # 5-row query set
-    "emb_mrl_overlap_curve": 1, # 5-row query set
-    "emb_hard_negatives": 1,    # 5-row query set
-    "sketch_recall_probe": 3,   # paired exact/sketch 1-row probes
-    "win_cume_dist_nth_twostage": 1,  # nth_value(2) frame: rn == 2
-    #                             keeps <= 1 row per event_type
-}
-
-SKIP = set(_DECLARED_SCHEMA) | {"stream_stateful_totals"}
-
-
-def test_no_cartesian_only_pinned_nljs_and_unpart_windows(spark, sf_dir):
-    offenders: dict[str, str] = {}
-    for key, spec in all_specs().items():
-        if key in SKIP:
-            continue
-        df = spec.fn(spark, sf_dir)
-        plan = inspect.physical_plan(df)
-        if "CartesianProduct" in plan:
-            offenders[key] = "CartesianProduct"
-            continue
-        nlj = plan.count("BroadcastNestedLoopJoin")
-        if nlj > NLJ_ALLOWED.get(key, 0):
-            offenders[key] = (
-                f"{nlj} BroadcastNestedLoopJoin "
-                f"(allowed {NLJ_ALLOWED.get(key, 0)})"
-            )
-            continue
-        upw = inspect.count_unpartitioned_windows(df)
-        if upw > UNPART_WINDOW_ALLOWED.get(key, 0):
-            offenders[key] = (
-                f"{upw} unpartitioned WindowExec "
-                f"(allowed {UNPART_WINDOW_ALLOWED.get(key, 0)})"
-            )
-            continue
-        lcw = sum(
-            1
-            for p in inspect.window_partition_columns(df)
-            if p and p <= LOW_CARD_COLUMNS
-        )
-        if lcw > LOWCARD_WINDOW_ALLOWED.get(key, 0):
-            offenders[key] = (
-                f"{lcw} low-cardinality-partitioned WindowExec "
-                f"(allowed {LOWCARD_WINDOW_ALLOWED.get(key, 0)}) — the "
-                f"structural-straggler shape; bucket the partition "
-                f"(families 5-7) or justify in LOWCARD_WINDOW_ALLOWED"
-            )
-            continue
-        lce = inspect.lowcard_repartition_exchanges(
-            df, LOW_CARDINALITY_COLUMNS
-        )
-        if lce:
-            offenders[key] = (
-                f"{len(lce)} user-injected repartition exchange(s) "
-                f"keyed only on bounded-domain columns ({lce[0]}) — "
-                f"the agg_basic-r16 structural-straggler shape (≤|key "
-                f"domain| non-empty partitions, raw rows across the "
-                f"exchange); drop the keyed fan-out or key it on a "
-                f"high-cardinality column (no allowlist: this shape "
-                f"is never right)"
-            )
-            continue
-        sbc = len(inspect.broadcast_hinted_scaling_tables(df))
-        if sbc > SCALING_BCAST_ALLOWED.get(key, 0):
-            offenders[key] = (
-                f"{sbc} broadcast hint(s) over an SF-scaling table "
-                f"(allowed {SCALING_BCAST_ALLOWED.get(key, 0)}) — a "
-                f"forced OOM at scale-up; drop the hint (AQE sizes "
-                f"it) or justify a bounded frame in "
-                f"SCALING_BCAST_ALLOWED"
-            )
-    assert not offenders, (
-        "unpinned scale-killer plan shapes — fix the plan (distrank."
-        "global_order_scan for total-order ranks/cumsums) or, for a "
-        "genuinely bounded input, pin it with a justification in "
-        f"NLJ_ALLOWED / UNPART_WINDOW_ALLOWED: {offenders}"
-    )
+test_no_cartesian_only_pinned_nljs_and_unpart_windows = keys_view(
+    "plan", sorted(all_specs())
+)

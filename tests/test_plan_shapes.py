@@ -11,6 +11,7 @@ pytestmark = pytest.mark.slow  # registry-wide sweep; see pytest.ini
 
 from clickhousebackup_spark.plans import inspect
 from clickhousebackup_spark.registry import all_specs
+from tests.test_registry_sweep import key_view
 
 SPECS = all_specs()
 
@@ -121,104 +122,161 @@ def test_sort_multi_ranks_via_range_partitioning(spark, sf_dir):
     assert "rangepartitioning" in plan
 
 
-# round-3 TPC-H suite: (max shuffle exchanges, min broadcast joins,
-# scalar-broadcast NLJ allowed). Shuffle budgets are the plan contract
-# — a regression that adds an exchange fails here before it ships.
-TPCH_R3_PLAN_BUDGET = {
-    "q1_pricing_summary": (1, 0, False),
-    "q2_min_cost_supplier": (1, 4, False),
-    "q4_order_priority": (1, 1, False),
-    "q7_volume_shipping": (1, 5, False),
-    "q8_market_share": (1, 7, False),
-    "q9_product_profit": (1, 3, False),
-    "q11_important_parts": (2, 6, True),  # 1-row threshold broadcast
-    "q13_customer_distribution": (2, 1, False),
-    "q14_promo_effect": (0, 1, False),
-    "q15_top_supplier": (0, 2, False),
-    "q16_parts_suppliers": (2, 2, False),
-    "q17_small_quantity": (2, 2, False),
-    "q19_discounted_revenue": (0, 1, False),
-    # q20: the heavy-supplier frame (groupBy l_suppkey) lost its
-    # broadcast hint in the round-14 SF-scaling de-hint sweep — the
-    # static plan now shuffle-semi-joins it on s_suppkey (AQE converts
-    # to broadcast at fixture scale; the shuffle IS the 100 TB plan,
-    # since the frame scales with supplier).
-    "q20_part_promotion": (2, 2, False),
-    "q21_waiting_suppliers": (3, 2, False),
-    "q22_global_sales": (1, 1, True),  # 1-row avg-threshold broadcast
-}
-
-
-@pytest.mark.parametrize("key", sorted(TPCH_R3_PLAN_BUDGET))
-def test_tpch_r3_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = TPCH_R3_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-# Round-3b additions: shuffle budgets for the MergeTree family, web
-# functions, chunking, and scoring ops. (max_shuffles, min_broadcasts).
-R3B_PLAN_BUDGET = {
-    "merge_collapsing_final": (1, 0),   # one window exchange
-    "merge_aggregating_shards": (2, 0),  # shard partial + final merge
-    "mv_incremental_refresh": (3, 0),   # scalar agg + 2-level state agg
-    "agg_combinators": (2, 0),          # expand for count-distinct
-    "sequence_count_pairs": (2, 0),     # window + re-agg share user key
-    "url_funcs": (0, 0),                # map-only
-    "ip_funcs": (1, 0),                 # distinct only
-    "text_chunk_passages": (1, 0),      # parallelize() fan-out only
-    "quality_linear_score": (2, 1),     # fan-out + doc agg; weights bcast
-    "zorder_layout": (1, 0),            # TakeOrdered / range sort
-    "agg_sum_map": (2, 0),              # (group,key) agg + group agg
-    "graph_pagerank": (5, 3),           # edges+outw+3 bcast rank joins
-    "rollup_time_hierarchy": (3, 0),    # one agg per grain, cascaded
-    "compaction_plan": (1, 0),          # one window pass
-    "date_fill_interpolate": (3, 1),    # daily agg + spine + window
-    "array_cumsum": (0, 0),             # map-only fold
-    "topic_roundtrip": (0, 0),          # scan of published segments
-    "agg_hll_merge": (5, 2),            # shard sketch + union + direct + exact
-    "events_anomaly_zscore": (1, 1),    # stats agg bcast onto stream
-    "array_difference": (0, 0),         # map-only transform
-    "geo_geohash": (1, 0),              # distinct users only
-    "encode_funcs": (0, 0),             # map-only
-    "dict_encode_lowcard": (2, 1),      # vocab distinct + tiny window
-    "audio_fft_dominant": (1, 0),       # parallelize fan-out only
-    "image_channel_stats": (1, 0),      # parallelize fan-out only
-    "dedup_url_normalize": (1, 0),      # one hash agg
-    "win_moving_median": (1, 0),        # one window exchange
-    "backup_verify_integrity": (3, 0),  # 2 hash aggs + full join
-    "orders_market_basket": (2, 0),     # order-set agg + pair agg
-    "part_trigram_search": (1, 0),      # scan + TakeOrdered
-    "user_active_streaks": (2, 0),      # (user,day) distinct + user window
-    "skyline_orders": (2, 0),           # bucket sweep + candidate sweep
-    "text_top_terms": (5, 0),           # fan-out + tf/df aggs + join + window
-    "orders_rfm_segments": (4, 2),      # base agg (visible now that the
-    # melted scan checkpoints AFTER it) + _pid window exchange +
-    # offsets agg + posframe pivot agg; offsets broadcast back +
-    # posframe/base broadcast join
-    "agg_skew_kurtosis": (1, 0),        # one two-phase moment agg
-    "stats_welch_ttest": (2, 0),        # per-branch agg + 1x1 cross
-    "stats_mannwhitney_u": (2, 1),      # distrank prefix scan over the
-    # value histogram: _pid window + offsets agg; offsets broadcast
-    "stats_cramers_v": (4, 2),          # cell agg + marginals bcast back
-    "agg_topk_weighted": (2, 0),        # weighted agg + type window
-    "bitmap_set_ops": (2, 0),           # user flags + scalar rollup
-}
-
-
-@pytest.mark.parametrize("key", sorted(R3B_PLAN_BUDGET))
-def test_r3b_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast = R3B_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
+# Per-round plan-budget test ids, kept as views of the registry sweep's
+# plan clause (the budgets live in tests/contracts.py). Frozen: new keys
+# go in tests/contracts.py only.
+test_tpch_r3_plan_budgets = key_view("plan", """
+    q11_important_parts q13_customer_distribution q14_promo_effect
+    q15_top_supplier q16_parts_suppliers q17_small_quantity
+    q19_discounted_revenue q1_pricing_summary q20_part_promotion
+    q21_waiting_suppliers q22_global_sales q2_min_cost_supplier
+    q4_order_priority q7_volume_shipping q8_market_share q9_product_profit
+""".split())
+test_r3b_plan_budgets = key_view("plan", """
+    agg_combinators agg_hll_merge agg_skew_kurtosis agg_sum_map
+    agg_topk_weighted array_cumsum array_difference audio_fft_dominant
+    backup_verify_integrity bitmap_set_ops compaction_plan
+    date_fill_interpolate dedup_url_normalize dict_encode_lowcard encode_funcs
+    events_anomaly_zscore geo_geohash graph_pagerank image_channel_stats
+    ip_funcs merge_aggregating_shards merge_collapsing_final
+    mv_incremental_refresh orders_market_basket orders_rfm_segments
+    part_trigram_search quality_linear_score rollup_time_hierarchy
+    sequence_count_pairs skyline_orders stats_cramers_v stats_mannwhitney_u
+    stats_welch_ttest text_chunk_passages text_top_terms topic_roundtrip
+    url_funcs user_active_streaks win_moving_median zorder_layout
+""".split())
+test_r4_plan_budgets = key_view("plan", """
+    agg_argminmax agg_delta_sum agg_gini_diversity agg_group_concat
+    agg_weighted_median array_enumerate_uniq array_join_parallel
+    bpe_merge_candidates cdc_apply_changelog corpus_pack_sequences
+    corpus_split_train_eval date_bucket_custom dedup_fuzzy_blocked
+    dedup_semantic dict_get_join dict_hierarchy_flatten dq_expectations
+    explode_outer_empty funnel_steps_windowed geo_cell_radius_join
+    intervals_max_concurrent join_any_left join_asof_tolerance join_null_safe
+    limit_by merge_replacing_final merge_summing_final merge_upsert_cow
+    merge_versioned_collapsing mutation_delete_update orders_pareto_8020
+    part_fuzzy_levenshtein set_except_all set_intersect_all stats_linregress
+    stats_spearman str_keyvalue_parse table_column_stats text_cdc_chunks
+    text_ngram_lm_score ts_autocorr_lag1 win_cume_dist_nth win_ratio_to_report
+    with_totals
+""".split())
+test_r5_plan_budgets = key_view("plan", """
+    agg_array_intersect agg_bit_group agg_group_array_last agg_hll_set_ops
+    agg_minmax_map agg_retention_flags agg_sparkbar agg_uniq_array
+    agg_uniq_upto array_compact_dedup array_fill_forward array_moving_agg
+    array_rotate_zip curation_funnel_report date_timeslots dedup_containment
+    emb_dim_slice_search emb_vector_distances funnel_time_to_convert
+    graph_bfs_hops intervals_open_per_day intervals_union_length
+    join_interval_overlap json_schema_stats quantile_timing_grid
+    sequence_match_flag sequence_next_node stats_ks_test stats_mad
+    stats_mean_ci stats_proportions_ztest stats_roc_auc str_extract_groups
+    str_multisearch str_ngram_similarity str_normalized_query_hash
+    text_minhash_export text_simhash_export text_word_cooccurrence
+    token_vocab_coverage topk_with_ties ts_bounding_ratio
+    ts_change_point_flags ts_lttb_downsample ts_m4_downsample
+    ts_nonneg_derivative win_cumulative_uniques win_sliding_distinct
+""".split())
+test_r7_plan_budgets = key_view("plan", """
+    agg_combinators_array agg_filter_where attribution_last_touch
+    backup_dedup_savings corpus_global_shuffle corpus_upsample_repeat
+    dedup_minhash_estimate_vs_truth emb_mrl_overlap_curve
+    func_datetime64_precision func_try_arith join_hint_merge join_lateral_topn
+    json_variant_ops limit_by_offset multimodal_payload_export
+    orderby_with_fill quantile_exact_weighted_grid scan_binary_files
+    scan_json_malformed scan_observed_metrics scan_recursive_glob
+    scan_text_lines scan_xml_source sequence_match_timed sim_pq_adc_topk
+    sink_parquet_codecs sink_partitioned_overwrite sql_group_order_by_all
+    sql_parameterized sql_pipe_syntax sql_qualify_topk sql_recursive_cte
+    sql_select_modifiers stats_cohens_d stats_wilson_ci stream_stateful_totals
+    text_dedup_span_removal text_ngram_novelty ts_ohlc_bars ts_vwap
+    user_churn_flags win_first_last_ignore_nulls win_range_interval_frame
+""".split())
+test_r6_plan_budgets = key_view("plan", """
+    agg_time_decay_halflife array_enumerate_dense audience_overlap_jaccard
+    backup_manifest_diff backup_pit_select backup_restore_chain
+    cohort_revenue_ltv corpus_dsir_features corpus_dup_ngrams
+    corpus_length_histogram curation_percentile_gate decontam_span_stats
+    dedup_clusters dedup_clusters_neardup dedup_incremental dedup_keep_best
+    dedup_source_matrix dedup_threshold_sweep dq_volume_anomaly
+    emb_binary_quantize emb_pq_codes funnel_strict_order geo_grid_bbox_join
+    geo_point_in_polygon ip_cidr_join join_asof_nearest map_higher_order
+    merge_graphite_rollup merge_replacing_deleted mergetree_ttl_expire
+    orders_interarrival_hist orders_mix_shift scan_csv_malformed
+    scan_schema_merge seq_rle_encode session_type_affinity sessionize_gap
+    sim_range_search source_numbers_range stats_chi2_cells str_format_readable
+    stream_windowed_topk text_boilerplate_prefix text_c4_gates
+    text_inverted_index text_langid_confusion token_fertility_stats
+    topk_with_others ts_seasonality_profile
+""".split())
+test_r8_plan_budgets = key_view("plan", """
+    agg_histogram_equi_depth array_search_funcs array_sort_funcs
+    corpus_interleave_round_robin corpus_shard_manifest date_timezone_convert
+    date_week_mode dq_histogram_drift emb_centroid_distances
+    emb_hard_negatives graph_triangle_count ip_prefix_rollup
+    merge_coalescing_final mergetree_ttl_rollup multimodal_interleaved_layout
+    multimodal_patch_budget sample_bottom_k scan_file_metadata sql_distinct_on
+    sql_lateral_alias sql_named_window sql_nulls_ordering sql_unpivot_syntax
+    sql_values_inline stats_corr_matrix stats_kendall_tau ts_cumsum_reset
+    ts_holt_linear ts_outliers_tukey
+""".split())
+test_r9_plan_budgets = key_view("plan", """
+    agg_combinators_ornull contamination_bitset dq_referential_integrity
+    dq_uniqueness_audit graph_degree_histogram join_bitset_prefilter
+    orders_backlog_aging orders_fulfillment_latency seq_longest_increase
+    stats_cramers_v_corrected
+""".split())
+test_r9b_plan_budgets = key_view("plan", """
+    corpus_datasheet corpus_temperature_mix date_parse_best_effort
+    dq_benford_law emb_power_iteration_pc1 emb_random_projection
+    events_burstiness_index events_markov_stationary sample_hash_consistent
+    seq_edit_distance seq_gaps_islands sketch_countmin_freq
+    sql_quantified_compare stats_ab_min_sample stats_contingency_coef
+    stats_entropy stats_student_ttest stats_theils_u stats_wilcoxon_signed
+    str_phonetic_soundex text_readability_fk text_zipf_fit ts_kalman_level
+    ts_theil_sen_slope
+""".split())
+test_r9d_plan_budgets = key_view("plan", """
+    dq_schema_profile stats_anova_oneway stats_jarque_bera
+    stats_linregress_multi token_bigram_entropy ts_cusum_alarm
+    ts_stl_decompose
+""".split())
+test_r9e_plan_budgets = key_view("plan", """
+    date_business_days emb_pca2_deflation stats_levene_bf stats_runs_test
+    text_mattr_diversity
+""".split())
+test_r10_plan_budgets = key_view("plan", """
+    agg_argmax_argmin math_round_families scan_dpp_join stats_covariance
+    text_blocklist_filter text_quality_gopher url_canonical_dedup
+    win_session_window_builtin
+""".split())
+test_r11_plan_budgets = key_view("plan", """
+    events_peak_hour orders_abc_analysis stats_kruskal_wallis text_tfidf_topk
+    ts_rolling_slope win_groups_frame_emulated
+""".split())
+test_r11b_plan_budgets = key_view("plan", """
+    dq_orders_lineitem_reconcile lineitem_revenue_waterfall
+    orders_seasonal_index path_transition_lift scan_minmax_pruned
+    stats_permutation_test_hash
+""".split())
+test_r11c_plan_budgets = key_view("plan", """
+    agg_combinators_if_matrix dedup_hierarchical_two_level events_wau_rolling
+    intervals_peak_position scan_bloom_filter_lookup stats_welch_anova
+    str_has_subsequence ts_backtest_seasonal_naive win_frame_exclude_current
+""".split())
+test_r12_plan_budgets = key_view("plan", """
+    funnel_steps_twostage sessionize_gap_adaptive sessionize_gap_twostage
+""".split())
+test_r14_plan_budgets = key_view("plan", """
+    agg_ema_twostage agg_weighted_median_twostage
+    sequence_count_pairs_twostage win_percent_rank_twostage
+""".split())
+test_r13_plan_budgets = key_view("plan", """
+    agg_percentile_exact_twostage curation_percentile_gate_twostage
+    path_transitions_twostage q1_pricing_summary_grid topk_per_group_twostage
+    ts_nonneg_derivative_twostage win_cume_dist_nth_twostage
+    win_ntile_firstlast_twostage win_rank_dense_twostage
+    win_running_sum_twostage win_sliding_avg_adaptive win_sliding_avg_twostage
+""".split())
 
 
 def test_runtime_bloom_filter_prunes_probe_scan(spark, sf_dir):
@@ -399,417 +457,11 @@ def test_bpe_pairs_top_k_never_global_sorts(spark, sf_dir):
     assert inspect.uses_take_ordered(df)
 
 
-# Round-4 additions: (max_shuffles, min_broadcasts, allow_nlj).
-# allow_nlj is True only for part_fuzzy_levenshtein, whose 3-row
-# probe table crossJoins via BroadcastNestedLoopJoin BY DESIGN (a
-# constant-width broadcast cross join is linear in the scan side).
-R4_PLAN_BUDGET = {
-    "merge_replacing_final": (1, 0, False),   # one keep-newest window
-    "merge_summing_final": (1, 0, False),     # one two-phase agg
-    "dict_get_join": (0, 2, False),           # pure broadcast chain
-    "limit_by": (1, 0, False),                # one rank window
-    "with_totals": (1, 0, False),             # Expand + one agg
-    "agg_argminmax": (1, 0, False),           # one max_by/min_by agg
-    "stats_spearman": (1, 0, False),          # rank windows share the key
-    "stats_linregress": (1, 0, False),        # one moment agg
-    "agg_gini_diversity": (2, 0, False),      # (user,type) + user aggs
-    "ts_autocorr_lag1": (1, 0, False),        # lag window + agg, one key
-    "corpus_pack_sequences": (1, 0, False),   # per-shard window chain
-    "text_ngram_lm_score": (3, 2, False),     # tf/df aggs + bcast joins
-    "dedup_semantic": (2, 1, False),          # cluster join + pair agg
-    "text_cdc_chunks": (1, 0, False),         # per-doc window cumsum
-    "table_column_stats": (6, 0, False),      # one agg per column (6)
-    "geo_cell_radius_join": (0, 1, False),    # bcast cell join, no exch
-    "join_null_safe": (1, 1, False),          # dim distinct; fact no shuffle
-    "win_cume_dist_nth": (1, 0, False),       # one window exchange
-    "mutation_delete_update": (0, 0, False),  # single narrow stage
-    "dict_hierarchy_flatten": (0, 0, False),  # checkpoint-truncated
-    "corpus_split_train_eval": (0, 0, False), # map-only
-    "set_except_all": (1, 0, False),          # tagged-count agg
-    "set_intersect_all": (1, 0, False),       # tagged-count agg
-    "merge_versioned_collapsing": (2, 1, False),  # net agg + window + bcast
-    "bpe_merge_candidates": (1, 0, False),    # pair agg + TakeOrdered
-    "intervals_max_concurrent": (1, 0, False),  # sweep window + agg
-    "agg_group_concat": (1, 0, False),        # collect_set two-phase
-    "array_enumerate_uniq": (1, 0, False),    # one (doc,word) window
-    "agg_weighted_median": (1, 0, False),     # cum + total share the key
-    "agg_delta_sum": (1, 0, False),           # lag window + agg, one key
-    "join_asof_tolerance": (2, 0, False),     # union sort + user window
-    "merge_upsert_cow": (2, 0, False),        # full-outer on the key
-    "join_any_left": (1, 1, False),           # dedupe window; left bcast
-    "array_join_parallel": (0, 0, False),     # Generate only, map-side
-    "dq_expectations": (1, 1, False),         # uniq agg + anti bcast
-    "part_fuzzy_levenshtein": (1, 0, True),   # bcast cross probes + window
-    "win_ratio_to_report": (1, 0, False),     # unordered partition window
-    "dedup_fuzzy_blocked": (0, 1, False),     # bcast block self-join
-    "orders_pareto_8020": (2, 1, False),      # distrank: _pid window +
-    # offsets agg; broadcast offsets/totals
-    "date_bucket_custom": (1, 0, False),      # one two-phase agg
-    "cdc_apply_changelog": (1, 0, False),     # union + one rank window
-    "explode_outer_empty": (0, 0, False),     # outer Generate, map-only
-    "str_keyvalue_parse": (0, 0, False),      # narrow parse stage
-    "funnel_steps_windowed": (1, 0, False),   # one user-key window chain
-}
-
-
-@pytest.mark.parametrize("key", sorted(R4_PLAN_BUDGET))
-def test_r4_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R4_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-#: (max shuffles, min broadcast joins, allow BroadcastNestedLoopJoin)
-#: measured at sf0.001 per the verify-skill plan-budget recipe.
-R5_PLAN_BUDGET = {
-    "agg_uniq_upto": (2, 0, False),       # two-phase capped distinct
-    "agg_bit_group": (1, 0, False),       # one bitfold hash agg
-    "ts_m4_downsample": (1, 0, False),    # single min/max/min_by agg
-    "win_sliding_distinct": (4, 1, False),  # obs distinct + fan agg; day spine bcast
-    "json_schema_stats": (2, 0, False),   # kv explode + vocab agg
-    "str_multisearch": (0, 0, False),     # narrow instr projection
-    "array_fill_forward": (0, 0, False),  # map-only fold
-    "dedup_containment": (5, 4, False),   # df agg + prefix probe + verify joins
-    "curation_funnel_report": (2, 0, False),  # conditional-distinct agg
-    "agg_retention_flags": (2, 0, False),  # user flags + bucket sums
-    "sequence_match_flag": (1, 0, False),  # one conditional min/max agg
-    "array_compact_dedup": (0, 0, False),  # map-only filter lambda
-    "quantile_timing_grid": (2, 0, False),  # cell counts + cum window
-    "agg_hll_set_ops": (1, 0, False),      # one sketch+distinct agg
-    "stats_roc_auc": (2, 1, False),        # distrank prefix over score
-    # histogram: _pid window + offsets agg; broadcast offsets
-    "stats_ks_test": (2, 1, False),        # same distrank ECDF shape
-    "stats_mad": (2, 1, False),            # two quantile aggs; median bcast join
-    "ts_bounding_ratio": (1, 0, False),    # one min_by/max_by agg
-    "intervals_union_length": (1, 0, False),  # one partition-sorted island pass
-    "array_moving_agg": (1, 0, False),     # per-user collect + JVM lambda fold
-    "agg_minmax_map": (2, 0, False),       # kv agg + vocab reassembly
-    "str_extract_groups": (0, 0, False),   # map-only codegen regexp
-    "sequence_next_node": (2, 1, False),   # user window + bcast anchor join
-    "ts_lttb_downsample": (4, 3, False),   # bucket agg + spine window + co-part join + select
-    "agg_array_intersect": (5, 1, False),  # distinct + two counts + reassembly
-    "graph_bfs_hops": (7, 4, False),       # layered BFS: per-hop semi/anti joins, bcast frontiers
-    "array_rotate_zip": (1, 0, False),     # per-user collect + JVM slicing lambdas
-    "emb_dim_slice_search": (1, 0, True),  # 5-row bcast probe (deliberate NLJ) + one qid window
-    "token_vocab_coverage": (2, 1, False), # token agg + bcast vocab join
-    "agg_uniq_array": (2, 0, False),       # two-phase distinct-set agg
-    "str_ngram_similarity": (0, 1, False), # bcast successor join, map-only grams
-    "ts_nonneg_derivative": (1, 0, False), # one per-series lag window
-    "agg_sparkbar": (2, 0, False),         # hour histogram + vocab reassembly
-    "topk_with_ties": (1, 0, False),       # one rank window (WindowGroupLimit)
-    "agg_group_array_last": (1, 0, False), # per-user collect + tail slice
-    "emb_vector_distances": (0, 1, False), # bcast successor join, map-only folds
-    "text_minhash_export": (2, 0, False),  # shingle distinct + 8-min agg
-    "text_simhash_export": (2, 0, False),  # tf agg + 16-bit vote agg
-    "stats_proportions_ztest": (1, 0, False),  # user flags + single-row totals
-    "funnel_time_to_convert": (3, 2, False),   # user window + bcast anchor + scalar agg
-    "win_cumulative_uniques": (3, 0, False),   # first-day agg + day agg + spine window
-    "intervals_open_per_day": (2, 0, False),   # day-net agg + spine cumsum
-    "join_interval_overlap": (1, 1, False),    # month-bucket equi join + pair distinct
-    "ts_change_point_flags": (1, 0, False),    # four frames in one window pass
-    "date_timeslots": (2, 0, False),           # bounded slot explode + grid agg
-    "str_normalized_query_hash": (2, 0, False),  # map-side normalize + shape agg
-    "stats_mean_ci": (2, 0, False),            # one decimal-moment agg
-    "text_word_cooccurrence": (2, 0, False),   # pair agg + TakeOrdered top-20
-}
-
-
-@pytest.mark.parametrize("key", sorted(R5_PLAN_BUDGET))
-def test_r5_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R5_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-#: (max shuffles, min broadcast joins, allow BroadcastNestedLoopJoin)
-#: measured at sf0.001 per the verify-skill plan-budget recipe.
-#: allow_nlj=True rows are the deliberate tiny-broadcast probes
-#: (8-row PQ codebook, 3-row query set, 1-row time anchor) — the
-#: constant-width cross-join class documented since round 4.
-R6_PLAN_BUDGET = {
-    "sessionize_gap": (1, 0, False),       # windows + agg share user part.
-    "seq_rle_encode": (1, 0, False),       # same gaps-islands shape
-    "ts_seasonality_profile": (1, 0, False),  # one calendar-cell agg
-    "stats_chi2_cells": (1, 0, False),     # cell agg + windows over cells
-    "cohort_revenue_ltv": (3, 1, False),   # cust agg + cell agg + window
-    "array_enumerate_dense": (2, 1, False),  # pos window + first-pos join
-    "str_format_readable": (0, 0, False),  # map-only CASE/lpad chain
-    "source_numbers_range": (0, 0, False), # pure Range scan
-    "corpus_dup_ngrams": (2, 0, False),    # gram agg + TakeOrdered
-    "corpus_length_histogram": (1, 0, False),  # one bucket agg
-    "corpus_dsir_features": (2, 1, False),  # profile bcast + doc agg
-    "token_fertility_stats": (1, 0, False),  # one lang agg
-    "text_c4_gates": (0, 0, False),        # map-only regexp battery
-    "dedup_incremental": (3, 2, False),    # hash split + two bcast joins
-    "emb_pq_codes": (1, 0, True),          # 1-row folded-codebook NLJ; fact path shuffle-free
-    "sim_range_search": (0, 0, True),      # 3-row query probe NLJ
-    "merge_graphite_rollup": (1, 0, True), # 1-row anchor NLJ + one agg
-    "mergetree_ttl_expire": (1, 0, True),  # 1-row anchor NLJ + one agg
-    "stream_windowed_topk": (2, 0, False), # day-cell agg + rank window
-    "map_higher_order": (2, 0, False),     # tf agg + map assembly agg
-    "scan_schema_merge": (1, 0, False),    # merged-footer scan + agg
-    "geo_grid_bbox_join": (1, 1, False),   # bcast cell join + distinct
-    "dedup_clusters": (0, 0, False),       # checkpointed fixpoint
-    "dedup_clusters_neardup": (0, 0, False),  # checkpointed fixpoint
-    # batch 4
-    "geo_point_in_polygon": (1, 0, False),  # distinct + map-only pred
-    "curation_percentile_gate": (1, 0, False),  # one lang window pass
-    "decontam_span_stats": (3, 1, False),   # shingle distinct + bcast bench
-    "dedup_threshold_sweep": (1, 1, False),  # label-blocked pair agg
-    "backup_pit_select": (1, 0, True),      # 1-row cutoff anchor NLJ
-    "backup_manifest_diff": (3, 0, False),  # full join + agg (catalog-scale)
-    "ip_cidr_join": (1, 1, False),          # bcast /16 prefix join
-    # batch 5
-    "emb_binary_quantize": (0, 0, True),    # 1-row query-mask NLJ + TakeOrdered
-    "dedup_keep_best": (1, 0, False),       # one md5-partition window pass
-    "topk_with_others": (2, 0, False),      # type agg + rank + rebucket agg
-    "dq_volume_anomaly": (2, 0, False),     # day-cell agg + lag window
-    "merge_replacing_deleted": (1, 0, False),  # keep-newest + tombstone
-    # batch 6
-    "join_asof_nearest": (2, 0, False),     # union + one window pass, both frames
-    "text_langid_confusion": (2, 0, False),  # vote agg + cell window
-    "audience_overlap_jaccard": (7, 3, False),  # distinct + user self-join + bcast sizes
-    "orders_interarrival_hist": (2, 0, False),  # lag window + 5-cell agg
-    "scan_csv_malformed": (0, 0, True),     # two 1-row aggs joined (NLJ)
-    "agg_time_decay_halflife": (1, 0, True),  # 1-row anchor NLJ + one agg
-    "dedup_source_matrix": (3, 3, False),   # LSH-banded pair join + bcast sources
-    "session_type_affinity": (8, 3, True),  # session distinct + pair join; 1-row total NLJ
-    # batch 7
-    "funnel_strict_order": (4, 2, False),   # pos window + adjacent-pos joins
-    "orders_mix_shift": (3, 0, False),      # month cells + share/lag windows
-    "text_boilerplate_prefix": (2, 0, False),  # prefix hash-groupBy
-    "text_inverted_index": (4, 1, False),   # distinct + df band + postings agg
-    "backup_restore_chain": (1, 1, True),   # 1-row cutoff NLJ + bcast base
-}
-
-
-#: Round-7 additions, measured at sf0.001 per the verify-skill recipe.
-R7_PLAN_BUDGET = {
-    "multimodal_payload_export": (0, 0, False),  # map-only mapInPandas
-    # batch 1: analytics6
-    "ts_ohlc_bars": (1, 0, False),       # both rn dirs + agg share day exchange
-    "ts_vwap": (1, 0, False),            # one day-cell hash agg
-    "user_churn_flags": (2, 0, True),    # week grid distinct + 1-row horizon NLJ
-    "attribution_last_touch": (1, 0, False),  # union+last window, zero joins
-    "sequence_match_timed": (2, 1, False),    # as-of window + user-spine join
-    "limit_by_offset": (1, 0, False),    # WindowGroupLimit-pruned rn
-    "stats_wilson_ci": (1, 0, False),    # one 5-cell agg
-    "stats_cohens_d": (2, 0, True),      # 2-group agg + 1x1 NLJ
-    # batch 2: sqlsurface
-    "sql_pipe_syntax": (1, 0, False),    # pipe form = one hash agg
-    "sql_parameterized": (1, 0, False),  # bound literals, one agg
-    "func_try_arith": (0, 0, False),     # map-only try_* battery
-    "json_variant_ops": (0, 0, False),   # map-only VARIANT decode
-    "join_hint_merge": (3, 0, False),    # SMJ forced: 2 sort exch + agg
-    "scan_observed_metrics": (0, 0, False),  # metrics row (eager pass)
-    # batch 3: sources/sinks
-    "scan_json_malformed": (0, 0, False),      # map-only JSONL scan + agg
-    "sink_partitioned_overwrite": (1, 0, False),  # readback status agg
-    "scan_recursive_glob": (0, 0, True),       # two 1-row aggs joined (NLJ)
-    "sink_parquet_codecs": (0, 0, False),      # three map-only scan/aggs
-    # batch 4: streaming (plan measured on the post-stream final-state
-    # window over the memory sink; the stateful stage itself runs
-    # inside the streaming query)
-    "stream_stateful_totals": (1, 0, False),
-    # batch 5: declarative SQL surface, second helping
-    "join_lateral_topn": (1, 1, False),   # rank exchange + bcast nation
-    "sql_group_order_by_all": (2, 0, False),  # hash agg + ORDER BY ALL sort
-    "sql_qualify_topk": (1, 0, False),    # QUALIFY desugar: WGL-pruned rank
-    "sql_select_modifiers": (0, 0, False),  # pure projection, map-only
-    "agg_filter_where": (1, 0, False),    # one agg, 4 FILTER counters
-    "orderby_with_fill": (1, 1, False),   # fact agg + bcast grid join
-    # batch 6: training-order + novelty + upsampling
-    "corpus_global_shuffle": (1, 0, False),  # shard exchange, NO range sort
-    "text_ngram_novelty": (3, 0, False),  # distinct + gram window + doc agg
-    "corpus_upsample_repeat": (0, 0, False),  # map-only explode
-    # batch 7: remaining first-class feed formats
-    "scan_text_lines": (0, 0, False),     # text readback, 3-cell agg
-    "scan_binary_files": (0, 0, False),   # binaryFile listing, map-only
-    "scan_xml_source": (1, 0, False),     # xml readback + hash agg
-    # batch 8: staged ANN retrieval + backup storage accounting
-    "sim_pq_adc_topk": (0, 1, True),      # map-side ADC, 1x1 cb/LUT NLJs
-    "backup_dedup_savings": (3, 0, False),  # 2 windows + db agg
-    # batch 9: exact weighted quantiles, IGNORE NULLS windows,
-    # -Array combinators
-    "quantile_exact_weighted_grid": (1, 0, False),  # 1 exchange, 2 windows
-    "win_first_last_ignore_nulls": (1, 0, False),   # 1 user exchange
-    "agg_combinators_array": (2, 0, False),  # explode + distinct expand
-    # batch 10: recursion, time-range frames, sub-second precision
-    "sql_recursive_cte": (1, 0, False),     # loop is map-side; 1 agg
-    "win_range_interval_frame": (1, 0, False),  # 1 type exchange
-    "func_datetime64_precision": (2, 0, False),  # agg + distinct expand
-    # batch 11: estimator calibration + MRL curve
-    # cand_docs (distinct of LSH pair ids) lost its broadcast hint in
-    # the round-14 SF-scaling de-hint sweep: +2 static exchanges for
-    # the shuffle semi join (AQE re-broadcasts at fixture scale; at
-    # corpus scale the frame scales with dup count, so the shuffle is
-    # correct).
-    "dedup_minhash_estimate_vs_truth": (8, 1, False),  # sig agg + band
-    # join + candidate-pruned shingle intersection (bounded by LSH)
-    "emb_mrl_overlap_curve": (1, 0, True),  # 5-row query bcast NLJ
-    "text_dedup_span_removal": (4, 2, False),  # dup-set agg +
-    # gram-keyed coverage join + position dedup + doc rollup
-}
-
-
 def test_merge_hint_takes_effect(spark, sf_dir):
     # join_hint_merge's whole point: the MERGE hint must yield a
     # SortMergeJoin where the optimizer would broadcast.
     plan = inspect.physical_plan(SPECS["join_hint_merge"].fn(spark, sf_dir))
     assert "SortMergeJoin" in plan, plan
-
-
-@pytest.mark.parametrize("key", sorted(R7_PLAN_BUDGET))
-def test_r7_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R7_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-@pytest.mark.parametrize("key", sorted(R6_PLAN_BUDGET))
-def test_r6_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R6_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-R8_PLAN_BUDGET = {
-    # batch 1: analytics7 — CH stats/series parity
-    "stats_corr_matrix": (1, 0, False),   # ALL 14 moments, one agg pass
-    "stats_kendall_tau": (1, 1, False),   # cell table checkpointed once;
-    # the pair join + agg is all the returned plan does
-    "ts_outliers_tukey": (2, 1, False),   # rank window + bcast fence join
-    "ts_holt_linear": (2, 0, False),      # day-cell agg + per-type fold agg
-    "date_week_mode": (1, 0, False),      # calendar distinct, map-side math
-    # batch 2: analytics7 — modern SQL surface, third helping
-    "sql_unpivot_syntax": (1, 0, False),  # one hash agg; UNPIVOT is a projection
-    "sql_named_window": (1, 0, False),    # both windows share ONE exchange
-    "sql_values_inline": (1, 1, False),   # VALUES LocalRelation bcast join
-    # batch 3: training-pipeline — mining + ordering
-    "emb_hard_negatives": (1, 0, True),   # 5-row query NLJ + qid rank exchange
-    "corpus_interleave_round_robin": (2, 0, True),  # source rank window +
-    # size-vector agg; position is a map-side fold (NO global sort)
-    # batch 4: CH engine/function parity + provenance + budgets
-    "merge_coalescing_final": (1, 0, False),  # all windows on ONE exchange
-    "array_search_funcs": (0, 0, False),      # map-only battery
-    "ts_cumsum_reset": (1, 0, False),         # seg + run share user exchange
-    "graph_triangle_count": (2, 0, False),    # edge/tri checkpoint-truncated;
-    # member + degree aggs (was 13 shuffles before materializing edges)
-    "scan_file_metadata": (2, 0, True),       # per-file rollup agg +
-    # COUNT(DISTINCT) expand; the NLJ is the 1-row × 1-row scalar
-    # compose of the two total frames (constant width by construction)
-    "multimodal_patch_budget": (0, 0, False),  # map-only projection
-    # batch 5: tz conversion, class geometry, sort battery, dialect pins
-    "date_timezone_convert": (0, 0, False),   # map-only tzdb projection
-    "emb_centroid_distances": (0, 0, True),   # centroid table checkpointed
-    # once (the explode+agg runs at build time); the returned plan is
-    # just the |labels|-row pair NLJ (a < b) over checkpointed blocks
-    "array_sort_funcs": (0, 0, False),        # map-only battery
-    "sql_nulls_ordering": (1, 0, False),      # both windows, one exchange
-    "sql_distinct_on": (1, 0, False),         # WGL-pruned keep-one rank
-    # batch 6: tiered TTL rollup, drift DQ, export manifests, CIDR rollup
-    "mergetree_ttl_rollup": (1, 0, True),     # 1-row anchor NLJ x both arms
-    "dq_histogram_drift": (2, 0, True),       # bin agg + 1-row totals NLJ
-    "corpus_shard_manifest": (1, 0, False),   # one shard hash agg
-    "ip_prefix_rollup": (2, 0, False),        # union + agg + distinct expand
-    # batch 7: bottom-k sampling, CBO stats, lateral aliases, VLM layout
-    "sample_bottom_k": (0, 0, False),         # TakeOrderedAndProject (asserted
-    # below), never a global sort
-    "agg_histogram_equi_depth": (3, 1, False),  # distrank two-pass rank:
-    # _pid window exchange + offsets agg + final bucket agg; closed-form
-    # NTILE from global position (no global-ntile single-partition window)
-    "sql_lateral_alias": (0, 0, False),       # map-only alias chain
-    "multimodal_interleaved_layout": (1, 0, False),  # one doc_id window
-    # exchange; explode + segment cumsum + rollup all share it
-}
-
-# Round-9 additions (operators/analytics8.py), measured at sf0.001:
-# (max_shuffles, min_broadcasts, allow_nlj). allow_nlj rows are the
-# 1-row scalar broadcasts (reference date / contingency totals).
-R9_PLAN_BUDGET = {
-    "dq_referential_integrity": (4, 2, False),  # per-relation agg
-    # exchanges; dims broadcast (fact-fact relations may shuffle-join
-    # at scale, still 1 join + 1 agg each, relation-parallel)
-    "seq_longest_increase": (2, 0, False),  # user window + run agg
-    # (best/histogram aggs reuse the run agg's partitioning)
-    "graph_degree_histogram": (3, 0, False),  # distinct + degree agg
-    # + histogram agg
-    "orders_backlog_aging": (1, 0, True),   # one agg; 1-row ref date
-    "stats_cramers_v_corrected": (3, 2, True),  # cell agg + marginal
-    # re-aggs; marginals broadcast back; 1-row totals cross
-    "join_bitset_prefilter": (2, 2, False),  # bitset bcast + exact
-    # semi bcast; distinct + final agg exchanges
-    "contamination_bitset": (2, 2, False),   # two bcast membership
-    # joins; bitset/exact-set distinct exchanges
-    "agg_combinators_ornull": (1, 0, False),  # one two-phase agg
-    "dq_uniqueness_audit": (4, 0, False),    # one count-distinct agg
-    # per audited table (expand + two-phase), table-parallel
-    "orders_fulfillment_latency": (1, 1, False),  # one join (orders
-    # broadcast at fixture scale; co-located shuffle at 100 TB) + agg
-}
-
-# Round-9 batch-2/3/4 additions (analytics9.py, extensions/linalg.py),
-# measured at sf0.001: (max_shuffles, min_broadcasts, allow_nlj).
-# Zero-shuffle rows are either pure per-row expression chains
-# (date_parse_best_effort, emb_random_projection) or keys whose plan
-# is read off a localCheckpointed 1-row frame (power iteration,
-# markov) — the upstream exchanges happened before the checkpoint and
-# are pinned by their sf1 probe shuffle-bytes instead.
-R9B_PLAN_BUDGET = {
-    "stats_entropy": (2, 0, False),          # cells agg + type agg
-    "stats_theils_u": (2, 0, True),          # cells agg + marginal re-agg
-    "stats_contingency_coef": (3, 1, True),  # obs agg + marginals
-    "stats_student_ttest": (0, 0, False),    # one conditional agg
-    "stats_ab_min_sample": (1, 0, False),    # one grouped agg
-    "seq_gaps_islands": (4, 3, False),       # two distrank scans + join
-    "sql_quantified_compare": (0, 1, True),  # dim bcast + 1-row extrema
-    "date_parse_best_effort": (0, 0, False),  # pure row expressions
-    "corpus_temperature_mix": (2, 0, True),  # lang agg + 1-row normalizer
-    "emb_power_iteration_pc1": (0, 0, False),  # checkpointed 1-row frame
-    "sample_hash_consistent": (2, 0, False),  # distinct-expand agg
-    "dq_benford_law": (2, 0, True),          # digit agg + 1-row totals
-    "events_markov_stationary": (4, 1, True),  # r17: the 8 per-step
-    # localCheckpoints were removed (single array-fold iteration), so
-    # the plan now SHOWS its real lineage instead of a checkpointed
-    # 1-row RDD: LEAD window + cells agg + types distinct + grid
-    # window + the collect-to-one-row agg = 4 exchanges at sf0.001,
-    # plus the deliberate |types|^2 marginal cross (the key's
-    # documented NLJ, also pinned in test_plan_canary.NLJ_ALLOWED).
-    # Shuffle count was never 0 — the work was merely invisible to
-    # final-plan inspection before; unhiding it also exposed (and
-    # r17 removed) a grid self-join that planned as SortMergeJoin.
-    "emb_random_projection": (0, 0, True),   # 1-row matrix cross only
-    "stats_wilcoxon_signed": (2, 1, False),  # pair agg + |d| hist scan
-    "corpus_datasheet": (5, 1, True),        # source/lang aggs + window
-    "text_zipf_fit": (2, 0, True),           # word agg + TakeOrdered
-    "str_phonetic_soundex": (2, 0, False),   # vocab distinct + code agg
-    "text_readability_fk": (0, 0, False),    # pure row expressions
-    "seq_edit_distance": (2, 0, True),       # position hist + 1-row ref
-    "sketch_countmin_freq": (2, 1, True),    # exact agg + cell lookup
-    "ts_kalman_level": (2, 0, False),        # daily agg + series agg
-    "events_burstiness_index": (1, 0, False),  # lag window + one agg
-    "ts_theil_sen_slope": (2, 0, False),     # daily agg + series agg
-}
 
 
 def test_bottom_k_sample_is_take_ordered(spark, sf_dir):
@@ -818,42 +470,6 @@ def test_bottom_k_sample_is_take_ordered(spark, sf_dir):
     plan = inspect.physical_plan(SPECS["sample_bottom_k"].fn(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan, plan
     assert "rangepartitioning" not in plan, plan
-
-
-@pytest.mark.parametrize("key", sorted(R8_PLAN_BUDGET))
-def test_r8_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R8_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-@pytest.mark.parametrize("key", sorted(R9_PLAN_BUDGET))
-def test_r9_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R9_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-@pytest.mark.parametrize("key", sorted(R9B_PLAN_BUDGET))
-def test_r9b_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R9B_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_interleave_has_no_global_window(spark, sf_dir):
@@ -875,372 +491,6 @@ def test_interleave_has_no_global_window(spark, sf_dir):
             "window not partitioned by source — global window crept in:\n"
             + plan
         )
-
-
-# Round-9 batch-4 additions (operators/analytics10.py), measured at
-# sf0.001: (max_shuffles, min_broadcasts, allow_nlj). Zero-shuffle
-# stats_linregress_multi is a single map-side-combined moment agg;
-# ts_stl_decompose broadcasts the 35-row seasonal table back onto the
-# daily grid; token_bigram_entropy's per-lang final join broadcasts.
-R9D_PLAN_BUDGET = {
-    "ts_stl_decompose": (4, 1, False),      # daily agg + calendar-
-    # bounded partitioned window + 5x7 seasonal agg, broadcast back
-    "stats_anova_oneway": (1, 0, False),    # one moment agg; k-row
-    # collect rides the same exchange
-    "stats_jarque_bera": (1, 0, False),     # one moment agg
-    "ts_cusum_alarm": (2, 0, False),        # daily agg + per-type
-    # series collect; folds are in-row expressions
-    "token_bigram_entropy": (5, 1, False),  # bigram cell agg (data-
-    # scale) + vocab-scale ctx/agg/ragg re-aggs + per-lang bcast join
-    "stats_linregress_multi": (0, 0, False),  # single moment agg,
-    # partials merged map-side — no exchange before the 1-row result
-    "dq_schema_profile": (2, 0, False),     # explode + one distinct
-    # expand agg (two-phase)
-}
-
-
-@pytest.mark.parametrize("key", sorted(R9D_PLAN_BUDGET))
-def test_r9d_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R9D_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-# Round-9 batch-5 additions (operators/analytics11.py, extensions/
-# linalg.py), measured at sf0.001: (max_shuffles, min_broadcasts,
-# allow_nlj). emb_pca2_deflation reads 0 here because every
-# iteration frame is a localCheckpointed single row — the real data
-# pass is the Gram aggregation before the first checkpoint (one
-# map-side-combined hash agg; verified by eye on the pre-checkpoint
-# plan).
-R9E_PLAN_BUDGET = {
-    "stats_levene_bf": (2, 1, False),       # rank window + moment
-    # aggs; 5-row median table broadcast back
-    "stats_runs_test": (2, 0, False),       # daily agg + per-type
-    # series collect; folds are in-row
-    "text_mattr_diversity": (1, 0, False),  # per-row window arrays +
-    # one per-lang hash agg
-    "date_business_days": (1, 1, False),    # orders broadcast join +
-    # one bounded-grain hash agg
-    "emb_pca2_deflation": (0, 0, False),    # all post-Gram work on
-    # checkpointed 1-row frames
-}
-
-
-@pytest.mark.parametrize("key", sorted(R9E_PLAN_BUDGET))
-def test_r9e_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R9E_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-# Round-10 additions (operators/analytics12.py + scan_dpp_join),
-# measured at sf0.001: (max_shuffles, min_broadcasts, allow_nlj).
-R10_PLAN_BUDGET = {
-    "agg_argmax_argmin": (1, 0, False),     # one max_by/min_by hash
-    # agg, map-side combined
-    "stats_covariance": (1, 0, False),      # one decimal moment agg
-    "win_session_window_builtin": (1, 0, False),  # one user_id
-    # exchange; session assembly is UpdatingSessionsIterator
-    "text_quality_gopher": (0, 0, False),   # map-only rule columns
-    "url_canonical_dedup": (2, 0, False),   # canonical-group agg +
-    # COUNT(DISTINCT url) two-phase expand
-    "math_round_families": (0, 0, False),   # map-only CH rounding
-    # ladders
-    "text_blocklist_filter": (0, 0, False),  # map-only token gate
-    "scan_dpp_join": (4, 1, True),          # dim distinct + pruned
-    # fact join (broadcast) + group agg + distinct-user expand; the
-    # DPP subquery's own broadcast may plan as a 3-row NLJ reuse
-}
-
-
-@pytest.mark.parametrize("key", sorted(R10_PLAN_BUDGET))
-def test_r10_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R10_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-R11_PLAN_BUDGET = {
-    "stats_kruskal_wallis": (5, 2, True),   # value agg + range scan +
-    # (value,type) agg + vr join (bcast) + group agg; NLJ = 1-row tie
-    # frame
-    "orders_abc_analysis": (2, 1, False),   # customer agg + distrank
-    # range exchange; offsets join broadcasts
-    "text_tfidf_topk": (4, 1, False),       # tf agg + df agg (bcast
-    # joined back) + doc_id window
-    "ts_rolling_slope": (1, 0, False),      # ONE user_id exchange
-    # feeding row_number + all four frame sums
-    "win_groups_frame_emulated": (2, 1, False),  # day agg + day-grain
-    # window; broadcast join back to rows
-    "events_peak_hour": (2, 0, False),      # (type,hour) agg +
-    # type-level max_by agg
-}
-
-
-@pytest.mark.parametrize("key", sorted(R11_PLAN_BUDGET))
-def test_r11_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R11_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-R11B_PLAN_BUDGET = {
-    "orders_seasonal_index": (2, 0, True),   # month agg + 12-row total
-    # agg; NLJ = 1-row total frame
-    "scan_minmax_pruned": (0, 0, False),     # pure pruned scan after
-    # the one-time layout rewrite (scan + filter, zero exchanges)
-    "dq_orders_lineitem_reconcile": (2, 2, True),  # lineitem agg +
-    # final count agg; order join + orphan anti-join broadcast; NLJ =
-    # 1-row orphan frame
-    "lineitem_revenue_waterfall": (0, 0, False),   # ONE global agg,
-    # map-side combined (partial agg then 1-row final — no exchange
-    # counted by the shuffle inspector beyond the agg's own)
-    "stats_permutation_test_hash": (2, 0, True),   # filtered scan +
-    # 64-group pstat agg + observed agg; NLJ = 1-row observed frame
-    "path_transition_lift": (2, 0, False),   # user lag exchange +
-    # transition matrix agg; marginals are windows over the bounded
-    # matrix
-}
-
-
-@pytest.mark.parametrize("key", sorted(R11B_PLAN_BUDGET))
-def test_r11b_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R11B_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-R11C_PLAN_BUDGET = {
-    "stats_welch_anova": (3, 0, True),       # moment agg + two k-row
-    # fold aggs; NLJ = 1-row weight-totals frame
-    "events_wau_rolling": (3, 0, True),      # day-user distinct +
-    # distinct-user expand + day agg; NLJ = 1-row max-day clip
-    "win_frame_exclude_current": (1, 0, False),  # ONE event_type
-    # exchange; sliding frame sums
-    "agg_combinators_if_matrix": (2, 0, False),  # grouped agg + the
-    # COUNT(DISTINCT) two-phase expand
-    "dedup_hierarchical_two_level": (1, 0, False),  # manifest read +
-    # one md5 merge agg (level-1 agg runs at manifest-write time)
-    "intervals_peak_position": (2, 0, False),  # (pri,t) net agg +
-    # pri-partitioned windows over the distinct-timestamp table
-    "str_has_subsequence": (0, 0, False),      # map-only instr chain
-    "ts_backtest_seasonal_naive": (1, 1, False),  # day-grain table
-    # materialized ONCE (localCheckpoint) -> lag-7 broadcast join +
-    # final agg; the row-scaled events agg runs a single time
-    "scan_bloom_filter_lookup": (0, 0, False),  # pure filtered scan
-    # after the one-time bloom-indexed rewrite
-}
-
-
-@pytest.mark.parametrize("key", sorted(R11C_PLAN_BUDGET))
-def test_r11c_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R11C_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-R12_PLAN_BUDGET = {
-    "sessionize_gap_twostage": (5, 1, False),  # (user,bucket) window
-    # exchange + seam-summary agg + user-ordered seam window + the
-    # count-distinct two-phase expand on (user, session); the seam
-    # offsets join back broadcast at fixture scale. The extra
-    # exchanges vs flat sessionize_gap's single user_id exchange are
-    # the DELIBERATE price for capping max-task at one user-day
-    # (zipf probe: max-task x0.76 vs the flat key's x3.23 straggler).
-    "funnel_steps_twostage": (6, 3, False),  # per-step (user,bucket)
-    # summary aggs + fine-scan equi-joins on (user,bucket) + the
-    # final user-grain assembly; cut tables localCheckpoint once so
-    # event-scale subtrees never replicate per consumer (27 -> 6
-    # visible exchanges). Every event-scale exchange is keyed
-    # (user, bucket) — the skew-immunity invariant.
-    "sessionize_gap_adaptive": (5, 0, False),  # branch-agnostic upper
-    # bound: the dispatch returns either the flat plan (1 exchange)
-    # or the two-stage plan (5) depending on the fixture's measured
-    # hot-share; both branches' own budgets are pinned above/in
-    # analytics5 coverage, so this entry only guards against the
-    # dispatch ever producing something that is NEITHER.
-}
-
-
-@pytest.mark.parametrize("key", sorted(R12_PLAN_BUDGET))
-def test_r12_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R12_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-R13_PLAN_BUDGET = {
-    "q1_pricing_summary_grid": (1, 0, False),  # identical shape to
-    # q1_pricing_summary: one pushed scan filter feeding one
-    # partial+final hash agg (single exchange on the 6-value group
-    # key). The micro-grid floor + DECIMAL(38,0) accumulation happens
-    # inside the same two-phase agg — exactness costs zero plan.
-    "path_transitions_twostage": (5, 0, False),  # (user,bucket) local
-    # lag exchange + its pair-count agg, the (user,bucket) summary
-    # agg + user-ordered seam window, and the final 25-row union agg.
-    # Four more exchanges than the flat key's single user_id window —
-    # the deliberate price for capping max-task at one user-day;
-    # every event-scale exchange is keyed (user, bucket).
-    "win_running_sum_twostage": (3, 0, False),  # (cust,bucket) local
-    # prefix exchange (reused by the bucket-total agg) + the
-    # cust-ordered offset window over summaries + the fold join
-    # (broadcast at fixture scale, hash at scale — still keyed
-    # (cust, bucket)). Two more exchanges than the flat key's single
-    # o_custkey window; no order-scale task holds more than one
-    # customer-day.
-    "topk_per_group_twostage": (2, 0, False),  # (cust, salt) local
-    # top-3 exchange + the cust re-rank exchange over ≤ 3·32
-    # survivors per customer. One more exchange than the flat key;
-    # the order-scale one is uniformly salted by pmod(o_orderkey).
-    "win_rank_dense_twostage": (3, 0, False),  # (cust, vbucket) local
-    # rank exchange (reused by the per-bucket count agg) + the
-    # cust-ordered offset window over ≤ ~560 summaries + the fold
-    # join keyed (cust, vbucket). Mirrors the running-sum budget with
-    # COUNT for SUM.
-    "agg_percentile_exact_twostage": (3, 2, False),  # family six:
-    # pass-2 (type, vbucket) ranking exchange over ONLY straddling
-    # buckets + the <=30-row final pivot agg on event_type (the
-    # pass-1 histogram exchange is materialized inside the eager
-    # localCheckpoint, carrying ~2.5k combined rows per mapper). Both
-    # event-scale joins MUST be broadcast (bucket filter + rank
-    # pick); exactly 2 parquet scans — the declared two-pass
-    # contract. The flat key's event_type window (5 groups = 5
-    # whole-group sort tasks at any scale) never appears.
-    "ts_nonneg_derivative_twostage": (3, 0, False),  # family-three
-    # series transplant: (type, day-bucket) local lag exchange + the
-    # (type, bucket) summary agg + the per-type seam lag over ~30
-    # summary rows; the union is exactly the flat pair set. No
-    # event-scale exchange keys the bare event_type.
-    "win_cume_dist_nth_twostage": (6, 2, False),  # tie-aware rank
-    # decomposition: (type, unit-bucket) local rank + peer-max
-    # windows, ascending COUNT offsets over summary rows, and the
-    # rank-2 broadcast for nth_value(2). The folded frame feeds both
-    # the rank-2 pick and the output, so the balanced local subtree
-    # replays once — the same deliberate trade as the percentile
-    # family's second scan; no exchange keys the bare event_type at
-    # event scale.
-    "win_ntile_firstlast_twostage": (4, 2, False),  # the rank
-    # decomposition with DERIVED outputs: (status, kilobucket) local
-    # rank exchange + summary offset windows + the closed-form
-    # integer NTILE on (rn, n) + a 3-row extremes broadcast computed
-    # as map-side max_by/min_by aggregates (no window, no
-    # rank-subtree replay). The flat key's whole-status sort (3
-    # statuses = n/3 rows per task at any scale) never appears.
-    "curation_percentile_gate_twostage": (3, 1, False),  # family
-    # five transplanted to the curation surface: (lang, char-decade)
-    # local rank exchange + the per-lang offset/total windows over
-    # <= ~55 summary rows + the fold join on the stage-1 keys
-    # (broadcast at fixture scale). The flat gate's whole-language
-    # sort task never appears.
-    "win_sliding_avg_adaptive": (4, 0, False),  # branch-agnostic
-    # upper bound, mirroring sessionize_gap_adaptive: the dispatch
-    # returns either the flat plan (1 exchange) or the two-stage
-    # plan (4) depending on the measured hot share; both branches'
-    # own budgets are pinned separately, so this entry only guards
-    # against the dispatch producing something that is NEITHER.
-    "win_sliding_avg_twostage": (4, 1, False),  # family seven, the
-    # O(n) sweep form: the peer-collapse agg runs inside the eager
-    # pts checkpoint; the visible exchanges are the (user, bucket)
-    # sweep-prefix window, the stream bucket-totals agg, the
-    # (user, anchor) conditional pivot, and the (user, ts) fold back
-    # to event grain — every one keyed by a data-scale column, never
-    # the bare user. The offsets join must stay a hash join
-    # (broadcast at fixture scale), never a nested loop; the frame
-    # itself never materializes (no O(n*f) per-row re-aggregation).
-}
-
-
-R14_PLAN_BUDGET = {
-    "sequence_count_pairs_twostage": (3, 1, False),  # family eight:
-    # (user, bucket) local running-count exchange + its purchase agg,
-    # the (user, bucket) summary agg + user-ordered seam prefix over
-    # summaries, and the final per-user agg; the summary-to-local
-    # join is broadcast at fixture scale (hash at scale — still keyed
-    # (user, bucket)). Two more exchanges than the flat key's single
-    # user_id window; no event-scale task holds more than one
-    # user-day.
-    "agg_ema_twostage": (4, 1, False),  # family nine, trailing-K
-    # selection decomposed: the (user, bucket) count agg + the
-    # per-user DESC prefix over bucket summaries, the (user, bucket)
-    # local rank exchange on surviving-bucket rows (needed-buckets
-    # join broadcast at fixture scale), and the final <=K-row
-    # per-user fold agg. The flat key's bare-user rank window (the
-    # measured ~x8 max-task shape) never appears.
-    "win_percent_rank_twostage": (3, 1, False),  # family eleven:
-    # the (status, kilobucket) local position exchange (reused by
-    # the bucket-count agg) + the per-status offset/total windows
-    # over <= ~600 bucket-summary rows + the fold join back on the
-    # stage-1 keys (broadcast at fixture scale). The flat key's
-    # whole-status sort never appears.
-    "agg_weighted_median_twostage": (6, 2, False),  # family ten:
-    # the pass-1 (type, vbucket) weight-histogram exchange + its
-    # bounded per-type cumulative window over histogram rows, the
-    # 5-row totals agg, and the pass-2 (type, vbucket) selection
-    # window on only the median buckets' rows; both event-scale
-    # joins (bucket filter, totals) must broadcast. Two scans —
-    # the declared two-pass trade; the flat key's whole-type sort
-    # never appears.
-}
-
-
-@pytest.mark.parametrize("key", sorted(R14_PLAN_BUDGET))
-def test_r14_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R14_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
-@pytest.mark.parametrize("key", sorted(R13_PLAN_BUDGET))
-def test_r13_plan_budgets(spark, sf_dir, key):
-    max_shuffles, min_bcast, allow_nlj = R13_PLAN_BUDGET[key]
-    df = SPECS[key].fn(spark, sf_dir)
-    plan = inspect.physical_plan(df)
-    assert inspect.count_shuffles(df) <= max_shuffles, plan
-    assert plan.count("BroadcastHashJoin") >= min_bcast, plan
-    assert "CartesianProduct" not in plan
-    if not allow_nlj:
-        assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_q1_grid_filter_pushdown(spark, sf_dir):

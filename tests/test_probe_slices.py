@@ -145,7 +145,7 @@ def test_containment_slice_exact(monkeypatch, spark, sf_dir):
 def test_below_cap_never_slices(spark, sf_dir):
     """At every driver/test scale the caps must NOT engage: no
     RuntimeWarning, full exact baselines (registered-oracle parity is
-    checked by test_oracle_parity; this pins the dispatch side)."""
+    checked by the registry sweep; this pins the dispatch side)."""
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         for fn in (
