@@ -87,6 +87,11 @@ class Contract:
     #: Building and collecting the key twice yields identical,
     #: non-empty rows — caught before the driver's hash would flake.
     rerun_stable: bool = False
+    #: Fixture scale (a sibling directory of the test fixture, e.g.
+    #: "sf0.01") on which the rerun compare builds the key twice, for a
+    #: rerun-stable key that returns no rows at the test fixture. None:
+    #: the sweep's own build and one fresh build at the test fixture.
+    rerun_sf: str | None = None
 
 
 CONTRACTS: dict[str, Contract] = {
@@ -561,9 +566,9 @@ CONTRACTS: dict[str, Contract] = {
     "geo_geohash": Contract(shuffles=1, rerun_stable=True),  # distinct users only
     "geo_grid_bbox_join": Contract(
         shuffles=1, bcast=1,  # bcast cell join + distinct
-        # not rerun_stable: 0 rows at the sf0.001 test fixture, where a
-        # rerun compare would be vacuous (parity still checks the empty
-        # result against the oracle)
+        # 0 rows at the sf0.001 test fixture (no user falls in a box),
+        # so the rerun compare runs where it returns rows
+        rerun_stable=True, rerun_sf="sf0.01",
     ),
     "geo_point_in_polygon": Contract(shuffles=1, rerun_stable=True),  # distinct + map-only pred
     "graph_bfs_hops": Contract(
@@ -797,8 +802,10 @@ CONTRACTS: dict[str, Contract] = {
     "q4_order_priority": Contract(shuffles=1, bcast=1, rerun_stable=True),
     "q7_volume_shipping": Contract(
         shuffles=1, bcast=5,
-        # not rerun_stable: 0 rows at the sf0.001 test fixture (see
-        # geo_grid_bbox_join)
+        # 0 rows at the sf0.001 test fixture (no NATION_1/NATION_2
+        # trade in 1996-97), so the rerun compare runs where it
+        # returns rows
+        rerun_stable=True, rerun_sf="sf0.01",
     ),
     "q8_market_share": Contract(shuffles=1, bcast=7, rerun_stable=True),
     "q9_product_profit": Contract(shuffles=1, bcast=3, rerun_stable=True),

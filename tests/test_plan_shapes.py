@@ -123,16 +123,16 @@ def test_sort_multi_ranks_via_range_partitioning(spark, sf_dir):
 
 
 # Per-round plan-budget test ids, kept as views of the registry sweep's
-# plan clause (the budgets live in tests/contracts.py). Frozen: new keys
-# go in tests/contracts.py only.
-test_tpch_r3_plan_budgets = key_view("plan", """
+# plan clause for keys with a pinned budget (the budgets live in
+# tests/contracts.py). Frozen: new keys go in tests/contracts.py only.
+test_tpch_r3_plan_budgets = key_view("budget", """
     q11_important_parts q13_customer_distribution q14_promo_effect
     q15_top_supplier q16_parts_suppliers q17_small_quantity
     q19_discounted_revenue q1_pricing_summary q20_part_promotion
     q21_waiting_suppliers q22_global_sales q2_min_cost_supplier
     q4_order_priority q7_volume_shipping q8_market_share q9_product_profit
 """.split())
-test_r3b_plan_budgets = key_view("plan", """
+test_r3b_plan_budgets = key_view("budget", """
     agg_combinators agg_hll_merge agg_skew_kurtosis agg_sum_map
     agg_topk_weighted array_cumsum array_difference audio_fft_dominant
     backup_verify_integrity bitmap_set_ops compaction_plan
@@ -145,7 +145,7 @@ test_r3b_plan_budgets = key_view("plan", """
     stats_welch_ttest text_chunk_passages text_top_terms topic_roundtrip
     url_funcs user_active_streaks win_moving_median zorder_layout
 """.split())
-test_r4_plan_budgets = key_view("plan", """
+test_r4_plan_budgets = key_view("budget", """
     agg_argminmax agg_delta_sum agg_gini_diversity agg_group_concat
     agg_weighted_median array_enumerate_uniq array_join_parallel
     bpe_merge_candidates cdc_apply_changelog corpus_pack_sequences
@@ -160,7 +160,7 @@ test_r4_plan_budgets = key_view("plan", """
     text_ngram_lm_score ts_autocorr_lag1 win_cume_dist_nth win_ratio_to_report
     with_totals
 """.split())
-test_r5_plan_budgets = key_view("plan", """
+test_r5_plan_budgets = key_view("budget", """
     agg_array_intersect agg_bit_group agg_group_array_last agg_hll_set_ops
     agg_minmax_map agg_retention_flags agg_sparkbar agg_uniq_array
     agg_uniq_upto array_compact_dedup array_fill_forward array_moving_agg
@@ -176,7 +176,7 @@ test_r5_plan_budgets = key_view("plan", """
     ts_change_point_flags ts_lttb_downsample ts_m4_downsample
     ts_nonneg_derivative win_cumulative_uniques win_sliding_distinct
 """.split())
-test_r7_plan_budgets = key_view("plan", """
+test_r7_plan_budgets = key_view("budget", """
     agg_combinators_array agg_filter_where attribution_last_touch
     backup_dedup_savings corpus_global_shuffle corpus_upsample_repeat
     dedup_minhash_estimate_vs_truth emb_mrl_overlap_curve
@@ -191,7 +191,7 @@ test_r7_plan_budgets = key_view("plan", """
     text_dedup_span_removal text_ngram_novelty ts_ohlc_bars ts_vwap
     user_churn_flags win_first_last_ignore_nulls win_range_interval_frame
 """.split())
-test_r6_plan_budgets = key_view("plan", """
+test_r6_plan_budgets = key_view("budget", """
     agg_time_decay_halflife array_enumerate_dense audience_overlap_jaccard
     backup_manifest_diff backup_pit_select backup_restore_chain
     cohort_revenue_ltv corpus_dsir_features corpus_dup_ngrams
@@ -208,7 +208,7 @@ test_r6_plan_budgets = key_view("plan", """
     text_inverted_index text_langid_confusion token_fertility_stats
     topk_with_others ts_seasonality_profile
 """.split())
-test_r8_plan_budgets = key_view("plan", """
+test_r8_plan_budgets = key_view("budget", """
     agg_histogram_equi_depth array_search_funcs array_sort_funcs
     corpus_interleave_round_robin corpus_shard_manifest date_timezone_convert
     date_week_mode dq_histogram_drift emb_centroid_distances
@@ -219,13 +219,13 @@ test_r8_plan_budgets = key_view("plan", """
     sql_values_inline stats_corr_matrix stats_kendall_tau ts_cumsum_reset
     ts_holt_linear ts_outliers_tukey
 """.split())
-test_r9_plan_budgets = key_view("plan", """
+test_r9_plan_budgets = key_view("budget", """
     agg_combinators_ornull contamination_bitset dq_referential_integrity
     dq_uniqueness_audit graph_degree_histogram join_bitset_prefilter
     orders_backlog_aging orders_fulfillment_latency seq_longest_increase
     stats_cramers_v_corrected
 """.split())
-test_r9b_plan_budgets = key_view("plan", """
+test_r9b_plan_budgets = key_view("budget", """
     corpus_datasheet corpus_temperature_mix date_parse_best_effort
     dq_benford_law emb_power_iteration_pc1 emb_random_projection
     events_burstiness_index events_markov_stationary sample_hash_consistent
@@ -235,42 +235,42 @@ test_r9b_plan_budgets = key_view("plan", """
     str_phonetic_soundex text_readability_fk text_zipf_fit ts_kalman_level
     ts_theil_sen_slope
 """.split())
-test_r9d_plan_budgets = key_view("plan", """
+test_r9d_plan_budgets = key_view("budget", """
     dq_schema_profile stats_anova_oneway stats_jarque_bera
     stats_linregress_multi token_bigram_entropy ts_cusum_alarm
     ts_stl_decompose
 """.split())
-test_r9e_plan_budgets = key_view("plan", """
+test_r9e_plan_budgets = key_view("budget", """
     date_business_days emb_pca2_deflation stats_levene_bf stats_runs_test
     text_mattr_diversity
 """.split())
-test_r10_plan_budgets = key_view("plan", """
+test_r10_plan_budgets = key_view("budget", """
     agg_argmax_argmin math_round_families scan_dpp_join stats_covariance
     text_blocklist_filter text_quality_gopher url_canonical_dedup
     win_session_window_builtin
 """.split())
-test_r11_plan_budgets = key_view("plan", """
+test_r11_plan_budgets = key_view("budget", """
     events_peak_hour orders_abc_analysis stats_kruskal_wallis text_tfidf_topk
     ts_rolling_slope win_groups_frame_emulated
 """.split())
-test_r11b_plan_budgets = key_view("plan", """
+test_r11b_plan_budgets = key_view("budget", """
     dq_orders_lineitem_reconcile lineitem_revenue_waterfall
     orders_seasonal_index path_transition_lift scan_minmax_pruned
     stats_permutation_test_hash
 """.split())
-test_r11c_plan_budgets = key_view("plan", """
+test_r11c_plan_budgets = key_view("budget", """
     agg_combinators_if_matrix dedup_hierarchical_two_level events_wau_rolling
     intervals_peak_position scan_bloom_filter_lookup stats_welch_anova
     str_has_subsequence ts_backtest_seasonal_naive win_frame_exclude_current
 """.split())
-test_r12_plan_budgets = key_view("plan", """
+test_r12_plan_budgets = key_view("budget", """
     funnel_steps_twostage sessionize_gap_adaptive sessionize_gap_twostage
 """.split())
-test_r14_plan_budgets = key_view("plan", """
+test_r14_plan_budgets = key_view("budget", """
     agg_ema_twostage agg_weighted_median_twostage
     sequence_count_pairs_twostage win_percent_rank_twostage
 """.split())
-test_r13_plan_budgets = key_view("plan", """
+test_r13_plan_budgets = key_view("budget", """
     agg_percentile_exact_twostage curation_percentile_gate_twostage
     path_transitions_twostage q1_pricing_summary_grid topk_per_group_twostage
     ts_nonneg_derivative_twostage win_cume_dist_nth_twostage

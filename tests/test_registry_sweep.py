@@ -20,7 +20,8 @@ Per key, in this order:
 4. rerun — for ``rerun_stable`` keys, those rows are non-empty and
    equal the rows of a second, fresh build (partition-order
    nondeterminism: unsorted collects, tie-less keep-one, double-sum
-   wobble).
+   wobble). A key with ``rerun_sf`` is instead built twice at that
+   fixture scale, where it returns rows.
 
 Measured at sf0.001. Some builders eagerly materialize scratch
 artifacts while constructing their DataFrame (sink roundtrips,
@@ -30,10 +31,13 @@ inspected.
 
 Each key's outcome is computed once per session and memoized;
 ``key_view`` / ``keys_view`` assert single clauses of it under the
-per-round test ids that predate this sweep.
+per-round test ids that predate this sweep, and fail for a key the
+clause does not apply to.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -168,10 +172,16 @@ def _check(spark, duck, sf_dir, key: str) -> dict[str, list[str]]:
     if c.rerun_stable:
 
         def rerun():
-            if not rows:
+            if c.rerun_sf:
+                d = os.path.join(os.path.dirname(os.path.normpath(sf_dir)), c.rerun_sf)
+                first = spec.fn(spark, d)
+                got = _rows(first, first.collect())
+            else:
+                d, got = sf_dir, _rows(df, rows)
+            if not got:
                 return ["no rows: a 0-row result passes every check vacuously"]
-            again = spec.fn(spark, sf_dir)
-            if _rows(df, rows) != _rows(again, again.collect()):
+            again = spec.fn(spark, d)
+            if got != _rows(again, again.collect()):
                 return ["rows differ between two builds"]
 
         run("rerun", rerun)
@@ -196,6 +206,29 @@ def test_contracts_name_registered_keys():
     assert not stale, f"contracts for unregistered keys: {stale}"
 
 
+def test_every_key_has_an_oracle():
+    # Quick-tier guard for what the slow sweep needs first: a
+    # registered key without an oracle fails its parity clause, and a
+    # rerun_stable key without one is never rerun.
+    rows_only = sorted(k for k, s in SPECS.items() if s.oracle is None)
+    assert not rows_only, f"keys without an oracle: {rows_only}"
+
+
+def _view_failures(spark, duck, sf_dir, key: str, clause: str):
+    """One clause of ``key``'s sweep outcome. ``"budget"`` is the plan
+    clause of a key with a pinned shuffle budget. A view over a key its
+    clause does not apply to fails, so a frozen id list that drifts
+    from CONTRACTS cannot pass with nothing checked."""
+    c = CONTRACTS.get(key, Contract())
+    if clause == "rerun" and not c.rerun_stable:
+        return {"view": ["not rerun_stable in tests/contracts.py"]}
+    if clause == "budget":
+        if c.shuffles is None:
+            return {"view": ["no shuffle budget in tests/contracts.py"]}
+        clause = "plan"
+    return _failures(spark, duck, sf_dir, key, ("build", clause))
+
+
 def key_view(clause: str, keys):
     """A test parametrized over ``keys`` that asserts one clause of
     each key's sweep outcome (builds nothing the sweep does not)."""
@@ -203,7 +236,7 @@ def key_view(clause: str, keys):
     @pytest.mark.slow
     @pytest.mark.parametrize("key", list(keys))
     def view(spark, duck, sf_dir, key):
-        bad = _failures(spark, duck, sf_dir, key, ("build", clause))
+        bad = _view_failures(spark, duck, sf_dir, key, clause)
         assert not bad, f"{key}: {bad}"
 
     return view
@@ -218,7 +251,7 @@ def keys_view(clause: str, keys):
     def view(spark, duck, sf_dir):
         bad = {}
         for key in keys:
-            if f := _failures(spark, duck, sf_dir, key, ("build", clause)):
+            if f := _view_failures(spark, duck, sf_dir, key, clause):
                 bad[key] = f
         assert not bad, bad
 
