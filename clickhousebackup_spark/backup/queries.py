@@ -18,6 +18,7 @@ from clickhousebackup_spark.backup.retention import (
     retention_plan,
 )
 from clickhousebackup_spark.backup.snapshot import snapshot_table
+from clickhousebackup_spark.exprs import row_hash
 from clickhousebackup_spark.registry import register
 from clickhousebackup_spark.tables import load_table, parallelize
 
@@ -282,11 +283,14 @@ def integrity_diff(src: DataFrame, restored: DataFrame) -> DataFrame:
     path is provable in tests — on an intact snapshot n_missing and
     n_extra are legitimately 0 forever, which is exactly why the
     detection machinery needs its own tampered-input proof,
-    tests/test_backup.py)."""
+    tests/test_backup.py). Rows are identified by ``exprs.row_hash``
+    over the sorted union of both sides' columns, so column order does
+    not matter and a column only one side has counts as null on the
+    other."""
+    cols = sorted(set(src.columns) | set(restored.columns))
 
     def hashed_counts(df: DataFrame, col: str) -> DataFrame:
-        h = F.md5(F.to_json(F.struct(*[F.col(c) for c in sorted(df.columns)])))
-        return df.groupBy(h.alias("row_hash")).agg(
+        return df.groupBy(row_hash(df, cols).alias("row_hash")).agg(
             F.count(F.lit(1)).alias(col)
         )
 

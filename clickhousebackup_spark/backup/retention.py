@@ -13,6 +13,9 @@ scan prunes partitions before reading (the find -maxdepth analog).
 
 from __future__ import annotations
 
+import numbers
+from decimal import Decimal
+
 from pyspark.sql import DataFrame, Window  # noqa: F401  (Window used by keep_newest)
 from pyspark.sql import functions as F
 
@@ -46,75 +49,60 @@ def latest_pointers(catalog: DataFrame, suffix: str = ".zip") -> DataFrame:
     )
 
 
+def _window_literal(minutes) -> str:
+    """A policy window as a typed SQL literal: an integer stays
+    integral (INT, or BIGINT past int32), any other number is a DOUBLE
+    (a bare 1440.5 would parse as DECIMAL)."""
+    if isinstance(minutes, bool) or not isinstance(
+        minutes, (numbers.Real, Decimal)
+    ):
+        raise TypeError(f"retention window must be a number, got {minutes!r}")
+    if isinstance(minutes, numbers.Integral):
+        return str(int(minutes))
+    return f"CAST('{float(minutes)!r}' AS DOUBLE)"
+
+
 def retention_plan(
-    catalog: DataFrame,
-    policy: RetentionPolicy | None = None,
-    now_col: F.Column | None = None,
+    catalog: DataFrame, policy: RetentionPolicy | None = None
 ) -> DataFrame:
     """backup.sh:119-122 (`find -mmin/-mtime +N … rm`) as a keep/delete
     classification.
 
-    Adds ``age_minutes`` (vs the newest snapshot overall unless
-    ``now_col`` is given — wall-clock would break determinism) and
-    ``keep`` per the per-generation windows of env.sh:26-29.
+    Adds ``age_minutes`` (vs the newest snapshot overall — wall-clock
+    would break determinism) and ``keep`` per the per-generation
+    windows of env.sh:26-29.
+
+    "Now" is anchored at the newest snapshot via a 1-row broadcast — a
+    global window here would collapse to a single partition. Built as
+    parsed selectExpr stages (r17 construction lever, construct 94 →
+    43 ms under every retention-consuming key), plan-identical to the
+    Column build (canonicalized compare pinned in
+    tests/test_optimizations_r17.py). Every literal is typed: the
+    60000000.0D divisor and non-integer windows are DOUBLE, since a
+    bare 60000000.0 parses as DECIMAL and would change age_minutes'
+    type.
     """
-    policy = policy or RetentionPolicy()
-    windows = policy.window_minutes()
-    if now_col is None and all(
-        isinstance(v, int) and not isinstance(v, bool)
-        for v in windows.values()
-    ):
-        # Anchor "now" at the newest snapshot via a 1-row broadcast —
-        # a global window here would collapse to a single partition.
-        # Default path as parsed selectExpr stages (r17 construction
-        # lever): plan-identical to the Column build (canonicalized
-        # compare pinned in tests/test_optimizations_r17.py; note the
-        # 60000000.0D double literal — bare 60000000.0 parses as
-        # DECIMAL and would change age_minutes' type), construct
-        # 94 → 43 ms under every retention-consuming key.
-        mx = catalog.agg(F.max("snapshot_ts").alias("_now"))
-        keep_window = (
-            f"CASE WHEN generation = 'last' THEN {windows['last']} "
-            f"WHEN generation = 'daily' THEN {windows['daily']} "
-            f"WHEN generation = 'weekly' THEN {windows['weekly']} "
-            f"ELSE {windows['monthly']} END"
-        )
-        return (
-            catalog.join(F.broadcast(mx))
-            .selectExpr(
-                "*",
-                "(unix_micros(_now) - unix_micros(snapshot_ts)) "
-                "/ 60000000.0D AS age_minutes",
-            )
-            .selectExpr(
-                "*", f"CAST(age_minutes <= {keep_window} AS LONG) AS keep"
-            )
-            .drop("_now")
-        )
-    # caller-supplied anchor (a Column isn't nameable in a parsed
-    # string — engine.retention_plan(now_col=…)) or non-int policy
-    # windows (a float would parse as DECIMAL and change types): keep
-    # the Column build.
-    drop_now = False
-    if now_col is None:
-        mx = catalog.agg(F.max("snapshot_ts").alias("_now"))
-        catalog = catalog.join(F.broadcast(mx))
-        now_col = F.col("_now")
-        drop_now = True
-    age_min = (
-        (F.unix_micros(now_col) - F.unix_micros(F.col("snapshot_ts")))
-        / F.lit(60_000_000.0)
-    )
+    windows = {
+        gen: _window_literal(m)
+        for gen, m in (policy or RetentionPolicy()).window_minutes().items()
+    }
+    mx = catalog.agg(F.max("snapshot_ts").alias("_now"))
     keep_window = (
-        F.when(F.col("generation") == "last", F.lit(windows["last"]))
-        .when(F.col("generation") == "daily", F.lit(windows["daily"]))
-        .when(F.col("generation") == "weekly", F.lit(windows["weekly"]))
-        .otherwise(F.lit(windows["monthly"]))
+        f"CASE WHEN generation = 'last' THEN {windows['last']} "
+        f"WHEN generation = 'daily' THEN {windows['daily']} "
+        f"WHEN generation = 'weekly' THEN {windows['weekly']} "
+        f"ELSE {windows['monthly']} END"
     )
-    out = catalog.withColumn("age_minutes", age_min).withColumn(
-        "keep", (F.col("age_minutes") <= keep_window).cast("long")
+    return (
+        catalog.join(F.broadcast(mx))
+        .selectExpr(
+            "*",
+            "(unix_micros(_now) - unix_micros(snapshot_ts)) "
+            "/ 60000000.0D AS age_minutes",
+        )
+        .selectExpr("*", f"CAST(age_minutes <= {keep_window} AS LONG) AS keep")
+        .drop("_now")
     )
-    return out.drop("_now") if drop_now else out
 
 
 def prune_delete_set(catalog: DataFrame, plan: DataFrame) -> DataFrame:

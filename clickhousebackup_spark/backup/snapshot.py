@@ -19,7 +19,7 @@ import os
 import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 @dataclass(frozen=True)
@@ -66,7 +66,3 @@ def snapshot_table(
         shutil.rmtree(final)
     os.rename(staging, final)
     return SnapshotResult(db=db, table=table, period_key=period_key, path=final, n_rows=n)
-
-
-def read_snapshot(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

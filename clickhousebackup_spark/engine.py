@@ -21,6 +21,7 @@ retention prune → post hooks, with the error trap firing error hooks.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 from dataclasses import dataclass, field
 
@@ -41,7 +42,8 @@ from clickhousebackup_spark.backup.retention import (
     retention_plan,
 )
 from clickhousebackup_spark.backup.snapshot import SnapshotResult, snapshot_table
-from clickhousebackup_spark.tables import load_table
+from clickhousebackup_spark.exprs import row_hash
+from clickhousebackup_spark.tables import load_table, parquet_data_files
 
 CATALOG_SCHEMA = (
     "db string, table_name string, generation string, period_key string, "
@@ -82,15 +84,43 @@ class BackupEngine:
         """One scheduled run: for each configured db (env.sh:24 split),
         snapshot its tables with the `last` period key and register all
         four generation rows in the catalog (backup.sh:24-97)."""
-        import datetime as dt
+        return self._run(tables_by_db, now, incremental=False)
 
+    def run_incremental(
+        self, tables_by_db: dict[str, dict[str, DataFrame]], now=None
+    ) -> list[SnapshotResult]:
+        """Incremental run: the same lifecycle as ``run_backup``, but
+        each table's snapshot holds only the rows NOT present in the
+        composed state of the same (db, table) — see ``_new_rows``. The
+        reference only does full backups (backup.sh:45); this is the
+        capability a 100 TB corpus needs: the diff on a 16-byte hash is
+        one shuffle, and restore composes snapshots by unioning them in
+        period order.
+
+        Rows deleted upstream are not tracked (append-only semantics,
+        matching the fixture tables and most log/corpus workloads).
+        """
+        return self._run(tables_by_db, now, incremental=True)
+
+    def _run(
+        self,
+        tables_by_db: dict[str, dict[str, DataFrame]],
+        now,
+        incremental: bool,
+    ) -> list[SnapshotResult]:
+        """The one run loop (backup.sh:16-130): pre hooks, then per db
+        and table a snapshot registered under all four generations,
+        then the latest pointers, then post hooks; the error trap fires
+        error hooks."""
         now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        key = now.strftime("%Y%m%d-%H%M%S")  # backup.sh:26
 
         def job() -> list[SnapshotResult]:
             results: list[SnapshotResult] = []
             for db in self.config.db_list:  # backup.sh:24
                 for tname, df in tables_by_db.get(db, {}).items():
-                    key = now.strftime("%Y%m%d-%H%M%S")  # backup.sh:26
+                    if incremental:
+                        df = self._new_rows(db, tname, df)
                     res = snapshot_table(
                         df, self.config.backup_dir, db, tname, key
                     )
@@ -101,6 +131,36 @@ class BackupEngine:
 
         return self.hooks.run_job(job)  # pre/post/error per backup.sh
 
+    def _new_rows(self, db: str, table: str, df: DataFrame) -> DataFrame:
+        """The rows of ``df`` not yet in the composed state (base + all
+        deltas) of (db, table); all of ``df`` when nothing is there.
+
+        Row identity is ``exprs.row_hash``. The diff is
+        multiplicity-aware: rows are numbered within each hash and only
+        occurrences BEYOND the previously-snapshotted count are
+        captured, so a table holding k copies of a row round-trips all
+        k (a plain anti-join would silently drop every duplicate).
+        """
+        try:
+            prev = self.restore_incremental(db, table)
+        except FileNotFoundError:
+            return df  # first run = full snapshot
+        cols = list(df.columns)
+        prev_counts = prev.groupBy(row_hash(prev, cols).alias("_h")).agg(
+            F.count(F.lit(1)).alias("_n_prev")
+        )
+        # occurrence index among identical rows: any order works — rows
+        # within a hash are byte-identical, so which copies survive the
+        # filter is unobservable.
+        w_occ = Window.partitionBy("_h").orderBy(F.lit(1))
+        return (
+            df.withColumn("_h", row_hash(df, cols))
+            .withColumn("_occ", F.row_number().over(w_occ))
+            .join(prev_counts, on="_h", how="left")
+            .filter(F.col("_occ") > F.coalesce(F.col("_n_prev"), F.lit(0)))
+            .drop("_h", "_occ", "_n_prev")
+        )
+
     def _register(self, db: str, table: str, res: SnapshotResult, now) -> None:
         rows = []
         for gen in GENERATIONS:
@@ -108,104 +168,14 @@ class BackupEngine:
                 (db, table, gen, "", now, self._snapshot_seq, res.path, "", res.n_rows)
             )
             self._snapshot_seq += 1
-        new = self.spark.createDataFrame(rows, CATALOG_SCHEMA).withColumn(
-            "period_key", period_key_expr("snapshot_ts", "generation")
-        ).withColumn(
-            "content_hash",
-            F.md5(F.concat_ws("|", "db", "generation", "period_key", "path")),
-        )
         self._append_catalog(
-            new.select(
-                "db",
-                "table_name",
-                "generation",
-                "period_key",
-                "snapshot_ts",
-                "snapshot_id",
-                "path",
+            self.spark.createDataFrame(rows, CATALOG_SCHEMA)
+            .withColumn("period_key", period_key_expr("snapshot_ts", "generation"))
+            .withColumn(
                 "content_hash",
-                "size_bytes",
+                F.md5(F.concat_ws("|", "db", "generation", "period_key", "path")),
             )
         )
-
-    def run_incremental(
-        self, tables_by_db: dict[str, dict[str, DataFrame]], now=None
-    ) -> list[SnapshotResult]:
-        """Incremental run: snapshot only the rows NOT present in the
-        previous snapshot of the same (db, table) — row identity = md5
-        of the concatenated row. The reference only does full backups
-        (backup.sh:45); this is the capability a 100 TB corpus needs:
-        the anti-join on a 16-byte hash is one shuffle, and restore
-        composes snapshots by unioning them in period order.
-
-        Rows deleted upstream are not tracked (append-only semantics,
-        matching the fixture tables and most log/corpus workloads).
-
-        Row identity is md5 of the JSON-serialized row struct with
-        explicit nulls — NOT concat_ws, which silently skips NULL
-        columns so (a, NULL, b) and (a, b, NULL) would collide; JSON
-        field markers + escaping make the hash injective per row. The
-        diff is multiplicity-aware: rows are numbered within each hash
-        and only occurrences BEYOND the previously-snapshotted count
-        are captured, so a table holding k copies of a row round-trips
-        all k (a plain anti-join would silently drop every duplicate).
-        """
-        import datetime as dt
-
-        now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-
-        def row_hash(df: DataFrame, cols: list[str]):
-            # Columns absent in an older snapshot hash as nulls, so the
-            # diff stays well-defined across schema evolution.
-            fields = [
-                (F.col(c) if c in df.columns else F.lit(None)).alias(c)
-                for c in cols
-            ]
-            return F.md5(
-                F.to_json(F.struct(*fields), {"ignoreNullFields": "false"})
-            )
-
-        def job() -> list[SnapshotResult]:
-            results: list[SnapshotResult] = []
-            for db in self.config.db_list:
-                for tname, df in tables_by_db.get(db, {}).items():
-                    new_rows = df
-                    try:
-                        # diff against the COMPOSED state (base + all
-                        # deltas), not just the newest snapshot
-                        prev = self.restore_incremental(db, tname)
-                        cols = list(df.columns)
-                        prev_counts = (
-                            prev.groupBy(row_hash(prev, cols).alias("_h"))
-                            .agg(F.count(F.lit(1)).alias("_n_prev"))
-                        )
-                        # occurrence index among identical rows: any
-                        # order works — rows within a hash are
-                        # byte-identical, so which copies survive the
-                        # filter is unobservable.
-                        w_occ = Window.partitionBy("_h").orderBy(F.lit(1))
-                        new_rows = (
-                            df.withColumn("_h", row_hash(df, cols))
-                            .withColumn("_occ", F.row_number().over(w_occ))
-                            .join(prev_counts, on="_h", how="left")
-                            .filter(
-                                F.col("_occ")
-                                > F.coalesce(F.col("_n_prev"), F.lit(0))
-                            )
-                            .drop("_h", "_occ", "_n_prev")
-                        )
-                    except FileNotFoundError:
-                        pass  # first run = full snapshot
-                    key = now.strftime("%Y%m%d-%H%M%S")
-                    res = snapshot_table(
-                        new_rows, self.config.backup_dir, db, tname, key
-                    )
-                    results.append(res)
-                    self._register(db, tname, res, now)
-            self.materialize_latest()
-            return results
-
-        return self.hooks.run_job(job)
 
     def restore_incremental(
         self, db: str, table: str, until_period_key: str | None = None
@@ -257,7 +227,9 @@ class BackupEngine:
     def _snapshot_schemas_identical(paths: list[str]) -> bool:
         """True iff every snapshot directory's parquet footer schema
         is byte-identical (names, types, order). Driver-side pyarrow
-        footer reads — one small metadata read per snapshot, no Spark
+        footer reads of the first file ``parquet_data_files`` lists
+        (the files Spark's reader reads) — one small metadata read per
+        snapshot, no Spark
         job; at catalog scale this is the cheap gate that keeps the
         restore plan O(1) deep. Any unreadable/ambiguous layout
         returns False (fall back to the always-correct union ladder) —
@@ -269,19 +241,8 @@ class BackupEngine:
             return False
 
         def footer_schema(path):
-            if os.path.isdir(path):
-                for e in sorted(os.scandir(path), key=lambda e: e.name):
-                    # skip dot/underscore entries (_SUCCESS, staging
-                    # temps): Spark's reader ignores them, so the gate
-                    # must read the same files Spark will.
-                    if (
-                        e.is_file()
-                        and e.name.endswith(".parquet")
-                        and not e.name.startswith((".", "_"))
-                    ):
-                        return pq.ParquetFile(e.path).schema_arrow
-                return None
-            return pq.ParquetFile(path).schema_arrow
+            files = parquet_data_files(path)
+            return pq.ParquetFile(files[0]).schema_arrow if files else None
 
         try:
             first = footer_schema(paths[0])
@@ -328,10 +289,8 @@ class BackupEngine:
             )
         return latest_pointers(self.catalog(), self.config.suffix)
 
-    def retention_plan(self, now_col=None) -> DataFrame:
-        return retention_plan(
-            self.generation_state(), self.config.retention, now_col
-        )
+    def retention_plan(self) -> DataFrame:
+        return retention_plan(self.generation_state(), self.config.retention)
 
     def restore(self, db: str, table: str, period_key: str | None = None) -> DataFrame:
         """Read a snapshot back — the restore path the reference leaves

@@ -22,7 +22,7 @@ Decimal(38,x) is a 16-byte unscaled long — no plan-shape change.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEC = "decimal(38,6)"
@@ -34,10 +34,31 @@ def dsum(col: Column | str) -> Column:
     return F.sum(c.cast(DEC)).cast("double")
 
 
+def sql_dsum(sql_expr: str) -> str:
+    """Spark-SQL twin of :func:`dsum`, for one-call ``spark.sql``
+    construction. Must stay expression-identical to ``dsum``: the
+    canonicalized-plan tests in tests/test_optimizations_r17.py pin
+    the equivalence."""
+    return f"CAST(SUM(CAST({sql_expr} AS DECIMAL(38,6))) AS DOUBLE)"
+
+
 def davg(col: Column | str) -> Column:
     """Deterministic mean: exact decimal sum / count, double division."""
     c = F.col(col) if isinstance(col, str) else col
     return dsum(c) / F.count(c)
+
+
+def row_hash(df: DataFrame, cols: list[str]) -> Column:
+    """Row identity: md5 of the JSON row struct over ``cols`` with
+    explicit nulls. Not concat_ws, which skips NULL columns, so
+    (a, NULL, b) and (a, b, NULL) would collide; JSON field names and
+    escaping make the hash injective per row. A column of ``cols``
+    absent from ``df`` hashes as null, so rows of a snapshot taken
+    before a column was added compare against rows taken after."""
+    fields = [
+        (F.col(c) if c in df.columns else F.lit(None)).alias(c) for c in cols
+    ]
+    return F.md5(F.to_json(F.struct(*fields), {"ignoreNullFields": "false"}))
 
 
 def osum(sql_expr: str) -> str:

@@ -17,18 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clickhousebackup_spark.exprs import davg, dsum, oavg, osum
+from clickhousebackup_spark.exprs import dsum, oavg, osum, sql_dsum
 from clickhousebackup_spark.registry import register
 from clickhousebackup_spark.tables import load_table, parallelize
-
-
-def _DS(e: str) -> str:
-    """Spark-SQL rendering of exprs.dsum — the order-independent
-    decimal-exact double sum, as a parsed string for one-call
-    ``spark.sql`` query construction. Must stay expression-identical
-    to ``dsum`` (``SUM(CAST(x AS DECIMAL(38,6)))`` cast to DOUBLE):
-    the canonicalized-plan tests pin the equivalence."""
-    return f"CAST(SUM(CAST({e} AS DECIMAL(38,6))) AS DOUBLE)"
 
 
 @register(
@@ -70,11 +61,11 @@ def agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT l_returnflag, l_linestatus,
-               {_DS('l_quantity')} AS sum_qty,
-               {_DS('l_extendedprice')} AS sum_base_price,
-               {_DS('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-               ({_DS('l_quantity')} / COUNT(l_quantity)) AS avg_qty,
-               ({_DS('l_extendedprice')} / COUNT(l_extendedprice)) AS avg_price,
+               {sql_dsum('l_quantity')} AS sum_qty,
+               {sql_dsum('l_extendedprice')} AS sum_base_price,
+               {sql_dsum('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+               ({sql_dsum('l_quantity')} / COUNT(l_quantity)) AS avg_qty,
+               ({sql_dsum('l_extendedprice')} / COUNT(l_extendedprice)) AS avg_price,
                MIN(l_shipdate) AS min_shipdate,
                MAX(l_shipdate) AS max_shipdate,
                COUNT(1) AS count_order

@@ -24,19 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from clickhousebackup_spark.exprs import dsum, osum
+from clickhousebackup_spark.exprs import dsum, osum, sql_dsum
 from clickhousebackup_spark.registry import register
 from clickhousebackup_spark.tables import load_table, parallelize
 
 _REV = "l_extendedprice * (1 - l_discount)"
-
-
-def _DS(e: str) -> str:
-    """Spark-SQL twin of exprs.dsum (order-independent decimal-exact
-    double sum) for one-call spark.sql construction; must stay
-    expression-identical to dsum — the canonicalized-plan equivalence
-    tests pin it."""
-    return f"CAST(SUM(CAST({e} AS DECIMAL(38,6))) AS DOUBLE)"
 
 
 @register(
@@ -78,7 +70,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT o_orderkey, o_orderdate, o_orderpriority,
-               {_DS(_REV)} AS revenue
+               {sql_dsum(_REV)} AS revenue
         FROM {{o}} JOIN {{c}} ON o_custkey = c_custkey
                    JOIN {{li}} ON l_orderkey = o_orderkey
         WHERE c_mktsegment = 'BUILDING'
@@ -147,7 +139,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     oc = o.join(c, o.o_custkey == c.c_custkey).hint("shuffle_hash")
     return spark.sql(
         f"""
-        SELECT n_name, {_DS(_REV)} AS revenue
+        SELECT n_name, {sql_dsum(_REV)} AS revenue
         FROM {{oc}} JOIN {{li}} ON l_orderkey = o_orderkey
                     JOIN {{s}} ON l_suppkey = s_suppkey
                     JOIN {{n}} ON s_nationkey = n_nationkey
@@ -198,7 +190,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.broadcast(load_table(spark, sf_dir, "nation"))
     return spark.sql(
         f"""
-        SELECT c_custkey, c_name, n_name, {_DS(_REV)} AS revenue,
+        SELECT c_custkey, c_name, n_name, {sql_dsum(_REV)} AS revenue,
                COUNT(1) AS n_lines
         FROM {{o}} JOIN {{c}} ON o_custkey = c_custkey
                    JOIN {{li}} ON l_orderkey = o_orderkey

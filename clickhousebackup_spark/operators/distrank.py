@@ -1,8 +1,8 @@
 """Two-pass distributed global order scan — rank / running sum /
 totals over a TOTAL order without a single-partition window.
 
-The pattern (first shipped inline in ``sort_multi``,
-operators/sorts.py): range-partition on the sort key so partition i
+The pattern (first shipped in ``sort_multi``, operators/sorts.py,
+which now calls ``global_order_scan``): range-partition on the sort key so partition i
 holds a contiguous key range, compute row numbers / running sums
 WITHIN each partition (parallel, partitioned window), aggregate one
 tiny per-partition summary table (n_partitions rows), turn it into

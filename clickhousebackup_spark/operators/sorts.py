@@ -3,11 +3,11 @@
 Scale notes: ``topk_limit`` compiles to TakeOrderedAndProject — each
 partition keeps only its local top-k, the driver merges k·p rows; no
 global sort. ``topk_per_group`` shuffles once on the group key. The
-global position column in ``sort_multi`` is the one deliberately
-non-scalable construct here (single-partition window) — it exists to
-make the sort order *observable* to the order-insensitive hash; at
-scale you'd range-partition (``repartitionByRange``) and zip local
-ranks, as the docstring of the driver notes.
+global position column in ``sort_multi`` makes the sort order
+*observable* to the order-insensitive hash; it is the two-pass
+distributed rank of ``distrank.global_order_scan`` (range partition,
+local ranks, broadcast per-partition offsets), so no window moves the
+rows to one partition.
 """
 
 from __future__ import annotations
@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clickhousebackup_spark.operators.distrank import global_order_scan
 from clickhousebackup_spark.registry import register
 from clickhousebackup_spark.tables import load_table, parallelize
 
@@ -40,32 +41,11 @@ from clickhousebackup_spark.tables import load_table, parallelize
     "evaluations is a race, not a contract.",
 )
 def sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderdate"
+    )
     keys = (F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    ranged = (
-        o.select("o_orderkey", "o_totalprice", "o_orderdate")
-        .repartitionByRange(*keys)
-        .sortWithinPartitions(*keys)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    counts = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-    # cumulative offsets over the (tiny, n_partitions-row) count table
-    wo = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid", F.coalesce(F.sum("_n").over(wo), F.lit(0)).alias("_off")
-    )
-    wl = Window.partitionBy("_pid").orderBy(*keys)
-    return (
-        ranged.join(F.broadcast(offsets), "_pid")
-        .select(
-            "o_orderkey",
-            "o_totalprice",
-            "o_orderdate",
-            (F.col("_off") + F.row_number().over(wl)).cast("long").alias("pos"),
-        )
-        .orderBy("pos")
-    )
+    return global_order_scan(o, keys, pos="pos").orderBy("pos")
 
 
 @register(

@@ -13,6 +13,7 @@ parallelizes across the cluster. Nothing here collects to the driver.
 
 from __future__ import annotations
 
+import os
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
@@ -100,35 +101,42 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def parquet_data_files(path: str) -> list[str]:
+    """The data files Spark's parquet reader reads at ``path``: the
+    path itself, or a directory's ``*.parquet`` files in name order,
+    skipping dot/underscore entries (``_SUCCESS``, staging temps) as
+    the reader does. Driver-side listing, no Spark job."""
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        e.path
+        for e in os.scandir(path)
+        if e.is_file()
+        and e.name.endswith(".parquet")
+        and not e.name.startswith((".", "_"))
+    )
+
+
 def table_rows_metadata(sf_dir: str, name: str) -> int | None:
     """Row count of one fixture table from parquet FOOTER metadata —
-    driver-side pyarrow, no Spark job, directory-aware (skips
-    dot/underscore entries Spark's reader ignores). Returns None when
-    the count cannot be established (missing pyarrow, unreadable
-    layout); callers use it only for scale-dispatch decisions (e.g.
-    exact-baseline probe caps), so None must mean "take the exact
-    path", never an error. Same plan-construction-side-effect-free
-    discipline as analytics16's adaptive hot-share probe.
+    driver-side pyarrow over ``parquet_data_files``, no Spark job.
+    Returns None when the count cannot be established (missing
+    pyarrow, unreadable layout); callers use it only for
+    scale-dispatch decisions (e.g. exact-baseline probe caps), so None
+    must mean "take the exact path", never an error. Same
+    plan-construction-side-effect-free discipline as analytics16's
+    adaptive hot-share probe.
     """
-    import os
-
     try:
         import pyarrow.parquet as pq
     except Exception:
         return None
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        if os.path.isdir(path):
-            files = [
-                e.path
-                for e in os.scandir(path)
-                if e.is_file()
-                and e.name.endswith(".parquet")
-                and not e.name.startswith((".", "_"))
-            ]
-        else:
-            files = [path]
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+        return sum(
+            pq.ParquetFile(f).metadata.num_rows
+            for f in parquet_data_files(path)
+        )
     except Exception:
         return None
 

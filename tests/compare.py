@@ -7,7 +7,7 @@ so any wobble the hash would catch fails loudly here first.
 from __future__ import annotations
 
 import math
-from datetime import date, datetime
+from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
 
 
@@ -212,6 +212,22 @@ class _FastRow:
         return self._cols[name][self._i]
 
 
+def _local_zone_is_utc() -> bool:
+    """True only for a true UTC local zone: offset 0 mid-month in every
+    month of a past and a recent year. ``collect()`` renders each
+    instant with the local offset AT that instant, so a zone whose
+    offset is 0 only now (Europe/London in winter) is not UTC for data
+    from its summer."""
+    return all(
+        datetime(year, month, 15, tzinfo=timezone.utc)
+        .astimezone()
+        .utcoffset()
+        == timedelta(0)
+        for year in (1970, 2020)
+        for month in range(1, 13)
+    )
+
+
 def fast_collect(df):
     """Collect ``df`` to rows that are cell-for-cell IDENTICAL to
     ``df.collect()`` (same Python types, same values), but transported
@@ -231,24 +247,20 @@ def fast_collect(df):
       falls back to per-column ``to_pylist``).
     - timestamps: ``astype('datetime64[us]').tolist()`` yields naive
       datetimes. For session-tz (LTZ) timestamps this equals
-      ``collect()`` only when the local tz is UTC (collect renders in
-      the driver's local tz); on a non-UTC box the whole frame falls
-      back to ``collect()``.
+      ``collect()`` only when the local tz is a true UTC zone
+      (``_local_zone_is_utc``; collect renders in the driver's local
+      tz); otherwise the whole frame falls back to ``collect()``.
     - decimal128 / date32: per-column ``to_pylist`` (already exact:
       decimal.Decimal / datetime.date, matching collect()).
     - anything else (arrays, structs, maps, binary): whole-frame
       ``df.collect()`` fallback — structs collect as Row, which no
       columnar rebuild reproduces.
     """
-    from datetime import timezone as _tz
-
     try:
         import pyarrow as pa
     except Exception:
         return df.collect()
-    local_is_utc = (
-        datetime.now(_tz.utc).astimezone().utcoffset().total_seconds() == 0
-    )
+    local_is_utc = _local_zone_is_utc()
 
     def _supported(t) -> bool:
         if pa.types.is_integer(t) or pa.types.is_floating(t):

@@ -64,3 +64,41 @@ def test_assert_same_result_passes_csv_serialized_form(spark, duck):
         FROM range(3)
     """
     assert_same_result(df, duck, oracle, "synthetic_csv")
+
+
+def test_fast_collect_falls_back_in_a_dst_zone(spark, monkeypatch):
+    """fast_collect's timestamp fast path renders UTC wall times, which
+    equals collect() only in a true UTC zone. A Europe/London-style
+    zone (GMT, offset 0, with a BST summer hour) whose offset is 0
+    today must still take the collect() fallback: collect() renders a
+    BST instant one hour later. The BST months sit away from today, so
+    the zone's current offset is 0 whenever this runs."""
+    import time
+    from datetime import datetime
+
+    from tests.compare import fast_collect
+
+    if datetime.now().month <= 6:
+        zone, instant = "GMT0BST,M8.1.0,M11.1.0", "2021-09-15 12:00:00"
+    else:
+        zone, instant = "GMT0BST,M2.1.0,M5.1.0", "2021-03-15 12:00:00"
+    df = spark.range(1).select(
+        F.to_timestamp(F.lit(instant)).alias("ts"), F.col("id")
+    )
+    monkeypatch.setenv("TZ", zone)
+    time.tzset()
+    try:
+        calls = []
+        collect = type(df).collect
+
+        def spy(self):
+            calls.append(self)
+            return collect(self)
+
+        monkeypatch.setattr(type(df), "collect", spy)
+        rows = fast_collect(df)
+        assert calls, "fast path taken in a DST zone"
+        assert rows[0]["ts"] == datetime(2021, int(instant[5:7]), 15, 13)
+    finally:
+        monkeypatch.undo()
+        time.tzset()

@@ -1,16 +1,12 @@
-"""Round-13 additions (operators/analytics2.py grid sibling):
-registered+oracled coverage, rerun stability, non-vacuous evidence,
-and crafted-fixture proofs for ``q1_pricing_summary_grid`` — the
-exactness-at-ANY-scale rewrite of TPC-H Q1 whose micro-grid integer
-aggregates stay hash-exact where q1's doubles picked up a 15th-digit
-divergence at the sf1 slice's 971k-row groups.
+"""Crafted-fixture proofs for ``q1_pricing_summary_grid``
+(operators/analytics2.py grid sibling) — the exactness-at-ANY-scale
+rewrite of TPC-H Q1 whose micro-grid integer aggregates stay
+hash-exact where q1's doubles picked up a 15th-digit divergence at the
+sf1 slice's 971k-row groups.
 
-Same contract as test_determinism_r5-r14; the keys sit at the tail of
-``registry._CHECK_PRIORITY`` (round-13 queue, DEFERRED).
-
-The coverage, non-vacuity and rerun ids below are views of the
-registry sweep (tests/test_registry_sweep.py), which builds each key
-once; the ``rerun_stable`` flags live in tests/contracts.py.
+Oracle parity, non-empty rows and rerun stability of this round's
+keys are clauses of ``tests/test_registry_sweep.py::test_key[key]``;
+the ``rerun_stable`` flags live in tests/contracts.py.
 """
 
 from __future__ import annotations
@@ -19,15 +15,6 @@ import math
 from datetime import datetime
 
 from clickhousebackup_spark.registry import all_specs
-from tests.test_registry_sweep import key_view, keys_view
-
-_IDS = """
-    q1_pricing_summary_grid path_transitions_twostage win_running_sum_twostage
-""".split()
-
-test_r15_queue_keys_cover_the_round = keys_view("parity", _IDS)
-test_r15_queue_keys_nonvacuous = keys_view("rerun", _IDS)
-test_rerun_stable = key_view("rerun", _IDS)
 
 LINEITEM_SCHEMA = (
     "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "

@@ -205,16 +205,24 @@ def test_retention_plan_selectexpr_is_plan_identical_to_column_api(
 
 
 def test_retention_plan_float_windows_take_column_path(spark, sf_dir):
-    # a float window must not reach the parsed branch (a bare float
-    # literal parses as DECIMAL and would change age/keep types)
+    # the one parsed build renders each window as a typed literal
+    # (integers integral, other numbers DOUBLE: a bare 1440.5 would
+    # parse as DECIMAL), so every window kind the deleted Column
+    # fallback accepted still builds with the same types; the id keeps
+    # that fallback's name
+    from decimal import Decimal
+
     from clickhousebackup_spark.backup.catalog import build_catalog
     from clickhousebackup_spark.backup.config import RetentionPolicy
     from clickhousebackup_spark.backup.retention import retention_plan
 
     cat = build_catalog(load_table(spark, sf_dir, "events"))
-    plan = retention_plan(cat, RetentionPolicy(keep_mins=1440.5))
-    assert dict(plan.dtypes)["age_minutes"] == "double"
-    assert dict(plan.dtypes)["keep"] == "bigint"
+    for keep_mins in (1440.5, Decimal("1440.5"), float("inf"), 10**12):
+        plan = retention_plan(cat, RetentionPolicy(keep_mins=keep_mins))
+        assert dict(plan.dtypes)["age_minutes"] == "double"
+        assert dict(plan.dtypes)["keep"] == "bigint"
+    with pytest.raises(TypeError):
+        retention_plan(cat, RetentionPolicy(keep_mins=True))
 
 
 def test_q5_sql_build_keeps_shuffled_hash_join(spark, sf_dir):
