@@ -43,6 +43,7 @@ from clickhousebackup_spark.backup.retention import (
 )
 from clickhousebackup_spark.backup.snapshot import SnapshotResult, snapshot_table
 from clickhousebackup_spark.exprs import row_hash
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table, parquet_data_files
 
 CATALOG_SCHEMA = (
@@ -335,7 +336,7 @@ class BackupEngine:
             return delete_df
         # Materialize before mutating storage: the lazy plan reads the
         # catalog files the rewrite below replaces.
-        delete_df = delete_df.localCheckpoint(eager=True)
+        delete_df = materialize(delete_df)
         kept_paths = {
             r["path"]
             for r in plan.filter(F.col("keep") == 1)

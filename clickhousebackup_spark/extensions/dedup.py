@@ -27,9 +27,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import (
     load_table,
     parallelize,
+    probe_slice_mod,
     table_rows_metadata,
 )
 
@@ -93,7 +95,7 @@ _MINHASH_B = [(0x51E2D1FB * k) % (1 << 31) for k in range(N_MINHASH)]
 _MERSENNE31 = (1 << 31) - 1
 
 #: Corpus size above which dedup_minhash materializes the signature
-#: sketch with an eager localCheckpoint before the band self-join.
+#: sketch (``scratch.materialize``) before the band self-join.
 #: Below it, the identical sig subplans on both join sides share one
 #: exchange (Spark exchange reuse) and the checkpoint's extra job +
 #: block registration are pure overhead (measured 1.39 s → 1.10 s at
@@ -242,7 +244,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the sketch stage once ABOVE the corpus cap: the
     # self-join would otherwise recompute every signature per side —
     # at corpus scale that is two full passes over the raw text.
-    # localCheckpoint stores the K-longs-per-doc signature blocks on
+    # materialize stores the K-longs-per-doc signature blocks on
     # the executors — no filesystem committer in the loop (a parquet
     # roundtrip costs a full write job; see scratch.roundtrip_parquet
     # for the pattern when the artifact must outlive the query).
@@ -259,7 +261,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = minhash_signatures(d)
     n_docs = table_rows_metadata(sf_dir, "documents")
     if n_docs is None or n_docs > MINHASH_CKPT_DOCS_MIN:
-        sigs = sigs.localCheckpoint(eager=True)
+        sigs = materialize(sigs)
     rows_per_band = N_MINHASH // N_BANDS
     # The band key is the signature SLICE itself (array<long> is a
     # valid hash-join key) — tuple equality the oracle replicates
@@ -638,18 +640,10 @@ def dedup_ngram_jaccard(
     driver/test scale."""
     t = 0.8
     if probe_mod is None:
-        from clickhousebackup_spark.tables import (
-            table_rows_metadata,
-            warn_probe_slice,
+        probe_mod = probe_slice_mod(
+            "dedup_ngram_jaccard", sf_dir, "documents",
+            DEDUP_PAIR_DOCS_CAP, DEDUP_PAIR_PROBE_MOD,
         )
-
-        n_docs = table_rows_metadata(sf_dir, "documents")
-        if n_docs is not None and n_docs > DEDUP_PAIR_DOCS_CAP:
-            warn_probe_slice(
-                "dedup_ngram_jaccard", "documents", n_docs,
-                DEDUP_PAIR_DOCS_CAP, DEDUP_PAIR_PROBE_MOD,
-            )
-            probe_mod = DEDUP_PAIR_PROBE_MOD
     d = parallelize(load_table(spark, sf_dir, "documents"))
     words = F.split(F.lower("text"), r"\s+")
     n = F.size(words)
@@ -662,7 +656,7 @@ def dedup_ngram_jaccard(
     # The gram table feeds three consumers (df counts, prefix index,
     # exact verify) — materialize it ONCE; recomputing the array expr
     # per consumer tripled the operator's wall time.
-    g = d.select("doc_id", grams.alias("gs")).localCheckpoint(eager=True)
+    g = materialize(d.select("doc_id", grams.alias("gs")))
     toks = g.select("doc_id", F.explode("gs").alias("gram"))
     # global document frequency = the canonical rarity order (ties on
     # the gram string itself → total order, deterministic prefixes)
@@ -816,21 +810,13 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a_id < b_id with a_id the probing vector, so kept pairs are
     # byte-identical to the full result's pairs whose smaller vec_id
     # is on the class (DEDUP_EMBEDDING_COSINE_BOUNDED's slice).
-    from clickhousebackup_spark.tables import (
-        table_rows_metadata,
-        warn_probe_slice,
-    )
-
     probe_src = normed
-    n_vecs = table_rows_metadata(sf_dir, "embeddings")
-    if n_vecs is not None and n_vecs > DEDUP_PAIR_DOCS_CAP:
-        warn_probe_slice(
-            "dedup_embedding_cosine", "embeddings", n_vecs,
-            DEDUP_PAIR_DOCS_CAP, DEDUP_PAIR_PROBE_MOD,
-        )
-        probe_src = normed.filter(
-            F.col("vec_id") % DEDUP_PAIR_PROBE_MOD == 0
-        )
+    mod = probe_slice_mod(
+        "dedup_embedding_cosine", sf_dir, "embeddings",
+        DEDUP_PAIR_DOCS_CAP, DEDUP_PAIR_PROBE_MOD,
+    )
+    if mod is not None:
+        probe_src = normed.filter(F.col("vec_id") % mod == 0)
     a = probe_src.select(
         "vec_id", "v", "nrm", F.explode(probes).alias("probe")
     ).alias("a")
@@ -928,7 +914,7 @@ def _propagate_clusters(docs: DataFrame, edges: DataFrame) -> DataFrame:
     )
     labels = docs.select(F.col("doc_id").alias("u"), F.col("doc_id").alias("cluster"))
     # The adjacency is reused by every round — materialize it once.
-    adj = adj.localCheckpoint(eager=True)
+    adj = materialize(adj)
     # Run to FIXPOINT (the output is hash-checked against an exact
     # recursive-CTE oracle, so an unconverged return is a wrong
     # answer, not an approximation). Min-label propagation needs up to
@@ -949,11 +935,11 @@ def _propagate_clusters(docs: DataFrame, edges: DataFrame) -> DataFrame:
                 "cluster"
             ),
         )
-        # localCheckpoint per round truncates lineage (otherwise the
+        # Materializing per round truncates lineage (otherwise the
         # plan doubles each iteration and the convergence probe below
         # re-executes the whole prefix) and materializes this round's
         # labels exactly once.
-        joined = joined.localCheckpoint(eager=True)
+        joined = materialize(joined)
         changed = (
             joined.join(labels.withColumnRenamed("cluster", "old"), on="u")
             .filter(F.col("cluster") != F.col("old"))
@@ -1124,7 +1110,7 @@ def dedup_clusters_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Portable banded LSH over the md5-grid signatures: signature
     # stage materialized once (sketch ≪ input), candidates only
     # within (band, h_even, h_odd) buckets, then the ≥4/8 verify.
-    sigs = md5_minhash_wide(d).localCheckpoint(eager=True)
+    sigs = materialize(md5_minhash_wide(d))
     sig_arr = F.array(*[F.col(f"h{i}") for i in range(MINHASH_K)])
     bands = sigs.select(
         "doc_id",
@@ -1235,7 +1221,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.concat_ws(" ", F.slice(words, i, 2)),
         )
     )
-    g = d.select("doc_id", grams.alias("gs")).localCheckpoint(eager=True)
+    g = materialize(d.select("doc_id", grams.alias("gs")))
     toks = g.select("doc_id", F.explode("gs").alias("gram"))
     freq = toks.groupBy("gram").agg(F.count(F.lit(1)).alias("df"))
     per_doc = (
@@ -1264,19 +1250,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # class. Sliced pairs keep exact full-result values: the index
     # side (toks) and the verify arrays stay full. Full-fidelity at
     # every driver/test scale (≤ 5000 docs).
-    from clickhousebackup_spark.tables import (
-        table_rows_metadata,
-        warn_probe_slice,
+    slice_mod = probe_slice_mod(
+        "dedup_containment", sf_dir, "documents",
+        DEDUP_PAIR_DOCS_CAP, DEDUP_PAIR_PROBE_MOD,
     )
-
-    n_docs = table_rows_metadata(sf_dir, "documents")
-    slice_mod = None
-    if n_docs is not None and n_docs > DEDUP_PAIR_DOCS_CAP:
-        warn_probe_slice(
-            "dedup_containment", "documents", n_docs,
-            DEDUP_PAIR_DOCS_CAP, DEDUP_PAIR_PROBE_MOD,
-        )
-        slice_mod = DEDUP_PAIR_PROBE_MOD
+    if slice_mod is not None:
         probe = probe.filter(F.col("p_id") % slice_mod == 0)
     cand = (
         probe.join(toks.select(F.col("doc_id").alias("i_id"), "gram"), "gram")
@@ -1595,9 +1573,9 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda a, x: a + x.cast("double") * x.cast("double"),
         )
     )
-    normed = e.select(
-        "vec_id", "label", v.alias("v"), nrm.alias("nrm")
-    ).localCheckpoint(eager=True)
+    normed = materialize(
+        e.select("vec_id", "label", v.alias("v"), nrm.alias("nrm"))
+    )
     a, b = normed.alias("a"), normed.alias("b")
     cos = F.aggregate(
         F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
@@ -1732,7 +1710,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = parallelize(load_table(spark, sf_dir, "documents"))
     src = d.select("doc_id", "source")
-    sigs = md5_minhash_wide(d).localCheckpoint(eager=True)
+    sigs = materialize(md5_minhash_wide(d))
     sig_arr = F.array(*[F.col(f"h{i}") for i in range(MINHASH_K)])
     bands = sigs.select(
         "doc_id",
@@ -1865,7 +1843,7 @@ def dedup_minhash_estimate_vs_truth(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     d = parallelize(load_table(spark, sf_dir, "documents"))
-    sigs = md5_minhash_wide(d).localCheckpoint(eager=True)
+    sigs = materialize(md5_minhash_wide(d))
     sig_arr = F.array(*[F.col(f"h{i}") for i in range(MINHASH_K)])
     bands = sigs.select(
         "doc_id",
@@ -1895,7 +1873,7 @@ def dedup_minhash_estimate_vs_truth(
             lambda eq: eq == 1,
         )
     )
-    pairs = (
+    pairs = materialize(
         ba.join(
             bb,
             (F.col("a.band") == F.col("b.band"))
@@ -1911,7 +1889,6 @@ def dedup_minhash_estimate_vs_truth(
             F.col("b.n_shingles").alias("nb"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # exact truth, candidates only: md5-keyed shingle intersection
     toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
@@ -2022,9 +1999,9 @@ def dedup_minhash_estimate_vs_truth(
 def text_dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = parallelize(load_table(spark, sf_dir, "documents"))
     toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != "")
-    t = d.select("doc_id", toks.alias("toks")).filter(
-        F.size("toks") >= 8
-    ).localCheckpoint(eager=True)
+    t = materialize(
+        d.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 8)
+    )
     g = t.select(
         "doc_id",
         F.posexplode(

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table, parallelize
 
 #: Embedding width of the fixture corpus (embeddings.parquet).
@@ -162,12 +163,14 @@ def emb_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda st: st["ui"].cast("double") / F.lit(_GRID),
             ).alias("u")
         )
-        v_frame = arr.select(
-            F.transform(
-                "u", lambda t: t / F.sqrt(_fold_sq(F.col("u")))
-            ).alias("v"),
-            F.sqrt(_fold_sq(F.col("u"))).alias("lam"),
-        ).localCheckpoint(eager=True)
+        v_frame = materialize(
+            arr.select(
+                F.transform(
+                    "u", lambda t: t / F.sqrt(_fold_sq(F.col("u")))
+                ).alias("v"),
+                F.sqrt(_fold_sq(F.col("u"))).alias("lam"),
+            )
+        )
 
     return v_frame.select(
         F.posexplode("v").alias("d0", "loading"), F.col("lam")

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
+from clickhousebackup_spark.tables import probe_slice_mod
 
 #: Recall floors, set from measured behavior across sf0.001/0.01/0.1
 #: (deterministic: fixed seeds, fixed data). They encode what each
@@ -191,28 +193,15 @@ def sketch_recall_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         sim_topk_ivf,
         sim_topk_lsh,
     )
-    from clickhousebackup_spark.tables import table_rows_metadata
 
-    sim_truth = (
-        sim_topk_cosine(spark, sf_dir).select("vec_id").localCheckpoint(eager=True)
+    sim_truth = materialize(sim_topk_cosine(spark, sf_dir).select("vec_id"))
+    probe_mod = probe_slice_mod(
+        "sketch_recall_probe", sf_dir, "documents",
+        RECALL_TRUTH_DOCS_CAP, RECALL_PROBE_MOD,
     )
-    n_docs = table_rows_metadata(sf_dir, "documents")
-    probe_mod = (
-        RECALL_PROBE_MOD
-        if n_docs is not None and n_docs > RECALL_TRUTH_DOCS_CAP
-        else None
-    )
-    if probe_mod is not None:
-        from clickhousebackup_spark.tables import warn_probe_slice
-
-        warn_probe_slice(
-            "sketch_recall_probe", "documents", n_docs,
-            RECALL_TRUTH_DOCS_CAP, RECALL_PROBE_MOD,
-        )
-    pair_truth = (
+    pair_truth = materialize(
         dedup_ngram_jaccard(spark, sf_dir, probe_mod=probe_mod)
         .select("a_id", "b_id")
-        .localCheckpoint(eager=True)
     )
     rows = [
         _recall_row("lsh", sim_topk_lsh(spark, sf_dir).select("vec_id"), sim_truth),

@@ -23,7 +23,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from clickhousebackup_spark.registry import register
-from clickhousebackup_spark.tables import load_table, parallelize
+from clickhousebackup_spark.scratch import materialize
+from clickhousebackup_spark.tables import load_table, parallelize, probe_slice_mod
 
 QUERY_VEC_ID = 0  # deterministic query: the embedding of vec_id 0
 TOP_K = 10
@@ -461,29 +462,25 @@ KNN_PROBE_MOD = 97
 def sim_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from clickhousebackup_spark.tables import table_rows_metadata
-
     e = parallelize(load_table(spark, sf_dir, "embeddings"))
-    normed = e.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        _norm("embedding").alias("nrm"),
-        lsh_bucket_expr("embedding").alias("bucket"),
-    ).localCheckpoint(eager=True)
+    normed = materialize(
+        e.select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+            _norm("embedding").alias("nrm"),
+            lsh_bucket_expr("embedding").alias("bucket"),
+        )
+    )
     probes = F.array(*[F.lit(x).cast("long") for x in range(1 << N_PLANES)])
     queries = normed
-    n_vecs = table_rows_metadata(sf_dir, "embeddings")
-    if n_vecs is not None and n_vecs > EXACT_KNN_ROWS_CAP:
+    mod = probe_slice_mod(
+        "sim_knn_join", sf_dir, "embeddings", EXACT_KNN_ROWS_CAP, KNN_PROBE_MOD
+    )
+    if mod is not None:
         # calibration-only probe slice past the cap: ONLY the query
         # side shrinks — the candidate side stays full, so every kept
         # query's neighbors are byte-identical to the full result's.
-        from clickhousebackup_spark.tables import warn_probe_slice
-
-        warn_probe_slice(
-            "sim_knn_join", "embeddings", n_vecs, EXACT_KNN_ROWS_CAP,
-            KNN_PROBE_MOD,
-        )
-        queries = normed.filter(F.col("vec_id") % KNN_PROBE_MOD == 0)
+        queries = normed.filter(F.col("vec_id") % mod == 0)
     a = queries.select(
         "vec_id", "v", "nrm", F.explode(probes).alias("probe")
     ).alias("a")
@@ -706,7 +703,7 @@ def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("cv")
             )
         )
-        centroids = new_cents.localCheckpoint(eager=True)
+        centroids = materialize(new_cents)
     return assigned.select("vec_id", F.col("cent_id").cast("long").alias("cent_id"))
 
 
@@ -1714,7 +1711,7 @@ def emb_centroid_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once or Spark replays the whole posexplode+agg chain (a second
     # full fact scan) for the broadcast side — the same
     # multi-consumer lesson as graph_triangle_count's edge set
-    vecs = (
+    vecs = materialize(
         cent.groupBy("label")
         .agg(
             F.transform(
@@ -1722,7 +1719,6 @@ def emb_centroid_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda s: s["m"],
             ).alias("v")
         )
-        .localCheckpoint(eager=True)
     )
     a, b = vecs.alias("a"), vecs.alias("b")
     dist = F.sqrt(

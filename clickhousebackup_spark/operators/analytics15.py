@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from clickhousebackup_spark.exprs import DEC, gsum, ogsum
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table
 
 
@@ -363,13 +364,13 @@ def ts_backtest_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the (type, day) agg feeds BOTH join sides — materialize it once
     # (dedup_ngram_jaccard's multi-consumer precedent) so the
     # row-scaled events scan+agg runs a single time
-    d = e.groupBy(
-        "event_type", F.to_date("ts").alias("day")
-    ).agg(
-        F.sum(F.floor(F.lit(100.0) * F.col("value")).cast("long"))
-        .cast("long")
-        .alias("cents")
-    ).localCheckpoint(eager=True)
+    d = materialize(
+        e.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+            F.sum(F.floor(F.lit(100.0) * F.col("value")).cast("long"))
+            .cast("long")
+            .alias("cents")
+        )
+    )
     a = d.alias("a")
     b = d.select(
         F.col("event_type").alias("b_type"),

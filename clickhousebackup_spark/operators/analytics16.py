@@ -68,6 +68,7 @@ from clickhousebackup_spark.operators.analytics5 import (
 )
 from clickhousebackup_spark.operators.windows import RUNNING_SUM_ORACLE
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table
 
 #: Local-pass bucket width: one day of epoch-µs. Must only be large
@@ -235,15 +236,13 @@ def funnel_steps_twostage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The cut tables are user-grain (orders of magnitude below the
     # event table) and each feeds THREE consumers (coarse, fine, the
     # final assembly); materialize them once so the event-scale agg
-    # subtrees don't replicate per consumer — same localCheckpoint
-    # convention as the dedup family's gram table.
-    t1 = (
+    # subtrees don't replicate per consumer.
+    t1 = materialize(
         ev.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint(eager=True)
     )
-    t2 = step_min("click", t1, "t1", "t2").localCheckpoint(eager=True)
+    t2 = materialize(step_min("click", t1, "t1", "t2"))
     t3 = step_min("purchase", t2, "t2", "t3")
     users = ev.select("user_id").distinct()
     depth = (

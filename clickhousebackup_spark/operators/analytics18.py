@@ -77,6 +77,7 @@ from clickhousebackup_spark.operators.quantiles import (
     QS,
 )
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table
 
 
@@ -115,13 +116,10 @@ def agg_percentile_exact_twostage(
     # combine map-side, so event-scale rows never cross an exchange.
     # The ~2.5k-row result feeds THREE consumers (bucket bounds,
     # per-type totals, rank location); materialize it once so the
-    # event-scale agg subtree doesn't replicate per consumer — the
-    # same eager-localCheckpoint convention as the dedup gram table
-    # and the funnel cut tables (analytics16.py).
-    counts = (
+    # event-scale agg subtree doesn't replicate per consumer.
+    counts = materialize(
         ev.groupBy("event_type", "vbucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
 
     # Bucket cumulative starts + per-type totals, over summary rows
@@ -170,7 +168,7 @@ def agg_percentile_exact_twostage(
 
     # Locate each needed rank's bucket (summary-scale join: <= 30
     # needs x <= ~2.5k bounds rows, broadcast the needs side).
-    located = (
+    located = materialize(
         bounds.join(F.broadcast(needs), "event_type")
         .filter(
             (F.col("rank") > F.col("cum_start"))
@@ -182,7 +180,6 @@ def agg_percentile_exact_twostage(
         )
         # <= 30 rows, two consumers (the bucket filter and the rank
         # pick) — materialize so the summary window isn't replayed.
-        .localCheckpoint(eager=True)
     )
 
     # Pass 2: selection. Only rows in a straddling bucket survive the

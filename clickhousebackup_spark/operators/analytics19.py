@@ -80,6 +80,7 @@ from pyspark.sql import functions as F
 from clickhousebackup_spark.exprs import DEC
 from clickhousebackup_spark.operators.windows import SLIDING_AVG_ORACLE
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table
 
 #: Frame width (µs) — fixed by the flat key's contract (1 hour).
@@ -124,16 +125,14 @@ def win_sliding_avg_twostage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Peer collapse: the frame depends only on (user, t). The point
     # table feeds THREE consumers (both arms of the sweep union and
-    # the bucket totals); materialize it once — the same eager-
-    # localCheckpoint convention as the dedup gram table, at the
-    # same scale class (≤ one row per input row).
-    pts = (
+    # the bucket totals); materialize it once (≤ one row per input
+    # row).
+    pts = materialize(
         ev.groupBy("user_id", "ts_us")
         .agg(
             F.sum(F.col("value").cast(DEC)).alias("p_sum"),
             F.count("value").alias("p_cnt"),
         )
-        .localCheckpoint(eager=True)
     )
 
     # Sweep stream: REAL carrier at t (kind 1, carries the point),

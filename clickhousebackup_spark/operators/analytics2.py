@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 
 from clickhousebackup_spark.exprs import dsum, gsum, ogsum, osum
 from clickhousebackup_spark.registry import register
-from clickhousebackup_spark.tables import load_table
+from clickhousebackup_spark.scratch import materialize
+from clickhousebackup_spark.tables import load_table, probe_slice_mod
 
 _REV = "l_extendedprice * (1 - l_discount)"
 
@@ -538,10 +539,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
     s = load_table(spark, sf_dir, "supplier")
-    revenue = (
+    revenue = materialize(
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(dsum(_rev_col()).alias("total_revenue"))
-        .localCheckpoint(eager=True)
     )
     best = revenue.agg(F.max("total_revenue").alias("_best"))
     return (
@@ -1223,11 +1223,6 @@ def _fuzzy_blocked_pairs(
     "within-block duplication quadratically, real corpora don't.",
 )
 def dedup_fuzzy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from clickhousebackup_spark.tables import (
-        table_rows_metadata,
-        warn_probe_slice,
-    )
-
     part = load_table(spark, sf_dir, "part")
     blocked = part.select(
         "p_partkey",
@@ -1235,12 +1230,8 @@ def dedup_fuzzy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_brand",
         F.expr("length(p_name) div 4").alias("len_bucket"),
     )
-    probe_mod = None
-    n_parts = table_rows_metadata(sf_dir, "part")
-    if n_parts is not None and n_parts > FUZZY_PART_ROWS_CAP:
-        warn_probe_slice(
-            "dedup_fuzzy_blocked", "part", n_parts,
-            FUZZY_PART_ROWS_CAP, FUZZY_PROBE_MOD,
-        )
-        probe_mod = FUZZY_PROBE_MOD
+    probe_mod = probe_slice_mod(
+        "dedup_fuzzy_blocked", sf_dir, "part",
+        FUZZY_PART_ROWS_CAP, FUZZY_PROBE_MOD,
+    )
     return _fuzzy_blocked_pairs(blocked, probe_mod=probe_mod)

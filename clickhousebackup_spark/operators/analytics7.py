@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from clickhousebackup_spark.exprs import dsum, osum
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table
 
 #: Numeric lineitem columns entering the correlation matrix.
@@ -165,7 +166,7 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # the day-cell table self-joins; materialize the |types|x|days|
     # rows once or both join sides replay the full events scan + agg
-    cells = (
+    cells = materialize(
         ev.groupBy(
             "event_type",
             F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias(
@@ -176,7 +177,6 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("x"),
             dsum(F.col("value")).alias("y"),
         )
-        .localCheckpoint(eager=True)
     )
     a, b = cells.alias("a"), cells.alias("b")
     ax, bx = F.col("a.x"), F.col("b.x")

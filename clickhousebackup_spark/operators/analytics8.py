@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from clickhousebackup_spark.exprs import DEC
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table
 
 #: (name, child table, fk col, parent table, pk col) — the TPC-H
@@ -310,10 +311,9 @@ def stats_cramers_v_corrected(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.pmod(F.col("user_id"), F.lit(4)).cast("long").alias("ub"),
     )
-    obs = (
+    obs = materialize(
         ev.groupBy("event_type", "ub")
         .agg(F.count(F.lit(1)).cast("double").alias("o"))
-        .localCheckpoint(eager=True)
     )
     tot = obs.agg(
         F.sum("o").alias("n"),

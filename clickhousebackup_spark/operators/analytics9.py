@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from clickhousebackup_spark.operators.distrank import global_order_scan
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table
 
 #: Order-free accumulator type for sums of per-cell doubles.
@@ -148,10 +149,9 @@ def stats_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stats_theils_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    cxy = (
+    cxy = materialize(
         d.groupBy("lang", "source")
         .agg(F.count(F.lit(1)).cast("double").alias("c"))
-        .localCheckpoint(eager=True)
     )
     c = F.col("c")
     clogc = F.sum((c * F.log(c)).cast(DEC12)).cast("double")
@@ -236,10 +236,9 @@ def stats_theils_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stats_contingency_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    obs = (
+    obs = materialize(
         e.groupBy("event_type", F.date_format("ts", "EEEE").alias("dow"))
         .agg(F.count(F.lit(1)).cast("double").alias("o"))
-        .localCheckpoint(eager=True)
     )
     rn = obs.groupBy("event_type").agg(F.sum("o").alias("r"))
     cn = obs.groupBy("dow").agg(F.sum("o").alias("cc"))
@@ -1462,7 +1461,7 @@ def ts_period_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias(f"ss_{label}")
         )
-    one = centered.agg(*sum_cols).localCheckpoint(eager=True)
+    one = materialize(centered.agg(*sum_cols))
     arms = [
         one.select(
             F.lit(label).alias("period"),
@@ -1757,7 +1756,7 @@ def _ed_oracle_step(j: int) -> str:
 )
 def seq_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    seqs = (
+    seqs = materialize(
         e.groupBy("user_id")
         .agg(
             F.slice(
@@ -1776,7 +1775,6 @@ def seq_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _ED_K,
             ).alias("seq")
         )
-        .localCheckpoint(eager=True)
     )
     pos = (
         seqs.select(F.posexplode("seq").alias("p0", "t"))
@@ -1914,12 +1912,11 @@ def sketch_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
         % _CMS_W
     )
-    cells = (
+    cells = materialize(
         e.select("user_id", ds)
         .select("d", bucket.alias("bucket"))
         .groupBy("d", "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     exact = e.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("exact_n")

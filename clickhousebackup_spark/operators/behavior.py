@@ -25,6 +25,7 @@ from clickhousebackup_spark.operators.distrank import (
     ntile_from_pos,
 )
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table, parallelize
 
 
@@ -451,16 +452,18 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("src").isNotNull())
     edges = seq.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("cnt"))
     outw = edges.groupBy("src").agg(F.sum("cnt").alias("tot"))
-    enorm = edges.join(outw, "src").select(
-        "src",
-        "dst",
-        (F.col("cnt").cast("double") / F.col("tot").cast("double")).alias("w"),
-    ).localCheckpoint(eager=True)
+    enorm = materialize(
+        edges.join(outw, "src").select(
+            "src",
+            "dst",
+            (F.col("cnt").cast("double") / F.col("tot").cast("double")).alias("w"),
+        )
+    )
     nodes = ev.select(F.col("event_type").alias("node")).distinct()
     nn = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
     # node spine + 1/N scalar: tiny and reused by all iterations —
     # materialize once so the loop doesn't re-derive the distinct.
-    base = nodes.crossJoin(F.broadcast(nn)).localCheckpoint(eager=True)
+    base = materialize(nodes.crossJoin(F.broadcast(nn)))
     ranks = base.select("node", "n", (F.lit(1.0) / F.col("n")).alias("rank"))
     for _ in range(3):
         contrib = enorm.join(
@@ -1045,7 +1048,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey").alias("s"),
     )
     e = o.join(li, "o_orderkey").select("c", "s").distinct()
-    e = e.localCheckpoint(eager=False)
+    e = materialize(e, eager=False)
 
     src = F.lit(1).cast("long")
     # layer 0: the source customer
@@ -1251,7 +1254,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two degree/union scans) — materialize the vocabulary-sized table
     # once or every consumer replays the corpus gram scan (measured:
     # 13 shuffles → 4).
-    edges = (
+    edges = materialize(
         # single-token docs have no bigram edges; without this filter
         # sequence(1, 0) is DESCENDING [1, 0] (the round-5 trap) and
         # element_at(w, 2) throws under ANSI on a 1-element array
@@ -1260,10 +1263,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("g.a", "g.b")
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     e1, e2, e3 = edges.alias("e1"), edges.alias("e2"), edges.alias("e3")
-    tris = (
+    tris = materialize(  # three member-union consumers
         e1.join(e2, F.col("e2.a") == F.col("e1.b"))
         .join(
             e3,
@@ -1275,7 +1277,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e1.b").alias("b"),
             F.col("e2.b").alias("c"),
         )
-        .localCheckpoint(eager=True)  # three member-union consumers
     )
     member = (
         tris.select(F.col("a").alias("word"))

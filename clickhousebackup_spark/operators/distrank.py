@@ -14,22 +14,13 @@ plan MapReduce TeraSort and every distributed rank implementation
 use, vs. ``Window.orderBy(...)`` which moves ALL rows to one
 partition (the ``WindowExec: No Partition Defined`` warning).
 
-The ranged subtree is materialized ONCE (localCheckpoint) before the
-summary and detail branches read it: both MUST observe identical
-partition boundaries, and RangePartitioner's sampling seed varies
-with RDD id, so relying on exchange reuse to dedupe the two
-evaluations would be a race, not a contract.
-
-Cluster caveat — localCheckpoint truncates lineage with blocks that
-are NOT replicated: on a multi-executor cluster an executor loss
-after the checkpoint fails the job instead of recomputing. That is
-the right trade on the single-JVM driver/test environment (no
-executor to lose, no HDFS to write), but cluster deployments should
-pass ``materialize=`` with a reliable strategy, e.g.::
-
-    spark.sparkContext.setCheckpointDir("hdfs://.../ckpt")
-    global_order_scan(df, keys, pos="p",
-                      materialize=lambda d: d.checkpoint(eager=True))
+The ranged subtree is materialized ONCE (``scratch.materialize``)
+before the summary and detail branches read it: both MUST observe
+identical partition boundaries, and RangePartitioner's sampling seed
+varies with RDD id, so relying on exchange reuse to dedupe the two
+evaluations would be a race, not a contract. How that intermediate is
+stored on a cluster is ``scratch.materialize``'s decision (see its
+cluster caveat), not this module's.
 
 Callers that rank the SAME frame under several different key orders
 (orders_rfm_segments' three quartile cuts) should use
@@ -44,10 +35,12 @@ tests/contracts.py allows exactly this shape per key.
 
 from __future__ import annotations
 
-from typing import Callable, Mapping, Sequence
+from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from clickhousebackup_spark.scratch import materialize
 
 _PID = "_distrank_pid"
 
@@ -59,7 +52,6 @@ def global_order_scan(
     pos: str | None = None,
     cumsum: Mapping[str, Column] | None = None,
     totals: Mapping[str, Column] | None = None,
-    materialize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Return ``df`` (same columns, plus the requested ones) ordered
     observables computed over the total order defined by ``keys``:
@@ -72,19 +64,15 @@ def global_order_scan(
     - ``totals``: ``{out_name: expr}`` global sums of ``expr``
       attached to every row (computed on the tiny summary table —
       no second scan, no extra shuffle of the fact).
-    - ``materialize``: how to pin the ranged frame so the summary and
-      detail branches observe identical partition boundaries.
-      Default ``localCheckpoint(eager=True)`` (fast, but lineage is
-      truncated with non-replicated blocks — see the module
-      docstring's cluster caveat); pass a reliable-checkpoint lambda
-      for multi-executor deployments.
+
+    The ranged frame is pinned with ``scratch.materialize`` so the
+    summary and detail branches observe identical partition
+    boundaries.
     """
     cumsum = dict(cumsum or {})
     totals = dict(totals or {})
     if pos is None and not cumsum and not totals:
         raise ValueError("request at least one of pos/cumsum/totals")
-    if materialize is None:
-        materialize = lambda d: d.localCheckpoint(eager=True)
 
     ranged = materialize(
         df.repartitionByRange(*keys)
@@ -137,7 +125,6 @@ def global_positions_multi(
     tiebreak: Sequence[str],
     *,
     total: str | None = None,
-    materialize: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """Global 1-based positions of every row under SEVERAL total
     orders over the SAME frame, with ONE range shuffle and ONE
@@ -184,7 +171,6 @@ def global_positions_multi(
         (F.col("_m"), F.col("_v"), *[F.col(c) for c in tiebreak]),
         pos="_gp",
         totals={"_cnt": F.lit(1)},
-        materialize=materialize,
     )
     n_rows = F.floor(F.col("_cnt") / F.lit(k)).cast("long")
     local_pos = (F.col("_gp") - F.col("_m").cast("long") * n_rows).cast("long")

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from clickhousebackup_spark.exprs import DEC, dsum
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table
 
 
@@ -293,23 +294,21 @@ def agg_sum_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def rollup_time_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("ts", "value")
-    # Each grain's state is MATERIALIZED (localCheckpoint — the
+    # Each grain's state is MATERIALIZED (scratch.materialize — the
     # local-mode analog of persisting the continuous aggregate), so
     # the union below reuses it instead of recomputing the finer
     # grain per branch: without this, Spark's union does no CSE and
     # the raw scan would run once per grain.
-    hour = (
+    hour = materialize(
         ev.groupBy(F.date_trunc("hour", "ts").alias("bucket_ts"))
         .agg(
             F.count(F.lit(1)).alias("s_n"),
             F.sum(F.col("value").cast(DEC)).alias("s_sum"),
         )
-        .localCheckpoint(eager=True)
     )
-    day = (
+    day = materialize(
         hour.groupBy(F.date_trunc("day", "bucket_ts").alias("bucket_ts"))
         .agg(F.sum("s_n").alias("s_n"), F.sum("s_sum").alias("s_sum"))
-        .localCheckpoint(eager=True)
     )
     month = day.groupBy(F.date_trunc("month", "bucket_ts").alias("bucket_ts")).agg(
         F.sum("s_n").alias("s_n"), F.sum("s_sum").alias("s_sum")
@@ -635,7 +634,7 @@ def dict_hierarchy_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Materialize each round: without it the lazy plan re-derives
     # every prior round on both join sides (2^rounds scans of part).
-    reach = reach.localCheckpoint(eager=True)
+    reach = materialize(reach)
     for _ in range(4):
         a = reach.alias("a")
         b = reach.select(
@@ -648,7 +647,7 @@ def dict_hierarchy_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
         # instead of silently vanishing — the fixture's contiguous
         # keys never hit this, but a real dictionary with dangling
         # parents must not lose children (ADVICE r4 fix).
-        reach = (
+        reach = materialize(
             a.join(b, F.col("a.ptr") == F.col("b.b_key"), "left")
             .select(
                 F.col("a.key").alias("key"),
@@ -657,7 +656,6 @@ def dict_hierarchy_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "d"
                 ),
             )
-            .localCheckpoint(eager=True)
         )
     return reach.select(
         F.col("key").alias("p_partkey"),

@@ -27,6 +27,7 @@ from clickhousebackup_spark.exprs import (
 )
 from clickhousebackup_spark.operators.distrank import global_order_scan
 from clickhousebackup_spark.registry import register
+from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table
 
 QS = (0.25, 0.5, 0.75)
@@ -663,10 +664,9 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cell table is vocabulary-sized and has FOUR consumers
     # (totals, two marginals, the chi join) — materialize it once or
     # every consumer rescans the event table.
-    obs = (
+    obs = materialize(
         ev.groupBy("event_type", "ub")
         .agg(F.count(F.lit(1)).cast("double").alias("o"))
-        .localCheckpoint(eager=True)
     )
     tot = obs.agg(
         F.sum("o").alias("n"),

@@ -80,6 +80,28 @@ def input_fingerprint(path: str) -> str:
     return h.hexdigest()[:10]
 
 
+def materialize(df: DataFrame, *, eager: bool = True) -> DataFrame:
+    """Pin ``df`` as a stored intermediate and truncate its lineage —
+    the one call every query makes to checkpoint a subtree, so how
+    intermediates are stored is decided here and nowhere else.
+
+    The strategy is ``localCheckpoint``: blocks live in executor
+    storage, with no checkpoint dir and no extra I/O. ``eager=True``
+    runs the job now; ``eager=False`` stores the rows on the first
+    action that reads them.
+
+    Cluster caveat: localCheckpoint blocks are NOT replicated, so on a
+    multi-executor cluster an executor loss after the checkpoint fails
+    the job instead of recomputing it. That is the right trade on a
+    single JVM (no executor to lose, no shared filesystem to write).
+    For long cluster jobs, swap the body here for a reliable
+    checkpoint (``df.checkpoint(eager=eager)`` after
+    ``spark.sparkContext.setCheckpointDir("hdfs://.../ckpt")``); every
+    call site follows.
+    """
+    return df.localCheckpoint(eager=eager)
+
+
 def roundtrip_parquet(df: DataFrame, path: str) -> DataFrame:
     """Materialize ``df`` at ``path`` (replacing any prior run) and
     reread it — the explicit stage boundary used where a plan would

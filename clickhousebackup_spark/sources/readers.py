@@ -373,12 +373,11 @@ def sink_partitioned_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     patch = o.filter(F.col("o_orderstatus") == "F").withColumn(
         "cents", F.col("cents") * 2
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        patch.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # the writer option scopes dynamic mode to this one write; the
+    # session conf stays as the caller set it
+    patch.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("o_orderstatus").parquet(out)
     back = spark.read.parquet(out)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -113,8 +113,15 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     # core-parallel instead of on the fixture's one scan task
     # (0.49 s → 0.43 s at sf0.1); no-op at production file counts.
     ev = parallelize(load_table(spark, sf_dir, "events"), by=("user_id",))
+    return session_window_counts(ev)
+
+
+def session_window_counts(events: DataFrame) -> DataFrame:
+    """Per-user 30-minute-gap session counts — the one spelling of the
+    session transform; ``streaming.engine.session_counts`` applies it
+    to a watermarked stream."""
     return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",

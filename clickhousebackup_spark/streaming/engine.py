@@ -8,10 +8,12 @@ webhook (`hooks/00-webhook`). Here:
   (``BACKUP_ON_START`` → ``availableNow``, A18);
 - notifications → ``foreachBatch`` posting per-batch summaries through
   the same hook machinery as batch jobs (A20);
-- the data-plane operators (tumbling/sliding/session windows,
-  watermarked dedup) are the *same* expressions as their batch
-  equivalents in batch_equiv.py — Spark evaluates them identically;
-  only the incremental state management differs.
+- the data-plane operators (tumbling/session windows, watermarked
+  dedup) are the *same* expressions as their batch equivalents in
+  batch_equiv.py — Spark evaluates them identically; only the
+  incremental state management differs. Session windows share the
+  batch key's transform (``batch_equiv.session_window_counts``) and
+  add only the watermark.
 
 Scale notes: watermarks bound state size (without one, a streaming agg
 keeps every window forever); ``dropDuplicatesWithinWatermark`` holds
@@ -27,6 +29,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from clickhousebackup_spark.streaming.batch_equiv import session_window_counts
 
 #: cron @-aliases → canonical 5-field specs (go-cron accepts both;
 #: `@daily` is the reference default, Dockerfile:20).
@@ -217,31 +221,10 @@ def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_events",
-        )
-    )
-
-
 def session_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
+    """Streaming form of batch_equiv.stream_session: the same session
+    transform over a watermarked stream."""
+    return session_window_counts(events.withWatermark("ts", watermark))
 
 
 def dedup_within_watermark(events: DataFrame, watermark: str = "1 hour") -> DataFrame:

@@ -155,7 +155,8 @@ def _register_queries() -> None:
 
     from clickhousebackup_spark.registry import register
     from clickhousebackup_spark.scratch import scratch_path
-    from clickhousebackup_spark.tables import load_table
+    from clickhousebackup_spark.session import apply_runtime_confs
+    from clickhousebackup_spark.tables import load_table, table_rows_metadata
 
     @register(
         "stream_stateful_totals",
@@ -188,6 +189,7 @@ def _register_queries() -> None:
     )
     def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         import shutil
+        import uuid
 
         # defined HERE (not module level) so cloudpickle ships it by
         # VALUE — executors outside this repo can't import the package
@@ -230,8 +232,27 @@ def _register_queries() -> None:
         # nothing (rerun-stability contract)
         ckpt = scratch_path(spark, "sst_ckpt", sf_dir)
         shutil.rmtree(ckpt, ignore_errors=True)
+        # State-store partition count is pinned at checkpoint creation
+        # from spark.sql.shuffle.partitions — a streaming DESIGN
+        # parameter that should track feed volume and key cardinality,
+        # not default to the batch shuffle width: every micro-batch
+        # schedules one stateful Python task PER state partition, so an
+        # oversized count multiplies fixed per-task pandas/worker cost
+        # across all four batches (32 partitions → 7.1 s, 8 → 5.6 s at
+        # sf0.1's 100k-row feed, identical output). Sized from parquet
+        # footer metadata (no Spark job): one partition per ~12.5k feed
+        # rows, floor 8, capped at the caller's shuffle width so larger
+        # arms scale back up; unknown size → the caller's width. The
+        # stream is planned on its own session (shared SparkContext,
+        # separate conf) so the caller's conf is never written.
+        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n_rows = table_rows_metadata(sf_dir, "events")
+        if n_rows is not None:
+            parts = min(parts, max(8, n_rows // 12_500))
+        stream_spark = apply_runtime_confs(spark.newSession())
+        stream_spark.conf.set("spark.sql.shuffle.partitions", str(parts))
         feed = (
-            spark.readStream.schema(
+            stream_spark.readStream.schema(
                 "user_id long, value_micro long, us long"
             )
             .option("maxFilesPerTrigger", 1)
@@ -244,28 +265,6 @@ def _register_queries() -> None:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        # State-store partition count is pinned at checkpoint creation
-        # from spark.sql.shuffle.partitions — a streaming DESIGN
-        # parameter that should track feed volume and key cardinality,
-        # not default to the batch shuffle width: every micro-batch
-        # schedules one stateful Python task PER state partition, so an
-        # oversized count multiplies fixed per-task pandas/worker cost
-        # across all four batches (32 partitions → 7.1 s, 8 → 5.6 s at
-        # sf0.1's 100k-row feed, identical output). Sized from parquet
-        # footer metadata (no Spark job): one partition per ~12.5k feed
-        # rows, floor 8, capped at the session's shuffle width so
-        # larger arms scale back up; unknown size → leave the session
-        # conf untouched. Restored in finally — the checkpoint has
-        # already pinned the stream's own value by then.
-        from clickhousebackup_spark.tables import table_rows_metadata
-
-        n_rows = table_rows_metadata(sf_dir, "events")
-        old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        if n_rows is not None:
-            state_parts = min(
-                int(old_parts), max(8, n_rows // 12_500)
-            )
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
         q = None
         try:
             q = (
@@ -281,12 +280,21 @@ def _register_queries() -> None:
                     "stream_stateful_totals: feed did not drain in 300s"
                 )
         finally:
-            # restore only after the drain: the micro-batch thread
-            # reads the conf when it plans the first batch, which can
-            # happen after start() returns
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
             if q is not None and q.isActive:
                 q.stop()
+        # the memory sink's view lives in the stream's session; hand it
+        # to the caller's session through a uniquely named global temp
+        # view (the caller's view keeps the resolved plan, so the
+        # bridge is dropped at once)
+        bridge = f"sst_updates_{uuid.uuid4().hex}"
+        stream_spark.table("sst_updates").createGlobalTempView(bridge)
+        global_db = spark.conf.get("spark.sql.globalTempDatabase")
+        try:
+            spark.table(f"{global_db}.{bridge}").createOrReplaceTempView(
+                "sst_updates"
+            )
+        finally:
+            spark.catalog.dropGlobalTempView(bridge)
         # the memory table holds one update row per (user, batch it
         # appeared in); n_events is strictly monotone per user, so the
         # final state is the unique max-n row

@@ -167,8 +167,25 @@ def warn_probe_slice(
         f"(sliced rows keep exact full-result values; see the "
         f"registration docstring for the slice contract)"
     )
-    warnings.warn(msg, RuntimeWarning, stacklevel=3)
+    # 1 = here, 2 = probe_slice_mod, 3 = the key, 4 = the key's caller
+    warnings.warn(msg, RuntimeWarning, stacklevel=4)
     logging.getLogger("clickhousebackup_spark.bounds").warning(msg)
+
+
+def probe_slice_mod(
+    key: str, sf_dir: str, table: str, cap: int, mod: int
+) -> int | None:
+    """The exact-baseline keys' one self-bound decision: ``mod`` when
+    ``table``'s footer row count (``table_rows_metadata``) exceeds
+    ``cap``, announced through ``warn_probe_slice``; otherwise None,
+    which means the full exact path, also when the count is unknown.
+    Callers pass their module's cap and mod constants at call time,
+    so tests can force them low with monkeypatch."""
+    n_rows = table_rows_metadata(sf_dir, table)
+    if n_rows is None or n_rows <= cap:
+        return None
+    warn_probe_slice(key, table, n_rows, cap, mod)
+    return mod
 
 
 #: Fixture columns whose domain is BOUNDED (a handful of distinct

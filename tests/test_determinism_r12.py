@@ -1,18 +1,14 @@
-"""Round-11 additions (operators/analytics13.py): registered+oracled
-coverage, rerun stability, non-vacuous sf0.001 evidence, and
-crafted-fixture proofs for the branches the fixture leaves dormant —
-Kruskal-Wallis tie correction (heavy ties; the all-equal degenerate
-that NULLs h_adjusted), the closed ABC band boundary, the TF-IDF
-score-tie term order, the rolling-slope closed form on an exact
-linear series, GROUPS-frame single-day partitions, and the
-peak-hour smallest-hour tiebreak.
+"""Crafted-fixture proofs for the round-11 additions
+(operators/analytics13.py), for the branches the fixture leaves
+dormant — Kruskal-Wallis tie correction (heavy ties; the all-equal
+degenerate that NULLs h_adjusted), the closed ABC band boundary, the
+TF-IDF score-tie term order, the rolling-slope closed form on an exact
+linear series, GROUPS-frame single-day partitions, and the peak-hour
+smallest-hour tiebreak.
 
-Same contract as test_determinism_r5-r11; the keys sit at the tail
-of ``registry._CHECK_PRIORITY`` (round-12 queue, DEFERRED).
-
-The coverage, non-vacuity and rerun ids below are views of the
-registry sweep (tests/test_registry_sweep.py), which builds each key
-once; the ``rerun_stable`` flags live in tests/contracts.py.
+Oracle parity, non-empty rows and rerun stability of this round's
+keys are clauses of ``tests/test_registry_sweep.py::test_key[key]``;
+the ``rerun_stable`` flags live in tests/contracts.py.
 """
 
 from __future__ import annotations
@@ -21,16 +17,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from clickhousebackup_spark.registry import all_specs
-from tests.test_registry_sweep import key_view, keys_view
-
-_IDS = """
-    stats_kruskal_wallis orders_abc_analysis text_tfidf_topk ts_rolling_slope
-    win_groups_frame_emulated events_peak_hour
-""".split()
-
-test_r12_queue_keys_cover_the_round = keys_view("parity", _IDS)
-test_r12_queue_keys_nonvacuous = keys_view("rerun", _IDS)
-test_rerun_stable = key_view("rerun", _IDS)
 
 
 def _events_dir(spark, tmp_path, rows):
