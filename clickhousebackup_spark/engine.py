@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -41,7 +42,11 @@ from clickhousebackup_spark.backup.retention import (
     prune_delete_set,
     retention_plan,
 )
-from clickhousebackup_spark.backup.snapshot import SnapshotResult, snapshot_table
+from clickhousebackup_spark.backup.snapshot import (
+    SnapshotResult,
+    snapshot_table,
+    write_verified,
+)
 from clickhousebackup_spark.exprs import row_hash
 from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.tables import load_table, parquet_data_files
@@ -189,9 +194,14 @@ class BackupEngine:
         snapshots). Pass ``until_period_key`` for a point-in-time
         restore of the state as of that snapshot (inclusive).
 
+        The path list is catalog-sized and is deduplicated and sorted
+        in the driver from one plain collect.
+
         Plan shape: when every snapshot carries the same schema (the
         overwhelmingly common case — checked driver-side from the
-        parquet footers, no Spark job), all paths go into ONE
+        footer of the first data file ``tables.parquet_data_files``
+        lists for each snapshot, partition subdirectories included;
+        no Spark job), all paths go into ONE
         multi-path ``spark.read.parquet(*paths)`` scan, so an
         N-snapshot chain plans O(1) deep regardless of N. Only a chain
         with schema evolution falls back to the per-snapshot
@@ -209,10 +219,10 @@ class BackupEngine:
                 (F.col("generation") == "last")
                 & (F.col("period_key") <= until_period_key)
             )
-        paths = [
-            r["path"]
-            for r in cat.select("path").distinct().orderBy("path").collect()
-        ]
+        # catalog-sized: dedup and order in the driver, not in a
+        # shuffle + sort (Python's code-point order equals Spark's
+        # UTF-8 byte order)
+        paths = sorted({r["path"] for r in cat.select("path").collect()})
         if not paths:
             raise FileNotFoundError(f"no snapshots for ({db}, {table})")
         if len(paths) == 1 or self._snapshot_schemas_identical(paths):
@@ -229,10 +239,11 @@ class BackupEngine:
         """True iff every snapshot directory's parquet footer schema
         is byte-identical (names, types, order). Driver-side pyarrow
         footer reads of the first file ``parquet_data_files`` lists
-        (the files Spark's reader reads) — one small metadata read per
-        snapshot, no Spark
-        job; at catalog scale this is the cheap gate that keeps the
-        restore plan O(1) deep. Any unreadable/ambiguous layout
+        (the files Spark's reader reads, found recursively through
+        partition subdirectories, so partition columns are not part of
+        the compared schema) — one small metadata read per snapshot,
+        no Spark job; at catalog scale this is the cheap gate that
+        keeps the restore plan O(1) deep. Any unreadable/ambiguous layout
         returns False (fall back to the always-correct union ladder) —
         including pyarrow itself being absent (no pinned manifest).
         """
@@ -273,7 +284,10 @@ class BackupEngine:
     def catalog(self) -> DataFrame:
         if not os.path.exists(self.catalog_path):
             return self.spark.createDataFrame([], CATALOG_SCHEMA)
-        return self.spark.read.parquet(self.catalog_path)
+        # The pinned schema skips the footer-inference job and reads a
+        # catalog with no data files (all rows pruned) as empty. The
+        # partition column, generation, still comes last.
+        return self.spark.read.schema(CATALOG_SCHEMA).parquet(self.catalog_path)
 
     # -- retention (backup.sh:90-122) --
 
@@ -321,11 +335,12 @@ class BackupEngine:
 
         With ``apply=False`` (default) only returns the delete set,
         mirroring how backup.sh separates listing (``find``) from
-        action (``rm``). With ``apply=True`` it also removes the
-        snapshot dirs and rewrites the catalog without them — the
-        `-exec rm -rvf` side. One path is registered under all four
-        generations (backup.sh's hardlink fan-out), so a dir is only
-        removed when NO kept generation row still references it.
+        action (``rm``). With ``apply=True`` it also rewrites the
+        catalog without them and then removes the snapshot dirs — the
+        `-exec rm -rvf` side; a failed rewrite removes nothing. One
+        path is registered under all four generations (backup.sh's
+        hardlink fan-out), so a dir is only removed when NO kept
+        generation row still references it.
 
         The collects here are catalog-scale (one row per snapshot
         artifact), never data-scale.
@@ -338,30 +353,23 @@ class BackupEngine:
         # catalog files the rewrite below replaces.
         delete_df = materialize(delete_df)
         kept_paths = {
-            r["path"]
-            for r in plan.filter(F.col("keep") == 1)
-            .select("path")
-            .distinct()
-            .collect()
+            r["path"] for r in plan.filter(F.col("keep") == 1).select("path").collect()
         }
-        doomed = {
-            r["path"]
-            for r in delete_df.select("path").distinct().collect()
-            if r["path"] not in kept_paths
-        }
+        doomed = {r["path"] for r in delete_df.select("path").collect()} - kept_paths
         backup_root = os.path.realpath(self.config.backup_dir)
-        for path in sorted(doomed):
-            real = os.path.realpath(path)
+        real_paths = {p: os.path.realpath(p) for p in sorted(doomed)}
+        for path, real in real_paths.items():
             # refuse to rm anything that escaped the backup volume
             if os.path.commonpath([backup_root, real]) != backup_root:
                 raise ValueError(f"prune path outside backup_dir: {path}")
+        # Publish the rewritten catalog before removing anything: a
+        # failed rewrite leaves every cataloged snapshot on disk.
+        self._rewrite_catalog_excluding(delete_df, doomed)
+        for real in real_paths.values():
             if os.path.isdir(real):
-                import shutil
-
                 shutil.rmtree(real)
             elif os.path.exists(real):
                 os.remove(real)
-        self._rewrite_catalog_excluding(delete_df, doomed)
         return delete_df
 
     def _rewrite_catalog_excluding(
@@ -370,22 +378,19 @@ class BackupEngine:
         """Staged-atomic catalog rewrite dropping the deleted rows (by
         snapshot_id — the per-generation "hardlink" entries, mirroring
         the per-generation-dir rm) plus any row whose backing path was
-        removed (superseded rows that would otherwise dangle)."""
-        import shutil
-
-        survivors = self.catalog().join(
+        removed (superseded rows that would otherwise dangle). The
+        staged catalog is checked like a snapshot (``write_verified``)
+        before it replaces the old one."""
+        cat = self.catalog()
+        survivors = cat.join(
             delete_df.select("snapshot_id"), on="snapshot_id", how="left_anti"
-        ).select(*self.catalog().columns)
+        ).select(*cat.columns)
         if doomed_paths:
-            survivors = survivors.filter(
-                ~F.col("path").isin(list(doomed_paths))
-            )
+            survivors = survivors.filter(~F.col("path").isin(sorted(doomed_paths)))
         staging = self.catalog_path + "-new"
-        if os.path.exists(staging):
-            shutil.rmtree(staging)
-        survivors.write.partitionBy("generation").parquet(staging)
-        # Read fully before swapping — survivors lazily reads the old dir.
-        self.spark.read.parquet(staging).count()
+        write_verified(
+            survivors, staging, "catalog", self.catalog_path, ["generation"]
+        )
         shutil.rmtree(self.catalog_path)
         os.rename(staging, self.catalog_path)
 
@@ -404,8 +409,6 @@ class BackupEngine:
         Returns the pointer paths written, so ``restore_latest`` can
         resolve "latest" from the filesystem alone.
         """
-        import shutil
-
         if self.config.latest_type == "none":
             return []
         written: list[str] = []

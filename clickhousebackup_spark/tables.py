@@ -103,42 +103,56 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def parquet_data_files(path: str) -> list[str]:
     """The data files Spark's parquet reader reads at ``path``: the
-    path itself, or a directory's ``*.parquet`` files in name order,
-    skipping dot/underscore entries (``_SUCCESS``, staging temps) as
-    the reader does. Driver-side listing, no Spark job."""
+    path itself, or every ``*.parquet`` file under a directory,
+    partition subdirectories included, in path order. Like the
+    reader's listing it skips names starting with a dot and names
+    starting with an underscore unless they hold ``=`` (``_SUCCESS``,
+    ``_temporary``, checksum and staging files). Driver-side listing,
+    no Spark job."""
     if not os.path.isdir(path):
         return [path]
-    return sorted(
-        e.path
-        for e in os.scandir(path)
-        if e.is_file()
-        and e.name.endswith(".parquet")
-        and not e.name.startswith((".", "_"))
-    )
+
+    def walk(d: str):
+        for e in os.scandir(d):
+            if e.name.startswith(".") or (e.name.startswith("_") and "=" not in e.name):
+                continue
+            if e.is_dir():
+                yield from walk(e.path)
+            elif e.is_file() and e.name.endswith(".parquet"):
+                yield e.path
+
+    return sorted(walk(path))
 
 
-def table_rows_metadata(sf_dir: str, name: str) -> int | None:
-    """Row count of one fixture table from parquet FOOTER metadata —
-    driver-side pyarrow over ``parquet_data_files``, no Spark job.
-    Returns None when the count cannot be established (missing
-    pyarrow, unreadable layout); callers use it only for
-    scale-dispatch decisions (e.g. exact-baseline probe caps), so None
-    must mean "take the exact path", never an error. Same
-    plan-construction-side-effect-free discipline as analytics16's
-    adaptive hot-share probe.
-    """
+def parquet_footer_rows(path: str) -> int | None:
+    """Row count of the parquet data at ``path`` (a file or a
+    directory, partitioned or not) summed from the footers of
+    ``parquet_data_files`` — driver-side pyarrow, no Spark job. This
+    is what Spark's own column-less ``count()`` reads. None when the
+    count cannot be established: pyarrow absent, or any file
+    unreadable (a truncated file has no valid footer)."""
     try:
         import pyarrow.parquet as pq
     except Exception:
         return None
-    path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in parquet_data_files(path)
+            pq.ParquetFile(f).metadata.num_rows for f in parquet_data_files(path)
         )
     except Exception:
         return None
+
+
+def table_rows_metadata(sf_dir: str, name: str) -> int | None:
+    """Row count of one fixture table from parquet FOOTER metadata
+    (``parquet_footer_rows``), no Spark job. Returns None when the
+    count cannot be established (missing pyarrow, unreadable layout);
+    callers use it only for scale-dispatch decisions (e.g.
+    exact-baseline probe caps), so None must mean "take the exact
+    path", never an error. Same plan-construction-side-effect-free
+    discipline as analytics16's adaptive hot-share probe.
+    """
+    return parquet_footer_rows(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def warn_probe_slice(

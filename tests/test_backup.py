@@ -180,6 +180,59 @@ def test_snapshot_staged_atomic_publish(spark, sf_dir):
     assert spark.read.parquet(res2.path).count() == df.count()
 
 
+def _damage_after_write(monkeypatch, damage):
+    """Make every parquet write call ``damage(path)`` after it wrote."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    write = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        damage(path)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def _part_files(path):
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.startswith("part-")
+    )
+
+
+@pytest.mark.parametrize("damage", ["lost", "truncated"])
+def test_snapshot_verify_rejects_damaged_staged_files(spark, tmp_path, monkeypatch, damage):
+    """A staged part file lost or truncated between the write and the
+    publish raises a typed RuntimeError and leaves neither the staging
+    directory nor a published snapshot."""
+
+    def lose_or_truncate(path):
+        victim = _part_files(path)[0]
+        if damage == "lost":
+            os.remove(victim)
+        else:
+            with open(victim, "r+b") as fh:
+                fh.truncate(os.path.getsize(victim) // 2)
+
+    df = spark.range(0, 100, 1, 4)  # four part files
+    _damage_after_write(monkeypatch, lose_or_truncate)
+    with pytest.raises(RuntimeError, match="snapshot verify failed"):
+        snapshot_table(df, str(tmp_path), "db0", "t", "20240101")
+    assert os.listdir(tmp_path / "db0") == []
+
+
+def test_snapshot_partitioned_counts_every_subdirectory(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from clickhousebackup_spark.tables import parquet_data_files
+
+    df = spark.range(100).withColumn("p", F.col("id") % 3)
+    res = snapshot_table(df, str(tmp_path), "db0", "t", "20240101", partition_by=["p"])
+    assert res.n_rows == 100
+    files = parquet_data_files(res.path)
+    assert {os.path.basename(os.path.dirname(f)) for f in files} == {"p=0", "p=1", "p=2"}
+    assert spark.read.parquet(res.path).count() == 100
+
+
 # ---------- retention laws on randomized catalogs (hypothesis) ----------
 
 GENS = ["last", "daily", "weekly", "monthly"]

@@ -1,0 +1,92 @@
+"""Spark job counts of the backup path on a tiny local table.
+
+Each count is read back from the status tracker for a job group set
+around one call, so a change that adds a pass over the data (a count
+before the write, a reread of the staged files) or runs catalog-sized
+work as Spark jobs (schema inference of the catalog, a distinct/sort
+of its paths) fails here in the quick tier.
+"""
+
+from __future__ import annotations
+
+import datetime as dt
+import itertools
+
+from pyspark.sql import functions as F
+
+from clickhousebackup_spark.backup.config import BackupConfig
+from clickhousebackup_spark.backup.snapshot import snapshot_table
+from clickhousebackup_spark.engine import BackupEngine
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` launches."""
+    sc = spark.sparkContext
+    group = f"test-backup-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _source(spark, n):
+    return spark.range(n).select(
+        F.col("id").alias("k"), (F.col("id") % 3).alias("v")
+    )
+
+
+def _engine(spark, backup_dir) -> BackupEngine:
+    backup_dir.mkdir()
+    return BackupEngine(
+        spark,
+        BackupConfig(
+            host="h", dbs="db0", user="u", password="p",
+            backup_dir=str(backup_dir),
+        ),
+    )
+
+
+def test_snapshot_of_a_flat_source_is_one_job(spark, tmp_path):
+    # the write counts its rows and the verify reads footers only
+    src = _source(spark, 20)
+    assert _jobs(spark, lambda: snapshot_table(src, str(tmp_path), "db0", "t", "k")) == 1
+
+
+def test_catalog_read_launches_no_job(spark, tmp_path):
+    engine = _engine(spark, tmp_path / "b")
+    engine.run_backup({"db0": {"t": _source(spark, 5)}}, now=dt.datetime(2024, 1, 1))
+    assert _jobs(spark, engine.catalog) == 0
+
+
+def test_backup_and_incremental_runs_job_counts(spark, tmp_path):
+    """Two runs of each kind over two tables of one db.
+
+    Per table: run_backup launches 2 jobs (the snapshot write and the
+    catalog append). run_incremental's first run launches 3 (the
+    `_new_rows` lookup collects the empty catalog frame, then write
+    and append); its second launches 7 (the catalog path collect and
+    the restore read's schema inference, then the diff's write, which
+    runs as 4 jobs under AQE, then the append). Per run: the latest
+    pointers launch 2 (the pointer query collect).
+    """
+    full = _engine(spark, tmp_path / "full")
+    incremental = _engine(spark, tmp_path / "incr")
+
+    def tables(n):
+        return {"db0": {"a": _source(spark, n), "b": _source(spark, n + 1)}}
+
+    def runs(run):
+        return [
+            _jobs(spark, lambda i=i: run(tables(10 * (i + 1)), now=dt.datetime(2024, 1, 1 + i)))
+            for i in range(2)
+        ]
+
+    assert runs(full.run_backup) == [2 * 2 + 2, 2 * 2 + 2]
+    assert runs(incremental.run_incremental) == [2 * 3 + 2, 2 * 7 + 2]

@@ -1,36 +1,19 @@
-"""Round-11 batch-2 additions (operators/analytics14.py):
-registered+oracled coverage, rerun stability, non-vacuous sf0.001
-evidence, and crafted-fixture proofs — exact seasonal indexes on a
-two-month corpus, the pushed-down min/max filter, all five
-reconciliation bands, the waterfall's integer reconciliation, the
-degenerate zero-difference permutation test, and independence lift.
+"""Crafted-fixture proofs for the round-11 batch-2 additions
+(operators/analytics14.py): exact seasonal indexes on a two-month
+corpus, the pushed-down min/max filter, all five reconciliation
+bands, the waterfall's integer reconciliation, the degenerate
+zero-difference permutation test, and independence lift.
 
-Same contract as test_determinism_r5-r12; the keys sit at the tail
-of ``registry._CHECK_PRIORITY`` (round-12 queue, DEFERRED).
-
-The coverage, non-vacuity and rerun ids below are views of the
-registry sweep (tests/test_registry_sweep.py), which builds each key
-once; the ``rerun_stable`` flags live in tests/contracts.py.
+Oracle parity, non-empty rows and rerun stability of this round's
+keys are clauses of ``tests/test_registry_sweep.py::test_key[key]``;
+the ``rerun_stable`` flags live in tests/contracts.py.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import functions as F
-
 from clickhousebackup_spark.registry import all_specs
-from tests.test_registry_sweep import key_view, keys_view
-
-_IDS = """
-    orders_seasonal_index scan_minmax_pruned dq_orders_lineitem_reconcile
-    lineitem_revenue_waterfall stats_permutation_test_hash
-    path_transition_lift
-""".split()
-
-test_r13_queue_keys_cover_the_round = keys_view("parity", _IDS)
-test_r13_queue_keys_nonvacuous = keys_view("rerun", _IDS)
-test_rerun_stable = key_view("rerun", _IDS)
 
 
 def test_seasonal_index_exact_on_two_month_corpus(spark, tmp_path):

@@ -1,0 +1,57 @@
+"""``BackupEngine.prune(apply=True)`` never leaves a catalog row that
+points at a removed snapshot: the rewritten catalog is published
+before any directory is removed, and a plan that keeps nothing
+rewrites the catalog to empty."""
+
+from __future__ import annotations
+
+import datetime as dt
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from clickhousebackup_spark.backup.config import BackupConfig, RetentionPolicy
+from clickhousebackup_spark.engine import BackupEngine
+
+
+def _engine(spark, tmp_path, **retention) -> BackupEngine:
+    eng = BackupEngine(
+        spark,
+        BackupConfig(
+            host="h", dbs="db0", user="u", password="p",
+            backup_dir=str(tmp_path),
+            retention=RetentionPolicy(**retention),
+        ),
+    )
+    t = spark.range(5).select(F.col("id").alias("k"))
+    for year in (2023, 2024):
+        eng.run_backup({"db0": {"t": t}}, now=dt.datetime(year, 1, 1))
+    return eng
+
+
+def test_prune_of_everything_empties_the_catalog(spark, tmp_path):
+    eng = _engine(spark, tmp_path, keep_mins=-1, keep_days=-1, keep_weeks=-1, keep_months=-1)
+    paths = {r["path"] for r in eng.catalog().select("path").collect()}
+    assert len(paths) == 2
+
+    eng.prune(apply=True)
+    assert eng.catalog().count() == 0
+    assert not os.path.exists(eng.catalog_path + "-new")
+    assert not any(os.path.exists(p) for p in paths)
+    with pytest.raises(FileNotFoundError):
+        eng.restore("db0", "t")
+
+
+def test_failed_catalog_rewrite_removes_no_snapshot(spark, tmp_path, monkeypatch):
+    eng = _engine(spark, tmp_path)  # default windows: the 2023 run expires
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("rewrite failed")
+
+    monkeypatch.setattr(BackupEngine, "_rewrite_catalog_excluding", boom)
+    with pytest.raises(RuntimeError, match="rewrite failed"):
+        eng.prune(apply=True)
+    paths = {r["path"] for r in eng.catalog().select("path").collect()}
+    assert len(paths) == 2
+    assert all(os.path.isdir(p) for p in paths)
