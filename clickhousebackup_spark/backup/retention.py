@@ -25,8 +25,20 @@ from clickhousebackup_spark.backup.config import RetentionPolicy
 def keep_newest_per_period(catalog: DataFrame) -> DataFrame:
     """backup.sh:90-97: within one (db, generation, period_key) the
     newest snapshot wins (`ln -f` overwrites the period's artifact).
-    Tiebreak on snapshot_id for hash determinism."""
-    w = Window.partitionBy("db", "generation", "period_key").orderBy(
+    Tiebreak on snapshot_id for hash determinism.
+
+    A catalog with a ``table_name`` column (the engine's, one artifact
+    per table) keeps the newest snapshot per table as well: otherwise
+    the table registered last in a run would win every period and the
+    other tables' expired snapshots would never reach the delete set.
+    The fixture catalog (catalog.py) has no such column; its partition
+    key, and so its plan, stay (db, generation, period_key)."""
+    keys = [
+        c
+        for c in ("db", "table_name", "generation", "period_key")
+        if c in catalog.columns
+    ]
+    w = Window.partitionBy(*keys).orderBy(
         F.col("snapshot_ts").desc(), F.col("snapshot_id").desc()
     )
     return (

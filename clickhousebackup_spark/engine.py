@@ -22,12 +22,14 @@ retention prune → post hooks, with the error trap firing error hooks.
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from clickhousebackup_spark.backup.catalog import period_key_expr
 from clickhousebackup_spark.backup.config import (
@@ -56,6 +58,19 @@ CATALOG_SCHEMA = (
     "snapshot_ts timestamp, snapshot_id long, path string, content_hash string, "
     "size_bytes long"
 )
+CATALOG_COLUMNS = [c.split()[0] for c in CATALOG_SCHEMA.split(", ")]
+#: the empty catalog as a JVM relation: collecting it launches no job
+#: (``createDataFrame([])`` would run one on Python workers)
+_EMPTY_CATALOG_SQL = "SELECT {} WHERE false".format(
+    ", ".join(
+        f"CAST(NULL AS {t}) AS {c}"
+        for c, t in (f.split() for f in CATALOG_SCHEMA.split(", "))
+    )
+)
+
+#: footer key-value entry in which Spark's parquet writer stores the
+#: exact Spark schema (StructType JSON) of the rows it wrote
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @dataclass
@@ -115,23 +130,32 @@ class BackupEngine:
         incremental: bool,
     ) -> list[SnapshotResult]:
         """The one run loop (backup.sh:16-130): pre hooks, then per db
-        and table a snapshot registered under all four generations,
-        then the latest pointers, then post hooks; the error trap fires
-        error hooks."""
+        and table a snapshot, then ONE catalog append registering every
+        snapshot of the run under all four generations, then the latest
+        pointers, then post hooks; the error trap fires error hooks.
+
+        The append runs in a ``finally`` after the db/table loop: when
+        table k fails, the snapshots of tables 1..k-1 are published and
+        cataloged before the error propagates to the hooks, the same
+        catalog state a per-table registration would have left.
+        ``snapshot_id``s follow the results order, then ``GENERATIONS``
+        order. A table's ``_new_rows`` lookup never needs an earlier
+        table of the same run: (db, table) is unique within a run."""
         now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         key = now.strftime("%Y%m%d-%H%M%S")  # backup.sh:26
 
         def job() -> list[SnapshotResult]:
             results: list[SnapshotResult] = []
-            for db in self.config.db_list:  # backup.sh:24
-                for tname, df in tables_by_db.get(db, {}).items():
-                    if incremental:
-                        df = self._new_rows(db, tname, df)
-                    res = snapshot_table(
-                        df, self.config.backup_dir, db, tname, key
-                    )
-                    results.append(res)
-                    self._register(db, tname, res, now)
+            try:
+                for db in self.config.db_list:  # backup.sh:24
+                    for tname, df in tables_by_db.get(db, {}).items():
+                        if incremental:
+                            df = self._new_rows(db, tname, df)
+                        results.append(
+                            snapshot_table(df, self.config.backup_dir, db, tname, key)
+                        )
+            finally:
+                self._register(results, now)
             self.materialize_latest()  # backup.sh:99-115, per run
             return results
 
@@ -167,16 +191,37 @@ class BackupEngine:
             .drop("_h", "_occ", "_n_prev")
         )
 
-    def _register(self, db: str, table: str, res: SnapshotResult, now) -> None:
-        rows = []
-        for gen in GENERATIONS:
-            rows.append(
-                (db, table, gen, "", now, self._snapshot_seq, res.path, "", res.n_rows)
-            )
-            self._snapshot_seq += 1
+    def _register(self, results: list[SnapshotResult], now) -> None:
+        """Append the four generation rows of every snapshot in
+        ``results`` to the catalog in one write.
+
+        The rows are one parsed ``VALUES`` relation built in the JVM:
+        db, table, path and ``now`` are bound parameters (no quoting of
+        user text), the ids, counts and generation names are inline
+        literals. ``createDataFrame`` would ship the rows through a
+        Python RDD and Python workers. Rows are listed generation by
+        generation, so each write task holds one generation directory
+        whenever the run's row count splits evenly across tasks."""
+        if not results:
+            return
+        n_gen = len(GENERATIONS)
+        seq = self._snapshot_seq
+        self._snapshot_seq += n_gen * len(results)
+        args = {"now": now}
+        for i, res in enumerate(results):
+            args.update({f"db{i}": res.db, f"t{i}": res.table, f"p{i}": res.path})
+        values = ", ".join(
+            f"(:db{i}, :t{i}, '{gen}', '', :now, {seq + n_gen * i + g}L, "
+            f":p{i}, '', {res.n_rows}L)"
+            for g, gen in enumerate(GENERATIONS)
+            for i, res in enumerate(results)
+        )
+        rows = self.spark.sql(
+            f"SELECT * FROM VALUES {values} AS c({', '.join(CATALOG_COLUMNS)})",
+            args=args,
+        )
         self._append_catalog(
-            self.spark.createDataFrame(rows, CATALOG_SCHEMA)
-            .withColumn("period_key", period_key_expr("snapshot_ts", "generation"))
+            rows.withColumn("period_key", period_key_expr("snapshot_ts", "generation"))
             .withColumn(
                 "content_hash",
                 F.md5(F.concat_ws("|", "db", "generation", "period_key", "path")),
@@ -195,19 +240,12 @@ class BackupEngine:
         restore of the state as of that snapshot (inclusive).
 
         The path list is catalog-sized and is deduplicated and sorted
-        in the driver from one plain collect.
-
-        Plan shape: when every snapshot carries the same schema (the
-        overwhelmingly common case — checked driver-side from the
-        footer of the first data file ``tables.parquet_data_files``
-        lists for each snapshot, partition subdirectories included;
-        no Spark job), all paths go into ONE
-        multi-path ``spark.read.parquet(*paths)`` scan, so an
-        N-snapshot chain plans O(1) deep regardless of N. Only a chain
-        with schema evolution falls back to the per-snapshot
-        ``unionByName(allowMissingColumns=True)`` ladder, which is
-        what makes a column added between base and delta restore as
-        null in pre-evolution rows.
+        in Python from one plain collect, the only Spark job of the
+        build. The snapshots are read by ``_read_snapshots``: one
+        multi-path scan with the footers' Spark schema (no inference
+        job) when every snapshot was written with the same schema, so
+        an N-snapshot chain plans O(1) deep; otherwise the
+        schema-evolution ladder.
         """
         cat = self.catalog().filter(
             (F.col("db") == db) & (F.col("table_name") == table)
@@ -225,8 +263,22 @@ class BackupEngine:
         paths = sorted({r["path"] for r in cat.select("path").collect()})
         if not paths:
             raise FileNotFoundError(f"no snapshots for ({db}, {table})")
-        if len(paths) == 1 or self._snapshot_schemas_identical(paths):
-            return self.spark.read.parquet(*paths)
+        return self._read_snapshots(paths)
+
+    def _read_snapshots(self, paths: list[str]) -> DataFrame:
+        """Read snapshot directories, in order, as one frame.
+
+        With the Spark schema every snapshot's footer carries
+        (``_snapshot_schema``) the read is one multi-path scan with
+        that schema, which launches no schema-inference job. Without
+        one each snapshot is read with inference and the reads are
+        combined with ``unionByName(allowMissingColumns=True)``, which
+        makes a column added between base and delta restore as null in
+        pre-evolution rows; a single path is then a plain inferred
+        read."""
+        schema = self._snapshot_schema(paths)
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(*paths)
         out = self.spark.read.parquet(paths[0])
         for p in paths[1:]:
             out = out.unionByName(
@@ -235,37 +287,50 @@ class BackupEngine:
         return out
 
     @staticmethod
-    def _snapshot_schemas_identical(paths: list[str]) -> bool:
-        """True iff every snapshot directory's parquet footer schema
-        is byte-identical (names, types, order). Driver-side pyarrow
-        footer reads of the first file ``parquet_data_files`` lists
-        (the files Spark's reader reads, found recursively through
-        partition subdirectories, so partition columns are not part of
-        the compared schema) — one small metadata read per snapshot,
-        no Spark job; at catalog scale this is the cheap gate that
-        keeps the restore plan O(1) deep. Any unreadable/ambiguous layout
-        returns False (fall back to the always-correct union ladder) —
-        including pyarrow itself being absent (no pinned manifest).
-        """
+    def _snapshot_schema(paths: list[str]) -> StructType | None:
+        """The Spark schema of the data columns every snapshot in
+        ``paths`` was written with, or None when they do not all carry
+        the same one.
+
+        Spark's parquet writer stores the exact ``StructType`` of the
+        written rows in each file's footer metadata
+        (``SPARK_SCHEMA_KEY``); its reader infers a schema from that
+        same entry, so reading with it gives the inferred read's
+        columns, types and order. The footer of the first file
+        ``parquet_data_files`` lists is read for each snapshot, by
+        pyarrow in this process, no Spark job; older backups carry the
+        entry too. None (the caller's inference path) when pyarrow is
+        absent, a snapshot has no data file or is partitioned (its
+        partition columns are typed from directory names, and each
+        partitioned snapshot is its own partition root, which no
+        multi-path read accepts), a footer is unreadable or lacks the
+        entry, or two snapshots' schemas differ in any name, type,
+        nullability or metadata."""
         try:
             import pyarrow.parquet as pq
-        except Exception:
-            return False
+        except ImportError:
+            return None
 
-        def footer_schema(path):
+        def footer_schema(path: str) -> StructType | None:
             files = parquet_data_files(path)
-            return pq.ParquetFile(files[0]).schema_arrow if files else None
+            root = os.path.normpath(path)
+            if not files or any(os.path.dirname(f) != root for f in files):
+                return None  # no data, or partitioned
+            raw = (pq.read_metadata(files[0]).metadata or {}).get(SPARK_SCHEMA_KEY)
+            return StructType.fromJson(json.loads(raw)) if raw else None
 
         try:
             first = footer_schema(paths[0])
             if first is None:
-                return False
-            return all(
-                (s := footer_schema(p)) is not None and s.equals(first)
-                for p in paths[1:]
-            )
-        except Exception:
-            return False
+                return None
+            for p in paths[1:]:
+                if footer_schema(p) != first:
+                    return None
+            return first
+        except (OSError, ValueError, KeyError, TypeError):
+            # unreadable footer (pyarrow raises OSError/ValueError
+            # subclasses) or a schema entry Spark's JSON parser rejects
+            return None
 
     # -- catalog state (the reference's directory listing, explicit) --
 
@@ -282,12 +347,32 @@ class BackupEngine:
         )
 
     def catalog(self) -> DataFrame:
-        if not os.path.exists(self.catalog_path):
-            return self.spark.createDataFrame([], CATALOG_SCHEMA)
-        # The pinned schema skips the footer-inference job and reads a
-        # catalog with no data files (all rows pruned) as empty. The
-        # partition column, generation, still comes last.
-        return self.spark.read.schema(CATALOG_SCHEMA).parquet(self.catalog_path)
+        """The catalog as a frame; building it launches no Spark job.
+
+        The read names the ``generation=*`` partition directories, with
+        the catalog directory as ``basePath``: Spark's listing treats
+        the ``_catalog`` root itself as a hidden path and warns that it
+        ignored it, while these roots are not hidden (and at most four
+        roots stay far below the count that makes Spark list them in a
+        job). The pinned schema skips the footer-inference job; the
+        partition column, generation, comes last. A catalog without
+        partition directories (never written, or every row pruned) is
+        the empty frame."""
+        try:
+            parts = sorted(
+                e.path
+                for e in os.scandir(self.catalog_path)
+                if e.is_dir() and e.name.startswith("generation=")
+            )
+        except FileNotFoundError:
+            parts = []
+        if not parts:
+            return self.spark.sql(_EMPTY_CATALOG_SQL)
+        return (
+            self.spark.read.schema(CATALOG_SCHEMA)
+            .option("basePath", self.catalog_path)
+            .parquet(*parts)
+        )
 
     # -- retention (backup.sh:90-122) --
 
@@ -326,7 +411,7 @@ class BackupEngine:
             raise FileNotFoundError(
                 f"no snapshot found for ({db}, {table}, {period_key or 'latest'})"
             )
-        return self.spark.read.parquet(newest[0]["path"])
+        return self._read_snapshots([newest[0]["path"]])
 
     def prune(
         self, plan: DataFrame | None = None, apply: bool = False
@@ -456,7 +541,7 @@ class BackupEngine:
     def restore_latest(self, db: str, generation: str = "last") -> DataFrame:
         """Restore by convention: read the on-disk ``<db>-latest``
         pointer (no catalog needed — the property backup.sh's symlinks
-        exist to provide)."""
+        exist to provide), with the footer schema like ``restore``."""
         ptr = os.path.join(
             self.config.backup_dir,
             generation,
@@ -468,4 +553,4 @@ class BackupEngine:
                 f"no latest pointer for ({db}, {generation}) at {ptr} "
                 f"(latest_type={self.config.latest_type!r})"
             )
-        return self.spark.read.parquet(real)
+        return self._read_snapshots([real])

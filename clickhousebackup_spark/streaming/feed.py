@@ -75,5 +75,8 @@ class RecordFeed(Protocol):
 def feed_backfill(feed: RecordFeed, spark: SparkSession) -> DataFrame:
     """Batch backfill THROUGH the protocol — the call sites that use
     this (topic_roundtrip) are provably implementation-agnostic."""
-    assert isinstance(feed, RecordFeed)
+    if not isinstance(feed, RecordFeed):
+        raise TypeError(
+            f"feed_backfill needs a RecordFeed, got {type(feed).__name__}"
+        )
     return feed.read_all(spark)

@@ -2,9 +2,10 @@
 
 Each count is read back from the status tracker for a job group set
 around one call, so a change that adds a pass over the data (a count
-before the write, a reread of the staged files) or runs catalog-sized
-work as Spark jobs (schema inference of the catalog, a distinct/sort
-of its paths) fails here in the quick tier.
+before the write, a reread of the staged files), runs catalog-sized
+work as Spark jobs (schema inference of the catalog or of a restored
+snapshot, a distinct/sort of its paths), or appends to the catalog
+more than once per run fails here in the quick tier.
 """
 
 from __future__ import annotations
@@ -65,16 +66,50 @@ def test_catalog_read_launches_no_job(spark, tmp_path):
     assert _jobs(spark, engine.catalog) == 0
 
 
+def test_restore_builds_launch_no_inference_job(spark, tmp_path):
+    """Building a restore costs the catalog lookup only: the snapshot
+    schema comes from the parquet footers, not from an inference job."""
+    engine = _engine(spark, tmp_path / "b")
+    for day in (1, 2):
+        engine.run_backup({"db0": {"t": _source(spark, 5 * day)}}, now=dt.datetime(2024, 1, day))
+    assert _jobs(spark, lambda: engine.restore("db0", "t")) == 1
+    assert _jobs(spark, lambda: engine.restore_incremental("db0", "t")) == 1
+    assert _jobs(spark, lambda: engine.restore_latest("db0")) == 0
+
+
+def test_a_multi_table_run_makes_one_catalog_append(spark, tmp_path, monkeypatch):
+    appends = []
+    real = BackupEngine._append_catalog
+
+    def counting_append(self, df):
+        appends.append(df)
+        real(self, df)
+
+    monkeypatch.setattr(BackupEngine, "_append_catalog", counting_append)
+    engine = BackupEngine(spark, BackupConfig(
+        host="h", dbs="db0,db1", user="u", password="p", backup_dir=str(tmp_path),
+    ))
+    tables = {
+        "db0": {"a": _source(spark, 3), "b": _source(spark, 4)},
+        "db1": {"c": _source(spark, 5)},
+    }
+    engine.run_backup(tables, now=dt.datetime(2024, 1, 1))
+    assert len(appends) == 1
+    engine.run_incremental(tables, now=dt.datetime(2024, 1, 2))
+    assert len(appends) == 2
+    assert engine.catalog().count() == 2 * 3 * 4
+
+
 def test_backup_and_incremental_runs_job_counts(spark, tmp_path):
     """Two runs of each kind over two tables of one db.
 
-    Per table: run_backup launches 2 jobs (the snapshot write and the
-    catalog append). run_incremental's first run launches 3 (the
-    `_new_rows` lookup collects the empty catalog frame, then write
-    and append); its second launches 7 (the catalog path collect and
-    the restore read's schema inference, then the diff's write, which
-    runs as 4 jobs under AQE, then the append). Per run: the latest
-    pointers launch 2 (the pointer query collect).
+    Per table: run_backup launches 1 job (the snapshot write).
+    run_incremental's first run launches 1 too (the `_new_rows` lookup
+    collects the empty catalog, a JVM-local relation, without a job);
+    its second launches 5 (the catalog path collect, then the diff's
+    write, which runs as 4 jobs under AQE; the restore read knows its
+    schema from the footers). Per run: the one catalog append launches
+    1 and the latest pointers 2 (the pointer query collect).
     """
     full = _engine(spark, tmp_path / "full")
     incremental = _engine(spark, tmp_path / "incr")
@@ -88,5 +123,5 @@ def test_backup_and_incremental_runs_job_counts(spark, tmp_path):
             for i in range(2)
         ]
 
-    assert runs(full.run_backup) == [2 * 2 + 2, 2 * 2 + 2]
-    assert runs(incremental.run_incremental) == [2 * 3 + 2, 2 * 7 + 2]
+    assert runs(full.run_backup) == [2 * 1 + 3, 2 * 1 + 3]
+    assert runs(incremental.run_incremental) == [2 * 1 + 3, 2 * 5 + 3]

@@ -1,16 +1,12 @@
-"""Round-10 additions (operators/analytics12.py + scan_dpp_join):
-registered+oracled coverage, rerun stability, non-vacuous sf0.001
-evidence, and crafted-corpus proofs for the branches the fixture
+"""Crafted-corpus proofs for the round-10 additions
+(operators/analytics12.py + scan_dpp_join): the branches the fixture
 leaves dormant — the Gopher rules the word-soup corpus never fires
 (short docs, no stopwords, symbol words), canonical-URL collapse
 axes, argmax tie-breaking, and the session_window >= boundary.
 
-Same contract as test_determinism_r5-r10; the keys sit at the tail
-of ``registry._CHECK_PRIORITY`` (round-11 queue, DEFERRED).
-
-The coverage, non-vacuity and rerun ids below are views of the
-registry sweep (tests/test_registry_sweep.py), which builds each key
-once; the ``rerun_stable`` flags live in tests/contracts.py.
+Oracle parity, non-empty rows and rerun stability of this round's
+keys are clauses of ``tests/test_registry_sweep.py::test_key[key]``;
+the ``rerun_stable`` flags live in tests/contracts.py.
 """
 
 from __future__ import annotations
@@ -18,20 +14,7 @@ from __future__ import annotations
 import os
 from datetime import datetime
 
-from pyspark.sql import functions as F
-
 from clickhousebackup_spark.registry import all_specs
-from tests.test_registry_sweep import key_view, keys_view
-
-_IDS = """
-    agg_argmax_argmin stats_covariance win_session_window_builtin
-    text_quality_gopher url_canonical_dedup scan_dpp_join math_round_families
-    text_blocklist_filter
-""".split()
-
-test_r11_queue_keys_cover_the_round = keys_view("parity", _IDS)
-test_r11_queue_keys_nonvacuous = keys_view("rerun", _IDS)
-test_rerun_stable = key_view("rerun", _IDS)
 
 
 # ---------------------------------------------------------------------------

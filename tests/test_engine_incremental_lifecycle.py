@@ -81,3 +81,20 @@ def test_incremental_registers_four_generations_and_latest(spark, engine):
             )
             assert os.path.islink(ptr) and os.readlink(ptr) == path
     assert engine.restore_latest("db1").count() == 2
+
+
+@pytest.mark.parametrize("kind", ["run_backup", "run_incremental"])
+def test_failing_table_keeps_earlier_tables_cataloged(spark, engine, kind):
+    """The run's one catalog append still registers the snapshots
+    published before a table failed, before the error hooks fire."""
+    calls = []
+    engine.add_hook(lambda a: calls.append((a, engine.catalog().count())))
+    broken = spark.range(3).filter(F.expr("assert_true(id < 0) IS NULL"))
+    tables = _tables(spark, 3)
+    tables["db1"] = {"u": broken}
+    with pytest.raises(Exception):
+        getattr(engine, kind)(tables, now=dt.datetime(2024, 1, 1))
+    assert calls == [("pre-backup", 0), ("error", len(GENERATIONS))]
+    cat = engine.catalog().collect()
+    assert {(r["db"], r["table_name"]) for r in cat} == {("db0", "t")}
+    assert all(os.path.isdir(r["path"]) for r in cat)

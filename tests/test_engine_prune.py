@@ -55,3 +55,23 @@ def test_failed_catalog_rewrite_removes_no_snapshot(spark, tmp_path, monkeypatch
     paths = {r["path"] for r in eng.catalog().select("path").collect()}
     assert len(paths) == 2
     assert all(os.path.isdir(p) for p in paths)
+
+
+def test_prune_removes_every_table_s_expired_snapshot(spark, tmp_path):
+    """Two tables of one db, backed up nightly and pruned with a window
+    that keeps only the newest night: after each prune only that
+    night's snapshot of each table is on disk, and the catalog has no
+    row for a removed path. The nights fall in one ISO week and month,
+    so no weekly or monthly row keeps an older night."""
+    eng = BackupEngine(spark, BackupConfig(
+        host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
+        retention=RetentionPolicy(keep_mins=720, keep_days=0, keep_weeks=0, keep_months=0),
+    ))
+    t = spark.range(5).select(F.col("id").alias("k"))
+    for day in (2, 3, 4):  # Tue..Thu of 2024-W01
+        eng.run_backup({"db0": {"orders": t, "lineitem": t}}, now=dt.datetime(2024, 1, day))
+        eng.prune(apply=True)
+        key = f"202401{day:02d}-000000"
+        assert sorted(os.listdir(tmp_path / "db0")) == [f"lineitem-{key}", f"orders-{key}"]
+        cataloged = {r["path"] for r in eng.catalog().select("path").collect()}
+        assert cataloged == {str(tmp_path / "db0" / n) for n in os.listdir(tmp_path / "db0")}

@@ -53,6 +53,12 @@ def test_backfill_through_protocol_matches_direct(spark, sf_dir, tmp_path):
     assert feed_backfill(topic, spark).count() == ev.count()
 
 
+def test_backfill_rejects_a_non_feed_with_type_error():
+    # a typed error, not an assert that ``python -O`` strips
+    with pytest.raises(TypeError, match="RecordFeed"):
+        feed_backfill(object(), spark=None)
+
+
 def test_transform_runs_over_record_feed_stream(spark, sf_dir, tmp_path):
     """The conformance transform over a checkpointed RecordFeed
     consume(): complete-mode keyed agg, exactly-once totals."""
