@@ -19,6 +19,12 @@ SENTINEL = "**None**"
 
 GENERATIONS = ("last", "daily", "weekly", "monthly")
 
+#: Hadoop glob metacharacters. Spark's parquet reader globs every path
+#: it is given, so a backup under a path holding one is written but
+#: cannot be read back; the backup dir and db names (path components
+#: of every snapshot) are refused at construction.
+GLOB_METACHARACTERS = frozenset("\\{}[]*?")
+
 
 class ConfigError(ValueError):
     """Raised where the reference would `exit 1` (env.sh:6,11,16,21,33)."""
@@ -79,6 +85,9 @@ class BackupConfig:
                 )
         if self.latest_type not in ("symlink", "hardlink", "none"):
             raise ConfigError(f"invalid latest_type: {self.latest_type}")
+        for db in self.db_list:
+            if GLOB_METACHARACTERS & set(db):
+                raise ConfigError(f"db name holds a glob metacharacter: {db!r}")
 
     @property
     def db_list(self) -> list[str]:
@@ -87,9 +96,12 @@ class BackupConfig:
 
 
 def validate_backup_dir(path: str) -> None:
-    """Dir must exist and be writable+executable (env.sh:32-35)."""
+    """Dir must exist and be writable+executable (env.sh:32-35), and
+    its path must hold no ``GLOB_METACHARACTERS``."""
     import os
 
+    if GLOB_METACHARACTERS & set(path):
+        raise ConfigError(f"backup dir holds a glob metacharacter: {path!r}")
     if not os.path.isdir(path):
         raise ConfigError(f"backup dir does not exist: {path}")
     if not os.access(path, os.W_OK | os.X_OK):

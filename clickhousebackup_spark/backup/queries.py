@@ -639,14 +639,7 @@ def backup_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "period_key", period_key_expr("snapshot_ts", "generation")
     )
-    w_keep = Window.partitionBy("db", "generation", "period_key").orderBy(
-        F.col("snapshot_ts").desc(), F.col("snapshot_id").desc()
-    )
-    kept = (
-        g.withColumn("rn", F.row_number().over(w_keep))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    kept = keep_newest_per_period(g)  # no table_name: keys (db, generation, period_key)
     w_mark = Window.partitionBy("db", "snapshot_id").orderBy("generation")
     marked = kept.withColumn("rn2", F.row_number().over(w_mark))
     first = F.col("rn2") == 1

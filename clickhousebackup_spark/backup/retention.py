@@ -16,7 +16,7 @@ from __future__ import annotations
 import numbers
 from decimal import Decimal
 
-from pyspark.sql import DataFrame, Window  # noqa: F401  (Window used by keep_newest)
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from clickhousebackup_spark.backup.config import RetentionPolicy
@@ -117,8 +117,9 @@ def retention_plan(
     )
 
 
-def prune_delete_set(catalog: DataFrame, plan: DataFrame) -> DataFrame:
-    """The delete set as an anti-join of catalog against kept rows —
-    the engine-side `rm` list (operator idiom of set_except/join_anti)."""
-    kept = plan.filter(F.col("keep") == 1).select("db", "generation", "path")
-    return catalog.join(kept, on=["db", "generation", "path"], how="left_anti")
+def prune_delete_set(plan: DataFrame) -> DataFrame:
+    """The engine-side `rm` list: the plan's rows sharing no (db,
+    generation, path) with a kept row, as catalog columns (anti-join)."""
+    keys = ["db", "generation", "path"]
+    kept = plan.filter(F.col("keep") == 1).select(*keys)
+    return plan.join(kept, keys, "left_anti").drop("age_minutes", "keep")

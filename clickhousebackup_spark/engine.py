@@ -9,7 +9,8 @@ A user of the reference configures env vars and gets scheduled
     eng.add_hook(webhook_hook(url))          # hooks/00-webhook
     result = eng.run_backup({"orders": df})  # one backup.sh run
     plan = eng.retention_plan()              # the find…rm classification
-    eng.prune(plan)                          # apply it
+    eng.prune(plan)                          # list the delete set
+    eng.prune(plan, apply=True)              # and remove it
 
 plus the relational surface (``table()``, ``sql()``) the reference
 delegates to ClickHouse behind `backup.sh:45`.
@@ -382,12 +383,10 @@ class BackupEngine:
 
     def latest(self) -> DataFrame:
         """`-latest` pointers (A15), honoring latest_type='none'."""
+        pointers = latest_pointers(self.catalog(), self.config.suffix)
         if self.config.latest_type == "none":  # backup.sh:113
-            return self.spark.createDataFrame(
-                [], "db string, generation string, latest_target string, "
-                "latest_ts timestamp, pointer_name string"
-            )
-        return latest_pointers(self.catalog(), self.config.suffix)
+            return pointers.where(F.lit(False))  # folds to an empty relation
+        return pointers
 
     def retention_plan(self) -> DataFrame:
         return retention_plan(self.generation_state(), self.config.retention)
@@ -416,7 +415,10 @@ class BackupEngine:
     def prune(
         self, plan: DataFrame | None = None, apply: bool = False
     ) -> DataFrame:
-        """The delete set (find…rm analog of backup.sh:119-122).
+        """The delete set (find…rm analog of backup.sh:119-122),
+        ``prune_delete_set(plan)``; ``plan`` must come from this
+        engine's ``retention_plan()`` (the default): a plan covering
+        part of the catalog deletes only its own not-kept rows.
 
         With ``apply=False`` (default) only returns the delete set,
         mirroring how backup.sh separates listing (``find``) from
@@ -425,22 +427,20 @@ class BackupEngine:
         `-exec rm -rvf` side; a failed rewrite removes nothing. One
         path is registered under all four generations (backup.sh's
         hardlink fan-out), so a dir is only removed when NO kept
-        generation row still references it.
-
-        The collects here are catalog-scale (one row per snapshot
-        artifact), never data-scale.
+        generation row still references it. The plan is materialized
+        (catalog-sized) and collected once; the returned set reads the
+        materialized plan, so the rewrite cannot change it.
         """
         plan = plan if plan is not None else self.retention_plan()
-        delete_df = prune_delete_set(self.generation_state(), plan)
         if not apply:
-            return delete_df
+            return prune_delete_set(plan)
         # Materialize before mutating storage: the lazy plan reads the
         # catalog files the rewrite below replaces.
-        delete_df = materialize(delete_df)
-        kept_paths = {
-            r["path"] for r in plan.filter(F.col("keep") == 1).select("path").collect()
-        }
-        doomed = {r["path"] for r in delete_df.select("path").collect()} - kept_paths
+        plan = materialize(plan)
+        rows = plan.select("db", "generation", "path", "snapshot_id", "keep").collect()
+        kept = {(db, gen, path) for db, gen, path, _, keep in rows if keep == 1}
+        deleted = [r for r in rows if r[:3] not in kept]
+        doomed = {r.path for r in deleted} - {path for _, _, path in kept}
         backup_root = os.path.realpath(self.config.backup_dir)
         real_paths = {p: os.path.realpath(p) for p in sorted(doomed)}
         for path, real in real_paths.items():
@@ -449,29 +449,27 @@ class BackupEngine:
                 raise ValueError(f"prune path outside backup_dir: {path}")
         # Publish the rewritten catalog before removing anything: a
         # failed rewrite leaves every cataloged snapshot on disk.
-        self._rewrite_catalog_excluding(delete_df, doomed)
+        self._rewrite_catalog_excluding({r.snapshot_id for r in deleted}, doomed)
         for real in real_paths.values():
             if os.path.isdir(real):
                 shutil.rmtree(real)
             elif os.path.exists(real):
                 os.remove(real)
-        return delete_df
+        return prune_delete_set(plan)
 
     def _rewrite_catalog_excluding(
-        self, delete_df: DataFrame, doomed_paths: set[str]
+        self, snapshot_ids: set[int], doomed_paths: set[str]
     ) -> None:
-        """Staged-atomic catalog rewrite dropping the deleted rows (by
-        snapshot_id — the per-generation "hardlink" entries, mirroring
-        the per-generation-dir rm) plus any row whose backing path was
-        removed (superseded rows that would otherwise dangle). The
-        staged catalog is checked like a snapshot (``write_verified``)
-        before it replaces the old one."""
-        cat = self.catalog()
-        survivors = cat.join(
-            delete_df.select("snapshot_id"), on="snapshot_id", how="left_anti"
-        ).select(*cat.columns)
-        if doomed_paths:
-            survivors = survivors.filter(~F.col("path").isin(sorted(doomed_paths)))
+        """Staged-atomic catalog rewrite, one filter dropping the rows
+        in ``snapshot_ids`` (the per-generation "hardlink" entries,
+        mirroring the per-generation-dir rm) and any row on a
+        ``doomed_paths`` path (superseded rows that would otherwise
+        dangle). The staged catalog is checked like a snapshot
+        (``write_verified``) before it replaces the old one."""
+        survivors = self.catalog().filter(
+            ~F.col("snapshot_id").isin(sorted(snapshot_ids))
+            & ~F.col("path").isin(sorted(doomed_paths))
+        )
         staging = self.catalog_path + "-new"
         write_verified(
             survivors, staging, "catalog", self.catalog_path, ["generation"]

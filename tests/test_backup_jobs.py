@@ -12,10 +12,11 @@ from __future__ import annotations
 
 import datetime as dt
 import itertools
+import os
 
 from pyspark.sql import functions as F
 
-from clickhousebackup_spark.backup.config import BackupConfig
+from clickhousebackup_spark.backup.config import BackupConfig, RetentionPolicy
 from clickhousebackup_spark.backup.snapshot import snapshot_table
 from clickhousebackup_spark.engine import BackupEngine
 
@@ -125,3 +126,22 @@ def test_backup_and_incremental_runs_job_counts(spark, tmp_path):
 
     assert runs(full.run_backup) == [2 * 1 + 3, 2 * 1 + 3]
     assert runs(incremental.run_incremental) == [2 * 1 + 3, 2 * 5 + 3]
+
+
+def test_prune_plans_the_retention_window_once(spark, tmp_path):
+    """Two tables, two nights, a policy that expires the first night.
+
+    Materializing the plan launches 5 jobs under AQE, its one collect
+    (kept rows, delete ids and doomed paths) 1, and the catalog
+    rewrite 1 (the staged write; its verify reads footers). Planning
+    the retention window again for the delete set or the kept paths
+    adds jobs here."""
+    engine = BackupEngine(spark, BackupConfig(
+        host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
+        retention=RetentionPolicy(keep_mins=720, keep_days=0),
+    ))
+    for day in (1, 2):
+        tables = {"db0": {"a": _source(spark, 5), "b": _source(spark, 6)}}
+        engine.run_backup(tables, now=dt.datetime(2024, 1, day))
+    assert _jobs(spark, lambda: engine.prune(engine.retention_plan(), apply=True)) == 7
+    assert sorted(os.listdir(tmp_path / "db0")) == ["a-20240102-000000", "b-20240102-000000"]

@@ -68,6 +68,7 @@ def test_full_backup_lifecycle(spark, sf_dir, engine):
         host="h", dbs="db0", user="u", password="p",
         backup_dir=engine.config.backup_dir, latest_type="none",
     )
+    assert engine.latest().schema == latest.schema
     assert engine.latest().count() == 0
 
     # retention plan: fresh snapshots are all kept; prune set is empty
