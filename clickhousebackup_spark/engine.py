@@ -18,6 +18,15 @@ delegates to ClickHouse behind `backup.sh:45`.
 Every run is the reference's lifecycle (backup.sh:16-130): pre hooks →
 per-db snapshot loop → generation propagation → latest pointers →
 retention prune → post hooks, with the error trap firing error hooks.
+
+The catalog (``<backup_dir>/_catalog``, one ``generation=<g>``
+directory per generation) is driver-side metadata, as the reference's
+directory listing is: the engine reads and writes its rows with
+pyarrow (``_catalog_rows``, ``_write_catalog``), so registering a
+run, the latest pointers, the restore path lookups and the prune
+rewrite launch no Spark job. Spark reads the snapshot data and serves
+the relational surface over the catalog (``catalog()``,
+``generation_state()``, ``latest()``, ``retention_plan()``).
 """
 
 from __future__ import annotations
@@ -26,6 +35,8 @@ import datetime as dt
 import json
 import os
 import shutil
+import uuid
+from collections import namedtuple
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -45,13 +56,10 @@ from clickhousebackup_spark.backup.retention import (
     prune_delete_set,
     retention_plan,
 )
-from clickhousebackup_spark.backup.snapshot import (
-    SnapshotResult,
-    snapshot_table,
-    write_verified,
-)
+from clickhousebackup_spark.backup.snapshot import SnapshotResult, snapshot_table
 from clickhousebackup_spark.exprs import row_hash
 from clickhousebackup_spark.scratch import materialize
+from clickhousebackup_spark.sources.readers import ConnectorUnavailable
 from clickhousebackup_spark.tables import load_table, parquet_data_files
 
 CATALOG_SCHEMA = (
@@ -59,15 +67,20 @@ CATALOG_SCHEMA = (
     "snapshot_ts timestamp, snapshot_id long, path string, content_hash string, "
     "size_bytes long"
 )
-CATALOG_COLUMNS = [c.split()[0] for c in CATALOG_SCHEMA.split(", ")]
+_CATALOG_FIELDS = [f.split() for f in CATALOG_SCHEMA.split(", ")]
+CATALOG_COLUMNS = [c for c, _ in _CATALOG_FIELDS]
 #: the empty catalog as a JVM relation: collecting it launches no job
 #: (``createDataFrame([])`` would run one on Python workers)
 _EMPTY_CATALOG_SQL = "SELECT {} WHERE false".format(
-    ", ".join(
-        f"CAST(NULL AS {t}) AS {c}"
-        for c, t in (f.split() for f in CATALOG_SCHEMA.split(", "))
-    )
+    ", ".join(f"CAST(NULL AS {t}) AS {c}" for c, t in _CATALOG_FIELDS)
 )
+
+#: one catalog row as the driver holds it; ``snapshot_ts`` is UTC
+#: microseconds since the epoch (Spark's ``unix_micros``)
+CatalogRow = namedtuple("CatalogRow", CATALOG_COLUMNS)
+#: the columns of a catalog file: the partition column, generation,
+#: lives in the ``generation=<g>`` directory name
+_FILE_COLUMNS = [c for c in CATALOG_COLUMNS if c != "generation"]
 
 #: footer key-value entry in which Spark's parquet writer stores the
 #: exact Spark schema (StructType JSON) of the rows it wrote
@@ -82,6 +95,13 @@ class BackupEngine:
     _snapshot_seq: int = 0
 
     def __post_init__(self):
+        try:  # the catalog and every snapshot verify read footers with it
+            import pyarrow.parquet  # noqa: F401
+        except ImportError as e:
+            raise ConnectorUnavailable(
+                "BackupEngine needs pyarrow: the catalog and the snapshot "
+                "verify read and write parquet in the driver with it"
+            ) from e
         validate_backup_dir(self.config.backup_dir)  # env.sh:32-35
 
     # -- relational entry points (what ClickHouse serves in the ref) --
@@ -194,15 +214,15 @@ class BackupEngine:
 
     def _register(self, results: list[SnapshotResult], now) -> None:
         """Append the four generation rows of every snapshot in
-        ``results`` to the catalog in one write.
+        ``results`` to the catalog in one ``_write_catalog``.
 
         The rows are one parsed ``VALUES`` relation built in the JVM:
         db, table, path and ``now`` are bound parameters (no quoting of
         user text), the ids, counts and generation names are inline
-        literals. ``createDataFrame`` would ship the rows through a
-        Python RDD and Python workers. Rows are listed generation by
-        generation, so each write task holds one generation directory
-        whenever the run's row count splits evenly across tasks."""
+        literals; ``period_key_expr`` spells the period keys. Spark
+        folds the relation and its projection into a local relation, so
+        the collect that hands the rows to the driver launches no job
+        (``createDataFrame`` would ship them through Python workers)."""
         if not results:
             return
         n_gen = len(GENERATIONS)
@@ -221,12 +241,16 @@ class BackupEngine:
             f"SELECT * FROM VALUES {values} AS c({', '.join(CATALOG_COLUMNS)})",
             args=args,
         )
-        self._append_catalog(
+        rows = (
             rows.withColumn("period_key", period_key_expr("snapshot_ts", "generation"))
             .withColumn(
                 "content_hash",
                 F.md5(F.concat_ws("|", "db", "generation", "period_key", "path")),
             )
+            .withColumn("snapshot_ts", F.unix_micros("snapshot_ts"))
+        )
+        self._write_catalog(
+            [CatalogRow(*r) for r in rows.collect()], self.catalog_path
         )
 
     def restore_incremental(
@@ -240,28 +264,27 @@ class BackupEngine:
         snapshots). Pass ``until_period_key`` for a point-in-time
         restore of the state as of that snapshot (inclusive).
 
-        The path list is catalog-sized and is deduplicated and sorted
-        in Python from one plain collect, the only Spark job of the
-        build. The snapshots are read by ``_read_snapshots``: one
+        The path list comes from ``_catalog_rows``, deduplicated and
+        sorted in the driver; building the restore launches no Spark
+        job. The snapshots are read by ``_read_snapshots``: one
         multi-path scan with the footers' Spark schema (no inference
         job) when every snapshot was written with the same schema, so
         an N-snapshot chain plans O(1) deep; otherwise the
         schema-evolution ladder.
         """
-        cat = self.catalog().filter(
-            (F.col("db") == db) & (F.col("table_name") == table)
-        )
-        if until_period_key is not None:
-            # the `last` generation's period_key IS the snapshot key
-            # (yyyyMMdd-HHmmss — lexicographic == temporal)
-            cat = cat.filter(
-                (F.col("generation") == "last")
-                & (F.col("period_key") <= until_period_key)
+        # The `last` generation's period_key IS the snapshot key
+        # (yyyyMMdd-HHmmss — lexicographic == temporal); Python's
+        # code-point order equals Spark's UTF-8 byte order.
+        paths = sorted({
+            r.path
+            for r in self._catalog_rows()
+            if r.db == db
+            and r.table_name == table
+            and (
+                until_period_key is None
+                or (r.generation == "last" and r.period_key <= until_period_key)
             )
-        # catalog-sized: dedup and order in the driver, not in a
-        # shuffle + sort (Python's code-point order equals Spark's
-        # UTF-8 byte order)
-        paths = sorted({r["path"] for r in cat.select("path").collect()})
+        })
         if not paths:
             raise FileNotFoundError(f"no snapshots for ({db}, {table})")
         return self._read_snapshots(paths)
@@ -300,17 +323,14 @@ class BackupEngine:
         columns, types and order. The footer of the first file
         ``parquet_data_files`` lists is read for each snapshot, by
         pyarrow in this process, no Spark job; older backups carry the
-        entry too. None (the caller's inference path) when pyarrow is
-        absent, a snapshot has no data file or is partitioned (its
+        entry too. None (the caller's inference path) when a snapshot
+        has no data file or is partitioned (its
         partition columns are typed from directory names, and each
         partitioned snapshot is its own partition root, which no
         multi-path read accepts), a footer is unreadable or lacks the
         entry, or two snapshots' schemas differ in any name, type,
         nullability or metadata."""
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:
-            return None
+        import pyarrow.parquet as pq
 
         def footer_schema(path: str) -> StructType | None:
             files = parquet_data_files(path)
@@ -339,13 +359,101 @@ class BackupEngine:
     def catalog_path(self) -> str:
         return os.path.join(self.config.backup_dir, "_catalog")
 
-    def _append_catalog(self, df: DataFrame) -> None:
-        # partitioned by generation (SURVEY §1.2/§4.1: the reference's
-        # last/daily/weekly/monthly dirs) so retention scans prune to
-        # one generation directory instead of reading the full catalog.
-        df.write.mode("append").partitionBy("generation").parquet(
-            self.catalog_path
+    def _catalog_partitions(self) -> list[str]:
+        """The catalog's ``generation=<g>`` directories, sorted; none
+        when the catalog was never written or every row was pruned.
+        Partitioned by generation (SURVEY §1.2/§4.1: the reference's
+        last/daily/weekly/monthly dirs) so retention scans prune to one
+        generation directory instead of reading the full catalog."""
+        try:
+            return sorted(
+                e.path
+                for e in os.scandir(self.catalog_path)
+                if e.is_dir() and e.name.startswith("generation=")
+            )
+        except FileNotFoundError:
+            return []
+
+    def _catalog_rows(self) -> list[CatalogRow]:
+        """The catalog rows, read by pyarrow in the driver: no Spark
+        job. They equal ``catalog().collect()``, with ``snapshot_ts``
+        as UTC microseconds; generation comes from the directory name.
+        Catalogs Spark wrote store ``snapshot_ts`` as INT96, which is
+        read at microsecond precision. An unreadable file (a truncated
+        one has no footer) raises RuntimeError: no row is skipped, and
+        no caller mistakes it for a missing snapshot."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        rows: list[CatalogRow] = []
+        for part in self._catalog_partitions():
+            generation = os.path.basename(part).partition("=")[2]
+            for f in parquet_data_files(part):
+                try:
+                    t = pq.ParquetFile(f, coerce_int96_timestamp_unit="us").read(
+                        columns=_FILE_COLUMNS
+                    )
+                except (OSError, ValueError) as e:
+                    raise RuntimeError(f"catalog file unreadable: {f}") from e
+                ts = t.column("snapshot_ts")
+                ts = ts.cast(pa.timestamp("us", ts.type.tz)).cast(pa.int64())
+                t = t.set_column(_FILE_COLUMNS.index("snapshot_ts"), "snapshot_ts", ts)
+                rows.extend(
+                    CatalogRow(generation=generation, **r) for r in t.to_pylist()
+                )
+        return rows
+
+    @staticmethod
+    def _write_catalog(rows: list[CatalogRow], dest: str) -> None:
+        """Add ``rows`` to the catalog at ``dest``: one new parquet file
+        per ``generation=<g>`` directory, ``snapshot_ts`` as
+        ``timestamp[us, tz=UTC]`` (Spark reads nanoseconds back as a
+        long under ``spark.sql.legacy.parquet.nanosAsLong``).
+
+        Each file is written under a dot-prefixed name, which neither
+        reader lists, and is checked before any is renamed into place:
+        its footer row count must equal the rows given (A11), or every
+        staged file is removed and RuntimeError raised."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        types = {"string": pa.string(), "long": pa.int64(),
+                 "timestamp": pa.timestamp("us", tz="UTC")}
+        schema = pa.schema(
+            [(c, types[t]) for c, t in _CATALOG_FIELDS if c != "generation"]
         )
+        by_generation: dict[str, list[CatalogRow]] = {}
+        for r in rows:
+            by_generation.setdefault(r.generation, []).append(r)
+        os.makedirs(dest, exist_ok=True)
+        staged: list[tuple[str, str]] = []
+        try:
+            for generation, group in by_generation.items():
+                part = os.path.join(dest, f"generation={generation}")
+                os.makedirs(part, exist_ok=True)
+                name = f"part-{uuid.uuid4().hex}.parquet"
+                tmp = os.path.join(part, "." + name)
+                staged.append((tmp, os.path.join(part, name)))
+                table = pa.Table.from_arrays(
+                    [pa.array([getattr(r, f.name) for r in group], f.type)
+                     for f in schema],
+                    schema=schema,
+                )
+                # the parquet types alone read back as ``schema``
+                pq.write_table(table, tmp, store_schema=False)
+                n = pq.read_metadata(tmp).num_rows
+                if n != len(group):
+                    raise RuntimeError(
+                        f"catalog verify failed for {part}: the staged file "
+                        f"holds {n} rows, {len(group)} were given"
+                    )
+        except BaseException:
+            for tmp, _ in staged:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+            raise
+        for tmp, final in staged:
+            os.rename(tmp, final)
 
     def catalog(self) -> DataFrame:
         """The catalog as a frame; building it launches no Spark job.
@@ -359,14 +467,7 @@ class BackupEngine:
         partition column, generation, comes last. A catalog without
         partition directories (never written, or every row pruned) is
         the empty frame."""
-        try:
-            parts = sorted(
-                e.path
-                for e in os.scandir(self.catalog_path)
-                if e.is_dir() and e.name.startswith("generation=")
-            )
-        except FileNotFoundError:
-            parts = []
+        parts = self._catalog_partitions()
         if not parts:
             return self.spark.sql(_EMPTY_CATALOG_SQL)
         return (
@@ -394,23 +495,20 @@ class BackupEngine:
     def restore(self, db: str, table: str, period_key: str | None = None) -> DataFrame:
         """Read a snapshot back — the restore path the reference leaves
         to manual `RESTORE` invocation. Defaults to the newest snapshot
-        of (db, table); pass a period_key for point-in-time restore."""
-        cat = self.catalog().filter(
-            (F.col("db") == db) & (F.col("table_name") == table)
-        )
-        if period_key is not None:
-            cat = cat.filter(F.col("period_key") == period_key)
-        newest = (
-            cat.orderBy(F.col("snapshot_ts").desc(), F.col("snapshot_id").desc())
-            .select("path")
-            .limit(1)
-            .collect()
-        )
-        if not newest:
+        of (db, table); pass a period_key for point-in-time restore.
+        The lookup reads ``_catalog_rows``: no Spark job."""
+        rows = [
+            r
+            for r in self._catalog_rows()
+            if r.db == db
+            and r.table_name == table
+            and (period_key is None or r.period_key == period_key)
+        ]
+        if not rows:
             raise FileNotFoundError(
                 f"no snapshot found for ({db}, {table}, {period_key or 'latest'})"
             )
-        return self._read_snapshots([newest[0]["path"]])
+        return self._read_snapshots([_newest(rows).path])
 
     def prune(
         self, plan: DataFrame | None = None, apply: bool = False
@@ -422,14 +520,19 @@ class BackupEngine:
 
         With ``apply=False`` (default) only returns the delete set,
         mirroring how backup.sh separates listing (``find``) from
-        action (``rm``). With ``apply=True`` it also rewrites the
-        catalog without them and then removes the snapshot dirs — the
-        `-exec rm -rvf` side; a failed rewrite removes nothing. One
-        path is registered under all four generations (backup.sh's
-        hardlink fan-out), so a dir is only removed when NO kept
-        generation row still references it. The plan is materialized
-        (catalog-sized) and collected once; the returned set reads the
-        materialized plan, so the rewrite cannot change it.
+        action (``rm``). That frame is lazy and reads the live catalog
+        files, which a later ``apply=True`` replaces: collect it before
+        applying, or reading it raises ``FileNotFoundError``.
+
+        With ``apply=True`` it also rewrites the catalog without them
+        and then removes the snapshot dirs — the `-exec rm -rvf` side;
+        a failed rewrite removes nothing, and an empty delete set
+        rewrites and removes nothing. One path is registered under all
+        four generations (backup.sh's hardlink fan-out), so a dir is
+        only removed when NO kept generation row still references it.
+        The plan is materialized (catalog-sized) and collected once;
+        the returned set reads the materialized plan, so the rewrite
+        cannot change it.
         """
         plan = plan if plan is not None else self.retention_plan()
         if not apply:
@@ -440,6 +543,8 @@ class BackupEngine:
         rows = plan.select("db", "generation", "path", "snapshot_id", "keep").collect()
         kept = {(db, gen, path) for db, gen, path, _, keep in rows if keep == 1}
         deleted = [r for r in rows if r[:3] not in kept]
+        if not deleted:
+            return prune_delete_set(plan)
         doomed = {r.path for r in deleted} - {path for _, _, path in kept}
         backup_root = os.path.realpath(self.config.backup_dir)
         real_paths = {p: os.path.realpath(p) for p in sorted(doomed)}
@@ -460,20 +565,23 @@ class BackupEngine:
     def _rewrite_catalog_excluding(
         self, snapshot_ids: set[int], doomed_paths: set[str]
     ) -> None:
-        """Staged-atomic catalog rewrite, one filter dropping the rows
-        in ``snapshot_ids`` (the per-generation "hardlink" entries,
-        mirroring the per-generation-dir rm) and any row on a
-        ``doomed_paths`` path (superseded rows that would otherwise
-        dangle). The staged catalog is checked like a snapshot
-        (``write_verified``) before it replaces the old one."""
-        survivors = self.catalog().filter(
-            ~F.col("snapshot_id").isin(sorted(snapshot_ids))
-            & ~F.col("path").isin(sorted(doomed_paths))
-        )
+        """Staged-atomic catalog rewrite, one filter of
+        ``_catalog_rows`` dropping the rows in ``snapshot_ids`` (the
+        per-generation "hardlink" entries, mirroring the
+        per-generation-dir rm) and any row on a ``doomed_paths`` path
+        (superseded rows that would otherwise dangle). The survivors
+        are written to ``<catalog>-new`` by ``_write_catalog``, which
+        checks each file's footer count, before it replaces the old
+        catalog."""
+        survivors = [
+            r
+            for r in self._catalog_rows()
+            if r.snapshot_id not in snapshot_ids and r.path not in doomed_paths
+        ]
         staging = self.catalog_path + "-new"
-        write_verified(
-            survivors, staging, "catalog", self.catalog_path, ["generation"]
-        )
+        if os.path.exists(staging):  # a leftover of an interrupted rewrite
+            shutil.rmtree(staging)
+        self._write_catalog(survivors, staging)
         shutil.rmtree(self.catalog_path)
         os.rename(staging, self.catalog_path)
 
@@ -490,20 +598,25 @@ class BackupEngine:
         - ``none``: nothing is written (backup.sh:113).
 
         Returns the pointer paths written, so ``restore_latest`` can
-        resolve "latest" from the filesystem alone.
+        resolve "latest" from the filesystem alone. The targets are
+        ``latest()``'s rows, worked out from ``_catalog_rows`` in the
+        driver: no Spark job.
         """
         if self.config.latest_type == "none":
             return []
+        by_key: dict[tuple[str, str], list[CatalogRow]] = {}
+        for r in self._catalog_rows():
+            by_key.setdefault((r.db, r.generation), []).append(r)
         written: list[str] = []
-        for r in self.latest().collect():  # catalog-scale
-            gen_dir = os.path.join(self.config.backup_dir, r["generation"])
+        for (db, generation), rows in sorted(by_key.items()):
+            gen_dir = os.path.join(self.config.backup_dir, generation)
             os.makedirs(gen_dir, exist_ok=True)
-            ptr = os.path.join(gen_dir, r["pointer_name"])
+            ptr = os.path.join(gen_dir, f"{db}-latest{self.config.suffix}")
             if os.path.islink(ptr) or os.path.isfile(ptr):
                 os.remove(ptr)
             elif os.path.isdir(ptr):
                 shutil.rmtree(ptr)
-            target = r["latest_target"]
+            target = _newest(rows).path
             if self.config.latest_type == "symlink":
                 os.symlink(target, ptr)
             else:  # hardlink
@@ -532,7 +645,7 @@ class BackupEngine:
         return {
             "ok": ok and streams["ok"],
             "backup_dir": self.config.backup_dir,
-            "catalog_rows": self.catalog().count(),
+            "catalog_rows": len(self._catalog_rows()),
             "streams": streams,
         }
 
@@ -552,3 +665,9 @@ class BackupEngine:
                 f"(latest_type={self.config.latest_type!r})"
             )
         return self._read_snapshots([real])
+
+
+def _newest(rows: list[CatalogRow]) -> CatalogRow:
+    """The newest of ``rows``: the greatest (snapshot_ts, snapshot_id),
+    the order ``latest_pointers`` and ``keep_newest_per_period`` use."""
+    return max(rows, key=lambda r: (r.snapshot_ts, r.snapshot_id))

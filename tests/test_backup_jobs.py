@@ -4,8 +4,9 @@ Each count is read back from the status tracker for a job group set
 around one call, so a change that adds a pass over the data (a count
 before the write, a reread of the staged files), runs catalog-sized
 work as Spark jobs (schema inference of the catalog or of a restored
-snapshot, a distinct/sort of its paths), or appends to the catalog
-more than once per run fails here in the quick tier.
+snapshot, a catalog lookup, the catalog append or rewrite, the latest
+pointers), or appends to the catalog more than once per run fails
+here in the quick tier.
 """
 
 from __future__ import annotations
@@ -68,25 +69,26 @@ def test_catalog_read_launches_no_job(spark, tmp_path):
 
 
 def test_restore_builds_launch_no_inference_job(spark, tmp_path):
-    """Building a restore costs the catalog lookup only: the snapshot
-    schema comes from the parquet footers, not from an inference job."""
+    """Building a restore launches no job: the catalog lookup reads the
+    catalog in the driver, and the snapshot schema comes from the
+    parquet footers, not from an inference job."""
     engine = _engine(spark, tmp_path / "b")
     for day in (1, 2):
         engine.run_backup({"db0": {"t": _source(spark, 5 * day)}}, now=dt.datetime(2024, 1, day))
-    assert _jobs(spark, lambda: engine.restore("db0", "t")) == 1
-    assert _jobs(spark, lambda: engine.restore_incremental("db0", "t")) == 1
+    assert _jobs(spark, lambda: engine.restore("db0", "t")) == 0
+    assert _jobs(spark, lambda: engine.restore_incremental("db0", "t")) == 0
     assert _jobs(spark, lambda: engine.restore_latest("db0")) == 0
 
 
 def test_a_multi_table_run_makes_one_catalog_append(spark, tmp_path, monkeypatch):
     appends = []
-    real = BackupEngine._append_catalog
+    real = BackupEngine._write_catalog
 
-    def counting_append(self, df):
-        appends.append(df)
-        real(self, df)
+    def counting_write(rows, dest):
+        appends.append(rows)
+        real(rows, dest)
 
-    monkeypatch.setattr(BackupEngine, "_append_catalog", counting_append)
+    monkeypatch.setattr(BackupEngine, "_write_catalog", staticmethod(counting_write))
     engine = BackupEngine(spark, BackupConfig(
         host="h", dbs="db0,db1", user="u", password="p", backup_dir=str(tmp_path),
     ))
@@ -106,11 +108,11 @@ def test_backup_and_incremental_runs_job_counts(spark, tmp_path):
 
     Per table: run_backup launches 1 job (the snapshot write).
     run_incremental's first run launches 1 too (the `_new_rows` lookup
-    collects the empty catalog, a JVM-local relation, without a job);
-    its second launches 5 (the catalog path collect, then the diff's
-    write, which runs as 4 jobs under AQE; the restore read knows its
-    schema from the footers). Per run: the one catalog append launches
-    1 and the latest pointers 2 (the pointer query collect).
+    finds no catalog); its second launches 4 (the diff's write, which
+    runs as 4 jobs under AQE; the catalog lookup is read in the driver
+    and the restore read knows its schema from the footers). Per run,
+    the catalog append (a collect of a local relation, then a pyarrow
+    write) and the latest pointers launch none.
     """
     full = _engine(spark, tmp_path / "full")
     incremental = _engine(spark, tmp_path / "incr")
@@ -124,18 +126,18 @@ def test_backup_and_incremental_runs_job_counts(spark, tmp_path):
             for i in range(2)
         ]
 
-    assert runs(full.run_backup) == [2 * 1 + 3, 2 * 1 + 3]
-    assert runs(incremental.run_incremental) == [2 * 1 + 3, 2 * 5 + 3]
+    assert runs(full.run_backup) == [2 * 1, 2 * 1]
+    assert runs(incremental.run_incremental) == [2 * 1, 2 * 4]
 
 
 def test_prune_plans_the_retention_window_once(spark, tmp_path):
     """Two tables, two nights, a policy that expires the first night.
 
-    Materializing the plan launches 5 jobs under AQE, its one collect
-    (kept rows, delete ids and doomed paths) 1, and the catalog
-    rewrite 1 (the staged write; its verify reads footers). Planning
-    the retention window again for the delete set or the kept paths
-    adds jobs here."""
+    Materializing the plan launches 5 jobs under AQE and its one
+    collect (kept rows, delete ids and doomed paths) 1; the catalog
+    rewrite is read and written in the driver. Planning the retention
+    window again for the delete set or the kept paths adds jobs
+    here."""
     engine = BackupEngine(spark, BackupConfig(
         host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
         retention=RetentionPolicy(keep_mins=720, keep_days=0),
@@ -143,5 +145,5 @@ def test_prune_plans_the_retention_window_once(spark, tmp_path):
     for day in (1, 2):
         tables = {"db0": {"a": _source(spark, 5), "b": _source(spark, 6)}}
         engine.run_backup(tables, now=dt.datetime(2024, 1, day))
-    assert _jobs(spark, lambda: engine.prune(engine.retention_plan(), apply=True)) == 7
+    assert _jobs(spark, lambda: engine.prune(engine.retention_plan(), apply=True)) == 6
     assert sorted(os.listdir(tmp_path / "db0")) == ["a-20240102-000000", "b-20240102-000000"]

@@ -7,14 +7,22 @@ registered: all nine columns, ``snapshot_id`` included, whatever
 Python's local zone is and whatever characters the snapshot paths
 hold. Reading the catalog must not log Spark's "All paths were
 ignored" warning, which the hidden ``_catalog`` root used to trigger.
+
+The engine reads the catalog in the driver (``_catalog_rows``) for
+its restore lookups and latest pointers, while ``catalog()`` serves
+the same rows to Spark: the two readers must agree row for row, on
+catalogs Spark wrote too, and choose the same newest snapshot on tied
+timestamps. An unreadable catalog file fails every reader loudly.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import sys
 import time
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,6 +30,9 @@ from clickhousebackup_spark.backup.catalog import period_key_expr
 from clickhousebackup_spark.backup.config import GENERATIONS, BackupConfig, RetentionPolicy
 from clickhousebackup_spark.backup.snapshot import SnapshotResult
 from clickhousebackup_spark.engine import CATALOG_COLUMNS, CATALOG_SCHEMA, BackupEngine
+from clickhousebackup_spark.sources.readers import ConnectorUnavailable
+from clickhousebackup_spark.tables import parquet_data_files
+from tests.test_engine_prune import _tree
 
 
 @pytest.fixture(params=["UTC", "America/New_York"])
@@ -34,10 +45,11 @@ def local_tz(request, monkeypatch):
     time.tzset()
 
 
-def _reference(spark, runs):
+def _reference(spark, runs, seq=0):
     """The catalog rows as the per-table ``createDataFrame`` build made
-    them: ids in results order, then ``GENERATIONS`` order."""
-    rows, seq = [], 0
+    them: ids from ``seq`` in results order, then ``GENERATIONS``
+    order."""
+    rows = []
     for results, now in runs:
         for res in results:
             for gen in GENERATIONS:
@@ -158,3 +170,138 @@ def test_catalog_read_equals_the_catalog_root_read(spark, tmp_path):
     empty = engine.catalog()
     assert empty.collect() == []
     assert empty.schema == spark.createDataFrame([], CATALOG_SCHEMA).schema
+
+
+def _mixed_catalog(spark, tmp_path) -> BackupEngine:
+    """A catalog holding a Spark-written append (INT96 timestamps, a
+    ``_SUCCESS`` file) beside the engine's own appends. Every row of
+    db0.t shares one timestamp: the legacy rows' ids lie between the
+    engine's, so ties go both ways. One path holds a quote."""
+    backup_dir = tmp_path / "it's a dir"
+    backup_dir.mkdir()
+    engine = BackupEngine(spark, BackupConfig(
+        host="h", dbs="db0,db1", user="u", password="p", backup_dir=str(backup_dir),
+    ))
+    tie = dt.datetime(2024, 1, 5, 3, 4, 5, 678901)
+    legacy = [
+        SnapshotResult("db0", "t", "k", str(backup_dir / "legacy-t"), 3),
+        SnapshotResult("db1", "u", "k", str(backup_dir / "legacy-u"), 4),
+    ]
+    _reference(spark, [(legacy, tie)], seq=6).write.mode("append").partitionBy(
+        "generation"
+    ).parquet(engine.catalog_path)
+    engine._register([
+        SnapshotResult("db0", "t", "k", str(backup_dir / "t-a"), 5),
+        SnapshotResult("db0", "t", "k", str(backup_dir / "t-it's"), 6),
+    ], tie)
+    engine.run_backup(
+        {"db1": {"u": spark.range(2).select(F.col("id").alias("k"))}},
+        now=dt.datetime(2024, 2, 1),
+    )
+    # ids above the legacy rows': this one wins every tie
+    engine._register([SnapshotResult("db0", "t", "k", str(backup_dir / "t-late"), 7)], tie)
+    # the legacy append really is Spark's: INT96 and a _SUCCESS marker
+    assert os.path.exists(os.path.join(engine.catalog_path, "_SUCCESS"))
+    schemas = [pq.ParquetFile(f).schema for f in parquet_data_files(engine.catalog_path)]
+    kinds = {s.column(s.names.index("snapshot_ts")).physical_type for s in schemas}
+    assert kinds == {"INT96", "INT64"}
+    return engine
+
+
+def _micros_rows(df):
+    return sorted(
+        tuple(r)
+        for r in df.select(*[
+            F.unix_micros(c).alias(c) if c == "snapshot_ts" else c
+            for c in CATALOG_COLUMNS
+        ]).collect()
+    )
+
+
+def test_driver_catalog_rows_equal_the_spark_read(spark, tmp_path):
+    engine = _mixed_catalog(spark, tmp_path)
+    got = engine._catalog_rows()
+    assert len(got) == (2 + 2 + 1 + 1) * len(GENERATIONS)
+    assert sorted(tuple(r) for r in got) == _micros_rows(engine.catalog())
+    assert engine.health()["catalog_rows"] == len(got)
+
+
+def test_driver_lookups_equal_the_spark_answers_on_ties(spark, tmp_path, monkeypatch):
+    """``materialize_latest`` points where ``latest()`` does, and
+    ``restore``/``restore_incremental`` read the paths the catalog
+    frame's orderBy/limit and distinct path list give."""
+    engine = _mixed_catalog(spark, tmp_path)
+    written = engine.materialize_latest()
+    pointers = {
+        (r["generation"], r["pointer_name"]): r["latest_target"]
+        for r in engine.latest().collect()
+    }
+    assert len(written) == len(pointers) == 2 * len(GENERATIONS)
+    assert {
+        (os.path.basename(os.path.dirname(p)), os.path.basename(p)): os.readlink(p)
+        for p in written
+    } == pointers
+
+    monkeypatch.setattr(engine, "_read_snapshots", lambda paths: paths)
+    cat = engine.catalog()
+    for db, table in (("db0", "t"), ("db1", "u")):
+        rows = cat.filter((F.col("db") == db) & (F.col("table_name") == table))
+        for period_key in (None, *sorted({r.period_key for r in rows.collect()})):
+            keyed = rows if period_key is None else rows.filter(F.col("period_key") == period_key)
+            newest = (
+                keyed.orderBy(F.col("snapshot_ts").desc(), F.col("snapshot_id").desc())
+                .select("path").limit(1).collect()
+            )
+            assert engine.restore(db, table, period_key) == [newest[0]["path"]]
+        paths = sorted(r["path"] for r in rows.select("path").distinct().collect())
+        assert engine.restore_incremental(db, table) == paths
+    assert engine.restore("db0", "t")[0].endswith("t-late")
+    assert engine.restore_incremental("db0", "t", "20240105-030405") == sorted(
+        str(tmp_path / "it's a dir" / n) for n in ("legacy-t", "t-a", "t-it's", "t-late")
+    )
+
+
+def test_truncated_catalog_file_fails_restore_and_backup(spark, tmp_path):
+    engine = BackupEngine(spark, BackupConfig(
+        host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
+    ))
+    src = {"db0": {"t": spark.range(3).select(F.col("id").alias("k"))}}
+    for day in (1, 2):
+        engine.run_backup(src, now=dt.datetime(2024, 1, day))
+    victim = parquet_data_files(engine.catalog_path)[0]
+    with open(victim, "rb") as f:
+        head = f.read()[:100]
+    with open(victim, "wb") as f:
+        f.write(head)
+    with pytest.raises(RuntimeError, match="catalog file unreadable"):
+        engine.restore("db0", "t")
+    with pytest.raises(RuntimeError, match="catalog file unreadable"):
+        engine.restore_incremental("db0", "t")
+    with pytest.raises(RuntimeError, match="catalog file unreadable"):
+        engine.run_backup(src, now=dt.datetime(2024, 1, 3))
+    with pytest.raises(RuntimeError, match="catalog file unreadable"):
+        engine.run_incremental(src, now=dt.datetime(2024, 1, 4))
+
+
+def test_a_short_catalog_file_is_never_published(spark, tmp_path, monkeypatch):
+    """The footer check of ``_write_catalog``: a file holding fewer
+    rows than it was given raises, and no file of the write (staged
+    or renamed) is left in the catalog."""
+    engine = BackupEngine(spark, BackupConfig(
+        host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
+    ))
+    engine.run_backup({"db0": {"t": spark.range(3)}}, now=dt.datetime(2024, 1, 1))
+    before = _tree(engine.catalog_path)
+    real = pq.write_table
+    monkeypatch.setattr(pq, "write_table", lambda t, where, **kw: real(t.slice(1), where, **kw))
+    with pytest.raises(RuntimeError, match="catalog verify failed"):
+        engine.run_backup({"db0": {"t": spark.range(3)}}, now=dt.datetime(2024, 1, 2))
+    assert _tree(engine.catalog_path) == before
+
+
+def test_engine_without_pyarrow_raises_connector_unavailable(spark, tmp_path, monkeypatch):
+    monkeypatch.setitem(sys.modules, "pyarrow", None)
+    with pytest.raises(ConnectorUnavailable, match="pyarrow"):
+        BackupEngine(spark, BackupConfig(
+            host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
+        ))

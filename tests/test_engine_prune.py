@@ -1,7 +1,8 @@
 """``BackupEngine.prune(apply=True)`` never leaves a catalog row that
 points at a removed snapshot: the rewritten catalog is published
-before any directory is removed, and a plan that keeps nothing
-rewrites the catalog to empty."""
+before any directory is removed, a plan that keeps nothing rewrites
+the catalog to empty, and a plan that deletes nothing leaves the
+catalog files untouched."""
 
 from __future__ import annotations
 
@@ -75,3 +76,26 @@ def test_prune_removes_every_table_s_expired_snapshot(spark, tmp_path):
         assert sorted(os.listdir(tmp_path / "db0")) == [f"lineitem-{key}", f"orders-{key}"]
         cataloged = {r["path"] for r in eng.catalog().select("path").collect()}
         assert cataloged == {str(tmp_path / "db0" / n) for n in os.listdir(tmp_path / "db0")}
+
+
+def _tree(root):
+    """Every file under ``root`` with its mtime."""
+    return sorted(
+        (os.path.relpath(os.path.join(d, f), root), os.stat(os.path.join(d, f)).st_mtime_ns)
+        for d, _, files in os.walk(root)
+        for f in files
+    )
+
+
+def test_prune_with_nothing_to_delete_rewrites_nothing(spark, tmp_path):
+    eng = BackupEngine(spark, BackupConfig(
+        host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
+    ))
+    eng.run_backup({"db0": {"t": spark.range(5)}}, now=dt.datetime(2024, 1, 1))
+    catalog, snapshots = _tree(eng.catalog_path), _tree(tmp_path / "db0")
+    assert catalog and snapshots
+
+    assert eng.prune(apply=True).count() == 0
+    assert _tree(eng.catalog_path) == catalog
+    assert _tree(tmp_path / "db0") == snapshots
+    assert not os.path.exists(eng.catalog_path + "-new")
