@@ -18,6 +18,12 @@ delegates to ClickHouse behind `backup.sh:45`.
 Every run is the reference's lifecycle (backup.sh:16-130): pre hooks →
 per-db snapshot loop → generation propagation → latest pointers →
 retention prune → post hooks, with the error trap firing error hooks.
+Where ``backup.sh`` snapshots one db after another, a run here takes
+its tables' snapshots at the same time: each table's pipeline (the
+incremental diff, then the snapshot write) runs on a driver thread, at
+most ``defaultParallelism`` at once, and every thread carries the
+caller's job group, so a table's small Spark jobs overlap the others'
+fixed per-job cost instead of queueing behind it (``_run``).
 
 The catalog (``<backup_dir>/_catalog``, one ``generation=<g>``
 directory per generation) is driver-side metadata, as the reference's
@@ -37,11 +43,13 @@ import os
 import shutil
 import uuid
 from collections import namedtuple
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from clickhousebackup_spark.backup.catalog import period_key_expr
 from clickhousebackup_spark.backup.config import (
@@ -150,33 +158,75 @@ class BackupEngine:
         now,
         incremental: bool,
     ) -> list[SnapshotResult]:
-        """The one run loop (backup.sh:16-130): pre hooks, then per db
-        and table a snapshot, then ONE catalog append registering every
-        snapshot of the run under all four generations, then the latest
-        pointers, then post hooks; the error trap fires error hooks.
+        """The one run loop (backup.sh:16-130): pre hooks, then a
+        snapshot of every table of every configured db, then ONE catalog
+        append registering every snapshot of the run under all four
+        generations, then the latest pointers, then post hooks; the
+        error trap fires error hooks.
 
-        The append runs in a ``finally`` after the db/table loop: when
-        table k fails, the snapshots of tables 1..k-1 are published and
-        cataloged before the error propagates to the hooks, the same
-        catalog state a per-table registration would have left.
-        ``snapshot_id``s follow the results order, then ``GENERATIONS``
-        order. A table's ``_new_rows`` lookup never needs an earlier
-        table of the same run: (db, table) is unique within a run."""
+        The tables' pipelines (``_new_rows`` when incremental, then
+        ``snapshot_table``) run concurrently on a thread pool of
+        ``min(n_tables, defaultParallelism)`` threads, so their Spark
+        jobs share the scheduler. Each task gets its own
+        ``inheritable_thread_target`` wrap, which clones the caller's
+        local properties (job group, description, interruptOnCancel)
+        into the worker thread: one shared clone would be one
+        ``java.util.Properties`` on which every thread's
+        ``SQLExecution`` sets and clears ``spark.sql.execution.id``.
+        A table's ``_new_rows`` lookup never needs another table of the
+        same run: (db, table) is unique within a run. The results, and
+        so the ``snapshot_id``s, follow db/table order whatever order
+        the pipelines finish in, then ``GENERATIONS`` order.
+
+        Failure contract: every table is attempted, and a failing table
+        does not stop the others. Every snapshot published is
+        registered by the one append. After the append the first error
+        in db/table order is raised, with each later table's error
+        attached as a note, so the error hooks see the catalog that
+        holds every published snapshot."""
         now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         key = now.strftime("%Y%m%d-%H%M%S")  # backup.sh:26
+        tables = [
+            (db, tname, df)
+            for db in self.config.db_list  # backup.sh:24
+            for tname, df in tables_by_db.get(db, {}).items()
+        ]
+
+        def pipeline(db: str, tname: str, df: DataFrame) -> SnapshotResult:
+            if incremental:
+                df = self._new_rows(db, tname, df)
+            return snapshot_table(df, self.config.backup_dir, db, tname, key)
 
         def job() -> list[SnapshotResult]:
-            results: list[SnapshotResult] = []
+            workers = min(len(tables), self.spark.sparkContext.defaultParallelism)
+            futures = []
             try:
-                for db in self.config.db_list:  # backup.sh:24
-                    for tname, df in tables_by_db.get(db, {}).items():
-                        if incremental:
-                            df = self._new_rows(db, tname, df)
-                        results.append(
-                            snapshot_table(df, self.config.backup_dir, db, tname, key)
-                        )
+                with ThreadPoolExecutor(
+                    max(workers, 1), thread_name_prefix="snapshot"
+                ) as pool:
+                    for db, tname, df in tables:
+                        task = inheritable_thread_target(self.spark)(pipeline)
+                        futures.append(pool.submit(task, db, tname, df))
             finally:
+                # all done unless the caller itself was interrupted
+                results = [
+                    f.result()
+                    for f in futures
+                    if f.done() and not f.cancelled() and f.exception() is None
+                ]
                 self._register(results, now)
+            failed = [
+                (db, tname, f.exception())
+                for (db, tname, _), f in zip(tables, futures)
+                if f.exception() is not None
+            ]
+            if failed:
+                error = failed[0][2]
+                for db, tname, e in failed[1:]:
+                    error.add_note(
+                        f"snapshot of {db}.{tname} also failed: {type(e).__name__}: {e}"
+                    )
+                raise error
             self.materialize_latest()  # backup.sh:99-115, per run
             return results
 
@@ -222,12 +272,21 @@ class BackupEngine:
         literals; ``period_key_expr`` spells the period keys. Spark
         folds the relation and its projection into a local relation, so
         the collect that hands the rows to the driver launches no job
-        (``createDataFrame`` would ship them through Python workers)."""
+        (``createDataFrame`` would ship them through Python workers).
+
+        The ids continue past both this engine's count and the largest
+        ``snapshot_id`` already cataloged (read in the driver): an
+        engine over a ``backup_dir`` that an earlier engine or process
+        wrote starts its count at 0 too, and ``prune`` deletes catalog
+        rows by id."""
         if not results:
             return
         n_gen = len(GENERATIONS)
-        seq = self._snapshot_seq
-        self._snapshot_seq += n_gen * len(results)
+        seq = max(
+            self._snapshot_seq,
+            1 + max((r.snapshot_id for r in self._catalog_rows()), default=-1),
+        )
+        self._snapshot_seq = seq + n_gen * len(results)
         args = {"now": now}
         for i, res in enumerate(results):
             args.update({f"db{i}": res.db, f"t{i}": res.table, f"p{i}": res.path})

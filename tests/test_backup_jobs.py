@@ -112,7 +112,10 @@ def test_backup_and_incremental_runs_job_counts(spark, tmp_path):
     runs as 4 jobs under AQE; the catalog lookup is read in the driver
     and the restore read knows its schema from the footers). Per run,
     the catalog append (a collect of a local relation, then a pyarrow
-    write) and the latest pointers launch none.
+    write) and the latest pointers launch none. The two tables'
+    pipelines run on the engine's worker threads: their jobs count here
+    only through the job group the threads inherit, and the counts show
+    the threads add no job.
     """
     full = _engine(spark, tmp_path / "full")
     incremental = _engine(spark, tmp_path / "incr")

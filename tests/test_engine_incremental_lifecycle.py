@@ -98,3 +98,32 @@ def test_failing_table_keeps_earlier_tables_cataloged(spark, engine, kind):
     cat = engine.catalog().collect()
     assert {(r["db"], r["table_name"]) for r in cat} == {("db0", "t")}
     assert all(os.path.isdir(r["path"]) for r in cat)
+
+
+@pytest.mark.parametrize("kind", ["run_backup", "run_incremental"])
+def test_failing_first_table_keeps_later_tables_cataloged(spark, engine, kind):
+    """Every table is attempted: a later table that succeeds is
+    published and cataloged, and the error hooks see its rows."""
+    calls = []
+    engine.add_hook(lambda a: calls.append((a, engine.catalog().count())))
+    tables = _tables(spark, 3)
+    tables["db0"] = {"t": spark.range(3).filter(F.expr("assert_true(id < 0) IS NULL"))}
+    with pytest.raises(Exception):
+        getattr(engine, kind)(tables, now=dt.datetime(2024, 1, 1))
+    assert calls == [("pre-backup", 0), ("error", len(GENERATIONS))]
+    cat = engine.catalog().collect()
+    assert {(r["db"], r["table_name"]) for r in cat} == {("db1", "u")}
+    assert all(os.path.isdir(r["path"]) for r in cat)
+
+
+def test_first_failure_is_raised_with_the_later_ones_as_notes(spark, engine):
+    def broken(msg):
+        return spark.range(3).filter(F.expr(f"assert_true(id < 0, '{msg}') IS NULL"))
+
+    tables = {"db0": {"t": broken("t broke")}, "db1": {"u": broken("u broke")}}
+    with pytest.raises(Exception, match="t broke") as info:
+        engine.run_backup(tables, now=dt.datetime(2024, 1, 1))
+    notes = getattr(info.value, "__notes__", [])
+    assert len(notes) == 1 and notes[0].startswith("snapshot of db1.u also failed")
+    assert "u broke" in notes[0]
+    assert engine.catalog().count() == 0

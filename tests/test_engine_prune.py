@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -99,3 +100,30 @@ def test_prune_with_nothing_to_delete_rewrites_nothing(spark, tmp_path):
     assert _tree(eng.catalog_path) == catalog
     assert _tree(tmp_path / "db0") == snapshots
     assert not os.path.exists(eng.catalog_path + "-new")
+
+
+def test_two_engines_over_one_backup_dir_never_reuse_snapshot_ids(spark, tmp_path):
+    """A second engine over the same ``backup_dir`` (another process, or
+    a restart) numbers its snapshots past the cataloged ids, so a prune
+    that deletes the first night's rows by id keeps the second's."""
+    config = BackupConfig(
+        host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
+        retention=RetentionPolicy(keep_mins=720),
+    )
+    t = spark.range(5).select(F.col("id").alias("k"))
+    BackupEngine(spark, config).run_backup({"db0": {"a": t}}, now=dt.datetime(2024, 1, 1))
+    eng = BackupEngine(spark, config)
+    day2 = eng.run_backup({"db0": {"a": t, "b": t}}, now=dt.datetime(2024, 1, 2))
+
+    ids = [r.snapshot_id for r in eng._catalog_rows()]
+    assert len(ids) == len(set(ids)) == 3 * 4
+
+    eng.prune(apply=True)
+    ids = [r.snapshot_id for r in eng._catalog_rows()]
+    assert len(ids) == len(set(ids))
+    a2 = day2[0].path
+    survivors = {(r.table_name, r.generation) for r in eng._catalog_rows() if r.path == a2}
+    assert {("a", "last"), ("a", "daily")} <= survivors
+    restored = eng.restore_incremental("db0", "a", until_period_key=day2[0].period_key)
+    assert {os.path.dirname(urlparse(f).path) for f in restored.inputFiles()} == {a2}
+    assert restored.count() == 5
