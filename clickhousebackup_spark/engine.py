@@ -27,12 +27,13 @@ fixed per-job cost instead of queueing behind it (``_run``).
 
 The catalog (``<backup_dir>/_catalog``, one ``generation=<g>``
 directory per generation) is driver-side metadata, as the reference's
-directory listing is: the engine reads and writes its rows with
-pyarrow (``_catalog_rows``, ``_write_catalog``), so registering a
-run, the latest pointers, the restore path lookups and the prune
-rewrite launch no Spark job. Spark reads the snapshot data and serves
-the relational surface over the catalog (``catalog()``,
-``generation_state()``, ``latest()``, ``retention_plan()``).
+directory listing is: only the driver reads (``_catalog_table``) and
+writes (``_write_catalog``) its files, with pyarrow and one schema,
+``CATALOG_SCHEMA``, so registration, the latest pointers, the restore
+lookups and the prune rewrite launch no Spark job. The relational
+surface (``catalog()``, ``generation_state()``, ``latest()``,
+``retention_plan()``) runs over that table shipped to Spark as a local
+relation.
 """
 
 from __future__ import annotations
@@ -66,29 +67,32 @@ from clickhousebackup_spark.backup.retention import (
 )
 from clickhousebackup_spark.backup.snapshot import SnapshotResult, snapshot_table
 from clickhousebackup_spark.exprs import row_hash
-from clickhousebackup_spark.scratch import materialize
 from clickhousebackup_spark.sources.readers import ConnectorUnavailable
 from clickhousebackup_spark.tables import load_table, parquet_data_files
 
+#: the catalog's one schema, for its files, frames and driver rows: the
+#: columns of a catalog file, then generation, which names the file's
+#: ``generation=<g>`` directory
 CATALOG_SCHEMA = (
-    "db string, table_name string, generation string, period_key string, "
-    "snapshot_ts timestamp, snapshot_id long, path string, content_hash string, "
-    "size_bytes long"
+    StructType()
+    .add("db", "string").add("table_name", "string").add("period_key", "string")
+    .add("snapshot_ts", "timestamp").add("snapshot_id", "long").add("path", "string")
+    .add("content_hash", "string").add("size_bytes", "long").add("generation", "string")
 )
-_CATALOG_FIELDS = [f.split() for f in CATALOG_SCHEMA.split(", ")]
-CATALOG_COLUMNS = [c for c, _ in _CATALOG_FIELDS]
-#: the empty catalog as a JVM relation: collecting it launches no job
-#: (``createDataFrame([])`` would run one on Python workers)
-_EMPTY_CATALOG_SQL = "SELECT {} WHERE false".format(
-    ", ".join(f"CAST(NULL AS {t}) AS {c}" for c, t in _CATALOG_FIELDS)
-)
+CATALOG_COLUMNS = CATALOG_SCHEMA.names
 
 #: one catalog row as the driver holds it; ``snapshot_ts`` is UTC
 #: microseconds since the epoch (Spark's ``unix_micros``)
 CatalogRow = namedtuple("CatalogRow", CATALOG_COLUMNS)
-#: the columns of a catalog file: the partition column, generation,
-#: lives in the ``generation=<g>`` directory name
-_FILE_COLUMNS = [c for c in CATALOG_COLUMNS if c != "generation"]
+
+
+def _arrow_catalog_schema():
+    """``CATALOG_SCHEMA`` in Arrow: ``snapshot_ts`` is
+    ``timestamp[us, tz=UTC]``, which Spark reads as its UTC instant."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(CATALOG_SCHEMA)
+
 
 #: footer key-value entry in which Spark's parquet writer stores the
 #: exact Spark schema (StructType JSON) of the rows it wrote
@@ -184,7 +188,9 @@ class BackupEngine:
         in db/table order is raised, with each later table's error
         attached as a note, so the error hooks see the catalog that
         holds every published snapshot."""
-        now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        now = now or dt.datetime.now(dt.timezone.utc)
+        if now.tzinfo is not None:  # a naive ``now`` is UTC already
+            now = now.astimezone(dt.timezone.utc).replace(tzinfo=None)
         key = now.strftime("%Y%m%d-%H%M%S")  # backup.sh:26
         tables = [
             (db, tname, df)
@@ -266,13 +272,11 @@ class BackupEngine:
         """Append the four generation rows of every snapshot in
         ``results`` to the catalog in one ``_write_catalog``.
 
-        The rows are one parsed ``VALUES`` relation built in the JVM:
-        db, table, path and ``now`` are bound parameters (no quoting of
-        user text), the ids, counts and generation names are inline
-        literals; ``period_key_expr`` spells the period keys. Spark
-        folds the relation and its projection into a local relation, so
-        the collect that hands the rows to the driver launches no job
-        (``createDataFrame`` would ship them through Python workers).
+        The rows are an Arrow table of ``CATALOG_SCHEMA``, ``now`` a
+        naive UTC datetime. Spark adds the period keys
+        (``period_key_expr``) and the content hashes over that table as
+        a local relation, which it folds with the projection, so the
+        collect launches no job; user text is never spliced into SQL.
 
         The ids continue past both this engine's count and the largest
         ``snapshot_id`` already cataloged (read in the driver): an
@@ -281,36 +285,37 @@ class BackupEngine:
         rows by id."""
         if not results:
             return
+        import pyarrow as pa
+
         n_gen = len(GENERATIONS)
         seq = max(
             self._snapshot_seq,
             1 + max((r.snapshot_id for r in self._catalog_rows()), default=-1),
         )
         self._snapshot_seq = seq + n_gen * len(results)
-        args = {"now": now}
-        for i, res in enumerate(results):
-            args.update({f"db{i}": res.db, f"t{i}": res.table, f"p{i}": res.path})
-        values = ", ".join(
-            f"(:db{i}, :t{i}, '{gen}', '', :now, {seq + n_gen * i + g}L, "
-            f":p{i}, '', {res.n_rows}L)"
-            for g, gen in enumerate(GENERATIONS)
-            for i, res in enumerate(results)
+        rows = pa.Table.from_pylist(
+            [  # period_key and content_hash are filled in below
+                {"db": res.db, "table_name": res.table, "snapshot_ts": now,
+                 "snapshot_id": seq + n_gen * i + g, "path": res.path,
+                 "size_bytes": res.n_rows, "generation": gen}
+                for g, gen in enumerate(GENERATIONS)
+                for i, res in enumerate(results)
+            ],
+            schema=_arrow_catalog_schema(),
         )
-        rows = self.spark.sql(
-            f"SELECT * FROM VALUES {values} AS c({', '.join(CATALOG_COLUMNS)})",
-            args=args,
-        )
-        rows = (
-            rows.withColumn("period_key", period_key_expr("snapshot_ts", "generation"))
-            .withColumn(
-                "content_hash",
+        keys = (
+            self.spark.createDataFrame(rows, CATALOG_SCHEMA)
+            .withColumn("period_key", period_key_expr("snapshot_ts", "generation"))
+            .select(
+                "period_key",
                 F.md5(F.concat_ws("|", "db", "generation", "period_key", "path")),
             )
-            .withColumn("snapshot_ts", F.unix_micros("snapshot_ts"))
+            .collect()
         )
-        self._write_catalog(
-            [CatalogRow(*r) for r in rows.collect()], self.catalog_path
-        )
+        for name, values in zip(("period_key", "content_hash"), zip(*keys)):
+            i = rows.schema.get_field_index(name)
+            rows = rows.set_column(i, rows.field(i), pa.array(values, pa.string()))
+        self._write_catalog(rows, self.catalog_path)
 
     def restore_incremental(
         self, db: str, table: str, until_period_key: str | None = None
@@ -421,9 +426,8 @@ class BackupEngine:
     def _catalog_partitions(self) -> list[str]:
         """The catalog's ``generation=<g>`` directories, sorted; none
         when the catalog was never written or every row was pruned.
-        Partitioned by generation (SURVEY §1.2/§4.1: the reference's
-        last/daily/weekly/monthly dirs) so retention scans prune to one
-        generation directory instead of reading the full catalog."""
+        Partitioned by generation as the reference's
+        last/daily/weekly/monthly dirs are (SURVEY §1.2/§4.1)."""
         try:
             return sorted(
                 e.path
@@ -433,78 +437,81 @@ class BackupEngine:
         except FileNotFoundError:
             return []
 
-    def _catalog_rows(self) -> list[CatalogRow]:
-        """The catalog rows, read by pyarrow in the driver: no Spark
-        job. They equal ``catalog().collect()``, with ``snapshot_ts``
-        as UTC microseconds; generation comes from the directory name.
-        Catalogs Spark wrote store ``snapshot_ts`` as INT96, which is
-        read at microsecond precision. An unreadable file (a truncated
-        one has no footer) raises RuntimeError: no row is skipped, and
-        no caller mistakes it for a missing snapshot."""
+    def _catalog_table(self):
+        """The catalog as one Arrow table of ``CATALOG_SCHEMA``, read
+        by pyarrow in the driver: no Spark job. Generation comes from
+        the directory name. Catalogs Spark wrote store ``snapshot_ts``
+        as INT96, which is read at microsecond precision as the UTC
+        instant it is. An unreadable file (a truncated one has no
+        footer) raises RuntimeError: no row is skipped, and no caller
+        mistakes it for a missing snapshot."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        rows: list[CatalogRow] = []
+        schema = _arrow_catalog_schema()
+        file_schema = schema.remove(schema.get_field_index("generation"))
+        tables = [schema.empty_table()]
         for part in self._catalog_partitions():
             generation = os.path.basename(part).partition("=")[2]
             for f in parquet_data_files(part):
                 try:
-                    t = pq.ParquetFile(f, coerce_int96_timestamp_unit="us").read(
-                        columns=_FILE_COLUMNS
+                    t = (
+                        pq.ParquetFile(f, coerce_int96_timestamp_unit="us")
+                        .read(columns=file_schema.names)
+                        .cast(file_schema)
                     )
                 except (OSError, ValueError) as e:
                     raise RuntimeError(f"catalog file unreadable: {f}") from e
-                ts = t.column("snapshot_ts")
-                ts = ts.cast(pa.timestamp("us", ts.type.tz)).cast(pa.int64())
-                t = t.set_column(_FILE_COLUMNS.index("snapshot_ts"), "snapshot_ts", ts)
-                rows.extend(
-                    CatalogRow(generation=generation, **r) for r in t.to_pylist()
+                tables.append(
+                    t.append_column(
+                        schema.field("generation"),
+                        pa.array([generation] * t.num_rows, pa.string()),
+                    )
                 )
-        return rows
+        return pa.concat_tables(tables)
+
+    def _catalog_rows(self) -> list[CatalogRow]:
+        """``_catalog_table`` as ``CatalogRow``s, with ``snapshot_ts``
+        as UTC microseconds."""
+        import pyarrow as pa
+
+        t = self._catalog_table()
+        i = t.schema.get_field_index("snapshot_ts")
+        t = t.set_column(i, "snapshot_ts", t.column(i).cast(pa.int64()))
+        return [CatalogRow(**r) for r in t.to_pylist()]
 
     @staticmethod
-    def _write_catalog(rows: list[CatalogRow], dest: str) -> None:
-        """Add ``rows`` to the catalog at ``dest``: one new parquet file
-        per ``generation=<g>`` directory, ``snapshot_ts`` as
-        ``timestamp[us, tz=UTC]`` (Spark reads nanoseconds back as a
-        long under ``spark.sql.legacy.parquet.nanosAsLong``).
+    def _write_catalog(rows, dest: str) -> None:
+        """Add ``rows``, an Arrow table of ``CATALOG_SCHEMA``, to the
+        catalog at ``dest``: one new parquet file per ``generation=<g>``
+        directory, holding the other columns.
 
-        Each file is written under a dot-prefixed name, which neither
-        reader lists, and is checked before any is renamed into place:
-        its footer row count must equal the rows given (A11), or every
-        staged file is removed and RuntimeError raised."""
-        import pyarrow as pa
+        Each file is written under a dot-prefixed name, which the
+        reader does not list, and is checked before any is renamed
+        into place: its footer row count must equal the rows given
+        (A11), or every staged file is removed and RuntimeError
+        raised."""
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        types = {"string": pa.string(), "long": pa.int64(),
-                 "timestamp": pa.timestamp("us", tz="UTC")}
-        schema = pa.schema(
-            [(c, types[t]) for c, t in _CATALOG_FIELDS if c != "generation"]
-        )
-        by_generation: dict[str, list[CatalogRow]] = {}
-        for r in rows:
-            by_generation.setdefault(r.generation, []).append(r)
         os.makedirs(dest, exist_ok=True)
         staged: list[tuple[str, str]] = []
         try:
-            for generation, group in by_generation.items():
+            for generation in rows.column("generation").unique().to_pylist():
+                group = rows.filter(pc.equal(rows["generation"], generation))
+                group = group.drop_columns("generation")
                 part = os.path.join(dest, f"generation={generation}")
                 os.makedirs(part, exist_ok=True)
                 name = f"part-{uuid.uuid4().hex}.parquet"
                 tmp = os.path.join(part, "." + name)
                 staged.append((tmp, os.path.join(part, name)))
-                table = pa.Table.from_arrays(
-                    [pa.array([getattr(r, f.name) for r in group], f.type)
-                     for f in schema],
-                    schema=schema,
-                )
-                # the parquet types alone read back as ``schema``
-                pq.write_table(table, tmp, store_schema=False)
+                # the parquet types alone read back as the catalog schema
+                pq.write_table(group, tmp, store_schema=False)
                 n = pq.read_metadata(tmp).num_rows
-                if n != len(group):
+                if n != group.num_rows:
                     raise RuntimeError(
                         f"catalog verify failed for {part}: the staged file "
-                        f"holds {n} rows, {len(group)} were given"
+                        f"holds {n} rows, {group.num_rows} were given"
                     )
         except BaseException:
             for tmp, _ in staged:
@@ -515,25 +522,13 @@ class BackupEngine:
             os.rename(tmp, final)
 
     def catalog(self) -> DataFrame:
-        """The catalog as a frame; building it launches no Spark job.
-
-        The read names the ``generation=*`` partition directories, with
-        the catalog directory as ``basePath``: Spark's listing treats
-        the ``_catalog`` root itself as a hidden path and warns that it
-        ignored it, while these roots are not hidden (and at most four
-        roots stay far below the count that makes Spark list them in a
-        job). The pinned schema skips the footer-inference job; the
-        partition column, generation, comes last. A catalog without
-        partition directories (never written, or every row pruned) is
-        the empty frame."""
-        parts = self._catalog_partitions()
-        if not parts:
-            return self.spark.sql(_EMPTY_CATALOG_SQL)
-        return (
-            self.spark.read.schema(CATALOG_SCHEMA)
-            .option("basePath", self.catalog_path)
-            .parquet(*parts)
-        )
+        """The catalog as a frame: ``_catalog_table`` shipped to Spark
+        as a local relation. Building and collecting it launch no
+        Spark job, and the frame holds the rows read when it was
+        built, so a later rewrite of the catalog files does not
+        change it. An empty catalog (never written, or every row
+        pruned) is the empty frame with the same schema."""
+        return self.spark.createDataFrame(self._catalog_table(), CATALOG_SCHEMA)
 
     # -- retention (backup.sh:90-122) --
 
@@ -579,9 +574,7 @@ class BackupEngine:
 
         With ``apply=False`` (default) only returns the delete set,
         mirroring how backup.sh separates listing (``find``) from
-        action (``rm``). That frame is lazy and reads the live catalog
-        files, which a later ``apply=True`` replaces: collect it before
-        applying, or reading it raises ``FileNotFoundError``.
+        action (``rm``).
 
         With ``apply=True`` it also rewrites the catalog without them
         and then removes the snapshot dirs — the `-exec rm -rvf` side;
@@ -589,16 +582,14 @@ class BackupEngine:
         rewrites and removes nothing. One path is registered under all
         four generations (backup.sh's hardlink fan-out), so a dir is
         only removed when NO kept generation row still references it.
-        The plan is materialized (catalog-sized) and collected once;
-        the returned set reads the materialized plan, so the rewrite
-        cannot change it.
+        The plan is collected once. It reads the catalog rows the
+        driver shipped to Spark when it was built, not the catalog
+        files, so neither the set returned here nor one a listing
+        returned earlier changes with the rewrite.
         """
         plan = plan if plan is not None else self.retention_plan()
         if not apply:
             return prune_delete_set(plan)
-        # Materialize before mutating storage: the lazy plan reads the
-        # catalog files the rewrite below replaces.
-        plan = materialize(plan)
         rows = plan.select("db", "generation", "path", "snapshot_id", "keep").collect()
         kept = {(db, gen, path) for db, gen, path, _, keep in rows if keep == 1}
         deleted = [r for r in rows if r[:3] not in kept]
@@ -625,18 +616,18 @@ class BackupEngine:
         self, snapshot_ids: set[int], doomed_paths: set[str]
     ) -> None:
         """Staged-atomic catalog rewrite, one filter of
-        ``_catalog_rows`` dropping the rows in ``snapshot_ids`` (the
+        ``_catalog_table`` dropping the rows in ``snapshot_ids`` (the
         per-generation "hardlink" entries, mirroring the
         per-generation-dir rm) and any row on a ``doomed_paths`` path
         (superseded rows that would otherwise dangle). The survivors
         are written to ``<catalog>-new`` by ``_write_catalog``, which
         checks each file's footer count, before it replaces the old
         catalog."""
-        survivors = [
-            r
-            for r in self._catalog_rows()
-            if r.snapshot_id not in snapshot_ids and r.path not in doomed_paths
-        ]
+        rows = self._catalog_table()
+        survivors = rows.filter([
+            i not in snapshot_ids and p not in doomed_paths
+            for i, p in zip(rows["snapshot_id"].to_pylist(), rows["path"].to_pylist())
+        ])
         staging = self.catalog_path + "-new"
         if os.path.exists(staging):  # a leftover of an interrupted rewrite
             shutil.rmtree(staging)
@@ -692,7 +683,9 @@ class BackupEngine:
     def health(self) -> dict:
         """A19 analog of go-cron's HEALTHCHECK_PORT endpoint: config
         validity, catalog reachability, and the status/lastProgress of
-        every active streaming query in the session."""
+        every active streaming query in the session. A catalog file the
+        driver cannot read makes ``ok`` False, with ``catalog_rows``
+        None."""
         from clickhousebackup_spark.streaming.engine import session_health
 
         streams = session_health(self.spark)
@@ -701,10 +694,14 @@ class BackupEngine:
             validate_backup_dir(self.config.backup_dir)
         except Exception:
             ok = False
+        try:
+            catalog_rows = self._catalog_table().num_rows
+        except (RuntimeError, OSError):  # an unreadable catalog file
+            ok, catalog_rows = False, None
         return {
             "ok": ok and streams["ok"],
             "backup_dir": self.config.backup_dir,
-            "catalog_rows": len(self._catalog_rows()),
+            "catalog_rows": catalog_rows,
             "streams": streams,
         }
 

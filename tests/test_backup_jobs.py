@@ -68,6 +68,19 @@ def test_catalog_read_launches_no_job(spark, tmp_path):
     assert _jobs(spark, engine.catalog) == 0
 
 
+def test_catalog_frames_are_local_relations(spark, tmp_path):
+    """``catalog()`` is a local relation built in the driver, so Spark
+    never reads the catalog files, and neither it nor the retention
+    plan over it launches a job to build; collecting the catalog
+    launches none either."""
+    engine = _engine(spark, tmp_path / "b")
+    engine.run_backup({"db0": {"t": _source(spark, 5)}}, now=dt.datetime(2024, 1, 1))
+    plan = engine.catalog()._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert _jobs(spark, engine.retention_plan) == 0
+    assert _jobs(spark, lambda: engine.catalog().collect()) == 0
+
+
 def test_restore_builds_launch_no_inference_job(spark, tmp_path):
     """Building a restore launches no job: the catalog lookup reads the
     catalog in the driver, and the snapshot schema comes from the
@@ -136,11 +149,11 @@ def test_backup_and_incremental_runs_job_counts(spark, tmp_path):
 def test_prune_plans_the_retention_window_once(spark, tmp_path):
     """Two tables, two nights, a policy that expires the first night.
 
-    Materializing the plan launches 5 jobs under AQE and its one
-    collect (kept rows, delete ids and doomed paths) 1; the catalog
-    rewrite is read and written in the driver. Planning the retention
-    window again for the delete set or the kept paths adds jobs
-    here."""
+    The plan's one collect (kept rows, delete ids and doomed paths)
+    launches 5 jobs under AQE; the plan reads the catalog as a local
+    relation, and the catalog rewrite is read and written in the
+    driver. Planning the retention window again for the delete set or
+    the kept paths adds jobs here."""
     engine = BackupEngine(spark, BackupConfig(
         host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
         retention=RetentionPolicy(keep_mins=720, keep_days=0),
@@ -148,5 +161,5 @@ def test_prune_plans_the_retention_window_once(spark, tmp_path):
     for day in (1, 2):
         tables = {"db0": {"a": _source(spark, 5), "b": _source(spark, 6)}}
         engine.run_backup(tables, now=dt.datetime(2024, 1, day))
-    assert _jobs(spark, lambda: engine.prune(engine.retention_plan(), apply=True)) == 6
+    assert _jobs(spark, lambda: engine.prune(engine.retention_plan(), apply=True)) == 5
     assert sorted(os.listdir(tmp_path / "db0")) == ["a-20240102-000000", "b-20240102-000000"]

@@ -1,18 +1,21 @@
 """The engine's catalog: what one run appends and how it is read.
 
-A run registers its snapshots with one append of rows built in the
-JVM (a parsed ``VALUES`` relation with bound parameters). Those rows
-must equal, row for row, the rows the ``createDataFrame`` build
-registered: all nine columns, ``snapshot_id`` included, whatever
-Python's local zone is and whatever characters the snapshot paths
-hold. Reading the catalog must not log Spark's "All paths were
-ignored" warning, which the hidden ``_catalog`` root used to trigger.
+A run registers its snapshots with one append of rows the driver
+builds as an Arrow table, with the period keys and content hashes
+Spark adds over it. Those rows must equal, row for row, the rows the
+``createDataFrame`` build registered: all nine columns,
+``snapshot_id`` included, whatever Python's local zone is and whatever
+characters the snapshot paths hold; a naive ``now`` is UTC, so the
+`last` period key is the snapshot's key and restores it. Reading the
+catalog must not log Spark's "All paths were ignored" warning, which
+the hidden ``_catalog`` root used to trigger.
 
-The engine reads the catalog in the driver (``_catalog_rows``) for
-its restore lookups and latest pointers, while ``catalog()`` serves
-the same rows to Spark: the two readers must agree row for row, on
-catalogs Spark wrote too, and choose the same newest snapshot on tied
-timestamps. An unreadable catalog file fails every reader loudly.
+The engine reads the catalog files in the driver only
+(``_catalog_table``); ``catalog()`` serves the same rows to Spark.
+Both must agree row for row with Spark's own read of the catalog
+root, on catalogs Spark wrote too, and choose the same newest
+snapshot on tied timestamps. An unreadable catalog file fails every
+reader loudly, and ``health()`` reports it.
 """
 
 from __future__ import annotations
@@ -48,12 +51,13 @@ def local_tz(request, monkeypatch):
 def _reference(spark, runs, seq=0):
     """The catalog rows as the per-table ``createDataFrame`` build made
     them: ids from ``seq`` in results order, then ``GENERATIONS``
-    order."""
+    order; a naive ``now`` is UTC."""
     rows = []
     for results, now in runs:
+        utc = now.replace(tzinfo=dt.timezone.utc)
         for res in results:
             for gen in GENERATIONS:
-                rows.append((res.db, res.table, gen, "", now, seq, res.path, "", res.n_rows))
+                rows.append((res.db, res.table, "", utc, seq, res.path, "", res.n_rows, gen))
                 seq += 1
     return (
         spark.createDataFrame(rows, CATALOG_SCHEMA)
@@ -104,6 +108,21 @@ def test_catalog_rows_equal_the_create_dataframe_build(spark, tmp_path, local_tz
     assert len(got) == (3 + 3 + 1) * len(GENERATIONS)
     assert sum(r[CATALOG_COLUMNS.index("path")].endswith("a\\'b") for r in got) == len(GENERATIONS)
     assert got == _rows(_reference(spark, runs))
+    # the `last` period key of each run is its snapshot's key
+    for results, _ in runs[:2]:
+        for res in results:
+            assert engine.restore(res.db, res.table, res.period_key).columns == ["k"]
+
+
+def test_an_aware_now_is_converted_to_utc(spark, tmp_path):
+    engine = BackupEngine(spark, BackupConfig(
+        host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
+    ))
+    now = dt.datetime(2024, 1, 2, 3, tzinfo=dt.timezone(dt.timedelta(hours=-5)))
+    (res,) = engine.run_backup({"db0": {"t": spark.range(3)}}, now=now)
+    assert res.period_key == "20240102-080000"
+    last = {r.period_key for r in engine._catalog_rows() if r.generation == "last"}
+    assert last == {res.period_key}
 
 
 def _capture_spark_log(spark):
@@ -169,7 +188,7 @@ def test_catalog_read_equals_the_catalog_root_read(spark, tmp_path):
     )
     empty = engine.catalog()
     assert empty.collect() == []
-    assert empty.schema == spark.createDataFrame([], CATALOG_SCHEMA).schema
+    assert empty.schema == cat.schema
 
 
 def _mixed_catalog(spark, tmp_path) -> BackupEngine:
@@ -222,7 +241,9 @@ def test_driver_catalog_rows_equal_the_spark_read(spark, tmp_path):
     engine = _mixed_catalog(spark, tmp_path)
     got = engine._catalog_rows()
     assert len(got) == (2 + 2 + 1 + 1) * len(GENERATIONS)
-    assert sorted(tuple(r) for r in got) == _micros_rows(engine.catalog())
+    spark_read = _micros_rows(spark.read.schema(CATALOG_SCHEMA).parquet(engine.catalog_path))
+    assert sorted(tuple(r) for r in got) == spark_read
+    assert _micros_rows(engine.catalog()) == spark_read
     assert engine.health()["catalog_rows"] == len(got)
 
 
@@ -281,6 +302,29 @@ def test_truncated_catalog_file_fails_restore_and_backup(spark, tmp_path):
         engine.run_backup(src, now=dt.datetime(2024, 1, 3))
     with pytest.raises(RuntimeError, match="catalog file unreadable"):
         engine.run_incremental(src, now=dt.datetime(2024, 1, 4))
+
+
+def test_health_reports_a_truncated_catalog_file(spark, tmp_path, monkeypatch):
+    """Catalog reachability: ``health()`` answers ``ok: False`` for a
+    catalog file the driver cannot read, where every reader raises.
+    The session's streams are stubbed healthy, so only the catalog
+    can flip ``ok``."""
+    import clickhousebackup_spark.streaming.engine as streaming
+
+    monkeypatch.setattr(streaming, "session_health", lambda spark: {"ok": True})
+    engine = BackupEngine(spark, BackupConfig(
+        host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
+    ))
+    engine.run_backup({"db0": {"t": spark.range(3)}}, now=dt.datetime(2024, 1, 1))
+    assert engine.health()["ok"] is True
+    victim = parquet_data_files(engine.catalog_path)[0]
+    with open(victim, "rb") as f:
+        head = f.read()[:100]
+    with open(victim, "wb") as f:
+        f.write(head)
+    health = engine.health()
+    assert health["ok"] is False
+    assert health["catalog_rows"] is None
 
 
 def test_a_short_catalog_file_is_never_published(spark, tmp_path, monkeypatch):

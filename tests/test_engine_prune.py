@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 from urllib.parse import urlparse
 
 import pytest
@@ -57,6 +58,21 @@ def test_failed_catalog_rewrite_removes_no_snapshot(spark, tmp_path, monkeypatch
     paths = {r["path"] for r in eng.catalog().select("path").collect()}
     assert len(paths) == 2
     assert all(os.path.isdir(p) for p in paths)
+
+
+def test_a_listed_delete_set_still_collects_after_the_prune(spark, tmp_path):
+    """List, apply, then collect the listing: it is the applied set.
+    Frames built before the prune read the rows they were built from,
+    even with the catalog directory gone."""
+    eng = _engine(spark, tmp_path)  # default windows: the 2023 run expires
+    cat, plan = eng.catalog(), eng.retention_plan()
+    listed = eng.prune()
+    applied = sorted(eng.prune(apply=True).collect())
+    assert len(applied) == 4
+    assert sorted(listed.collect()) == applied
+    shutil.rmtree(eng.catalog_path)
+    assert len(cat.collect()) == len(plan.collect()) == 2 * 4
+    assert sorted(eng.prune(plan).collect()) == applied
 
 
 def test_prune_removes_every_table_s_expired_snapshot(spark, tmp_path):
