@@ -25,22 +25,30 @@ most ``defaultParallelism`` at once, and every thread carries the
 caller's job group, so a table's small Spark jobs overlap the others'
 fixed per-job cost instead of queueing behind it (``_run``).
 
-The catalog (``<backup_dir>/_catalog``, one ``generation=<g>``
-directory per generation) is driver-side metadata, as the reference's
-directory listing is: only the driver reads (``_catalog_table``) and
-writes (``_write_catalog``) its files, with pyarrow and one schema,
-``CATALOG_SCHEMA``, so registration, the latest pointers, the restore
-lookups and the prune rewrite launch no Spark job. The relational
-surface (``catalog()``, ``generation_state()``, ``latest()``,
-``retention_plan()``) runs over that table shipped to Spark as a local
-relation.
+The catalog is driver-side metadata, as the reference's directory
+listing is. It is a series of numbered full-state files,
+``<backup_dir>/_catalog/<n:020d>.parquet``, each holding every row in
+``CATALOG_SCHEMA``; the newest is the catalog. Only the driver reads
+(``_catalog_table``, one file) and writes (``_commit``) them, with
+pyarrow, so registration, the latest pointers, the restore lookups and
+the prune launch no Spark job. A commit publishes version n + 1 with
+one ``os.link``, which fails if another engine published it first, so
+the commit re-reads and re-applies its change (the single atomic
+``ln -f`` of backup.sh:77-115; a Delta Lake log commit). Rows store
+snapshot paths relative to ``backup_dir``, so a moved backup volume
+restores. The relational surface (``catalog()``,
+``generation_state()``, ``latest()``, ``retention_plan()``) runs over
+the newest version shipped to Spark as a local relation.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
+import hashlib
 import json
 import os
+import re
 import shutil
 import uuid
 from collections import namedtuple
@@ -52,7 +60,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
-from clickhousebackup_spark.backup.catalog import period_key_expr
 from clickhousebackup_spark.backup.config import (
     GENERATIONS,
     BackupConfig,
@@ -70,9 +77,9 @@ from clickhousebackup_spark.exprs import row_hash
 from clickhousebackup_spark.sources.readers import ConnectorUnavailable
 from clickhousebackup_spark.tables import load_table, parquet_data_files
 
-#: the catalog's one schema, for its files, frames and driver rows: the
-#: columns of a catalog file, then generation, which names the file's
-#: ``generation=<g>`` directory
+#: the catalog's one schema, for its version files, frames and driver
+#: rows; a catalog written before versions stored generation as its
+#: ``generation=<g>`` directory name
 CATALOG_SCHEMA = (
     StructType()
     .add("db", "string").add("table_name", "string").add("period_key", "string")
@@ -270,52 +277,40 @@ class BackupEngine:
 
     def _register(self, results: list[SnapshotResult], now) -> None:
         """Append the four generation rows of every snapshot in
-        ``results`` to the catalog in one ``_write_catalog``.
+        ``results`` to the catalog in one ``_commit``.
 
-        The rows are an Arrow table of ``CATALOG_SCHEMA``, ``now`` a
-        naive UTC datetime. Spark adds the period keys
-        (``period_key_expr``) and the content hashes over that table as
-        a local relation, which it folds with the projection, so the
-        collect launches no job; user text is never spliced into SQL.
+        The driver builds the rows from ``now``, a naive UTC datetime:
+        the period keys (``_period_keys``) and the content hash, an md5
+        over ``db|generation|period_key|path``, with no Spark call, so
+        neither follows the session time zone.
 
         The ids continue past both this engine's count and the largest
-        ``snapshot_id`` already cataloged (read in the driver): an
-        engine over a ``backup_dir`` that an earlier engine or process
-        wrote starts its count at 0 too, and ``prune`` deletes catalog
-        rows by id."""
+        ``snapshot_id`` of the version the commit extends: an engine
+        over a ``backup_dir`` that an earlier engine or process wrote
+        starts its count at 0 too, and ``prune`` deletes catalog rows
+        by id. A commit that lost a race re-applies the append to the
+        winner's version, so its ids move past the winner's."""
         if not results:
             return
         import pyarrow as pa
 
         n_gen = len(GENERATIONS)
-        seq = max(
-            self._snapshot_seq,
-            1 + max((r.snapshot_id for r in self._catalog_rows()), default=-1),
-        )
-        self._snapshot_seq = seq + n_gen * len(results)
-        rows = pa.Table.from_pylist(
-            [  # period_key and content_hash are filled in below
-                {"db": res.db, "table_name": res.table, "snapshot_ts": now,
-                 "snapshot_id": seq + n_gen * i + g, "path": res.path,
+        keys = _period_keys(now)
+
+        def append(rows):
+            seq = max(self._snapshot_seq, 1 + max(rows["snapshot_id"].to_pylist(), default=-1))
+            self._snapshot_seq = seq + n_gen * len(results)
+            new = [
+                {"db": res.db, "table_name": res.table, "period_key": keys[gen],
+                 "snapshot_ts": now, "snapshot_id": seq + n_gen * i + g, "path": res.path,
+                 "content_hash": hashlib.md5(f"{res.db}|{gen}|{keys[gen]}|{res.path}".encode()).hexdigest(),
                  "size_bytes": res.n_rows, "generation": gen}
                 for g, gen in enumerate(GENERATIONS)
                 for i, res in enumerate(results)
-            ],
-            schema=_arrow_catalog_schema(),
-        )
-        keys = (
-            self.spark.createDataFrame(rows, CATALOG_SCHEMA)
-            .withColumn("period_key", period_key_expr("snapshot_ts", "generation"))
-            .select(
-                "period_key",
-                F.md5(F.concat_ws("|", "db", "generation", "period_key", "path")),
-            )
-            .collect()
-        )
-        for name, values in zip(("period_key", "content_hash"), zip(*keys)):
-            i = rows.schema.get_field_index(name)
-            rows = rows.set_column(i, rows.field(i), pa.array(values, pa.string()))
-        self._write_catalog(rows, self.catalog_path)
+            ]
+            return pa.concat_tables([rows, pa.Table.from_pylist(new, schema=rows.schema)])
+
+        self._commit(append)
 
     def restore_incremental(
         self, db: str, table: str, until_period_key: str | None = None
@@ -423,112 +418,118 @@ class BackupEngine:
     def catalog_path(self) -> str:
         return os.path.join(self.config.backup_dir, "_catalog")
 
-    def _catalog_partitions(self) -> list[str]:
-        """The catalog's ``generation=<g>`` directories, sorted; none
-        when the catalog was never written or every row was pruned.
-        Partitioned by generation as the reference's
-        last/daily/weekly/monthly dirs are (SURVEY §1.2/§4.1)."""
-        try:
-            return sorted(
-                e.path
-                for e in os.scandir(self.catalog_path)
-                if e.is_dir() and e.name.startswith("generation=")
-            )
-        except FileNotFoundError:
-            return []
+    def _catalog_table(self, retry: bool = True):
+        """The catalog as ``(n, table)``: the newest version number
+        (0 when there is none) and its rows, an Arrow table of
+        ``CATALOG_SCHEMA`` with absolute paths, read by pyarrow in the
+        driver from one file: no Spark job.
 
-    def _catalog_table(self):
-        """The catalog as one Arrow table of ``CATALOG_SCHEMA``, read
-        by pyarrow in the driver: no Spark job. Generation comes from
-        the directory name. Catalogs Spark wrote store ``snapshot_ts``
-        as INT96, which is read at microsecond precision as the UTC
-        instant it is. An unreadable file (a truncated one has no
-        footer) raises RuntimeError: no row is skipped, and no caller
-        mistakes it for a missing snapshot."""
+        A catalog written before versions has no version file; it is
+        read from its ``generation=<g>`` directories as version 0, with
+        generation from the directory name, and ``snapshot_ts``, which
+        Spark stored as INT96, at microsecond precision as the UTC
+        instant it is. A version removed between the listing and the
+        read (two later commits) is read again once, at the newest. An
+        unreadable file (a truncated one has no footer) raises
+        RuntimeError: no row is skipped, and no caller mistakes it for
+        a missing snapshot."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        schema = _arrow_catalog_schema()
-        file_schema = schema.remove(schema.get_field_index("generation"))
+        schema, root = _arrow_catalog_schema(), self.config.backup_dir
+        names = sorted(os.listdir(self.catalog_path)) if os.path.isdir(self.catalog_path) else []
+        versions = [name for name in names if _version(name) is not None]
+        files = [(os.path.join(self.catalog_path, v), None) for v in versions[-1:]] or [
+            (f, n.partition("=")[2])
+            for n in names
+            if n.startswith("generation=")
+            for f in parquet_data_files(os.path.join(self.catalog_path, n))
+        ]
         tables = [schema.empty_table()]
-        for part in self._catalog_partitions():
-            generation = os.path.basename(part).partition("=")[2]
-            for f in parquet_data_files(part):
-                try:
-                    t = (
-                        pq.ParquetFile(f, coerce_int96_timestamp_unit="us")
-                        .read(columns=file_schema.names)
-                        .cast(file_schema)
-                    )
-                except (OSError, ValueError) as e:
-                    raise RuntimeError(f"catalog file unreadable: {f}") from e
-                tables.append(
-                    t.append_column(
-                        schema.field("generation"),
-                        pa.array([generation] * t.num_rows, pa.string()),
-                    )
-                )
-        return pa.concat_tables(tables)
+        for f, generation in files:
+            try:
+                t = pq.ParquetFile(f, coerce_int96_timestamp_unit="us").read()
+            except (OSError, ValueError) as e:
+                if retry and isinstance(e, FileNotFoundError):
+                    return self._catalog_table(retry=False)
+                raise RuntimeError(f"catalog file unreadable: {f}") from e
+            if generation is not None:
+                t = t.append_column("generation", pa.array([generation] * t.num_rows, pa.string()))
+            tables.append(t.select(schema.names).cast(schema))
+        rows = _map_paths(pa.concat_tables(tables), lambda p: os.path.join(root, p))
+        return (_version(versions[-1]) if versions else 0), rows
 
     def _catalog_rows(self) -> list[CatalogRow]:
         """``_catalog_table`` as ``CatalogRow``s, with ``snapshot_ts``
         as UTC microseconds."""
         import pyarrow as pa
 
-        t = self._catalog_table()
+        _, t = self._catalog_table()
         i = t.schema.get_field_index("snapshot_ts")
         t = t.set_column(i, "snapshot_ts", t.column(i).cast(pa.int64()))
         return [CatalogRow(**r) for r in t.to_pylist()]
 
-    @staticmethod
-    def _write_catalog(rows, dest: str) -> None:
-        """Add ``rows``, an Arrow table of ``CATALOG_SCHEMA``, to the
-        catalog at ``dest``: one new parquet file per ``generation=<g>``
-        directory, holding the other columns.
+    def _commit(self, change) -> None:
+        """The one write to the catalog: publish ``change(rows)`` of the
+        newest version n as version n + 1.
 
-        Each file is written under a dot-prefixed name, which the
-        reader does not list, and is checked before any is renamed
-        into place: its footer row count must equal the rows given
-        (A11), or every staged file is removed and RuntimeError
-        raised."""
-        import pyarrow.compute as pc
+        The result is written to a dot-prefixed file, which no reader
+        lists, and checked: its footer row count must equal the rows
+        given (A11), or it is removed and RuntimeError raised. It is
+        published with ``os.link`` to the name of version n + 1, which
+        fails if that name exists: another engine committed first, so
+        the commit reads the new version and applies ``change`` again.
+        Then the versions older than n go, with the files of a catalog
+        written before versions (its ``generation=`` directories and
+        Spark's ``_SUCCESS`` marker); version n stays, so a reader that
+        listed it can still open it. A crash at any step leaves version
+        n or n + 1 the newest, each whole. Paths are stored relative to
+        ``backup_dir``, so the volume can move.
+
+        Because old versions are removed, a commit stalled between its
+        read and its link while other engines commit twice more could
+        link a number they already removed, and be lost; commits take
+        milliseconds, and nothing guards against such a stall."""
         import pyarrow.parquet as pq
 
-        os.makedirs(dest, exist_ok=True)
-        staged: list[tuple[str, str]] = []
-        try:
-            for generation in rows.column("generation").unique().to_pylist():
-                group = rows.filter(pc.equal(rows["generation"], generation))
-                group = group.drop_columns("generation")
-                part = os.path.join(dest, f"generation={generation}")
-                os.makedirs(part, exist_ok=True)
-                name = f"part-{uuid.uuid4().hex}.parquet"
-                tmp = os.path.join(part, "." + name)
-                staged.append((tmp, os.path.join(part, name)))
+        os.makedirs(self.catalog_path, exist_ok=True)
+        while True:
+            n, rows = self._catalog_table()
+            rows = _map_paths(change(rows), lambda p: os.path.relpath(p, self.config.backup_dir))
+            tmp = os.path.join(self.catalog_path, f".{uuid.uuid4().hex}.parquet")
+            try:
                 # the parquet types alone read back as the catalog schema
-                pq.write_table(group, tmp, store_schema=False)
-                n = pq.read_metadata(tmp).num_rows
-                if n != group.num_rows:
+                pq.write_table(rows, tmp, store_schema=False)
+                got = pq.read_metadata(tmp).num_rows
+                if got != rows.num_rows:
                     raise RuntimeError(
-                        f"catalog verify failed for {part}: the staged file "
-                        f"holds {n} rows, {group.num_rows} were given"
+                        f"catalog verify failed for {self.catalog_path}: the staged "
+                        f"file holds {got} rows, {rows.num_rows} were given"
                     )
-        except BaseException:
-            for tmp, _ in staged:
+                os.link(tmp, os.path.join(self.catalog_path, f"{n + 1:020d}.parquet"))
+                break
+            except FileExistsError:
+                continue  # version n + 1 is another engine's: apply to it
+            finally:
                 if os.path.exists(tmp):
                     os.remove(tmp)
-            raise
-        for tmp, final in staged:
-            os.rename(tmp, final)
+        for name in os.listdir(self.catalog_path):
+            path = os.path.join(self.catalog_path, name)
+            v = _version(name)
+            with contextlib.suppress(FileNotFoundError):  # another engine's cleanup
+                if name.startswith("generation="):
+                    shutil.rmtree(path)
+                elif name in ("_SUCCESS", "._SUCCESS.crc") or (v is not None and v < n):
+                    os.remove(path)
 
     def catalog(self) -> DataFrame:
         """The catalog as a frame: ``_catalog_table`` shipped to Spark
         as a local relation. Building and collecting it launch no
         Spark job, and the frame holds the rows read when it was
-        built, so a later rewrite of the catalog files does not
-        change it. An empty catalog (never written, or every row
-        pruned) is the empty frame with the same schema."""
-        return self.spark.createDataFrame(self._catalog_table(), CATALOG_SCHEMA)
+        built, so a later commit to the catalog does not change it.
+        An empty catalog (never written, or every row pruned) is the
+        empty frame with the same schema."""
+        return self.spark.createDataFrame(self._catalog_table()[1], CATALOG_SCHEMA)
 
     # -- retention (backup.sh:90-122) --
 
@@ -576,16 +577,24 @@ class BackupEngine:
         mirroring how backup.sh separates listing (``find``) from
         action (``rm``).
 
-        With ``apply=True`` it also rewrites the catalog without them
-        and then removes the snapshot dirs — the `-exec rm -rvf` side;
-        a failed rewrite removes nothing, and an empty delete set
-        rewrites and removes nothing. One path is registered under all
-        four generations (backup.sh's hardlink fan-out), so a dir is
-        only removed when NO kept generation row still references it.
-        The plan is collected once. It reads the catalog rows the
-        driver shipped to Spark when it was built, not the catalog
-        files, so neither the set returned here nor one a listing
-        returned earlier changes with the rewrite.
+        With ``apply=True`` it also commits the catalog without them
+        (one ``_commit`` of a filter) and then removes the snapshot
+        dirs — the `-exec rm -rvf` side; a failed commit removes
+        nothing, and an empty delete set commits and removes nothing.
+        One path is registered under all four generations (backup.sh's
+        hardlink fan-out), so a dir is only removed when NO kept
+        generation row still references it. The plan is collected
+        once. It reads the catalog rows the driver shipped to Spark
+        when it was built, not the catalog files, so neither the set
+        returned here nor one a listing returned earlier changes with
+        the commit.
+
+        Retention does not know incremental chains: it can delete the
+        base and early deltas of a ``run_incremental`` chain while
+        keeping the newest delta, and ``restore_incremental`` then
+        returns only the kept deltas' rows, without an error. Prune
+        incremental backup dirs with windows that keep every snapshot
+        of a chain that must stay restorable.
         """
         plan = plan if plan is not None else self.retention_plan()
         if not apply:
@@ -602,38 +611,21 @@ class BackupEngine:
             # refuse to rm anything that escaped the backup volume
             if os.path.commonpath([backup_root, real]) != backup_root:
                 raise ValueError(f"prune path outside backup_dir: {path}")
-        # Publish the rewritten catalog before removing anything: a
-        # failed rewrite leaves every cataloged snapshot on disk.
-        self._rewrite_catalog_excluding({r.snapshot_id for r in deleted}, doomed)
+        # Publish the catalog without the deleted rows (by id: one per
+        # generation, the per-generation-dir rm) and without any row on a
+        # doomed path (a superseded row that would dangle) before
+        # removing anything: a failed commit leaves every snapshot.
+        ids = {r.snapshot_id for r in deleted}
+        self._commit(lambda rows: rows.filter([
+            i not in ids and p not in doomed
+            for i, p in zip(rows["snapshot_id"].to_pylist(), rows["path"].to_pylist())
+        ]))
         for real in real_paths.values():
             if os.path.isdir(real):
                 shutil.rmtree(real)
             elif os.path.exists(real):
                 os.remove(real)
         return prune_delete_set(plan)
-
-    def _rewrite_catalog_excluding(
-        self, snapshot_ids: set[int], doomed_paths: set[str]
-    ) -> None:
-        """Staged-atomic catalog rewrite, one filter of
-        ``_catalog_table`` dropping the rows in ``snapshot_ids`` (the
-        per-generation "hardlink" entries, mirroring the
-        per-generation-dir rm) and any row on a ``doomed_paths`` path
-        (superseded rows that would otherwise dangle). The survivors
-        are written to ``<catalog>-new`` by ``_write_catalog``, which
-        checks each file's footer count, before it replaces the old
-        catalog."""
-        rows = self._catalog_table()
-        survivors = rows.filter([
-            i not in snapshot_ids and p not in doomed_paths
-            for i, p in zip(rows["snapshot_id"].to_pylist(), rows["path"].to_pylist())
-        ])
-        staging = self.catalog_path + "-new"
-        if os.path.exists(staging):  # a leftover of an interrupted rewrite
-            shutil.rmtree(staging)
-        self._write_catalog(survivors, staging)
-        shutil.rmtree(self.catalog_path)
-        os.rename(staging, self.catalog_path)
 
     # -- latest pointers on storage (backup.sh:99-115) --
 
@@ -667,8 +659,8 @@ class BackupEngine:
             elif os.path.isdir(ptr):
                 shutil.rmtree(ptr)
             target = _newest(rows).path
-            if self.config.latest_type == "symlink":
-                os.symlink(target, ptr)
+            if self.config.latest_type == "symlink":  # relative: the volume can move
+                os.symlink(os.path.relpath(target, gen_dir), ptr)
             else:  # hardlink
                 os.makedirs(ptr)
                 for root, _, files in os.walk(target):
@@ -695,7 +687,7 @@ class BackupEngine:
         except Exception:
             ok = False
         try:
-            catalog_rows = self._catalog_table().num_rows
+            catalog_rows = self._catalog_table()[1].num_rows
         except (RuntimeError, OSError):  # an unreadable catalog file
             ok, catalog_rows = False, None
         return {
@@ -721,6 +713,36 @@ class BackupEngine:
                 f"(latest_type={self.config.latest_type!r})"
             )
         return self._read_snapshots([real])
+
+
+def _map_paths(rows, fn):
+    """``rows``, an Arrow table of ``CATALOG_SCHEMA``, with each path
+    ``p`` replaced by ``fn(p)``."""
+    import pyarrow as pa
+
+    i = rows.schema.get_field_index("path")
+    paths = [fn(p) for p in rows["path"].to_pylist()]
+    return rows.set_column(i, rows.field(i), pa.array(paths, pa.string()))
+
+
+def _version(name: str) -> int | None:
+    """The number of a catalog version file, ``<n:020d>.parquet``; None
+    for any other name."""
+    m = re.fullmatch(r"([0-9]{20})\.parquet", name)
+    return int(m[1]) if m else None
+
+
+def _period_keys(now: dt.datetime) -> dict[str, str]:
+    """The period key of each generation for ``now``, a naive UTC
+    datetime, in backup.sh:26-29's ``date`` grammars: ``%Y%m%d-%H%M%S``,
+    ``%Y%m%d``, ISO ``%G%V`` and ``%Y%m``."""
+    year, week, _ = now.isocalendar()
+    return {
+        "last": now.strftime("%Y%m%d-%H%M%S"),
+        "daily": now.strftime("%Y%m%d"),
+        "weekly": f"{year}{week:02d}",
+        "monthly": now.strftime("%Y%m"),
+    }
 
 
 def _newest(rows: list[CatalogRow]) -> CatalogRow:

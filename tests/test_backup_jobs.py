@@ -95,13 +95,13 @@ def test_restore_builds_launch_no_inference_job(spark, tmp_path):
 
 def test_a_multi_table_run_makes_one_catalog_append(spark, tmp_path, monkeypatch):
     appends = []
-    real = BackupEngine._write_catalog
+    real = BackupEngine._commit
 
-    def counting_write(rows, dest):
-        appends.append(rows)
-        real(rows, dest)
+    def counting_commit(self, change):
+        appends.append(change)
+        real(self, change)
 
-    monkeypatch.setattr(BackupEngine, "_write_catalog", staticmethod(counting_write))
+    monkeypatch.setattr(BackupEngine, "_commit", counting_commit)
     engine = BackupEngine(spark, BackupConfig(
         host="h", dbs="db0,db1", user="u", password="p", backup_dir=str(tmp_path),
     ))

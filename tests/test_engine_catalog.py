@@ -1,8 +1,8 @@
 """The engine's catalog: what one run appends and how it is read.
 
 A run registers its snapshots with one append of rows the driver
-builds as an Arrow table, with the period keys and content hashes
-Spark adds over it. Those rows must equal, row for row, the rows the
+builds as an Arrow table, period keys and content hashes included.
+Those rows must equal, row for row, the rows the
 ``createDataFrame`` build registered: all nine columns,
 ``snapshot_id`` included, whatever Python's local zone is and whatever
 characters the snapshot paths hold; a naive ``now`` is UTC, so the
@@ -12,15 +12,17 @@ the hidden ``_catalog`` root used to trigger.
 
 The engine reads the catalog files in the driver only
 (``_catalog_table``); ``catalog()`` serves the same rows to Spark.
-Both must agree row for row with Spark's own read of the catalog
-root, on catalogs Spark wrote too, and choose the same newest
-snapshot on tied timestamps. An unreadable catalog file fails every
+Both must agree row for row with Spark's own read of the newest
+version file, and with Spark's read of a catalog Spark wrote before
+versions once the first commit has folded it in, and choose the same
+newest snapshot on tied timestamps. An unreadable catalog file fails every
 reader loudly, and ``health()`` reports it.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import glob
 import os
 import sys
 import time
@@ -167,17 +169,25 @@ def test_catalog_read_logs_no_ignored_paths_warning(spark, tmp_path):
     assert "All paths were ignored" not in log
 
 
+def _newest_version(engine) -> str:
+    """The catalog's newest version file, the one its readers open."""
+    return max(glob.glob(os.path.join(glob.escape(engine.catalog_path), "*.parquet")))
+
+
 def test_catalog_read_equals_the_catalog_root_read(spark, tmp_path):
-    """The partition-directory read gives the root read's rows,
-    columns and schema; a catalog pruned to nothing is the empty
-    frame with the catalog schema."""
+    """The driver's read gives Spark's read of the newest version file
+    (its relative paths joined to ``backup_dir``): rows, columns and
+    schema; a catalog pruned to nothing is the empty frame with the
+    catalog schema."""
     engine = BackupEngine(spark, BackupConfig(
         host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
         retention=RetentionPolicy(keep_mins=-1, keep_days=-1, keep_weeks=-1, keep_months=-1),
     ))
     for day in (1, 2):
         engine.run_backup({"db0": {"t": spark.range(day)}}, now=dt.datetime(2024, 1, day))
-    root = spark.read.schema(CATALOG_SCHEMA).parquet(engine.catalog_path)
+    root = spark.read.schema(CATALOG_SCHEMA).parquet(_newest_version(engine)).withColumn(
+        "path", F.concat(F.lit(str(tmp_path) + os.sep), "path")
+    )
     cat = engine.catalog()
     assert cat.schema == root.schema and cat.columns[-1] == "generation"
     assert sorted(cat.collect()) == sorted(root.collect())
@@ -191,11 +201,14 @@ def test_catalog_read_equals_the_catalog_root_read(spark, tmp_path):
     assert empty.schema == cat.schema
 
 
-def _mixed_catalog(spark, tmp_path) -> BackupEngine:
-    """A catalog holding a Spark-written append (INT96 timestamps, a
-    ``_SUCCESS`` file) beside the engine's own appends. Every row of
-    db0.t shares one timestamp: the legacy rows' ids lie between the
-    engine's, so ties go both ways. One path holds a quote."""
+def _mixed_catalog(spark, tmp_path):
+    """A catalog Spark wrote before versions (INT96 timestamps, a
+    ``_SUCCESS`` file), which the engine's first commit folds into its
+    versions, then the engine's own appends. Every row of db0.t shares
+    one timestamp; the legacy rows' ids lie below the engine's, whose
+    last append wins every tie. One path holds a quote. Returns the
+    engine and the rows it must hold: Spark's read of the legacy
+    catalog plus the rows the engine registered."""
     backup_dir = tmp_path / "it's a dir"
     backup_dir.mkdir()
     engine = BackupEngine(spark, BackupConfig(
@@ -209,22 +222,31 @@ def _mixed_catalog(spark, tmp_path) -> BackupEngine:
     _reference(spark, [(legacy, tie)], seq=6).write.mode("append").partitionBy(
         "generation"
     ).parquet(engine.catalog_path)
-    engine._register([
-        SnapshotResult("db0", "t", "k", str(backup_dir / "t-a"), 5),
-        SnapshotResult("db0", "t", "k", str(backup_dir / "t-it's"), 6),
-    ], tie)
-    engine.run_backup(
-        {"db1": {"u": spark.range(2).select(F.col("id").alias("k"))}},
-        now=dt.datetime(2024, 2, 1),
-    )
-    # ids above the legacy rows': this one wins every tie
-    engine._register([SnapshotResult("db0", "t", "k", str(backup_dir / "t-late"), 7)], tie)
-    # the legacy append really is Spark's: INT96 and a _SUCCESS marker
+    # the legacy catalog really is Spark's: INT96 and a _SUCCESS marker
     assert os.path.exists(os.path.join(engine.catalog_path, "_SUCCESS"))
     schemas = [pq.ParquetFile(f).schema for f in parquet_data_files(engine.catalog_path)]
     kinds = {s.column(s.names.index("snapshot_ts")).physical_type for s in schemas}
-    assert kinds == {"INT96", "INT64"}
-    return engine
+    assert kinds == {"INT96"}
+    legacy_rows = _micros_rows(spark.read.schema(CATALOG_SCHEMA).parquet(engine.catalog_path))
+    assert sorted(tuple(r) for r in engine._catalog_rows()) == legacy_rows
+
+    first = [
+        SnapshotResult("db0", "t", "k", str(backup_dir / "t-a"), 5),
+        SnapshotResult("db0", "t", "k", str(backup_dir / "t-it's"), 6),
+    ]
+    engine._register(first, tie)
+    # the fold left one version and none of the legacy files
+    assert os.listdir(engine.catalog_path) == [os.path.basename(_newest_version(engine))]
+    u = engine.run_backup(
+        {"db1": {"u": spark.range(2).select(F.col("id").alias("k"))}},
+        now=dt.datetime(2024, 2, 1),
+    )
+    late = [SnapshotResult("db0", "t", "k", str(backup_dir / "t-late"), 7)]
+    engine._register(late, tie)
+    s = pq.ParquetFile(_newest_version(engine)).schema
+    assert s.column(s.names.index("snapshot_ts")).physical_type == "INT64"
+    new = _reference(spark, [(first, tie), (u, dt.datetime(2024, 2, 1)), (late, tie)], seq=14)
+    return engine, sorted(legacy_rows + _micros_rows(new))
 
 
 def _micros_rows(df):
@@ -238,12 +260,11 @@ def _micros_rows(df):
 
 
 def test_driver_catalog_rows_equal_the_spark_read(spark, tmp_path):
-    engine = _mixed_catalog(spark, tmp_path)
+    engine, expected = _mixed_catalog(spark, tmp_path)
     got = engine._catalog_rows()
     assert len(got) == (2 + 2 + 1 + 1) * len(GENERATIONS)
-    spark_read = _micros_rows(spark.read.schema(CATALOG_SCHEMA).parquet(engine.catalog_path))
-    assert sorted(tuple(r) for r in got) == spark_read
-    assert _micros_rows(engine.catalog()) == spark_read
+    assert sorted(tuple(r) for r in got) == expected
+    assert _micros_rows(engine.catalog()) == expected
     assert engine.health()["catalog_rows"] == len(got)
 
 
@@ -251,15 +272,15 @@ def test_driver_lookups_equal_the_spark_answers_on_ties(spark, tmp_path, monkeyp
     """``materialize_latest`` points where ``latest()`` does, and
     ``restore``/``restore_incremental`` read the paths the catalog
     frame's orderBy/limit and distinct path list give."""
-    engine = _mixed_catalog(spark, tmp_path)
+    engine, _ = _mixed_catalog(spark, tmp_path)
     written = engine.materialize_latest()
     pointers = {
-        (r["generation"], r["pointer_name"]): r["latest_target"]
+        (r["generation"], r["pointer_name"]): os.path.realpath(r["latest_target"])
         for r in engine.latest().collect()
     }
     assert len(written) == len(pointers) == 2 * len(GENERATIONS)
     assert {
-        (os.path.basename(os.path.dirname(p)), os.path.basename(p)): os.readlink(p)
+        (os.path.basename(os.path.dirname(p)), os.path.basename(p)): os.path.realpath(p)
         for p in written
     } == pointers
 
@@ -289,7 +310,7 @@ def test_truncated_catalog_file_fails_restore_and_backup(spark, tmp_path):
     src = {"db0": {"t": spark.range(3).select(F.col("id").alias("k"))}}
     for day in (1, 2):
         engine.run_backup(src, now=dt.datetime(2024, 1, day))
-    victim = parquet_data_files(engine.catalog_path)[0]
+    victim = _newest_version(engine)
     with open(victim, "rb") as f:
         head = f.read()[:100]
     with open(victim, "wb") as f:
@@ -317,7 +338,7 @@ def test_health_reports_a_truncated_catalog_file(spark, tmp_path, monkeypatch):
     ))
     engine.run_backup({"db0": {"t": spark.range(3)}}, now=dt.datetime(2024, 1, 1))
     assert engine.health()["ok"] is True
-    victim = parquet_data_files(engine.catalog_path)[0]
+    victim = _newest_version(engine)
     with open(victim, "rb") as f:
         head = f.read()[:100]
     with open(victim, "wb") as f:
@@ -328,7 +349,7 @@ def test_health_reports_a_truncated_catalog_file(spark, tmp_path, monkeypatch):
 
 
 def test_a_short_catalog_file_is_never_published(spark, tmp_path, monkeypatch):
-    """The footer check of ``_write_catalog``: a file holding fewer
+    """The footer check of ``_commit``: a file holding fewer
     rows than it was given raises, and no file of the write (staged
     or renamed) is left in the catalog."""
     engine = BackupEngine(spark, BackupConfig(

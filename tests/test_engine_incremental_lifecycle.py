@@ -79,7 +79,7 @@ def test_incremental_registers_four_generations_and_latest(spark, engine):
             ptr = os.path.join(
                 engine.config.backup_dir, gen, f"{db}-latest.zip"
             )
-            assert os.path.islink(ptr) and os.readlink(ptr) == path
+            assert os.path.islink(ptr) and os.path.realpath(ptr) == os.path.realpath(path)
     assert engine.restore_latest("db1").count() == 2
 
 

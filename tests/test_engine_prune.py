@@ -1,7 +1,7 @@
 """``BackupEngine.prune(apply=True)`` never leaves a catalog row that
-points at a removed snapshot: the rewritten catalog is published
-before any directory is removed, a plan that keeps nothing rewrites
-the catalog to empty, and a plan that deletes nothing leaves the
+points at a removed snapshot: the new catalog version is published
+before any directory is removed, a plan that keeps nothing commits
+an empty catalog, and a plan that deletes nothing leaves the
 catalog files untouched."""
 
 from __future__ import annotations
@@ -52,7 +52,7 @@ def test_failed_catalog_rewrite_removes_no_snapshot(spark, tmp_path, monkeypatch
     def boom(*args, **kwargs):
         raise RuntimeError("rewrite failed")
 
-    monkeypatch.setattr(BackupEngine, "_rewrite_catalog_excluding", boom)
+    monkeypatch.setattr(BackupEngine, "_commit", boom)
     with pytest.raises(RuntimeError, match="rewrite failed"):
         eng.prune(apply=True)
     paths = {r["path"] for r in eng.catalog().select("path").collect()}
