@@ -39,12 +39,22 @@ snapshot paths relative to ``backup_dir``, so a moved backup volume
 restores. The relational surface (``catalog()``,
 ``generation_state()``, ``latest()``, ``retention_plan()``) runs over
 the newest version shipped to Spark as a local relation.
+
+Retention is classified in the driver too, as backup.sh's ``find
+-mmin … rm`` works over a directory listing: ``generation_state()``
+and ``retention_plan()`` are local relations of rows that
+``_keep_newest`` and ``_classify`` work out from the catalog rows, so
+building, collecting and applying a plan launch no Spark job.
+``backup/retention.py`` is the same classification spelled in Spark,
+for catalogs too large for the driver; a property test pins the two
+equal.
 """
 
 from __future__ import annotations
 
 import contextlib
 import datetime as dt
+import errno
 import hashlib
 import json
 import os
@@ -57,20 +67,20 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.util import inheritable_thread_target
 
 from clickhousebackup_spark.backup.config import (
     GENERATIONS,
     BackupConfig,
+    RetentionPolicy,
     validate_backup_dir,
 )
 from clickhousebackup_spark.backup.hooks import Hook, LifecycleHooks
 from clickhousebackup_spark.backup.retention import (
-    keep_newest_per_period,
+    _window_literal,
     latest_pointers,
     prune_delete_set,
-    retention_plan,
 )
 from clickhousebackup_spark.backup.snapshot import SnapshotResult, snapshot_table
 from clickhousebackup_spark.exprs import row_hash
@@ -86,19 +96,35 @@ CATALOG_SCHEMA = (
     .add("snapshot_ts", "timestamp").add("snapshot_id", "long").add("path", "string")
     .add("content_hash", "string").add("size_bytes", "long").add("generation", "string")
 )
-CATALOG_COLUMNS = CATALOG_SCHEMA.names
+CATALOG_COLUMNS = tuple(CATALOG_SCHEMA.names)
+
+#: the retention plan's schema, ``backup/retention.py``'s: the catalog's
+#: columns, then ``age_minutes`` and ``keep``. A new StructType, since
+#: ``StructType.add`` extends the one it is called on in place
+PLAN_SCHEMA = StructType([
+    *CATALOG_SCHEMA.fields,
+    StructField("age_minutes", DoubleType()),
+    StructField("keep", LongType()),
+])
 
 #: one catalog row as the driver holds it; ``snapshot_ts`` is UTC
 #: microseconds since the epoch (Spark's ``unix_micros``)
 CatalogRow = namedtuple("CatalogRow", CATALOG_COLUMNS)
 
 
-def _arrow_catalog_schema():
-    """``CATALOG_SCHEMA`` in Arrow: ``snapshot_ts`` is
-    ``timestamp[us, tz=UTC]``, which Spark reads as its UTC instant."""
+class SnapshotMissing(RuntimeError):
+    """A cataloged snapshot is not on disk: the catalog row names a
+    directory someone removed. Not a ``FileNotFoundError``, which
+    ``_new_rows`` reads as "no backup yet": an incremental run over a
+    broken chain must fail, not take a full snapshot."""
+
+
+def _arrow_schema(schema: StructType = CATALOG_SCHEMA):
+    """``schema`` in Arrow: ``snapshot_ts`` is ``timestamp[us, tz=UTC]``,
+    which Spark reads as its UTC instant."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    return to_arrow_schema(CATALOG_SCHEMA)
+    return to_arrow_schema(schema)
 
 
 #: footer key-value entry in which Spark's parquet writer stores the
@@ -329,7 +355,8 @@ class BackupEngine:
         multi-path scan with the footers' Spark schema (no inference
         job) when every snapshot was written with the same schema, so
         an N-snapshot chain plans O(1) deep; otherwise the
-        schema-evolution ladder.
+        schema-evolution ladder. A cataloged snapshot missing on disk
+        raises ``SnapshotMissing``.
         """
         # The `last` generation's period_key IS the snapshot key
         # (yyyyMMdd-HHmmss — lexicographic == temporal); Python's
@@ -351,6 +378,11 @@ class BackupEngine:
     def _read_snapshots(self, paths: list[str]) -> DataFrame:
         """Read snapshot directories, in order, as one frame.
 
+        Each path is first checked in the driver: one missing on disk
+        raises ``SnapshotMissing`` naming its catalog row (its ``last``
+        row when it has one), where Spark's read would fail with
+        ``PATH_NOT_FOUND``.
+
         With the Spark schema every snapshot's footer carries
         (``_snapshot_schema``) the read is one multi-path scan with
         that schema, which launches no schema-inference job. Without
@@ -359,6 +391,16 @@ class BackupEngine:
         makes a column added between base and delta restore as null in
         pre-evolution rows; a single path is then a plain inferred
         read."""
+        missing = next((p for p in paths if not os.path.exists(p)), None)
+        if missing is not None:
+            rows = sorted(
+                (r for r in self._catalog_rows() if r.path == missing),
+                key=lambda r: r.generation != "last",
+            )
+            named = "snapshot" if not rows else (
+                f"{rows[0].db}.{rows[0].table_name} (period_key {rows[0].period_key})"
+            )
+            raise SnapshotMissing(f"cataloged {named} is missing on disk: {missing}")
         schema = self._snapshot_schema(paths)
         if schema is not None:
             return self.spark.read.schema(schema).parquet(*paths)
@@ -436,7 +478,7 @@ class BackupEngine:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        schema, root = _arrow_catalog_schema(), self.config.backup_dir
+        schema, root = _arrow_schema(), self.config.backup_dir
         names = sorted(os.listdir(self.catalog_path)) if os.path.isdir(self.catalog_path) else []
         versions = [name for name in names if _version(name) is not None]
         files = [(os.path.join(self.catalog_path, v), None) for v in versions[-1:]] or [
@@ -534,8 +576,14 @@ class BackupEngine:
     # -- retention (backup.sh:90-122) --
 
     def generation_state(self) -> DataFrame:
-        """Keep-newest-per-period view of the catalog (A14)."""
-        return keep_newest_per_period(self.catalog())
+        """Keep-newest-per-period view of the catalog (A14): the rows
+        ``_keep_newest`` keeps of ``_catalog_rows``, built in the driver
+        and shipped to Spark as a local relation of ``CATALOG_SCHEMA``,
+        like ``catalog()``; building and collecting it launch no Spark
+        job. ``keep_newest_per_period`` is its Spark spelling."""
+        return self.spark.createDataFrame(
+            _arrow_rows(_keep_newest(self._catalog_rows()), CATALOG_SCHEMA), CATALOG_SCHEMA
+        )
 
     def latest(self) -> DataFrame:
         """`-latest` pointers (A15), honoring latest_type='none'."""
@@ -545,13 +593,23 @@ class BackupEngine:
         return pointers
 
     def retention_plan(self) -> DataFrame:
-        return retention_plan(self.generation_state(), self.config.retention)
+        """The find…rm classification (backup.sh:119-122): every row of
+        ``generation_state()`` with its ``age_minutes`` and ``keep``
+        (``_classify``), built in the driver and shipped to Spark as a
+        local relation of ``PLAN_SCHEMA``. Building, collecting and
+        pruning with it launch no Spark job, and it holds the rows read
+        when it was built. ``backup/retention.py``'s
+        ``retention_plan`` over ``keep_newest_per_period`` is its Spark
+        spelling, row for row."""
+        rows = _classify(self._catalog_rows(), self.config.retention)
+        return self.spark.createDataFrame(_arrow_rows(rows, PLAN_SCHEMA), PLAN_SCHEMA)
 
     def restore(self, db: str, table: str, period_key: str | None = None) -> DataFrame:
         """Read a snapshot back — the restore path the reference leaves
         to manual `RESTORE` invocation. Defaults to the newest snapshot
         of (db, table); pass a period_key for point-in-time restore.
-        The lookup reads ``_catalog_rows``: no Spark job."""
+        The lookup reads ``_catalog_rows``: no Spark job. A cataloged
+        snapshot missing on disk raises ``SnapshotMissing``."""
         rows = [
             r
             for r in self._catalog_rows()
@@ -584,10 +642,12 @@ class BackupEngine:
         One path is registered under all four generations (backup.sh's
         hardlink fan-out), so a dir is only removed when NO kept
         generation row still references it. The plan is collected
-        once. It reads the catalog rows the driver shipped to Spark
-        when it was built, not the catalog files, so neither the set
-        returned here nor one a listing returned earlier changes with
-        the commit.
+        once; the default plan is a local relation the driver built
+        (``retention_plan``), so that collect, and the whole prune,
+        launch no Spark job. It reads the catalog rows the driver
+        shipped to Spark when it was built, not the catalog files, so
+        neither the set returned here nor one a listing returned
+        earlier changes with the commit.
 
         Retention does not know incremental chains: it can delete the
         base and early deltas of a ``run_incremental`` chain while
@@ -643,6 +703,13 @@ class BackupEngine:
         resolve "latest" from the filesystem alone. The targets are
         ``latest()``'s rows, worked out from ``_catalog_rows`` in the
         driver: no Spark job.
+
+        Each pointer is built under a dot-prefixed temp name in its
+        generation dir and then moved onto its name (``_publish``), so
+        engines over one ``backup_dir`` that write the same pointer at
+        once do not fail: a symlink is replaced atomically, and a
+        mirror dir replaces the old one, which is moved aside first, so
+        for that moment the pointer is absent.
         """
         if self.config.latest_type == "none":
             return []
@@ -654,21 +721,22 @@ class BackupEngine:
             gen_dir = os.path.join(self.config.backup_dir, generation)
             os.makedirs(gen_dir, exist_ok=True)
             ptr = os.path.join(gen_dir, f"{db}-latest{self.config.suffix}")
-            if os.path.islink(ptr) or os.path.isfile(ptr):
-                os.remove(ptr)
-            elif os.path.isdir(ptr):
-                shutil.rmtree(ptr)
+            tmp = os.path.join(gen_dir, f".{uuid.uuid4().hex}")
             target = _newest(rows).path
-            if self.config.latest_type == "symlink":  # relative: the volume can move
-                os.symlink(os.path.relpath(target, gen_dir), ptr)
-            else:  # hardlink
-                os.makedirs(ptr)
-                for root, _, files in os.walk(target):
-                    rel = os.path.relpath(root, target)
-                    dst = ptr if rel == "." else os.path.join(ptr, rel)
-                    os.makedirs(dst, exist_ok=True)
-                    for fn in files:
-                        os.link(os.path.join(root, fn), os.path.join(dst, fn))
+            try:
+                if self.config.latest_type == "symlink":  # relative: the volume can move
+                    os.symlink(os.path.relpath(target, gen_dir), tmp)
+                else:  # hardlink
+                    os.makedirs(tmp)
+                    for root, _, files in os.walk(target):
+                        rel = os.path.relpath(root, target)
+                        dst = tmp if rel == "." else os.path.join(tmp, rel)
+                        os.makedirs(dst, exist_ok=True)
+                        for fn in files:
+                            os.link(os.path.join(root, fn), os.path.join(dst, fn))
+                _publish(tmp, ptr)
+            finally:
+                _remove(tmp)
             written.append(ptr)
         return written
 
@@ -715,6 +783,35 @@ class BackupEngine:
         return self._read_snapshots([real])
 
 
+def _publish(tmp: str, ptr: str) -> None:
+    """Move ``tmp`` onto ``ptr`` with ``os.replace``. A ``ptr`` that
+    rename cannot replace (a non-empty dir, or a dir where ``tmp`` is a
+    symlink and the other way round) is first moved aside to a name of
+    this call's own and removed; when another engine moved it first,
+    the replace is tried again."""
+    while True:
+        try:
+            os.replace(tmp, ptr)
+            return
+        except OSError as e:
+            if e.errno not in (errno.EISDIR, errno.ENOTDIR, errno.ENOTEMPTY, errno.EEXIST):
+                raise
+        old = f"{tmp}.old"
+        try:
+            os.rename(ptr, old)
+        except FileNotFoundError:
+            continue  # another engine moved it aside
+        _remove(old)
+
+
+def _remove(path: str) -> None:
+    """Remove ``path``, a file, symlink or dir, if it exists."""
+    if os.path.isdir(path) and not os.path.islink(path):
+        shutil.rmtree(path)
+    elif os.path.lexists(path):
+        os.remove(path)
+
+
 def _map_paths(rows, fn):
     """``rows``, an Arrow table of ``CATALOG_SCHEMA``, with each path
     ``p`` replaced by ``fn(p)``."""
@@ -749,3 +846,48 @@ def _newest(rows: list[CatalogRow]) -> CatalogRow:
     """The newest of ``rows``: the greatest (snapshot_ts, snapshot_id),
     the order ``latest_pointers`` and ``keep_newest_per_period`` use."""
     return max(rows, key=lambda r: (r.snapshot_ts, r.snapshot_id))
+
+
+def _keep_newest(rows: list[CatalogRow]) -> list[CatalogRow]:
+    """``keep_newest_per_period`` in the driver: the ``_newest`` row of
+    each (db, table_name, generation, period_key)."""
+    by_period: dict[tuple, list[CatalogRow]] = {}
+    for r in rows:
+        by_period.setdefault((r.db, r.table_name, r.generation, r.period_key), []).append(r)
+    return [_newest(group) for group in by_period.values()]
+
+
+def _classify(rows: list[CatalogRow], policy: RetentionPolicy) -> list[tuple]:
+    """``retention.retention_plan`` over ``keep_newest_per_period`` in
+    the driver: each ``_keep_newest`` row followed by its
+    ``age_minutes`` and ``keep``, in ``PLAN_SCHEMA``'s order.
+
+    "Now" is the newest ``snapshot_ts``; ``age_minutes`` is the
+    microseconds since then over 60000000.0, a float64 as Spark's
+    long-over-double divide; ``keep`` is 1 when the age is within the
+    generation's window (any generation but last, daily and weekly has
+    the monthly one, as the Spark spelling's CASE ELSE), compared as
+    float64 as Spark compares a double with an integer window. A
+    window that is not a number raises TypeError, as in Spark."""
+    windows = policy.window_minutes()
+    for minutes in windows.values():
+        _window_literal(minutes)
+    state = _keep_newest(rows)
+    now_us = max((r.snapshot_ts for r in state), default=0)
+    out = []
+    for r in state:
+        age = (now_us - r.snapshot_ts) / 60000000.0
+        out.append((*r, age, int(age <= float(windows.get(r.generation, windows["monthly"])))))
+    return out
+
+
+def _arrow_rows(rows: list[tuple], schema: StructType):
+    """Driver rows, in ``schema``'s column order with ``snapshot_ts`` as
+    UTC microseconds, as an Arrow table of ``schema``."""
+    import pyarrow as pa
+
+    arrow = _arrow_schema(schema)
+    return pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )

@@ -4,9 +4,9 @@ Each count is read back from the status tracker for a job group set
 around one call, so a change that adds a pass over the data (a count
 before the write, a reread of the staged files), runs catalog-sized
 work as Spark jobs (schema inference of the catalog or of a restored
-snapshot, a catalog lookup, the catalog append or rewrite, the latest
-pointers), or appends to the catalog more than once per run fails
-here in the quick tier.
+snapshot, a catalog lookup, the catalog append or rewrite, the
+retention classification, the latest pointers), or appends to the
+catalog more than once per run fails here in the quick tier.
 """
 
 from __future__ import annotations
@@ -69,16 +69,18 @@ def test_catalog_read_launches_no_job(spark, tmp_path):
 
 
 def test_catalog_frames_are_local_relations(spark, tmp_path):
-    """``catalog()`` is a local relation built in the driver, so Spark
-    never reads the catalog files, and neither it nor the retention
-    plan over it launches a job to build; collecting the catalog
-    launches none either."""
+    """``catalog()``, ``generation_state()`` and ``retention_plan()``
+    are local relations built in the driver, so Spark never reads the
+    catalog files nor classifies its rows: building them, collecting
+    the catalog and pruning with the plan launch no job."""
     engine = _engine(spark, tmp_path / "b")
     engine.run_backup({"db0": {"t": _source(spark, 5)}}, now=dt.datetime(2024, 1, 1))
-    plan = engine.catalog()._jdf.queryExecution().optimizedPlan()
-    assert plan.getClass().getSimpleName() == "LocalRelation"
+    for frame in (engine.catalog, engine.generation_state, engine.retention_plan):
+        plan = frame()._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", frame.__name__
     assert _jobs(spark, engine.retention_plan) == 0
     assert _jobs(spark, lambda: engine.catalog().collect()) == 0
+    assert _jobs(spark, lambda: engine.prune(engine.retention_plan(), apply=True)) == 0
 
 
 def test_restore_builds_launch_no_inference_job(spark, tmp_path):
@@ -149,11 +151,11 @@ def test_backup_and_incremental_runs_job_counts(spark, tmp_path):
 def test_prune_plans_the_retention_window_once(spark, tmp_path):
     """Two tables, two nights, a policy that expires the first night.
 
-    The plan's one collect (kept rows, delete ids and doomed paths)
-    launches 5 jobs under AQE; the plan reads the catalog as a local
-    relation, and the catalog rewrite is read and written in the
-    driver. Planning the retention window again for the delete set or
-    the kept paths adds jobs here."""
+    The plan is classified in the driver and shipped to Spark as a
+    local relation, so its one collect (kept rows, delete ids and
+    doomed paths) launches no job, and the catalog commit is read and
+    written in the driver. A plan that Spark classifies (a window, a
+    max aggregate, a broadcast join) adds jobs here."""
     engine = BackupEngine(spark, BackupConfig(
         host="h", dbs="db0", user="u", password="p", backup_dir=str(tmp_path),
         retention=RetentionPolicy(keep_mins=720, keep_days=0),
@@ -161,5 +163,5 @@ def test_prune_plans_the_retention_window_once(spark, tmp_path):
     for day in (1, 2):
         tables = {"db0": {"a": _source(spark, 5), "b": _source(spark, 6)}}
         engine.run_backup(tables, now=dt.datetime(2024, 1, day))
-    assert _jobs(spark, lambda: engine.prune(engine.retention_plan(), apply=True)) == 5
+    assert _jobs(spark, lambda: engine.prune(engine.retention_plan(), apply=True)) == 0
     assert sorted(os.listdir(tmp_path / "db0")) == ["a-20240102-000000", "b-20240102-000000"]
