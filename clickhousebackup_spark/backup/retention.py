@@ -11,12 +11,15 @@ would additionally be stored partitioned by `generation` so the prune
 scan prunes partitions before reading (the find -maxdepth analog).
 
 This is the Spark spelling of retention, for catalogs held as tables:
-the registry keys (`backup_retention_plan`, `flagship_retention_plan`)
-run it at scale. `BackupEngine` classifies its own catalog, a few rows
-per table and generation, in the driver (`engine._keep_newest` and
-`engine._classify`), so its prune launches no Spark job; a property
-test (tests/test_engine_driver_retention.py) pins that twin equal to
-`retention_plan(keep_newest_per_period(...))` here, row for row.
+the registry keys (`backup_retention_plan`, `flagship_retention_plan`,
+`backup_latest_pointers`) run it at scale. `BackupEngine` works over
+its own catalog, a few rows per table and generation, in the driver
+(`engine._keep_newest`, `engine._classify`, the delete set in
+`BackupEngine.prune`, `BackupEngine._latest_rows`), so its prune
+launches no Spark job; a property test
+(tests/test_engine_driver_retention.py) pins those twins equal to
+`retention_plan(keep_newest_per_period(...))`, `prune_delete_set` and
+`latest_pointers` here, row for row.
 """
 
 from __future__ import annotations

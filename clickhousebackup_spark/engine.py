@@ -37,17 +37,19 @@ the commit re-reads and re-applies its change (the single atomic
 ``ln -f`` of backup.sh:77-115; a Delta Lake log commit). Rows store
 snapshot paths relative to ``backup_dir``, so a moved backup volume
 restores. The relational surface (``catalog()``,
-``generation_state()``, ``latest()``, ``retention_plan()``) runs over
-the newest version shipped to Spark as a local relation.
+``generation_state()``, ``latest()``, ``retention_plan()``, the delete
+set ``prune()`` returns) is rows the driver works out from the newest
+version, shipped to Spark as local relations.
 
 Retention is classified in the driver too, as backup.sh's ``find
 -mmin … rm`` works over a directory listing: ``generation_state()``
-and ``retention_plan()`` are local relations of rows that
-``_keep_newest`` and ``_classify`` work out from the catalog rows, so
-building, collecting and applying a plan launch no Spark job.
-``backup/retention.py`` is the same classification spelled in Spark,
-for catalogs too large for the driver; a property test pins the two
-equal.
+and ``retention_plan()`` are rows that ``_keep_newest`` and
+``_classify`` work out from the catalog rows, ``prune()`` collects
+the plan and derives the delete set from it, and ``latest()`` is
+``_latest_rows``, so building, collecting and applying a plan launch
+no Spark job. ``backup/retention.py`` is the same classification
+spelled in Spark, for catalogs too large for the driver; a property
+test pins the two equal.
 """
 
 from __future__ import annotations
@@ -67,7 +69,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 from pyspark.util import inheritable_thread_target
 
 from clickhousebackup_spark.backup.config import (
@@ -77,11 +86,7 @@ from clickhousebackup_spark.backup.config import (
     validate_backup_dir,
 )
 from clickhousebackup_spark.backup.hooks import Hook, LifecycleHooks
-from clickhousebackup_spark.backup.retention import (
-    _window_literal,
-    latest_pointers,
-    prune_delete_set,
-)
+from clickhousebackup_spark.backup.retention import _window_literal
 from clickhousebackup_spark.backup.snapshot import SnapshotResult, snapshot_table
 from clickhousebackup_spark.exprs import row_hash
 from clickhousebackup_spark.sources.readers import ConnectorUnavailable
@@ -105,6 +110,23 @@ PLAN_SCHEMA = StructType([
     *CATALOG_SCHEMA.fields,
     StructField("age_minutes", DoubleType()),
     StructField("keep", LongType()),
+])
+
+#: the delete set's schema, ``prune_delete_set``'s: its anti-join keys,
+#: then the catalog's other columns
+_DELETE_KEYS = ("db", "generation", "path")
+DELETE_SCHEMA = StructType(
+    [CATALOG_SCHEMA[k] for k in _DELETE_KEYS]
+    + [f for f in CATALOG_SCHEMA.fields if f.name not in _DELETE_KEYS]
+)
+
+#: ``latest()``'s schema, ``latest_pointers``'s
+LATEST_SCHEMA = StructType([
+    StructField("db", StringType()),
+    StructField("generation", StringType()),
+    StructField("latest_target", StringType()),
+    StructField("latest_ts", TimestampType()),
+    StructField("pointer_name", StringType()),
 ])
 
 #: one catalog row as the driver holds it; ``snapshot_ts`` is UTC
@@ -575,34 +597,53 @@ class BackupEngine:
 
     # -- retention (backup.sh:90-122) --
 
+    def _local(self, rows: list[tuple], schema: StructType) -> DataFrame:
+        """Driver rows, in ``schema``'s column order with timestamps as
+        UTC microseconds, shipped to Spark as a local relation of
+        ``schema``, as ``catalog()`` is: building and collecting it
+        launch no Spark job, and it holds ``rows``."""
+        return self.spark.createDataFrame(_arrow_rows(rows, schema), schema)
+
     def generation_state(self) -> DataFrame:
         """Keep-newest-per-period view of the catalog (A14): the rows
-        ``_keep_newest`` keeps of ``_catalog_rows``, built in the driver
-        and shipped to Spark as a local relation of ``CATALOG_SCHEMA``,
-        like ``catalog()``; building and collecting it launch no Spark
-        job. ``keep_newest_per_period`` is its Spark spelling."""
-        return self.spark.createDataFrame(
-            _arrow_rows(_keep_newest(self._catalog_rows()), CATALOG_SCHEMA), CATALOG_SCHEMA
-        )
+        ``_keep_newest`` keeps of ``_catalog_rows``, a driver-built
+        local relation of ``CATALOG_SCHEMA`` (``_local``).
+        ``keep_newest_per_period`` is its Spark spelling."""
+        return self._local(_keep_newest(self._catalog_rows()), CATALOG_SCHEMA)
 
     def latest(self) -> DataFrame:
-        """`-latest` pointers (A15), honoring latest_type='none'."""
-        pointers = latest_pointers(self.catalog(), self.config.suffix)
-        if self.config.latest_type == "none":  # backup.sh:113
-            return pointers.where(F.lit(False))  # folds to an empty relation
-        return pointers
+        """`-latest` pointers (A15), honoring latest_type='none'
+        (backup.sh:113, no rows): ``_latest_rows``, the targets
+        ``materialize_latest`` writes, as a driver-built local relation
+        of ``LATEST_SCHEMA`` (``_local``). ``latest_pointers`` is its
+        Spark spelling."""
+        rows = [] if self.config.latest_type == "none" else self._latest_rows()
+        return self._local(rows, LATEST_SCHEMA)
+
+    def _latest_rows(self) -> list[tuple]:
+        """Per (db, generation), in that order, the ``_newest`` row's
+        path and ``snapshot_ts`` and the ``<db>-latest<suffix>``
+        pointer name, as ``LATEST_SCHEMA`` rows."""
+        by_key: dict[tuple[str, str], list[CatalogRow]] = {}
+        for r in self._catalog_rows():
+            by_key.setdefault((r.db, r.generation), []).append(r)
+        out = []
+        for (db, generation), rows in sorted(by_key.items()):
+            newest = _newest(rows)
+            out.append((db, generation, newest.path, newest.snapshot_ts,
+                        f"{db}-latest{self.config.suffix}"))
+        return out
 
     def retention_plan(self) -> DataFrame:
         """The find…rm classification (backup.sh:119-122): every row of
         ``generation_state()`` with its ``age_minutes`` and ``keep``
-        (``_classify``), built in the driver and shipped to Spark as a
-        local relation of ``PLAN_SCHEMA``. Building, collecting and
+        (``_classify``), a driver-built local relation of
+        ``PLAN_SCHEMA`` (``_local``), so building, collecting and
         pruning with it launch no Spark job, and it holds the rows read
         when it was built. ``backup/retention.py``'s
         ``retention_plan`` over ``keep_newest_per_period`` is its Spark
         spelling, row for row."""
-        rows = _classify(self._catalog_rows(), self.config.retention)
-        return self.spark.createDataFrame(_arrow_rows(rows, PLAN_SCHEMA), PLAN_SCHEMA)
+        return self._local(_classify(self._catalog_rows(), self.config.retention), PLAN_SCHEMA)
 
     def restore(self, db: str, table: str, period_key: str | None = None) -> DataFrame:
         """Read a snapshot back — the restore path the reference leaves
@@ -626,10 +667,13 @@ class BackupEngine:
     def prune(
         self, plan: DataFrame | None = None, apply: bool = False
     ) -> DataFrame:
-        """The delete set (find…rm analog of backup.sh:119-122),
-        ``prune_delete_set(plan)``; ``plan`` must come from this
-        engine's ``retention_plan()`` (the default): a plan covering
-        part of the catalog deletes only its own not-kept rows.
+        """The delete set (find…rm analog of backup.sh:119-122): the
+        plan's rows sharing no (db, generation, path) with a kept row,
+        as a driver-built local relation of ``DELETE_SCHEMA``
+        (``_local``); ``prune_delete_set(plan)`` is its Spark spelling.
+        ``plan`` must come from this engine's ``retention_plan()`` (the
+        default): a plan covering part of the catalog deletes only its
+        own not-kept rows.
 
         With ``apply=False`` (default) only returns the delete set,
         mirroring how backup.sh separates listing (``find``) from
@@ -641,13 +685,15 @@ class BackupEngine:
         nothing, and an empty delete set commits and removes nothing.
         One path is registered under all four generations (backup.sh's
         hardlink fan-out), so a dir is only removed when NO kept
-        generation row still references it. The plan is collected
-        once; the default plan is a local relation the driver built
-        (``retention_plan``), so that collect, and the whole prune,
-        launch no Spark job. It reads the catalog rows the driver
-        shipped to Spark when it was built, not the catalog files, so
-        neither the set returned here nor one a listing returned
-        earlier changes with the commit.
+        generation row still references it.
+
+        The plan is collected once, listing or applying; the default
+        plan is a local relation the driver built (``retention_plan``),
+        so that collect, the whole prune and collecting the set it
+        returns launch no Spark job. The plan holds the catalog rows
+        read when it was built, and the delete set the rows collected
+        from it, so neither the set returned here nor one a listing
+        returned earlier changes with the commit.
 
         Retention does not know incremental chains: it can delete the
         base and early deltas of a ``run_incremental`` chain while
@@ -657,13 +703,18 @@ class BackupEngine:
         of a chain that must stay restorable.
         """
         plan = plan if plan is not None else self.retention_plan()
-        if not apply:
-            return prune_delete_set(plan)
-        rows = plan.select("db", "generation", "path", "snapshot_id", "keep").collect()
-        kept = {(db, gen, path) for db, gen, path, _, keep in rows if keep == 1}
-        deleted = [r for r in rows if r[:3] not in kept]
-        if not deleted:
-            return prune_delete_set(plan)
+        ts = F.unix_micros("snapshot_ts").alias("snapshot_ts")
+        cols = [ts if c == "snapshot_ts" else c for c in CATALOG_COLUMNS]
+        collected = plan.select(*cols, "keep").collect()
+        kept = {(r.db, r.generation, r.path) for r in collected if r.keep == 1}
+        deleted = [
+            CatalogRow(*r[:-1]) for r in collected if (r.db, r.generation, r.path) not in kept
+        ]
+        delete_set = self._local(
+            [tuple(getattr(r, c) for c in DELETE_SCHEMA.names) for r in deleted], DELETE_SCHEMA
+        )
+        if not apply or not deleted:
+            return delete_set
         doomed = {r.path for r in deleted} - {path for _, _, path in kept}
         backup_root = os.path.realpath(self.config.backup_dir)
         real_paths = {p: os.path.realpath(p) for p in sorted(doomed)}
@@ -685,7 +736,7 @@ class BackupEngine:
                 shutil.rmtree(real)
             elif os.path.exists(real):
                 os.remove(real)
-        return prune_delete_set(plan)
+        return delete_set
 
     # -- latest pointers on storage (backup.sh:99-115) --
 
@@ -701,8 +752,8 @@ class BackupEngine:
 
         Returns the pointer paths written, so ``restore_latest`` can
         resolve "latest" from the filesystem alone. The targets are
-        ``latest()``'s rows, worked out from ``_catalog_rows`` in the
-        driver: no Spark job.
+        ``latest()``'s rows, ``_latest_rows``, worked out from
+        ``_catalog_rows`` in the driver: no Spark job.
 
         Each pointer is built under a dot-prefixed temp name in its
         generation dir and then moved onto its name (``_publish``), so
@@ -713,16 +764,12 @@ class BackupEngine:
         """
         if self.config.latest_type == "none":
             return []
-        by_key: dict[tuple[str, str], list[CatalogRow]] = {}
-        for r in self._catalog_rows():
-            by_key.setdefault((r.db, r.generation), []).append(r)
         written: list[str] = []
-        for (db, generation), rows in sorted(by_key.items()):
+        for _, generation, target, _, name in self._latest_rows():
             gen_dir = os.path.join(self.config.backup_dir, generation)
             os.makedirs(gen_dir, exist_ok=True)
-            ptr = os.path.join(gen_dir, f"{db}-latest{self.config.suffix}")
+            ptr = os.path.join(gen_dir, name)
             tmp = os.path.join(gen_dir, f".{uuid.uuid4().hex}")
-            target = _newest(rows).path
             try:
                 if self.config.latest_type == "symlink":  # relative: the volume can move
                     os.symlink(os.path.relpath(target, gen_dir), tmp)

@@ -69,18 +69,20 @@ def test_catalog_read_launches_no_job(spark, tmp_path):
 
 
 def test_catalog_frames_are_local_relations(spark, tmp_path):
-    """``catalog()``, ``generation_state()`` and ``retention_plan()``
-    are local relations built in the driver, so Spark never reads the
-    catalog files nor classifies its rows: building them, collecting
-    the catalog and pruning with the plan launch no job."""
+    """``catalog()``, ``generation_state()``, ``retention_plan()``,
+    ``latest()`` and the delete set ``prune()`` returns are local
+    relations built in the driver, so Spark never reads the catalog
+    files nor classifies its rows: building them, collecting them and
+    pruning with the plan launch no job."""
     engine = _engine(spark, tmp_path / "b")
     engine.run_backup({"db0": {"t": _source(spark, 5)}}, now=dt.datetime(2024, 1, 1))
-    for frame in (engine.catalog, engine.generation_state, engine.retention_plan):
+    frames = (engine.catalog, engine.generation_state, engine.retention_plan, engine.latest, engine.prune)
+    for frame in frames:
         plan = frame()._jdf.queryExecution().optimizedPlan()
         assert plan.getClass().getSimpleName() == "LocalRelation", frame.__name__
+        assert _jobs(spark, lambda: frame().collect()) == 0, frame.__name__
     assert _jobs(spark, engine.retention_plan) == 0
-    assert _jobs(spark, lambda: engine.catalog().collect()) == 0
-    assert _jobs(spark, lambda: engine.prune(engine.retention_plan(), apply=True)) == 0
+    assert _jobs(spark, lambda: engine.prune(engine.retention_plan(), apply=True).collect()) == 0
 
 
 def test_restore_builds_launch_no_inference_job(spark, tmp_path):

@@ -1,11 +1,13 @@
 """The retention plan the driver classifies equals the Spark spelling.
 
-``BackupEngine.retention_plan()`` and ``generation_state()`` are local
-relations of rows ``engine._classify`` and ``engine._keep_newest`` work
-out in the driver; ``backup/retention.py`` spells the same
-classification in Spark for the registry keys. The property test pins
-the two equal as multisets over every column, ``age_minutes``
-bit for bit, with the same schema, on generated catalogs and policies.
+``BackupEngine.retention_plan()``, ``generation_state()``, the delete
+set ``prune()`` returns and ``latest()`` are local relations of rows
+the driver works out (``engine._classify``, ``engine._keep_newest``,
+``prune``'s anti-join, ``engine._latest_rows``); ``backup/retention.py``
+spells the same operations in Spark for the registry keys. The
+property test pins each pair equal as multisets over every column,
+``age_minutes`` bit for bit, with the same schema, on generated
+catalogs and policies.
 """
 
 from __future__ import annotations
@@ -19,10 +21,17 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from clickhousebackup_spark.backup.config import GENERATIONS, BackupConfig, RetentionPolicy
-from clickhousebackup_spark.backup.retention import keep_newest_per_period, retention_plan
+from clickhousebackup_spark.backup.retention import (
+    keep_newest_per_period,
+    latest_pointers,
+    prune_delete_set,
+    retention_plan,
+)
 from clickhousebackup_spark.engine import (
     CATALOG_COLUMNS,
     CATALOG_SCHEMA,
+    DELETE_SCHEMA,
+    LATEST_SCHEMA,
     PLAN_SCHEMA,
     BackupEngine,
     _arrow_rows,
@@ -100,15 +109,21 @@ def test_driver_plan_equals_the_spark_spelling(spark, rows, policy):
         ))
         cataloged = [(*r[:5], os.path.join(d, r[5]), *r[6:]) for r in rows]
         engine._commit(lambda _: _arrow_rows(cataloged, CATALOG_SCHEMA))
-        table = engine._catalog_table()[1]
-        state = keep_newest_per_period(spark.createDataFrame(table, CATALOG_SCHEMA))
+        catalog = spark.createDataFrame(engine._catalog_table()[1], CATALOG_SCHEMA)
+        state = keep_newest_per_period(catalog)
         expected = retention_plan(state, policy)
+        deleted, latest = prune_delete_set(expected), latest_pointers(catalog, engine.config.suffix)
 
         got_state, got = engine.generation_state(), engine.retention_plan()
+        got_deleted, got_latest = engine.prune(got), engine.latest()
         assert got.schema == expected.schema == PLAN_SCHEMA
         assert got_state.schema == state.schema == CATALOG_SCHEMA
+        assert got_deleted.schema == deleted.schema == DELETE_SCHEMA
+        assert got_latest.schema == latest.schema == LATEST_SCHEMA
         assert _multiset(got) == _multiset(expected)
         assert _multiset(got_state) == _multiset(state)
+        assert _multiset(got_deleted) == _multiset(deleted)
+        assert _multiset(got_latest) == _multiset(latest)
 
 
 def test_catalog_schema_is_not_extended_by_the_plan(spark, tmp_path):
